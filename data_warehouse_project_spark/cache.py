@@ -20,13 +20,9 @@ Scope note: localCheckpoint() blocks (surrogate-key bulk assignment,
 the CC loop's per-round labels, the fold-simulation states) cannot be
 unpersisted explicitly — an unpersist would corrupt still-referenced
 lineage; the ContextCleaner frees them asynchronously once no live
-RDD references the blocks. What a long-lived host CAN do is drop the
-*Python* references promptly: `track_ckpt` registers query-path
-checkpointed state frames, and `release_all` clears that registry, so
-between queries the only thing keeping checkpoint blocks alive is the
-caller's own handle on the result (ADVICE r12). Loop-internal
-checkpoints that are rotated out within the query (CC rounds, BPE
-rounds) are not tracked — their refs die inside the query function.
+RDD references the blocks. They are not tracked here: the returned
+result's plan is what holds the checkpointed RDD, so it lives exactly
+as long as the caller's handle on the result.
 """
 
 from __future__ import annotations
@@ -36,10 +32,6 @@ from pyspark.sql import DataFrame
 #: live intra-query persisted frames
 _PINNED: list[DataFrame] = []
 
-#: query-path localCheckpoint'ed state frames (refs only — see scope
-#: note; clearing lets the ContextCleaner reclaim executor storage)
-_CKPTS: list[DataFrame] = []
-
 
 def pin(df: DataFrame) -> DataFrame:
     """persist() a frame and track it for bulk release."""
@@ -48,20 +40,11 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-def track_ckpt(df: DataFrame) -> DataFrame:
-    """Track an (already) localCheckpoint'ed state frame so
-    release_all() drops the reference — no unpersist, just prompt
-    ContextCleaner eligibility on long-lived sessions."""
-    _CKPTS.append(df)
-    return df
-
-
 def release_all(blocking: bool = True) -> int:
-    """Unpersist every tracked frame (call AFTER materializing the
-    query result — an unpersisted plan re-computes if re-executed).
-    Returns the number of frames released."""
+    """Unpersist every pinned frame and return how many were pinned
+    (call AFTER materializing the query result — an unpersisted plan
+    re-computes if re-executed)."""
     n = len(_PINNED)
     while _PINNED:
         _PINNED.pop().unpersist(blocking=blocking)
-    _CKPTS.clear()
     return n

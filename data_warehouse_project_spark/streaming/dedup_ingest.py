@@ -54,10 +54,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, run_maintainer
-
-#: simulated arrival batches in the registered replay
-N_INGEST_BATCHES = 3
+from .state_fold import (N_INGEST_BATCHES, fold_batch, ingest_batches,
+                         ntile_batched, replay, run_maintainer)
 
 
 def fingerprinted(docs: DataFrame) -> DataFrame:
@@ -109,25 +107,10 @@ def docs_dedup_ingest_incremental(spark: SparkSession,
     """Registry entry: replay the corpus as N_INGEST_BATCHES
     doc_id-ordered arrivals, fold the state forward batch by batch,
     and report per-batch arrival stats from the FOLDED state."""
-    from pyspark.sql import Window
-
-    docs = Catalog(spark, sf_dir).documents
-    batched = docs.select(
-        "doc_id", "text",
-        F.ntile(N_INGEST_BATCHES).over(Window.orderBy("doc_id"))
-        .alias("batch_idx"))
-    state: DataFrame | None = None
-    for i in range(1, N_INGEST_BATCHES + 1):
-        batch = batched.filter(F.col("batch_idx") == i).drop("batch_idx")
-        state = (dedup_state(batch) if state is None
-                 else merge_dedup_state(state, batch))
-        # truncate lineage per fold (the learn_merges discipline) so
-        # batch k's plan doesn't embed folds 1..k-1. Lazy (r12): the
-        # state chain is strictly linear (each fold consumed exactly
-        # once, by the next fold or the final report join), so the
-        # truncation points can ride the one final job instead of
-        # paying a materialization job per fold.
-        state = state.localCheckpoint(eager=False)
+    batched = ntile_batched(Catalog(spark, sf_dir).documents)
+    # lazy: each state is read once, by the next fold or the report join
+    state = replay(ingest_batches(batched), dedup_state, merge_dedup_state,
+                   checkpoint="lazy").localCheckpoint(eager=False)
     arrivals = fingerprinted(batched).join(
         batched.select("doc_id", "batch_idx"), "doc_id")
     return (

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import fold_batch, replay, run_maintainer, ts_split
 
 #: max relative error the per-key gate tolerates, percent. Default
 #: lgConfigK=12 gives ~1.6% rsd; 5% ≈ 3 sigma, and per-(type, day)
@@ -105,17 +105,8 @@ def events_distinct_users_incremental(spark: SparkSession,
     exact side is the recompute the sketch replaces — run here only
     to certify it (the hll_distinct_accuracy_floor discipline, but
     per key and incremental)."""
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    state = merge_distinct_state(
-        distinct_state(ev.filter(F.col("ts") <= F.lit(mid))),
-        ev.filter(F.col("ts") > F.lit(mid)))
+    ev = Catalog(spark, sf_dir).events
+    state = replay(ts_split(ev), distinct_state, merge_distinct_state)
     est = state_to_estimates(state)
     exact = (_keyed(ev)
              .groupBy("event_type", "day")

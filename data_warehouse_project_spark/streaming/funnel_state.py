@@ -33,7 +33,7 @@ from ..plans.analytics import (FUNNEL_SQL, funnel_per_user,
                                funnel_report_from_per_user)
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import fold_batch, replay, run_maintainer, ts_split
 
 
 def _events_cols(events: DataFrame) -> DataFrame:
@@ -99,17 +99,8 @@ def events_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin's FULL-RECOMPUTE SQL — incremental maintenance must be
     indistinguishable from recomputing history (the only collect is a
     one-row min/max metadata read to pick the split point)."""
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    state = merge_funnel_state(
-        funnel_state(ev.filter(F.col("ts") <= F.lit(mid))),
-        ev.filter(F.col("ts") > F.lit(mid)))
+    state = replay(ts_split(Catalog(spark, sf_dir).events),
+                   funnel_state, merge_funnel_state)
     return state_to_report(state)
 
 

@@ -59,14 +59,11 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_CLICK_PURCHASE_SQL
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
+                         ts_split)
 
 #: join window (seconds): purchase in [click_ts, click_ts + WINDOW]
 WINDOW_S = 3600
-
-#: allowed event-time lateness (seconds) — same contract as the late
-#: transition/session maintainers
-LATENESS_S = 6 * 3600
 
 
 def _sides(events: DataFrame) -> DataFrame:
@@ -252,31 +249,10 @@ def events_click_purchase_incremental(spark: SparkSession,
     INVISIBILITY (the 3-6 h-late slice is buffered and matched
     correctly) while the planted unit test carries the
     pairs-per-batch-joins-miss evidence."""
-    import datetime as dt
-
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    slice_lo = mid - dt.timedelta(seconds=LATENESS_S)
-    slice_hi = mid - dt.timedelta(seconds=3 * 3600)
-    in_slice = ((F.col("ts") > F.lit(slice_lo))
-                & (F.col("ts") <= F.lit(slice_hi)))
-    first = ev.filter((F.col("ts") <= F.lit(mid)) & ~in_slice)
-    second = ev.filter((F.col("ts") > F.lit(mid)) | in_slice)
-    # r12: localCheckpoint instead of pin — persist() caches the DATA
-    # but each of the merge's four references to the state re-embeds
-    # its full LOGICAL plan; the checkpoint truncates the plan itself
-    # (the parquet-state equivalent in the real maintainer).
-    # track_ckpt: registers the checkpoint ref so release_all() on a
-    # long-lived host drops it promptly (cache.py scope note).
-    from ..cache import track_ckpt
-    state = merge_interval_join_state(
-        track_ckpt(interval_join_state(first).localCheckpoint()), second)
+    # eager: the merge reads prev four times
+    state = replay(ts_split(Catalog(spark, sf_dir).events, LATENESS_S),
+                   interval_join_state, merge_interval_join_state,
+                   checkpoint="eager")
     return state_to_matches(state)
 
 

@@ -60,10 +60,8 @@ from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import (EVENTS_SESSIONIZE_SQL, SESSION_GAP_S,
                            session_islands)
-from .state_fold import fold_batch, run_maintainer
-
-#: allowed event-time lateness (seconds) — late_transitions.py's knob
-LATENESS_S = 6 * 3600
+from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
+                         ts_split)
 
 #: dsum final-shift constants (compat.dsum, scale=2)
 _DOWN = 10 ** (GUARD - 2)
@@ -264,42 +262,13 @@ def events_sessions_late_tolerant(spark: SparkSession,
     3-6 h below batch 1's maximum. Oracle = the batch sessionizer's
     FULL-RECOMPUTE SQL: watermark finalization must make disorder
     invisible, session numbering and exact value sums included."""
-    import datetime as dt
-
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    slice_lo = mid - dt.timedelta(seconds=LATENESS_S)
-    slice_hi = mid - dt.timedelta(seconds=3 * 3600)
-    in_slice = ((F.col("ts") > F.lit(slice_lo))
-                & (F.col("ts") <= F.lit(slice_hi)))
-    first = ev.filter((F.col("ts") <= F.lit(mid)) & ~in_slice)
-    second = ev.filter((F.col("ts") > F.lit(mid)) | in_slice)
-    # BOTH states materialized here (unlike the late transition
-    # miner, which serves from two state consumers and measured a
-    # merged-state pin as a net loss): state_to_view reads the merge
-    # THREE times — finalized rows, the per-user numbering base, and
-    # the tail re-segmentation — so materializing once wins (measured
-    # 7.65 s unpinned → 5.82 s pinned at sf0.1). The real maintainer
-    # materializes state to parquet every fold anyway.
-    # r12: localCheckpoint instead of pin — persist() caches the DATA
-    # but every downstream reference still embeds the state's full
-    # LOGICAL plan (×3 in the view, ×3 again through the merge), so
-    # Catalyst re-analyzed a multiplied tree on every action; the
-    # checkpoint truncates the plan itself (the parquet-state
-    # equivalent in the real maintainer).
-    # track_ckpt: registers the checkpoint refs so release_all() on a
-    # long-lived host drops them promptly (cache.py scope note).
-    from ..cache import track_ckpt
-    state = track_ckpt(merge_late_sessions_state(
-        track_ckpt(late_sessions_state(first).localCheckpoint()),
-        second).localCheckpoint())
-    return state_to_view(state)
+    # the final state is checkpointed too: state_to_view reads it three
+    # times (finalized rows, the per-user numbering base, the tail
+    # re-segmentation); measured 7.65 s unpinned → 5.82 s pinned at sf0.1
+    state = replay(ts_split(Catalog(spark, sf_dir).events, LATENESS_S),
+                   late_sessions_state, merge_late_sessions_state,
+                   checkpoint="eager")
+    return state_to_view(state.localCheckpoint())
 
 
 register("events_sessions_late_tolerant", events_sessions_late_tolerant,

@@ -55,12 +55,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_TRANSITIONS_SQL, TRANSITION_TOP_K
-from .state_fold import fold_batch, run_maintainer
-
-#: allowed event-time lateness (seconds): events arriving more than
-#: this far below the watermark are dropped-and-counted, matching
-#: withWatermark semantics
-LATENESS_S = 6 * 3600
+from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
+                         ts_split)
 
 
 def _events_cols(events: DataFrame) -> DataFrame:
@@ -246,43 +242,14 @@ def events_transitions_late_tolerant(spark: SparkSession,
     batch 1's maximum (disorder the strict maintainer's contract
     forbids, well inside LATENESS). The oracle is the batch twin's
     FULL-RECOMPUTE SQL: watermark finalization must make disorder
-    invisible. (Two bounded metadata collects pick the split; the
+    invisible. (One bounded metadata collect picks the split; the
     fold's own scalar reads are the 'w' row.)"""
-    import datetime as dt
-
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    # held-back slice (mid−6h, mid−3h]: batch 1 spans up to mid but
-    # skips the slice; batch 2 delivers the slice together with
-    # everything after mid — its slice events arrive 3-6 h below
-    # batch 1's maximum, inside LATENESS
-    slice_lo = mid - dt.timedelta(seconds=LATENESS_S)
-    slice_hi = mid - dt.timedelta(seconds=3 * 3600)
-    in_slice = ((F.col("ts") > F.lit(slice_lo))
-                & (F.col("ts") <= F.lit(slice_hi)))
-    first = ev.filter((F.col("ts") <= F.lit(mid)) & ~in_slice)
-    second = ev.filter((F.col("ts") > F.lit(mid)) | in_slice)
-    # r12: BOTH states localCheckpoint-ed (supersedes the round-7
-    # finding that a PIN of the merged state was a net loss — pin
-    # caches data but every reference re-embeds the state's full
-    # LOGICAL plan, so Catalyst re-analyzed a multiplied tree per
-    # action; the checkpoint truncates the plan itself, and the
-    # interleaved A/B reads 3.95/3.74/2.98 → 3.76/3.13/2.91 s across
-    # three passes at sf0.1. The real maintainer materializes state
-    # to parquet every fold anyway).
-    # track_ckpt: registers the checkpoint refs so release_all() on a
-    # long-lived host drops them promptly (cache.py scope note).
-    from ..cache import track_ckpt
-    state = track_ckpt(merge_late_transitions_state(
-        track_ckpt(late_transitions_state(first).localCheckpoint()),
-        second).localCheckpoint())
-    return state_to_report(state)
+    # the final state is checkpointed too: the report reads it twice
+    # (interleaved A/B 3.95/3.74/2.98 → 3.76/3.13/2.91 s at sf0.1)
+    state = replay(ts_split(Catalog(spark, sf_dir).events, LATENESS_S),
+                   late_transitions_state, merge_late_transitions_state,
+                   checkpoint="eager")
+    return state_to_report(state.localCheckpoint())
 
 
 register("events_transitions_late_tolerant",

@@ -51,10 +51,8 @@ from ..llm.dedup import (MAX_BUCKET, _verify_jaccard, _with_shingles,
                          band_buckets, minhash_signatures_from)
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, run_maintainer
-
-#: simulated arrival batches in the registered replay
-N_INGEST_BATCHES = 3
+from .state_fold import (fold_batch, ingest_batches, ntile_batched,
+                         run_maintainer)
 
 
 def hashed_shingles(docs: DataFrame) -> DataFrame:
@@ -140,17 +138,10 @@ def docs_neardup_ingest_incremental(spark: SparkSession,
     exact-verify them against the document store — emitting every
     near-dup pair tagged with the batch that DETECTED it (the later
     member's arrival)."""
-    from pyspark.sql import Window
-
-    docs = Catalog(spark, sf_dir).documents
-    batched = pin(docs.select(
-        "doc_id", "text",
-        F.ntile(N_INGEST_BATCHES).over(Window.orderBy("doc_id"))
-        .alias("batch_idx")))
+    batched = pin(ntile_batched(Catalog(spark, sf_dir).documents))
     state: DataFrame | None = None
     per_batch = []
-    for i in range(1, N_INGEST_BATCHES + 1):
-        batch = batched.filter(F.col("batch_idx") == i).drop("batch_idx")
+    for i, batch in enumerate(ingest_batches(batched), start=1):
         bb = banded(batch).localCheckpoint()
         per_batch.append(
             arrival_candidates(state, bb)

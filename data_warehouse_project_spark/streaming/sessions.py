@@ -58,7 +58,7 @@ from ..functions.compat import GUARD, _scaled
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_SESSIONIZE_SQL, session_islands
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import fold_batch, replay, run_maintainer, ts_split
 
 #: dsum(scale=2, guard=GUARD) final-shift constants (compat.dsum)
 _DOWN = 10 ** (GUARD - 2)
@@ -198,30 +198,10 @@ def events_sessions_incremental(spark: SparkSession,
     be indistinguishable from rescanning history, session numbering
     and exact value sums included (the only collect is a one-row
     min/max metadata read to pick the split point)."""
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    # checkpoint the first-half state: the merge consumes prev three
-    # times (closed filter, untouched anti-join, open semi-join),
-    # which would re-run the half-corpus sessionize per consumer
-    # (8 events scans in the unpinned executed plan — the round-7
-    # lineage audit). r12: localCheckpoint instead of pin — persist
-    # caches the data but each consumer still re-embeds the state's
-    # full LOGICAL plan, so Catalyst re-analyzed a multiplied tree per
-    # action (the late_sessions finding); the checkpoint truncates the
-    # plan itself, matching the real maintainer's parquet re-read.
-    # track_ckpt: registers the checkpoint refs so release_all() on a
-    # long-lived host drops them promptly (cache.py scope note).
-    from ..cache import track_ckpt
-    state = merge_sessions_state(
-        track_ckpt(sessions_state(ev.filter(F.col("ts") <= F.lit(mid)))
-                   .localCheckpoint()),
-        ev.filter(F.col("ts") > F.lit(mid)))
+    # eager: the merge reads prev three times (closed filter, untouched
+    # anti-join, open semi-join)
+    state = replay(ts_split(Catalog(spark, sf_dir).events),
+                   sessions_state, merge_sessions_state, checkpoint="eager")
     return state_to_view(state)
 
 

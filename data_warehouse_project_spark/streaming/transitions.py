@@ -43,7 +43,7 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import TRANSITION_TOP_K, EVENTS_TRANSITIONS_SQL
-from .state_fold import fold_batch, run_maintainer
+from .state_fold import fold_batch, replay, run_maintainer, ts_split
 
 #: unified state schema (kind 'c' = count row, 'l' = last-event row)
 _STATE_COLS = ["kind", "prev_type", "next_type", "n",
@@ -187,17 +187,8 @@ def events_transitions_incremental(spark: SparkSession,
     batch twin's FULL-RECOMPUTE SQL — incremental maintenance must be
     indistinguishable from recomputing history (the only collect is a
     one-row min/max metadata read to pick the split point)."""
-    cat = Catalog(spark, sf_dir)
-    ev = cat.events
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    # Empty feed (a source partition can legitimately match nothing):
-    # an epoch pivot makes both simulated batches empty, and the
-    # build/merge pair already handles None watermarks downstream.
-    import datetime as _dt
-    mid = (lo + (hi - lo) / 2) if lo is not None else _dt.datetime(1970, 1, 1)
-    state = merge_transitions_state(
-        transitions_state(ev.filter(F.col("ts") <= F.lit(mid))),
-        ev.filter(F.col("ts") > F.lit(mid)))
+    state = replay(ts_split(Catalog(spark, sf_dir).events),
+                   transitions_state, merge_transitions_state)
     return state_to_report(state)
 
 

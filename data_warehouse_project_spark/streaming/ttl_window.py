@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
+from .state_fold import fold_batch, replay, run_maintainer
 
 #: retain windows with window_hour > hwm_hour - TTL_HOURS (the 72
 #: most recent hourly windows relative to the event-time watermark)
@@ -133,7 +134,6 @@ def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
     """Idempotent fold bound to the TTL'd window pair (shared
     template: streaming/state_fold.py — batch-id replay guard,
     atomic staged swap)."""
-    from .state_fold import fold_batch
     return fold_batch(batch_df, batch_id, state_path,
                       window_state, merge_window_state)
 
@@ -142,21 +142,22 @@ def run_ttl_window_maintainer(events_stream: DataFrame, state_path: str,
                               checkpoint: str):
     """foreachBatch maintainer: restart-safe, replay-safe, bounded
     state (see module docstring)."""
-    from .state_fold import run_maintainer
     return run_maintainer(events_stream, state_path, checkpoint,
                           window_state, merge_window_state)
 
 
+def _replay_by_event_id(ev: DataFrame) -> DataFrame:
+    """Fold the three-batch event_id mod 3 arrival (deliberately NOT
+    time-ordered, so late data and watermark advancement both occur)
+    through the TTL'd maintainer."""
+    return replay([ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+                  window_state, merge_window_state)
+
+
 def events_ttl_window_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered query: three-batch arrival simulation (event_id mod
-    3 — deliberately NOT time-ordered, so late data and watermark
-    advancement both occur) folded through the TTL'd maintainer; the
-    served report must hash-match the oracle's full recompute over
-    surviving windows."""
-    ev = Catalog(spark, sf_dir).events
-    state = window_state(ev.filter(F.col("event_id") % 3 == 0))
-    state = merge_window_state(state, ev.filter(F.col("event_id") % 3 == 1))
-    state = merge_window_state(state, ev.filter(F.col("event_id") % 3 == 2))
+    """Registered query: the three-batch replay's served report must
+    hash-match the oracle's full recompute over surviving windows."""
+    state = _replay_by_event_id(Catalog(spark, sf_dir).events)
     return state_to_report(state)
 
 
@@ -225,10 +226,7 @@ def events_ttl_sliding_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: 24h sliding aggregates served from the same
     three-batch TTL'd state build as events_ttl_window_state; oracle =
     full-history recompute restricted to the validity horizon."""
-    ev = Catalog(spark, sf_dir).events
-    state = window_state(ev.filter(F.col("event_id") % 3 == 0))
-    state = merge_window_state(state, ev.filter(F.col("event_id") % 3 == 1))
-    state = merge_window_state(state, ev.filter(F.col("event_id") % 3 == 2))
+    state = _replay_by_event_id(Catalog(spark, sf_dir).events)
     return sliding_from_state(state)
 
 

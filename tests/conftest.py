@@ -17,32 +17,39 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #: Data-driven (a single reviewable file) instead of 96 scattered
 #: decorators; conftest hooks run before the mark plugin's
 #: deselection, so the dynamic marker participates in -m filtering.
+#: A line ``!<nodeid>[<param>]`` keeps that one parametrization of a
+#: listed function in the default tier.
 _SLOW_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "slow_tests.txt")
 
 
-def _slow_set() -> set[str]:
-    out = set()
+def _slow_sets() -> tuple[set[str], set[str]]:
+    """(slow functions, parametrizations kept fast) — the ``!`` lines
+    of slow_tests.txt are the second set."""
+    slow, fast = set(), set()
     try:
         with open(_SLOW_PATH) as f:
             for line in f:
                 line = line.strip()
-                if line and not line.startswith("#"):
-                    out.add(line)
+                if line.startswith("!"):
+                    fast.add(line[1:])
+                elif line and not line.startswith("#"):
+                    slow.add(line)
     except OSError:
         pass
-    return out
+    return slow, fast
 
 
 def pytest_collection_modifyitems(config, items):
-    slow = _slow_set()
+    slow, fast = _slow_sets()
     if not slow:
         return
     for item in items:
         # function granularity: strip the parametrization suffix and
         # normalize the path to repo-relative (the recorded form)
-        base = item.nodeid.split("[")[0]
-        if base in slow or f"tests/{base}" in slow:
+        nodeid = (item.nodeid if item.nodeid.startswith("tests/")
+                  else f"tests/{item.nodeid}")
+        if nodeid.split("[")[0] in slow and nodeid not in fast:
             item.add_marker(pytest.mark.slow)
 
 

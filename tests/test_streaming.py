@@ -1654,6 +1654,62 @@ def test_interval_join_fold_replay_and_restart(spark, tmp_path):
     assert len(got2) == 1 and got2[0]["click_id"] == 11
 
 
+# ---------------------------------------------------------------------------
+# state_fold.ts_split / replay: the arrival-replay harness of the
+# registered *_incremental queries
+# ---------------------------------------------------------------------------
+
+
+def test_ts_split_partitions_and_holds_back_slice(spark):
+    """The midpoint split covers every event exactly once (ts == mid
+    goes to batch 1), the held-back slice (mid - 6h, mid - 3h] moves
+    to batch 2 with both edges exact, and an empty feed yields two
+    empty batches without raising."""
+    import datetime as dt
+
+    from data_warehouse_project_spark.streaming.state_fold import (
+        LATENESS_S, ts_split)
+
+    t0 = dt.datetime(2024, 1, 1)
+    hours = [0, 1, 4, 5, 7, 8, 9, 10, 12, 20]       # mid = 10 h
+    ev = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(hours=h)) for i, h in enumerate(hours)],
+        "event_id long, ts timestamp")
+
+    def ids(df):
+        return sorted(r["event_id"] for r in df.collect())
+
+    assert [ids(b) for b in ts_split(ev)] == [
+        [0, 1, 2, 3, 4, 5, 6, 7], [8, 9]]
+    # slice (4 h, 7 h]: hour 4 stays in batch 1, hours 5 and 7 move
+    assert [ids(b) for b in ts_split(ev, LATENESS_S)] == [
+        [0, 1, 2, 5, 6, 7], [3, 4, 8, 9]]
+    empty = ev.filter(F.lit(False))
+    assert [b.count() for b in ts_split(empty, LATENESS_S)] == [0, 0]
+
+
+@pytest.mark.parametrize("checkpoint", [None, "eager", "lazy"])
+def test_replay_equals_one_shot_build(spark, checkpoint):
+    """Folding three batches through a maintainer's (init, merge) pair
+    equals init on their union under every checkpoint choice, and the
+    choice is applied: only a checkpointed replay reads its prior state
+    back from an RDD of state rows."""
+    from data_warehouse_project_spark.streaming.dedup_ingest import (
+        dedup_state, merge_dedup_state)
+    from data_warehouse_project_spark.streaming.state_fold import replay
+
+    texts = ["a b", "c", "A  b", "d", "c", "e", "a b"]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    state = replay(batches, dedup_state, merge_dedup_state, checkpoint)
+    assert sorted(state.collect()) == sorted(dedup_state(docs).collect())
+    plan = state._jdf.queryExecution().analyzed().toString()
+    assert ("LogicalRDD [fingerprint" in plan) == (checkpoint is not None)
+    with pytest.raises(ValueError):
+        replay(batches, dedup_state, merge_dedup_state, "always")
+
+
 def test_interval_join_exact_and_subsumes_per_batch(spark, sf_dir):
     """On driver data: the served table equals the batch twin exactly
     on the registered disordered split, per-batch independent joins
@@ -1670,20 +1726,10 @@ def test_interval_join_exact_and_subsumes_per_batch(spark, sf_dir):
     t = {tuple(r) for r in twin.select(*key).collect()}
     assert s == t and len(s) > 0
 
-    # rebuild the same split and show per-batch joins lose pairs
-    import datetime as dt
-
-    import pyspark.sql.functions as SF
+    # the query's own split; show per-batch joins lose pairs
     from data_warehouse_project_spark.sources.catalog import Catalog
-    ev = Catalog(spark, sf_dir).events
-    lo, hi = ev.agg(SF.min("ts"), SF.max("ts")).collect()[0]
-    mid = lo + (hi - lo) / 2
-    slice_lo = mid - dt.timedelta(seconds=IJ.LATENESS_S)
-    slice_hi = mid - dt.timedelta(seconds=3 * 3600)
-    in_slice = ((SF.col("ts") > SF.lit(slice_lo))
-                & (SF.col("ts") <= SF.lit(slice_hi)))
-    halves = [ev.filter((SF.col("ts") <= SF.lit(mid)) & ~in_slice),
-              ev.filter((SF.col("ts") > SF.lit(mid)) | in_slice)]
+    from data_warehouse_project_spark.streaming.state_fold import ts_split
+    halves = ts_split(Catalog(spark, sf_dir).events, IJ.LATENESS_S)
     per_batch = set()
     for h in halves:
         st = IJ.interval_join_state(h)
