@@ -40,9 +40,10 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # analog. Same max_by-over-struct pattern as (b): partial
     # aggregation shrinks the shuffle to one row per group (a window
     # would shuffle the whole fact). o_orderkey is unique → total
-    # order, deterministic.
-    other_cols = [c for c in orders.columns
-                  if c not in ("o_custkey", "o_orderstatus")]
+    # order, deterministic. The struct carries only the columns the
+    # result reads: Catalyst cannot prune fields inside an
+    # aggregate's struct, so every extra one rides the shuffle.
+    other_cols = ["o_orderkey", "o_totalprice", "o_orderdate"]
     latest_orders = (
         orders.groupBy("o_custkey", "o_orderstatus")
         .agg(F.expr(

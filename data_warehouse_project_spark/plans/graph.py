@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
+from ..operators.bloom import broadcast_budget
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -571,9 +572,14 @@ def triangle_participation(lineitem: DataFrame, part: DataFrame,
     # The probe is two O(1) broadcast-hash lookups against the
     # (word → 64-bit lane) bitmap rows — a dense in-row array would
     # need a driver collect or an O(n) map probe, both worse.
+    # The bitmap is broadcast by explicit hint and grows with the edge
+    # count (≤ min(nbits/64, 2·edges) rows of 16 B), so past the
+    # session's broadcast budget the prune is skipped: the result is
+    # identical, only the closing exchange carries more wedges.
     n_edges = und.count()
-    if n_edges > 0:
-        nbits = max(1 << 10, 1 << (16 * n_edges - 1).bit_length())
+    nbits = max(1 << 10, 1 << (16 * n_edges - 1).bit_length())
+    bitmap_bytes = 16 * min(nbits // 64, 2 * n_edges)
+    if n_edges > 0 and bitmap_bytes <= broadcast_budget(und.sparkSession):
         mask = nbits - 1
         bm = pin(
             und.select(F.explode(F.array(

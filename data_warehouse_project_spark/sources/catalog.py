@@ -6,11 +6,23 @@ parquet catalog: one `Catalog` per scale-factor directory, lazily
 loading each table exactly once and registering it as a temp view so
 the same frames serve both DataFrame and spark.sql paths.
 
-Scale notes: scans stay fully declarative (spark.read.parquet with an
-explicit expected schema), so Catalyst pushes filters and prunes
-columns down to the parquet reader; at cluster scale the same catalog
-would point at a partitioned table root (e.g. orders/o_orderdate=...)
-and partition pruning composes for free.
+Schema memo: `spark.read.parquet(path)` without a schema runs one
+Spark job to infer it, and every registry query builds a fresh
+`Catalog`, so a dashboard of short reads used to pay that job per
+table per query. `load_table` infers each file's schema once, with
+Spark's own inference, and keeps it in a module-level memo keyed by
+the path plus (inode, size, mtime_ns) of every data file under it;
+later reads pass the memoized schema and launch no job. A file
+rewritten in place gets a new key, so its schema is inferred again.
+The memo holds one entry per path, so it stays as small as the set
+of tables read.
+
+Scale notes: scans stay fully declarative (spark.read.schema(...)
+.parquet), so Catalyst pushes filters and prunes columns down to the
+parquet reader; at cluster scale the same catalog would point at a
+partitioned table root (e.g. orders/o_orderdate=...) and partition
+pruning composes for free. Paths the local filesystem cannot stat
+(object stores) bypass the memo and infer on every read.
 """
 
 from __future__ import annotations
@@ -18,6 +30,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .. import schemas
 from ..session import tune
@@ -32,6 +45,46 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: parquet. Untestable live in this sandbox (no MySQL server); the
 #: option construction and schema check are unit-tested.
 JDBC_URL_ENV = "DWPS_JDBC_URL"
+
+#: parquet path -> (identity of its data files, on-disk schema as Spark
+#: infers it under the engine's session confs); one entry per path,
+#: replaced when the files under it change
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_key(path: str) -> tuple:
+    """(relative name, inode, size, mtime_ns) of every data file under
+    ``path``, walked recursively so Spark-written directory tables
+    (part files, partition subdirectories) are covered. Names starting
+    with `_` or `.` (_SUCCESS, .crc) are skipped, as Spark's reader
+    skips them. Empty when nothing under the path can be stat-ed
+    locally."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    files = []
+    for dirpath, dirnames, names in os.walk(path):
+        dirnames[:] = [d for d in dirnames if d[0] not in "_."]
+        for n in names:
+            if n[0] in "_.":
+                continue
+            full = os.path.join(dirpath, n)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_ino,
+                          st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)`, inferring the schema only when the
+    files under ``path`` differ from the last inference."""
+    key = _file_key(path)
+    if not key:
+        return spark.read.parquet(path)
+    memo = _SCHEMAS.get(path)
+    if memo is None or memo[0] != key:
+        memo = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+    return spark.read.schema(memo[1]).parquet(path)
 
 
 def _default_partition_column(name: str) -> str | None:
@@ -133,7 +186,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.environ.get(JDBC_URL_ENV):
         return load_table_jdbc(spark, name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     changed = False
     for field in schemas.STAR_TABLES[name].fields:
         want = field.dataType.typeName()

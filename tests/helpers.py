@@ -78,3 +78,20 @@ def minhash_replay(spark, docs):
         if jac >= D.JACCARD_THRESHOLD:
             pairs.append((a, b, jac))
     return sh, sig, pairs
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted by a job group
+    set for the call alone (AQE stage and broadcast jobs inherit it)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

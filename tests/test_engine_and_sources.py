@@ -4,12 +4,17 @@ same schema discipline)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_project_spark import schemas
 from data_warehouse_project_spark.engine import Engine
 from data_warehouse_project_spark.sources.catalog import Catalog
+
+from tests.helpers import count_jobs
 
 
 def test_engine_sql_and_named_queries(spark, sf_dir):
@@ -111,7 +116,8 @@ def test_catalog_normalizes_every_ts_encoding(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from data_warehouse_project_spark.sources.catalog import load_table
+    from data_warehouse_project_spark.sources.catalog import (_file_key,
+                                                              load_table)
 
     base_us = 1_700_000_000_000_000
     us_vals = [base_us + i * 60_000_000 for i in range(3)]
@@ -142,6 +148,40 @@ def test_catalog_normalizes_every_ts_encoding(spark, sf_dir, tmp_path):
                         df.orderBy("event_id").collect()]
     assert results["nanos"] == results["micros"] == results["micros_utc"]
     assert results["micros"][0].year >= 2000
+
+    # schema memo: a second load of an unchanged file infers nothing
+    nanos = str(tmp_path / "nanos")
+    assert count_jobs(spark, lambda: load_table(spark, nanos, "events")) == 0
+    # the same file rewritten in place with the micros encoding has a
+    # new identity: its schema is inferred again, values unchanged
+    key = _file_key(f"{nanos}/events.parquet")
+    shutil.copyfile(tmp_path / "micros" / "events.parquet",
+                    tmp_path / "nanos" / "events.parquet")
+    assert _file_key(f"{nanos}/events.parquet") != key
+    assert count_jobs(spark, lambda: load_table(spark, nanos, "events")) > 0
+    df = load_table(spark, nanos, "events")
+    assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    assert [r["ts"] for r in df.orderBy("event_id").collect()] \
+        == results["micros"]
+
+    # a Spark-written directory table (part files, _SUCCESS, .crc) is
+    # keyed by its part files, and an overwrite re-keys it
+    sparkdir = str(tmp_path / "spark_sf")
+    table = f"{sparkdir}/events.parquet"
+    df.write.parquet(table)
+    key = _file_key(table)
+    parts = sorted(n for n in os.listdir(table) if n.startswith("part-"))
+    assert [f[0] for f in key] == parts
+    load_table(spark, sparkdir, "events")
+    assert count_jobs(spark,
+                      lambda: load_table(spark, sparkdir, "events")) == 0
+    (df.withColumn("ts", F.col("ts").cast("timestamp"))
+     .write.mode("overwrite").parquet(table))
+    assert _file_key(table) != key
+    again = load_table(spark, sparkdir, "events")
+    assert again.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    assert [r["ts"] for r in again.orderBy("event_id").collect()] \
+        == results["micros"]
 
 
 def test_cache_release_frees_all_storage(spark, sf_dir):

@@ -563,8 +563,7 @@ def r7_plans(spark, sf_dir):
     qs = registry.queries()
     names = ["events_attribution", "events_ttl_window_state",
              "events_ttl_sliding_served", "cms_accuracy_floor",
-             "dedup_bridge_survivors", "kmv_customer_overlap",
-             "bloom_semijoin_revenue"]
+             "dedup_bridge_survivors", "kmv_customer_overlap"]
     out = {}
     for name in names:
         out[name] = _plan(qs[name](spark, sf_dir))
@@ -624,16 +623,6 @@ def test_kmv_consumers_read_pinned_sketch(r7_plans):
     assert "CartesianProduct" not in plan
 
 
-def test_bloom_probe_is_broadcast_semi_joins(r7_plans):
-    """The fact stream is pruned by k broadcast LEFT SEMI probes
-    before the exact join — no fact-sized exchange ahead of the
-    probes, no cartesian anywhere."""
-    plan = r7_plans["bloom_semijoin_revenue"]
-    assert plan.count("LeftSemi") >= 3
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 @pytest.fixture()
 def no_broadcast(spark):
     """Compile plans with broadcast disabled — the judge's scale
@@ -672,11 +661,56 @@ def test_triangle_closing_join_pinned_shuffle_hash(no_broadcast, sf_dir):
     assert not any("SortMergeJoin" in l for l in closing), closing
     # r13: the Bloom prune must sit on the wedge stream BEFORE the
     # closing exchange — two broadcast-hash probes on the bitmap
-    # word index (explicit F.broadcast, immune to the threshold)
+    # word index (explicit F.broadcast; with the threshold off the
+    # bitmap is capped at Spark's 10 MB default, far above its size)
     probes = [l for l in plan.splitlines()
               if "BroadcastHashJoin [w1#" in l
               or "BroadcastHashJoin [w2#" in l]
     assert len(probes) == 2, (probes, "bloom probe joins missing")
+
+
+def test_bloom_probe_runs_only_past_broadcast_threshold(
+        request, spark, sf_dir):
+    """operators/bloom.py: a dim subset that fits the broadcast
+    threshold is broadcast-joined with no Bloom probe (the broadcast
+    hash join already filters the lineitem scan exactly). With
+    broadcast off, as past the threshold at scale, the fact stream is
+    pruned by k broadcast LEFT SEMI probes before the exact join, and
+    the answer is the same."""
+    fn = registry.queries()["bloom_semijoin_revenue"]
+    df = fn(spark, sf_dir)
+    plan = _plan(df, "simple")
+    want = df.collect()
+    release_all()
+    assert "LeftSemi" not in plan
+    assert any("BroadcastHashJoin" in l and "p_partkey#" in l
+               for l in plan.splitlines()), plan
+    off = request.getfixturevalue("no_broadcast")
+    df = fn(off, sf_dir)
+    plan = _plan(df, "simple")
+    assert plan.count("LeftSemi") >= 3
+    assert "CartesianProduct" not in plan
+    assert df.collect() == want
+
+
+def test_triangle_bitmap_skipped_past_broadcast_budget(spark, sf_dir):
+    """ADVICE r13: triangle's explicit bitmap broadcast grows with the
+    edge count, so once the bitmap outgrows the broadcast threshold
+    the prune is skipped. Same top-k, no bitmap BroadcastExchange."""
+    fn = registry.queries()["part_triangle_participation"]
+    want = fn(spark, sf_dir).collect()
+    release_all()
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    try:
+        df = fn(spark, sf_dir)
+        plan = _plan(df, "simple")
+        got = df.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        release_all()
+    assert got == want
+    assert "[w1#" not in plan and "[w2#" not in plan, plan
 
 
 def test_embedding_dedup_verify_joins_pinned_shuffle_hash(
