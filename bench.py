@@ -122,11 +122,12 @@ HEADLINE = [
 # one host. kmv_accuracy_floor adds only the exact distinct + 7-year
 # self-join on top of kmv_customer_overlap's measured sketch build —
 # the floor's extra work is the oracle side, not engine work;
-# bloom_filter_floor stays out for another reason: it is the only run
-# of the Bloom probe path at bench scale (bloom_semijoin_revenue
-# broadcast-joins its dim below the broadcast threshold and probes only
-# past it), a fixed-geometry bit-table build plus k broadcast
-# semi-joins over a one-column lineitem projection, and adding it
+# bloom_filter_floor stays out too: its engine work is the shared
+# operators/bloom.py build/probe (a ≤ 1 024-row word bitmap plus
+# BLOOM_K = 2 broadcast semi-joins over a one-column lineitem
+# projection), which part_triangle_participation already runs on its
+# wedge stream (bloom_semijoin_revenue broadcast-joins its dim below
+# the broadcast threshold and probes only past it), and adding it
 # would break the headline's comparability across rounds. Also out:
 # sketch_fold_identity_floor (three half-table sketch builds — each
 # family's full build is already measured or bounded sub-second) and

@@ -3,18 +3,19 @@ for selective fact⋈dim joins at scale (round 7; Bloom 1970, and the
 technique behind Spark's own runtime `bloom_filter_agg` row-level
 filtering, which Spark does not expose as a SQL/DataFrame function —
 this is the same idea built from first principles in DataFrame ops).
+The engine's one Bloom filter: the dim semi-join below and
+triangle's wedge prune (plans/graph.py) share bloom_bits/bloom_probe.
 
 The problem it solves at 100 TB: a fact⋈dim join where the dim
 SUBSET is selective but the dim itself is too large to broadcast
 would shuffle the entire fact table just to discard ~96% of it on
 the other side. The Bloom reduction ships a FIXED-SIZE summary
-instead: the dim subset's set-bit positions — at most k·BLOOM_M rows
-of integers no matter how many keys the dim holds (one m-bit array
-PER SEED, the partitioned-Bloom layout) — broadcast to the fact
-scan, where k hash probes drop non-joining rows BEFORE the join
-exchange. False positives survive the probe (and are removed by the
-exact join that follows); false negatives are impossible: every set
-bit of a present key was inserted by construction.
+instead: the dim subset's bitmap — at most BLOOM_M/64 rows no
+matter how many keys the dim holds — broadcast to the fact scan,
+where k hash probes drop non-joining rows BEFORE the join exchange.
+False positives survive the probe (and are removed by the exact
+join that follows); false negatives are impossible: every set bit
+of a present key was inserted by construction.
 
 When the probe runs: only when the dim subset will NOT be broadcast
 (`fits_broadcast` is False — Catalyst's size estimate exceeds
@@ -35,17 +36,22 @@ of `part` and of the `p_size ≤ 2` subset alike at 4 793 B at sf0.01
 nothing. Past the threshold the hand-rolled probe below is the only
 prune.
 
-Plan shape: the bit table is a distinct over dim_keys × k seeds
-(≤ k·min(n, BLOOM_M) rows — bounded by the filter geometry, not the
-data); the probe is k broadcast LEFT SEMI joins on pmod(xxhash64(key,
-seed), m) — JVM-side hashing, no Python, no explode, and the fact
-table never shuffles a dropped row. The exact join that follows sees
-the ~4%-selectivity survivor stream. Geometry here: m = 65 536 bits
-per seed, k = 3 → the partitioned-layout theory FPR is
-(1 − e^(−n/m))^k ≈ 1.6e-6 at the sf0.1 dim subset (n ≈ 800), and
-≈ 0.16% even at a 10× larger subset (a shade below the classic
-shared-array (1 − e^(−kn/m))^k at these fill factors); a production
-deployment sizes m off the dim-subset count the same way.
+Plan shape: one word-bitmap layout for every caller. The build
+explodes each key's k positions xxhash64(*cols, i) & (nbits − 1) and
+ORs each position's lane into its 64-bit word: groupBy(w).agg(bit_or)
+gives ≤ min(nbits/64, k·n) rows of (w, bits), 16 B each — bounded by
+the filter geometry, not the data. The probe is k broadcast LEFT SEMI
+joins, each keyed on the word index shiftright(p, 6) with the lane
+test bits & (1 << (p & 63)) ≠ 0 as its join condition — JVM-side
+hashing, no Python, and the probed stream never shuffles a dropped
+row. The exact join that follows sees the survivor stream.
+
+Geometry: k = 2 on one shared nbits array, theory FPR
+(1 − e^(−kn/m))^k. The semi-join, the floor and the fold use the fixed
+m = BLOOM_M = 65 536 bits: ≈ 5.4e-4 at the sf0.1 dim subset
+(n = 767), and the fold state stays ≤ m/64 = 1 024 rows forever.
+Triangle sizes its filter from its edge count (bloom_nbits: ≥ 16 bits
+per key, so ≤ 1.4%).
 
 Oracle: the headline query's answer is EXACT — the Bloom stage is a
 pure pre-filter, so the oracle is the plain join+aggregate SQL with
@@ -64,20 +70,20 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..registry import register
 from ..sources.catalog import Catalog
 
-#: filter geometry: m bits, k hash probes
+#: fixed filter geometry of the dim semi-join, the floor and the fold
+#: (one geometry keeps fold merges exact): m bits, k hash probes
 BLOOM_M = 65536
-BLOOM_K = 3
+BLOOM_K = 2
 
 #: dim-subset predicate: small parts (p_size ≤ 2 → ~4% of parts)
 _PART_SIZE_MAX = 2
 
 #: false-positive gate: measured FPR·10^6 ≤ 20 000 (2%) — vs the
-#: partitioned-layout theory (1−e^(−n/m))^k ≈ 1.6e-6 at the sf0.1
-#: subset size (n = 767 keys per 65 536-bit seed array) and ZERO
-#: measured false positives at all three sfs (the fact's key domain
-#: holds ~10³ distinct non-matching keys, so the expected FP count
-#: is ≪ 1); the wide margin keeps the gate valid if driver data
-#: regenerates with up to ~30× more qualifying keys
+#: theory (1−e^(−kn/m))^k ≈ 5.4e-4 at the sf0.1 subset (n = 767
+#: keys, m = 65 536, k = 2) and the measured 584 ppm there (11 of
+#: 19 233 non-matching keys pass; none at sf0.001/sf0.01); theory
+#: stays under the gate up to n ≈ 5 000 qualifying keys, so it holds
+#: if the data regenerates with ~6× more of them
 BLOOM_FPR_GATE_PPM = 20000
 
 #: pruning gate: bloom survivors ≤ 1.05 × true-matching fact rows —
@@ -114,37 +120,58 @@ def broadcast_budget(spark: SparkSession) -> int:
     return threshold if threshold > 0 else _DEFAULT_BROADCAST_BYTES
 
 
-def _positions(keycol, seed: int):
-    return F.pmod(F.xxhash64(keycol.cast("string"), F.lit(seed)),
-                  F.lit(BLOOM_M)).cast("long")
+def bloom_nbits(n: int) -> int:
+    """Filter size for n keys: ≥ 16 bits per key, a power of two (so
+    a position is a mask, not a modulo), at least 1 024."""
+    return max(1 << 10, 1 << (16 * n - 1).bit_length())
 
 
-def bloom_bits(dim_keys: DataFrame, key: str) -> DataFrame:
-    """The filter itself: distinct (seed, position) set bits — one
-    m-bit array per seed, ≤ k·min(n, BLOOM_M) rows regardless of dim
-    size. Callers that probe with it should pin() the result: the
-    probe reads it once per seed."""
-    per_seed = [dim_keys.select(_positions(F.col(key), s).alias("pos"),
-                                F.lit(s).alias("seed"))
-                for s in range(BLOOM_K)]
-    u = per_seed[0]
-    for p in per_seed[1:]:
-        u = u.unionByName(p)
-    return u.distinct()
+def bloom_bytes(nbits: int, n: int) -> int:
+    """Upper bound on the broadcast size of an nbits filter over n
+    keys: ≤ min(nbits/64, k·n) rows of 16 B."""
+    return 16 * min(nbits // 64, BLOOM_K * n)
 
 
-def bloom_probe(fact: DataFrame, key: str, bits: DataFrame) -> DataFrame:
-    """Keep fact rows whose k positions are ALL set: k broadcast
-    left-semi joins — a dropped row never reaches the join exchange.
-    The semi-join side carries a collision-safe column name so a fact
-    frame with its own `pos`/`seed` columns probes unambiguously."""
-    out = fact
-    for s in range(BLOOM_K):
-        side = (bits.filter(F.col("seed") == s)
-                .select(F.col("pos").alias("__bloom_pos")))
-        out = out.join(F.broadcast(side),
-                       _positions(F.col(key), s) == F.col("__bloom_pos"),
-                       "left_semi")
+def _positions(cols: list[str], nbits: int) -> list:
+    return [F.xxhash64(*cols, F.lit(i)).bitwiseAND(F.lit(nbits - 1))
+            for i in range(BLOOM_K)]
+
+
+def _lane(p):
+    """Position p's one-hot lane inside its 64-bit word."""
+    return F.call_function("shiftleft", F.lit(1).cast("long"),
+                           p.bitwiseAND(F.lit(63)).cast("int"))
+
+
+def bloom_bits(keys: DataFrame, cols: list[str], nbits: int) -> DataFrame:
+    """The filter itself: (w, bits) rows, one per 64-bit word with a
+    set bit — ≤ min(nbits/64, k·n) rows regardless of input size.
+    Callers that probe with it should pin() the result: the probe
+    reads it once per hash."""
+    return (keys.select(F.explode(F.array(*_positions(cols, nbits)))
+                        .alias("__bloom_p"))
+            .groupBy(F.shiftright("__bloom_p", 6).alias("w"))
+            .agg(F.bit_or(_lane(F.col("__bloom_p"))).alias("bits")))
+
+
+def bloom_probe(df: DataFrame, cols: list[str], bits: DataFrame,
+                nbits: int) -> DataFrame:
+    """Keep rows of ``df`` whose k positions are ALL set: k broadcast
+    left-semi joins — a dropped row never reaches the next exchange.
+    Precondition: ``cols`` have the same types as the columns the
+    filter was built from (xxhash64 hashes a long and an int of the
+    same value differently, which would read as false negatives);
+    ``nbits`` is the build's. The bitmap side carries
+    collision-safe column names."""
+    side = F.broadcast(bits.select(F.col("w").alias("__bloom_w"),
+                                   F.col("bits").alias("__bloom_bits")))
+    out = df
+    for p in _positions(cols, nbits):
+        out = out.join(
+            side,
+            (F.shiftright(p, 6) == F.col("__bloom_w"))
+            & (F.col("__bloom_bits").bitwiseAND(_lane(p)) != 0),
+            "left_semi")
     return out
 
 
@@ -167,8 +194,8 @@ def bloom_semijoin_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not fits_broadcast(dim):
         from ..cache import pin
         dim = pin(dim)
-        fact = bloom_probe(fact, "l_partkey",
-                           pin(bloom_bits(dim, "p_partkey")))
+        bits = pin(bloom_bits(dim, ["p_partkey"], BLOOM_M))
+        fact = bloom_probe(fact, ["l_partkey"], bits, BLOOM_M)
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (fact
             .join(dim, F.col("l_partkey") == F.col("p_partkey"))
@@ -201,9 +228,9 @@ def bloom_filter_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cache import pin
     cat = Catalog(spark, sf_dir)
     dim = pin(_small_parts(cat).select("p_partkey"))
-    bits = pin(bloom_bits(dim, "p_partkey"))
+    bits = pin(bloom_bits(dim, ["p_partkey"], BLOOM_M))
     fact = pin(cat.lineitem.select("l_partkey"))
-    passed = pin(bloom_probe(fact, "l_partkey", bits))
+    passed = pin(bloom_probe(fact, ["l_partkey"], bits, BLOOM_M))
     true_match = fact.join(F.broadcast(dim),
                            F.col("l_partkey") == F.col("p_partkey"),
                            "left_semi")
@@ -249,11 +276,11 @@ register("bloom_filter_floor", bloom_filter_floor, BLOOM_FLOOR_SQL)
 def _bloom_init(batch_parts: DataFrame) -> DataFrame:
     return bloom_bits(
         batch_parts.filter(F.col("p_size") <= _PART_SIZE_MAX)
-        .select("p_partkey"), "p_partkey")
+        .select("p_partkey"), ["p_partkey"], BLOOM_M)
 
 
 def _bloom_merge(prev: DataFrame, batch_parts: DataFrame) -> DataFrame:
-    """Set-bit union — the Bloom merge is EXACT (a bit is set in the
+    """Word-wise OR — the Bloom merge is EXACT (a bit is set in the
     union iff some batch set it), so the folded filter is
     BIT-IDENTICAL to a single-pass build over all history
     (unit-pinned): the same guarantee class as the CMS cell-addition,
@@ -262,14 +289,14 @@ def _bloom_merge(prev: DataFrame, batch_parts: DataFrame) -> DataFrame:
     which the floor's exactness contract makes safe to defer (false
     positives never corrupt results, they only cost probe passes)."""
     return (prev.unionByName(_bloom_init(batch_parts))
-            .distinct())
+            .groupBy("w").agg(F.bit_or("bits").alias("bits")))
 
 
 def bloom_fold_batch_into_state(batch_df: DataFrame, batch_id: int,
                                 state_path: str) -> bool:
     """Idempotent Bloom fold on the shared template
     (streaming/state_fold.py): batch-id replay guard, atomic staged
-    swap. State ≤ k·min(n, BLOOM_M) rows forever — the always-current
+    swap. State ≤ BLOOM_M/64 = 1 024 rows forever — the always-current
     join pre-filter a long-running pipeline probes without ever
     rescanning the dimension's history."""
     from ..streaming.state_fold import fold_batch

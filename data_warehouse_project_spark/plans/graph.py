@@ -39,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
-from ..operators.bloom import broadcast_budget
+from ..operators.bloom import (bloom_bits, bloom_bytes, bloom_nbits,
+                               bloom_probe, broadcast_budget)
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -560,58 +561,19 @@ def triangle_participation(lineitem: DataFrame, part: DataFrame,
         .select(F.col("o1.u").alias("u"),
                 F.least("o1.v", "o2.v").alias("lo"),
                 F.greatest("o1.v", "o2.v").alias("hi")))
-    # r13 (guide §3.2, Bloom-filter pre-filtering): only ~4.6% of the
-    # O(m^1.5) wedge stream closes into a triangle at sf0.1 (measured:
-    # 41.1M wedges → 1.88M triangles), yet every wedge row used to be
-    # hash-exchanged for the closing join — 413 MB of shuffle write,
-    # the engine's single largest exchange. A Bloom filter over the
-    # edge keys (built from the pinned und, 16 bits/edge, 2 probes ⇒
-    # ~1.4% false positives) drops definitely-non-closing wedges
-    # BEFORE the exchange. False positives only cost extra shuffle;
-    # there are no false negatives, so the join result is unchanged.
-    # The probe is two O(1) broadcast-hash lookups against the
-    # (word → 64-bit lane) bitmap rows — a dense in-row array would
-    # need a driver collect or an O(n) map probe, both worse.
-    # The bitmap is broadcast by explicit hint and grows with the edge
-    # count (≤ min(nbits/64, 2·edges) rows of 16 B), so past the
-    # session's broadcast budget the prune is skipped: the result is
-    # identical, only the closing exchange carries more wedges.
+    # Bloom pre-filter: only ~4.6% of the O(m^1.5) wedge stream
+    # closes into a triangle (sf0.1: 41.1M wedges → 1.88M triangles),
+    # so drop definitely-non-closing wedges BEFORE the closing
+    # exchange. The filter over the edge keys is broadcast and grows
+    # with the edge count, so past the session's broadcast budget the
+    # prune is skipped: same result, only a larger exchange.
     n_edges = und.count()
-    nbits = max(1 << 10, 1 << (16 * n_edges - 1).bit_length())
-    bitmap_bytes = 16 * min(nbits // 64, 2 * n_edges)
-    if n_edges > 0 and bitmap_bytes <= broadcast_budget(und.sparkSession):
-        mask = nbits - 1
-        bm = pin(
-            und.select(F.explode(F.array(
-                F.xxhash64("a", "b").bitwiseAND(F.lit(mask)),
-                F.xxhash64("a", "b", F.lit(1)).bitwiseAND(F.lit(mask))))
-                .alias("p"))
-            .select(F.shiftright("p", 6).alias("w"),
-                    F.expr("shiftleft(1L, cast(p & 63 as int))").alias("b"))
-            .groupBy("w").agg(F.expr("bit_or(b)").alias("bits")))
-        probed = wedges.select(
-            "u", "lo", "hi",
-            F.xxhash64("lo", "hi").bitwiseAND(F.lit(mask)).alias("p1"),
-            F.xxhash64("lo", "hi", F.lit(1)).bitwiseAND(F.lit(mask))
-            .alias("p2"))
-        bm1 = F.broadcast(bm.select(F.col("w").alias("w1"),
-                                    F.col("bits").alias("bits1")))
-        bm2 = F.broadcast(bm.select(F.col("w").alias("w2"),
-                                    F.col("bits").alias("bits2")))
-        # inner joins: a probe word with no bitmap row has all-zero
-        # lanes — the wedge is definitely non-closing, dropping it is
-        # the filter
-        wedges = (
-            probed
-            .withColumn("w1", F.shiftright("p1", 6))
-            .join(bm1, "w1")
-            .filter(F.col("bits1").bitwiseAND(
-                F.expr("shiftleft(1L, cast(p1 & 63 as int))")) != 0)
-            .withColumn("w2", F.shiftright("p2", 6))
-            .join(bm2, "w2")
-            .filter(F.col("bits2").bitwiseAND(
-                F.expr("shiftleft(1L, cast(p2 & 63 as int))")) != 0)
-            .select("u", "lo", "hi"))
+    nbits = bloom_nbits(n_edges)
+    if n_edges > 0 and (bloom_bytes(nbits, n_edges)
+                        <= broadcast_budget(und.sparkSession)):
+        wedges = bloom_probe(
+            wedges, ["lo", "hi"],
+            pin(bloom_bits(und, ["a", "b"], nbits)), nbits)
     tri = wedges.join(
         und.hint("shuffle_hash"),
         (F.col("lo") == F.col("a")) & (F.col("hi") == F.col("b")))

@@ -12,6 +12,7 @@ import pytest
 
 from data_warehouse_project_spark import registry
 from data_warehouse_project_spark.cache import release_all
+from data_warehouse_project_spark.operators.bloom import BLOOM_K
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -639,6 +640,13 @@ def no_broadcast(spark):
     release_all()
 
 
+def _is_bloom_probe(line: str) -> bool:
+    """A probe join of operators/bloom.bloom_probe: broadcast LEFT
+    SEMI keyed on its word column."""
+    return ("BroadcastHashJoin" in line and "LeftSemi" in line
+            and "__bloom_w#" in line)
+
+
 def test_triangle_closing_join_pinned_shuffle_hash(no_broadcast, sf_dir):
     """VERDICT r11 #1: the triangle closing join (plans/graph.py —
     wedges probed against the undirected edge set) must stay
@@ -659,14 +667,19 @@ def test_triangle_closing_join_pinned_shuffle_hash(no_broadcast, sf_dir):
     assert closing, "closing join (lo/hi keys) not found"
     assert all("ShuffledHashJoin" in l for l in closing), closing
     assert not any("SortMergeJoin" in l for l in closing), closing
-    # r13: the Bloom prune must sit on the wedge stream BEFORE the
-    # closing exchange — two broadcast-hash probes on the bitmap
-    # word index (explicit F.broadcast; with the threshold off the
-    # bitmap is capped at Spark's 10 MB default, far above its size)
-    probes = [l for l in plan.splitlines()
-              if "BroadcastHashJoin [w1#" in l
-              or "BroadcastHashJoin [w2#" in l]
-    assert len(probes) == 2, (probes, "bloom probe joins missing")
+    # the Bloom prune must sit on the wedge stream BEFORE the closing
+    # exchange — BLOOM_K broadcast LEFT SEMI probes keyed on the
+    # shared probe's word column (explicit F.broadcast; with the
+    # threshold off the bitmap is capped at Spark's 10 MB default,
+    # far above its size)
+    lines = plan.splitlines()
+    probes = [i for i, l in enumerate(lines) if _is_bloom_probe(l)]
+    assert len(probes) == BLOOM_K, (probes, "bloom probe joins missing")
+    assert all("lo#" in lines[i] and "hi#" in lines[i] for i in probes)
+    # explain prints parents first: the closing join is above (and so
+    # runs after) every probe
+    first_closing = min(i for i, l in enumerate(lines) if "Join [lo#" in l)
+    assert all(first_closing < i for i in probes), plan
 
 
 def test_bloom_probe_runs_only_past_broadcast_threshold(
@@ -688,7 +701,8 @@ def test_bloom_probe_runs_only_past_broadcast_threshold(
     off = request.getfixturevalue("no_broadcast")
     df = fn(off, sf_dir)
     plan = _plan(df, "simple")
-    assert plan.count("LeftSemi") >= 3
+    assert plan.count("LeftSemi") == BLOOM_K, plan
+    assert sum(map(_is_bloom_probe, plan.splitlines())) == BLOOM_K, plan
     assert "CartesianProduct" not in plan
     assert df.collect() == want
 
@@ -696,9 +710,13 @@ def test_bloom_probe_runs_only_past_broadcast_threshold(
 def test_triangle_bitmap_skipped_past_broadcast_budget(spark, sf_dir):
     """ADVICE r13: triangle's explicit bitmap broadcast grows with the
     edge count, so once the bitmap outgrows the broadcast threshold
-    the prune is skipped. Same top-k, no bitmap BroadcastExchange."""
+    the prune is skipped. Positive control: the default threshold
+    plans the Bloom probes; at 1 024 B the same top-k comes back with
+    no probe."""
     fn = registry.queries()["part_triangle_participation"]
-    want = fn(spark, sf_dir).collect()
+    df = fn(spark, sf_dir)
+    plan_on = _plan(df, "simple")
+    want = df.collect()
     release_all()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
@@ -710,7 +728,9 @@ def test_triangle_bitmap_skipped_past_broadcast_budget(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         release_all()
     assert got == want
-    assert "[w1#" not in plan and "[w2#" not in plan, plan
+    assert sum(map(_is_bloom_probe, plan_on.splitlines())) == BLOOM_K, \
+        plan_on
+    assert "__bloom_w#" not in plan, plan
 
 
 def test_embedding_dedup_verify_joins_pinned_shuffle_hash(

@@ -644,33 +644,34 @@ def test_late_sessions_any_split_matches_model(spark, events, mask):
 
 def test_bloom_probe_planted_membership(spark):
     """The probe must pass EXACTLY the rows whose k positions are all
-    set — verified against a manual position-membership check for
-    present and absent keys alike (catches hash/seed/pmod drift and
-    any accidental false negative)."""
-    import pyspark.sql.functions as SF
-
+    set in the (w, bits) word bitmap — verified against a manual
+    lane check for present and absent keys alike (catches hash,
+    mask and lane-shift drift and any accidental false negative).
+    The 1 024-bit filter admits some false positives, so the
+    comparison also covers absent keys that pass."""
     from data_warehouse_project_spark.operators import bloom as B
 
     dim = spark.createDataFrame([(k,) for k in range(0, 50)],
                                 "p_partkey long")
-    bits = B.bloom_bits(dim, "p_partkey")
-    bitset = {(r["seed"], r["pos"]) for r in bits.collect()}
-    assert len(bitset) <= 50 * B.BLOOM_K
-
     fact = spark.createDataFrame([(k,) for k in range(0, 200)],
                                  "l_partkey long")
-    got = {r["l_partkey"]
-           for r in B.bloom_probe(fact, "l_partkey", bits).collect()}
-    # manual expectation from the same engine-computed positions
-    pos = fact.select(
-        "l_partkey",
-        *[B._positions(SF.col("l_partkey"), s).alias(f"p{s}")
-          for s in range(B.BLOOM_K)]).collect()
-    want = {r["l_partkey"] for r in pos
-            if all((s, r[f"p{s}"]) in bitset for s in range(B.BLOOM_K))}
-    assert got == want
-    # zero false negatives: every present key passes
-    assert set(range(0, 50)) <= got
+    for nbits in (1 << 10, B.BLOOM_M):
+        bits = B.bloom_bits(dim, ["p_partkey"], nbits)
+        bitmap = {r["w"]: r["bits"] for r in bits.collect()}
+        assert len(bitmap) <= B.bloom_bytes(nbits, 50) // 16
+        got = {r["l_partkey"] for r in
+               B.bloom_probe(fact, ["l_partkey"], bits, nbits).collect()}
+        # manual expectation from the same engine-computed positions
+        pos = fact.select(
+            "l_partkey",
+            *[p.alias(f"p{i}") for i, p in
+              enumerate(B._positions(["l_partkey"], nbits))]).collect()
+        want = {r["l_partkey"] for r in pos
+                if all(bitmap.get(r[f"p{i}"] >> 6, 0) >> (r[f"p{i}"] & 63)
+                       & 1 for i in range(B.BLOOM_K))}
+        assert got == want, nbits
+        # zero false negatives: every present key passes
+        assert set(range(0, 50)) <= got, nbits
 
 
 def test_bloom_floor_and_exactness(spark, sf_dir):

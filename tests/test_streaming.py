@@ -1508,9 +1508,9 @@ def test_kmv_streaming_maintainer_restart(spark, tmp_path):
 
 
 def test_bloom_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
-    """The folded Bloom bit set must be BIT-IDENTICAL to a single-pass
-    build over all history (set union is exact), and replayed batch
-    ids must be skipped."""
+    """The folded Bloom bitmap must be BIT-IDENTICAL to a single-pass
+    build over all history (word-wise OR is exact), and replayed
+    batch ids must be skipped."""
     from data_warehouse_project_spark.operators import bloom
 
     state = str(tmp_path / "bloom_state")
@@ -1526,12 +1526,13 @@ def test_bloom_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     assert bloom.bloom_fold_batch_into_state(b, 1, state) is False
     assert bloom.bloom_fold_batch_into_state(a, 0, state) is False
 
-    folded = {(r["seed"], r["pos"])
+    folded = [(r["w"], r["bits"])
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()}
-    single = {(r["seed"], r["pos"])
+              .drop("last_batch_id").collect()]
+    single = {(r["w"], r["bits"])
               for r in bloom._bloom_init(a.unionByName(b)).collect()}
-    assert folded == single
+    assert len(folded) == len(set(folded)), "one row per word"
+    assert set(folded) == single
     # the folded filter still admits every qualifying key (no false
     # negatives through the fold path)
     qualifying = a.unionByName(b).filter("p_size <= 2") \
@@ -1539,7 +1540,7 @@ def test_bloom_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     bits = spark.read.parquet(state).drop("last_batch_id")
     passed = bloom.bloom_probe(
         qualifying.withColumnRenamed("p_partkey", "l_partkey"),
-        "l_partkey", bits)
+        ["l_partkey"], bits, bloom.BLOOM_M)
     assert passed.count() == qualifying.count()
 
 
