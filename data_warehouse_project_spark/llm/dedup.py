@@ -66,6 +66,22 @@ def _with_shingles(df: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
+def hashed_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles long[], n_shingles): each distinct shingle
+    hashed to int64 up front, so the (interpreted, expensive)
+    shingle construction runs ONCE and what persists, shuffles and
+    verifies is compact long arrays instead of word-5-gram strings.
+    Jaccard over the hashes equals Jaccard over the strings modulo
+    64-bit collisions (~n²/2⁶⁴ per doc — negligible; the DuckDB
+    parity test pins agreement with the string-based oracle)."""
+    return (_with_shingles(docs)
+            .select(
+                "doc_id",
+                F.expr("transform(shingles, s -> xxhash64(s))")
+                .alias("shingles"),
+                F.size("shingles").alias("n_shingles")))
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one keeper (min doc_id) per distinct normalized
     text; n_copies counts the duplicate cluster size."""
@@ -149,27 +165,15 @@ def ngram_jaccard_pairs(docs: DataFrame,
     Σ min(df, cap)² instead of the uncapped Σ df² — one ubiquitous
     boilerplate shingle can no longer produce an O(n²) candidate set.
     """
-    # hash shingles to int64 up front: the (interpreted, expensive)
-    # shingle construction runs ONCE, and what persists + shuffles +
-    # verifies is compact long arrays instead of word-5-gram strings.
-    # Jaccard over the hashes equals Jaccard over the strings modulo
-    # 64-bit collisions (~n²/2⁶⁴ per doc — negligible; the DuckDB
-    # parity test pins agreement with the string-based oracle).
-    # persist() is justified here where the minhash path measured it
-    # a loss: that cached STRING arrays (10× serialization cost);
-    # these are longs, and FIVE downstream branches reuse them
-    # (measured at sf0.1: 4.5 s recompute → 2.6 s persisted). The
-    # persist is TRACKED (cache.pin): per-run sessions let LRU/GC
-    # clean it, long-lived hosts call cache.release_all() after each
+    # persist() of the pre-hashed shingles: caching the raw STRING
+    # arrays measured a loss (10× serialization cost); these are
+    # longs, and FIVE downstream branches reuse them (measured at
+    # sf0.1: 4.5 s recompute → 2.6 s persisted). The persist is
+    # TRACKED (cache.pin): per-run sessions let LRU/GC clean it,
+    # long-lived hosts call cache.release_all() after each
     # materialized result.
     from ..cache import pin
-    sh_all = pin(
-        _with_shingles(docs)
-        .select(
-            "doc_id",
-            F.expr("transform(shingles, s -> xxhash64(s))").alias("shingles"),
-            F.size("shingles").alias("n_shingles"))
-    )
+    sh_all = pin(hashed_shingles(docs))
     return _verify_jaccard(sh_all, _ngram_candidates(sh_all, df_cap))
 
 
@@ -264,12 +268,6 @@ WHERE {sql_fround('shared / CAST(n_a + n_b - shared AS DOUBLE)', 6)}
 """
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """doc_id → array of NUM_HASHES minhash values (from raw docs)."""
-    sh = _with_shingles(df).withColumn("n_shingles", F.size("shingles"))
-    return minhash_signatures_from(sh, num_hashes)
-
-
 def minhash_signatures_from(sh: DataFrame,
                             num_hashes: int = NUM_HASHES) -> DataFrame:
     """Signatures from a prepared (doc_id, shingles, n_shingles) frame.
@@ -318,6 +316,26 @@ def band_buckets(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
+def bucket_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_a < doc_b) pairs of every (band, bucket) of a (doc_id,
+    band, bucket) frame, generated in-bucket as a triangular slice of
+    the sorted member list. Buckets over MAX_BUCKET members generate
+    none. A pair sharing several buckets repeats: callers distinct.
+    Shared by the one-shot LSH pipeline and the ingest-time
+    maintainer's intra-batch candidates."""
+    return (
+        bands.groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
+        .filter((F.size("ds") > 1) & (F.size("ds") <= MAX_BUCKET))
+        .select(F.explode(F.expr(
+            "flatten(transform(ds, (x, i) -> "
+            "transform(slice(ds, i + 2, size(ds) - i - 1), "
+            "y -> struct(x AS doc_a, y AS doc_b))))"
+        )).alias("p"))
+        .select("p.doc_a", "p.doc_b")
+    )
+
+
 def _minhash_verified_pairs(spark: SparkSession, sf_dir: str):
     """Shared MinHash+LSH pipeline: returns (verified pairs with
     exact jaccard, signature frame). dedup_minhash_lsh returns the
@@ -339,37 +357,16 @@ def _minhash_verified_pairs(spark: SparkSession, sf_dir: str):
     way hot shingles are capped in dedup_ngram_jaccard.
     """
     cat = Catalog(spark, sf_dir)
-    # pre-hash shingles to int64 and persist the compact long arrays
-    # (same rationale as ngram_jaccard_pairs: one shingling pass,
-    # every downstream branch reuses ~16 B/shingle; persisting the
-    # raw STRING arrays measured a 10× serialization loss). The
-    # minhash family then becomes xxhash64(h, j) over the pre-hash —
-    # still an independent uniform hash per seed j, and hashing a
-    # fixed-width long is cheaper than re-hashing each string 32×.
-    # Tracked persist — see cache.py.
+    # persist the pre-hashed shingles (same rationale as
+    # ngram_jaccard_pairs: one shingling pass, every downstream branch
+    # reuses ~16 B/shingle). The minhash family then becomes
+    # xxhash64(h, j) over the pre-hash — still an independent uniform
+    # hash per seed j, and hashing a fixed-width long is cheaper than
+    # re-hashing each string 32×. Tracked persist — see cache.py.
     from ..cache import pin
-    sh_all = pin(
-        _with_shingles(cat.documents)
-        .select(
-            "doc_id",
-            F.expr("transform(shingles, s -> xxhash64(s))").alias("shingles"),
-            F.size("shingles").alias("n_shingles"))
-    )
+    sh_all = pin(hashed_shingles(cat.documents))
     sigs = minhash_signatures_from(sh_all)
-    bands = band_buckets(sigs)
-
-    candidates = (
-        bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= MAX_BUCKET))
-        .select(F.explode(F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc_a, y AS doc_b))))"
-        )).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    candidates = bucket_pairs(band_buckets(sigs)).distinct()
 
     # exact-Jaccard verification of candidates only (shared helper —
     # broadcast candidate set, shingle arrays never shuffle)

@@ -47,23 +47,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..cache import pin
-from ..llm.dedup import (MAX_BUCKET, _verify_jaccard, _with_shingles,
-                         band_buckets, minhash_signatures_from)
+from ..llm.dedup import (MAX_BUCKET, _verify_jaccard, band_buckets,
+                         bucket_pairs, hashed_shingles,
+                         minhash_signatures_from)
 from ..registry import register
 from ..sources.catalog import Catalog
 from .state_fold import (fold_batch, ingest_batches, ntile_batched,
                          run_maintainer)
-
-
-def hashed_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles long[], n_shingles) — the one-shot
-    pipeline's compact pre-hashed form (llm.dedup notes)."""
-    return (_with_shingles(docs)
-            .select(
-                "doc_id",
-                F.expr("transform(shingles, s -> xxhash64(s))")
-                .alias("shingles"),
-                F.size("shingles").alias("n_shingles")))
 
 
 def banded(docs: DataFrame) -> DataFrame:
@@ -99,17 +89,7 @@ def arrival_candidates(state: DataFrame | None,
     batch-vs-history bucket joins plus intra-batch in-bucket pairs.
     The state side's per-bucket membership is capped at MAX_BUCKET
     (hot buckets stop generating, as in the one-shot pipeline)."""
-    intra = (
-        batch_bands.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= MAX_BUCKET))
-        .select(F.explode(F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc_a, y AS doc_b))))"
-        )).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-    )
+    intra = bucket_pairs(batch_bands)
     if state is None:
         return intra.distinct()
     hist = (

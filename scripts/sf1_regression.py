@@ -1,14 +1,10 @@
-"""Repeatable derived-sf1.0 scale regression check (VERDICT r11 #5).
+"""Repeatable derived-sf1.0 scale regression check.
 
-The four round-11 probe scripts ({graph,docs,events,embeddings}_
-sf1_probe.py) each derive a domain-faithful 10x corpus from sf0.1
-and measured their family's shuffle curve once — and caught two real
-scale-killers (SCALING.md #13/#16). This script makes those findings
-STANDING: one command re-derives any missing corpus, re-measures
-every probed query's shuffle bytes at BOTH sf0.1 and the derived
-sf1.0, and gates them against recorded bounds
-(tests/sf1_bounds.json) with the same three-kind gate the two-scale
-audit uses (scripts/shuffle_audit.py gate_violations):
+Derives a 10x corpus from sf0.1 for four plan families, re-measures
+every family query's shuffle bytes at BOTH sf0.1 and the derived
+sf1.0, and gates them against recorded bounds (tests/sf1_bounds.json)
+with the same three-kind gate the two-scale audit uses
+(scripts/shuffle_audit.py gate_violations):
 
 - SPILL: zero bytes spilled at either scale — except the adjudicated
   allowlist (part_affinity_topk's map-side combiner spill, SCALING.md
@@ -18,6 +14,18 @@ audit uses (scripts/shuffle_audit.py gate_violations):
 - GROWTH: the sf0.1 -> sf1.0 byte ratio <= recorded ratio * 1.6 —
   the superlinear-bend tripwire that caught the triangle sort-merge
   flip (117x) and the quadratic LSH candidate set.
+
+Each family's corpus is ten copies of its sf0.1 table(s), made
+disjoint so the distribution its plans depend on is kept
+(SCALING.md #13-#16):
+
+- graph: lineitem + part with l_orderkey / l_partkey offset per copy.
+- docs: documents with copy i's letters Caesar-rotated by i.
+- events: events with user_id / event_id offset, timestamps kept.
+- embeddings: copy i rotated by a seeded orthogonal matrix.
+
+Derived tables go under .localdata/sf1.0 (gitignored); the other
+tables are symlinks to sf0.1.
 
 Bytes, not wall: shuffle volume is deterministic given data + plan,
 so this is safe to run on a loaded host.
@@ -39,8 +47,12 @@ from __future__ import annotations
 
 import json
 import os
+import string
 import sys
 import time
+
+import numpy as np
+from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -49,6 +61,7 @@ sys.path.insert(0, os.path.join(REPO, "scripts"))
 BOUNDS_PATH = os.path.join(REPO, "tests", "sf1_bounds.json")
 SRC = "/root/testdata/sf0.1"
 DST = os.path.join(REPO, ".localdata", "sf1.0")
+COPIES = 10
 
 HEADROOM = 2.5
 GROWTH_HEADROOM = 1.6
@@ -61,42 +74,176 @@ GROWTH_HEADROOM = 1.6
 SPILL_ALLOWED = {"part_affinity_topk"}
 
 
-def _families():
-    """family name -> (probe module, its query list, key table)."""
-    import docs_sf1_probe
-    import embeddings_sf1_probe
-    import events_sf1_probe
-    import graph_sf1_probe
-    return {
-        "graph": (graph_sf1_probe, graph_sf1_probe.GRAPH_QUERIES,
-                  "lineitem"),
-        "docs": (docs_sf1_probe, docs_sf1_probe.DOC_QUERIES,
-                 "documents"),
-        "events": (events_sf1_probe, events_sf1_probe.EVENT_QUERIES,
-                   "events"),
-        "embeddings": (embeddings_sf1_probe,
-                       embeddings_sf1_probe.VEC_QUERIES, "embeddings"),
-    }
+def _build_graph(spark) -> None:
+    """10 disjoint key-remapped copies of sf0.1's lineitem and part.
+    Key remap: new_key = old_key + copy_i * (max_key + 1) — keeps
+    keys integral and collision-free without hashing."""
+    li = spark.read.parquet(f"{SRC}/lineitem.parquet")
+    part = spark.read.parquet(f"{SRC}/part.parquet")
+    max_order = li.agg(F.max("l_orderkey")).first()[0] + 1
+    max_part = part.agg(F.max("p_partkey")).first()[0] + 1
+    copies = spark.range(COPIES).select(F.col("id").alias("copy_i"))
+    (li.crossJoin(F.broadcast(copies))
+       .withColumn("l_orderkey",
+                   F.col("l_orderkey") + F.col("copy_i") * max_order)
+       .withColumn("l_partkey",
+                   F.col("l_partkey") + F.col("copy_i") * max_part)
+       .drop("copy_i")
+       .write.mode("overwrite").parquet(f"{DST}/lineitem.parquet"))
+    (part.crossJoin(F.broadcast(copies))
+       .withColumn("p_partkey",
+                   F.col("p_partkey") + F.col("copy_i") * max_part)
+       .withColumn("p_name",
+                   F.concat_ws("#", F.col("p_name"),
+                               F.col("copy_i").cast("string")))
+       .drop("copy_i")
+       .write.mode("overwrite").parquet(f"{DST}/part.parquet"))
+
+
+def _rot(s: str, i: int) -> str:
+    return s[i:] + s[:i]
+
+
+def _build_docs(spark) -> None:
+    docs = spark.read.parquet(f"{SRC}/documents.parquet")
+    max_id = docs.agg(F.max("doc_id")).first()[0] + 1
+    lower, upper = string.ascii_lowercase, string.ascii_uppercase
+    parts = []
+    for i in range(COPIES):
+        parts.append(
+            docs.select(
+                (F.col("doc_id") + F.lit(i * max_id)).alias("doc_id"),
+                F.translate("text", lower + upper,
+                            _rot(lower, i) + _rot(upper, i)).alias("text"),
+                "lang", "source", "n_chars"))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    out.write.mode("overwrite").parquet(f"{DST}/documents.parquet")
+
+
+def _build_events(spark) -> None:
+    ev = spark.read.parquet(f"{SRC}/events.parquet")
+    max_uid = ev.agg(F.max("user_id")).first()[0] + 1
+    max_eid = ev.agg(F.max("event_id")).first()[0] + 1
+    copies = spark.range(COPIES).select(F.col("id").alias("copy_i"))
+    (ev.crossJoin(F.broadcast(copies))
+       .withColumn("user_id",
+                   F.col("user_id") + F.col("copy_i") * max_uid)
+       .withColumn("event_id",
+                   F.col("event_id") + F.col("copy_i") * max_eid)
+       .drop("copy_i")
+       .write.mode("overwrite").parquet(f"{DST}/events.parquet"))
+
+
+def _rotation(dim: int, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    q, r = np.linalg.qr(rng.standard_normal((dim, dim)))
+    # sign-normalize so the decomposition is unique/deterministic
+    return q * np.sign(np.diag(r))
+
+
+def _build_embeddings(spark) -> None:
+    import duckdb
+    con = duckdb.connect()
+    rows = con.execute(
+        f"SELECT vec_id, embedding, label FROM "
+        f"read_parquet('{SRC}/embeddings.parquet') ORDER BY vec_id"
+    ).fetchall()
+    con.close()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    labels = [r[2] for r in rows]
+    dim = X.shape[1]
+    max_id = int(ids.max()) + 1
+    out_rows = []
+    for i in range(COPIES):
+        Xi = X if i == 0 else X @ _rotation(dim, seed=1000 + i)
+        Xi32 = Xi.astype(np.float32)
+        for j in range(len(ids)):
+            out_rows.append((int(ids[j] + i * max_id),
+                             [float(v) for v in Xi32[j]],
+                             labels[j]))
+    df = spark.createDataFrame(out_rows,
+                               "vec_id long, embedding array<float>, "
+                               "label int")
+    df.repartition(8).write.mode("overwrite").parquet(
+        f"{DST}/embeddings.parquet")
+
+
+#: family -> (queries, derived table, build). The derived table's
+#: _SUCCESS marker says the family's corpus is built.
+FAMILIES = {
+    "graph": ([
+        "part_triangle_participation",
+        "part_copurchase_pagerank",
+        "part_affinity_topk",
+        "part_label_propagation",
+        "part_market_basket",
+        "part_reach_hops",
+    ], "lineitem", _build_graph),
+    "docs": ([
+        "bpe_encode_stats",
+        "docs_dedup_ingest_incremental",
+        "docs_neardup_ingest_incremental",
+        "dedup_ngram_jaccard",
+        "dedup_minhash_lsh",
+        "dup_ngram_spans",
+        "dup_ngram_char_fracs",
+        "doc_repetition_stats",
+        "doc_lm_cross_entropy",
+        "corpus_refinery_report",
+        "dedup_bridge_survivors",
+    ], "documents", _build_docs),
+    "events": ([
+        "events_sessions_late_tolerant",
+        "events_transitions_late_tolerant",
+        "events_sessions_incremental",
+        "events_transitions_incremental",
+        "events_ttl_window_state",
+        "events_click_purchase_incremental",
+        "events_attribution",
+        "events_top_paths",
+        "events_sessionize",
+        "events_distinct_users_incremental",
+    ], "events", _build_events),
+    "embeddings": ([
+        "knn_brute_cosine",
+        "knn_batch_cosine",
+        "ann_lsh_cosine",
+        "embedding_kmeans_pinned",
+        "embedding_dim_stats",
+        "embedding_covariance_matrix",
+        "embedding_int8_report",
+        "dedup_embedding_cosine",
+        "centroid_per_label",
+    ], "embeddings", _build_embeddings),
+}
+
+#: tables no family derives: symlinked to their sf0.1 files
+LINKED = ["region", "nation", "customer", "supplier", "orders"]
 
 
 def ensure_built(spark, families) -> None:
-    """Derive any missing sf1.0 corpus. Build order matters only on a
-    fresh checkout: the graph build symlinks every non-derived table
-    into DST, and the other builds replace their table's symlink with
-    the derived parquet."""
+    """Derive any missing sf1.0 corpus of the given families."""
     os.makedirs(DST, exist_ok=True)
-    fams = _families()
-    # graph first (it lays down the symlinks the others replace)
-    order = [f for f in ("graph", "docs", "events", "embeddings")
-             if f in families]
-    for fam in order:
-        mod, _, table = fams[fam]
-        marker = f"{DST}/{table}.parquet/_SUCCESS"
-        if not os.path.exists(marker):
-            t0 = time.perf_counter()
-            mod.build(spark)
-            print(f"# built {fam} corpus ({table}) in "
-                  f"{time.perf_counter()-t0:.1f}s", file=sys.stderr)
+    # symlinks, so Catalog can resolve any table it eagerly lists
+    for t in LINKED:
+        dst = f"{DST}/{t}.parquet"
+        if not os.path.lexists(dst):
+            os.symlink(f"{SRC}/{t}.parquet", dst)
+    for fam in families:
+        _, table, build = FAMILIES[fam]
+        tgt = f"{DST}/{table}.parquet"
+        if os.path.exists(f"{tgt}/_SUCCESS"):
+            continue
+        # a symlink to the sf0.1 table is replaced, never written through
+        if os.path.islink(tgt):
+            os.unlink(tgt)
+        t0 = time.perf_counter()
+        build(spark)
+        print(f"# built {fam} corpus ({table}) in "
+              f"{time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
 
 def measure(spark, families) -> dict[str, dict[str, dict[str, int]]]:
@@ -105,12 +252,10 @@ def measure(spark, families) -> dict[str, dict[str, dict[str, int]]]:
     from data_warehouse_project_spark.metrics import measure_query_shuffle
 
     qs = registry.queries()
-    fams = _families()
     measured: dict[str, dict[str, dict[str, int]]] = {
         "sf0.1": {}, "sf1.0": {}}
     for fam in families:
-        _, names, _ = fams[fam]
-        for name in names:
+        for name in FAMILIES[fam][0]:
             for sk, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
                 t0 = time.perf_counter()
                 m = measure_query_shuffle(spark, qs[name], sf_dir)
@@ -141,13 +286,13 @@ def gate(measured, rec) -> list[dict]:
 
 def main() -> int:
     record = "--record" in sys.argv
-    families = ["graph", "docs", "events", "embeddings"]
+    families = list(FAMILIES)
     for i, a in enumerate(sys.argv):
         if a == "--family":
             families = sys.argv[i + 1].split(",")
         elif a.startswith("--family="):
             families = a.split("=", 1)[1].split(",")
-    unknown = set(families) - {"graph", "docs", "events", "embeddings"}
+    unknown = set(families) - set(FAMILIES)
     if unknown:
         print(f"unknown families: {sorted(unknown)}", file=sys.stderr)
         return 2
