@@ -96,3 +96,20 @@ def measure_query_shuffle(spark: SparkSession, fn, sf_dir: str,
         "shuffle_write_bytes": wr // reps,
         "spilled_bytes": sp // reps,
     }
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(compiles, compile_s): Janino compiles of generated classes in
+    this JVM so far, and their summed time. Launches no job; diff two
+    readings to window a run. A compile happens only on a miss in
+    Spark's codegen class cache, so a warm pass that reuses its classes
+    reads ~0 (see session.STATIC_CONFS). The count is the
+    CodegenMetrics compilation-time histogram's; its reservoir only
+    samples durations, so the seconds come from CodeGenerator's own
+    accumulator, which the same compile site adds to."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return int(hist.getCount()), nanos / 1e9

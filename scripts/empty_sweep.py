@@ -35,6 +35,7 @@ def main() -> int:
 
     from data_warehouse_project_spark import registry
     from data_warehouse_project_spark.cache import release_all
+    from data_warehouse_project_spark.session import STATIC_CONFS
     from tests.oracle_utils import (EMPTY_INPUT_DIVERGENT, compare_empty,
                                     duckdb_con, make_empty_sf_dir)
 
@@ -45,6 +46,7 @@ def main() -> int:
         SparkSession.builder.master(f"local[{os.cpu_count()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
+        .config(map=STATIC_CONFS)
         .getOrCreate()
     )
     con = duckdb_con(sf_dir)

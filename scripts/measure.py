@@ -28,7 +28,8 @@ release_all() between runs. Each subcommand prints one JSON line.
       code-unchanged controls, so a reading can be control-normalized
       — if the controls read 1.2-1.6x their standing minima, the host
       is warm and a flagged query inside the same band is drift, not
-      regression. Data from $SPARK_GRAFT_SF_DIR (default sf0.1).
+      regression. Each query also reports its Janino compiles over
+      the three runs. Data from $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ sys.path.insert(0, REPO)
 
 from data_warehouse_project_spark import registry  # noqa: E402
 from data_warehouse_project_spark.cache import release_all  # noqa: E402
+from data_warehouse_project_spark.metrics import codegen_compiles  # noqa: E402
 from data_warehouse_project_spark.session import get_spark  # noqa: E402
 from sf1_regression import DST as SF1_DIR  # noqa: E402
 
@@ -208,11 +210,13 @@ def quiet(flagged: list[str]) -> int:
 
     out = {}
     for name in order:
+        compiles0, _ = codegen_compiles(spark)
         sec = min_of(spark, qs[name], sf_dir, 3)
         std = STANDING.get(name)
         out[name] = {"sec": sec, "standing": std,
                      "ratio": round(sec / std, 2) if std else None,
-                     "role": "flagged" if name in flagged else "control"}
+                     "role": "flagged" if name in flagged else "control",
+                     "compiles": codegen_compiles(spark)[0] - compiles0}
         print(f"# {name}: {sec:.3f}s "
               f"({out[name]['ratio']}x standing, {out[name]['role']})",
               file=sys.stderr)

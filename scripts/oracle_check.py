@@ -24,6 +24,7 @@ def main() -> int:
 
     from data_warehouse_project_spark import registry
     from data_warehouse_project_spark.cache import release_all
+    from data_warehouse_project_spark.session import STATIC_CONFS
     from tests.oracle_utils import compare, duckdb_con
 
     names = sys.argv[2:] or sorted(
@@ -33,6 +34,7 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
+        .config(map=STATIC_CONFS)
         .getOrCreate()
     )
     con = duckdb_con(sf_dir)

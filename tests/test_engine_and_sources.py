@@ -184,6 +184,23 @@ def test_catalog_normalizes_every_ts_encoding(spark, sf_dir, tmp_path):
         == results["micros"]
 
 
+def test_catalog_read_keeps_callers_confs_and_enforces_utc(spark, sf_dir):
+    """`tune` (run by every Catalog) leaves a key the caller set alone —
+    on the session's first tune and on every later one — but always
+    pins the UTC time zone that results depend on."""
+    aqe, tz = "spark.sql.adaptive.enabled", "spark.sql.session.timeZone"
+    for session in (spark.newSession(), spark):
+        session.conf.set(aqe, "false")
+        session.conf.set(tz, "America/New_York")
+        try:
+            for _ in range(2):
+                Catalog(session, sf_dir).table("nation").count()
+                assert session.conf.get(aqe) == "false"
+                assert session.conf.get(tz) == "UTC"
+        finally:
+            session.conf.set(aqe, "true")
+
+
 def test_cache_release_frees_all_storage(spark, sf_dir):
     """Back-to-back registry queries on one session must not
     accumulate pinned storage once release_all() runs (VERDICT r2:
