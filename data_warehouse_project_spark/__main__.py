@@ -4,6 +4,7 @@
     python -m data_warehouse_project_spark run flagship_my_registrations \
         --sf-dir /root/testdata/sf0.01 --limit 20
     python -m data_warehouse_project_spark explain q5_local_supplier_volume
+    python -m data_warehouse_project_spark profile flagship_my_registrations
 """
 
 from __future__ import annotations
@@ -13,19 +14,22 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .sources.catalog import DEFAULT_SF_DIR
+
     parser = argparse.ArgumentParser(prog="data_warehouse_project_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
 
     sub.add_parser("list", help="list registered queries")
 
-    run_p = sub.add_parser("run", help="run a query and print rows")
-    run_p.add_argument("query")
-    run_p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    run_p.add_argument("--limit", type=int, default=20)
-
-    exp_p = sub.add_parser("explain", help="print a query's physical plan")
-    exp_p.add_argument("query")
-    exp_p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    for cmd, help_ in (
+            ("run", "run a query and print rows"),
+            ("explain", "print a query's physical plan"),
+            ("profile", "run a query twice and print the warm run's "
+                        "Spark jobs and driver gap")):
+        q_p = sub.add_parser(cmd, help=help_)
+        q_p.add_argument("query")
+        q_p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+    sub.choices["run"].add_argument("--limit", type=int, default=20)
 
     hc_p = sub.add_parser(
         "healthcheck",
@@ -133,13 +137,42 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     spark = get_spark("dwps-cli")
     fn, _ = registry.REGISTRY[args.query]
-    df = fn(spark, args.sf_dir)
-    if args.cmd == "run":
-        df.show(args.limit, truncate=False)
+    if args.cmd == "profile":
+        _profile(spark, args.query, fn, args.sf_dir)
     else:
-        df.explain("formatted")
+        df = fn(spark, args.sf_dir)
+        if args.cmd == "run":
+            df.show(args.limit, truncate=False)
+        else:
+            df.explain("formatted")
     spark.stop()
     return 0
+
+
+def _profile(spark, name: str, fn, sf_dir: str) -> None:
+    """Print the second (warm) of two noop-sink runs: one line per
+    Spark job, the summed job time, and the driver gap (wall time
+    minus summed job time: planning, driver-side work, job launch;
+    concurrent broadcast jobs make it an underestimate)."""
+    import time
+
+    from .cache import release_all
+    from .metrics import group_profile, job_group
+
+    for _ in range(2):
+        with job_group(spark, name) as group:
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            wall = time.perf_counter() - t0
+            release_all()
+    jobs = group_profile(spark, group)["jobs"]
+    print(f"== {name}: wall {wall:.3f}s, {len(jobs)} jobs ==")
+    for j in jobs:
+        print(f"  job {j['job_id']:4d} {j['end'] - j['start']:7.3f}s "
+              f"stages={j['stages']:2d} tasks={j['tasks']:4d}  "
+              f"{j['description']}")
+    busy = sum(j["end"] - j["start"] for j in jobs)
+    print(f"  sum(job s) {busy:.3f}  driver gap {wall - busy:.3f}s")
 
 
 if __name__ == "__main__":

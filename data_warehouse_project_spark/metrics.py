@@ -1,11 +1,20 @@
-"""Executed-plan metrics sampling — shuffle/spill bytes per query.
+"""Executed-plan metrics sampling: the jobs, stages and shuffle/spill
+bytes of one run, read from Spark's AppStatusStore.
 
-Spark's AppStatusStore (the store behind the UI's stage table) keeps
-per-stage shuffle-read/shuffle-write/spill byte totals. Sampling it
-before and after a query, windowed by MONOTONE stage id rather than
-by diffing cumulative totals, yields the query's own exchange volume
-even when the store evicts old stages (``spark.ui.retainedStages``
-caps retention; a long bench run crosses it).
+A run is windowed by a job group: ``job_group`` tags every job
+launched inside it (AQE stage jobs and broadcast jobs inherit the
+tag), and ``group_profile`` reads exactly those jobs and their
+stages. The store is fed by the asynchronous listener bus, so the
+reader first drains the bus (``waitUntilEmpty``) instead of polling
+for the figures to settle; after the drain every posted job and stage
+event has reached the store.
+
+Retention: the store keeps the last ``spark.ui.retainedJobs`` and
+``spark.ui.retainedStages`` (1 000 each by default). Every reader here
+takes its read right after the run it measures, and the largest run
+read at once is bench.py's 3 reps of one headline query (at most
+3 × 46 jobs, ``join_skew_report``), far below that bound, so no job
+of a run is evicted before it is read.
 
 Why bytes and not wall time: at local test sizes the page cache and
 fixed per-job cost dominate wall time, so a scale-killer (an
@@ -19,7 +28,16 @@ recorded bounds (tests/shuffle_bounds.json).
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import SparkSession
+
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel")
+
+#: group_profile's byte totals, named as in BENCH_LOCAL.json
+BYTE_KEYS = ("shuffle_read_bytes", "shuffle_write_bytes", "spilled_bytes")
 
 
 def stage_shuffle_totals(
@@ -27,7 +45,9 @@ def stage_shuffle_totals(
 ) -> tuple[int, int, int, int]:
     """(shuffle_read, shuffle_write, spilled, max_stage_id) summed
     over stages with stageId > since_id. Pass -1 to sum everything
-    retained; pass the previous call's max_stage_id to window."""
+    retained; pass the previous call's max_stage_id to window.
+    Its only remaining reader is perfbench/run.py (the benchmark's
+    ``shuffle_bytes``); engine code windows by job group instead."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     gw = sc._gateway
@@ -49,33 +69,58 @@ def stage_shuffle_totals(
     return read, write, spilled, max_id
 
 
-def stable_shuffle_totals(spark: SparkSession, since_id: int,
-                          polls: int = 20, interval_s: float = 0.1
-                          ) -> tuple[int, int, int, int]:
-    """AppStatusStore is fed by the async listener bus, so a sample
-    taken the instant an action returns can miss the final stages'
-    metrics under event-queue lag (ADVICE r10). Two equal consecutive
-    samples can still both be stale if the bus hasn't started
-    draining within one interval (ADVICE r11 #3), so first anchor on
-    the statusTracker reporting no active jobs — the job-end event
-    precedes the final stage metrics on the same ordered bus — then
-    poll until two consecutive windowed samples agree (bounded:
-    ~2 s worst case each phase) and return the stable reading."""
-    import time
+@contextmanager
+def job_group(spark: SparkSession, name: str):
+    """Tag every Spark job launched inside the block with a job group
+    unique to this call (``name#<uuid>``; a reused id would merge two
+    runs' jobs), described as ``name``. Yields the group id; on exit the
+    previous group's local properties are restored, so calls nest."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(p) for p in _GROUP_PROPS]
+    group = f"{name}#{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        yield group
+    finally:
+        for prop, value in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(prop, value)
 
-    tracker = spark.sparkContext.statusTracker()
-    for _ in range(polls):
-        if not tracker.getActiveJobsIds():
-            break
-        time.sleep(interval_s)
-    prev = stage_shuffle_totals(spark, since_id)
-    for _ in range(polls):
-        time.sleep(interval_s)
-        cur = stage_shuffle_totals(spark, since_id)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
+
+def group_profile(spark: SparkSession, group: str) -> dict:
+    """The jobs of ``group`` and the shuffle/spill bytes of their
+    stages. Drains the listener bus first, so the last job's stages
+    are in. Each job is (job_id, start, end, stages, tasks,
+    description), times in epoch seconds; the byte totals (BYTE_KEYS)
+    sum every stage attempt that ran (a SKIPPED attempt reused an earlier
+    stage's output and moved nothing)."""
+    sc = spark.sparkContext
+    jsc, gw = sc._jsc.sc(), sc._gateway
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    prof = {"jobs": [], **dict.fromkeys(BYTE_KEYS, 0)}
+    stage_ids = set()
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        j = store.job(jid)
+        if j.completionTime().isEmpty():
+            continue
+        desc, ids = j.description(), j.stageIds()
+        prof["jobs"].append({
+            "job_id": jid, "start": j.submissionTime().get().getTime() / 1e3,
+            "end": j.completionTime().get().getTime() / 1e3,
+            "stages": j.numCompletedStages(), "tasks": j.numCompletedTasks(),
+            "description": (f"{desc.get()}: {j.name()}"
+                            if desc.isDefined() else j.name())})
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+    for sid in stage_ids:
+        attempts = store.stageData(sid, False, gw.jvm.java.util.ArrayList(),
+                                   False, gw.new_array(gw.jvm.double, 0))
+        for s in (attempts.apply(i) for i in range(attempts.size())):
+            if s.status().toString() != "SKIPPED":
+                prof["shuffle_read_bytes"] += s.shuffleReadBytes()
+                prof["shuffle_write_bytes"] += s.shuffleWriteBytes()
+                prof["spilled_bytes"] += (s.memoryBytesSpilled()
+                                          + s.diskBytesSpilled())
+    return prof
 
 
 def measure_query_shuffle(spark: SparkSession, fn, sf_dir: str,
@@ -86,16 +131,12 @@ def measure_query_shuffle(spark: SparkSession, fn, sf_dir: str,
     never total bytes), so the window / reps IS one run's volume."""
     from .cache import release_all
 
-    _, _, _, floor = stage_shuffle_totals(spark, -1)
-    for _ in range(reps):
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        release_all()
-    rd, wr, sp, _ = stable_shuffle_totals(spark, floor)
-    return {
-        "shuffle_read_bytes": rd // reps,
-        "shuffle_write_bytes": wr // reps,
-        "spilled_bytes": sp // reps,
-    }
+    with job_group(spark, getattr(fn, "__name__", "query")) as group:
+        for _ in range(reps):
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            release_all()
+    prof = group_profile(spark, group)
+    return {k: prof[k] // reps for k in BYTE_KEYS}
 
 
 def codegen_compiles(spark: SparkSession) -> tuple[int, float]:

@@ -8,10 +8,10 @@ schema (part co-occurrence within orders; the view→click→purchase
 event funnel).
 
 Scale notes:
-- market basket: the pair generator self-joins the distinct
-  (order, part) set on the order key — shuffle keyed by order, and
-  per-order fan-out is k² in basket size, so a ``MAX_BASKET_ITEMS``
-  guard drops pathological baskets BEFORE the join (at 100 TB one
+- market basket: the co-purchase front end of plans/graph.py — one
+  order-keyed collect_set aggregate, then an in-row pair explode.
+  Per-order fan-out is k² in basket size, so the ``MAX_BASKET`` guard
+  drops pathological baskets BEFORE the explode (at 100 TB one
   million-line order would otherwise emit 10¹² pairs from a single
   key). Lift denominators come from the same distinct set, joined
   back broadcast-side after the top-K cut (50 rows).
@@ -32,10 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
-
-#: drop baskets larger than this before the pair self-join — bounds
-#: the per-key fan-out at k² ≤ 900 regardless of data scale
-MAX_BASKET_ITEMS = 30
+from .graph import _KEPT_SQL, _basket_pairs, _kept_baskets
 
 #: pairs reported
 BASKET_TOP_K = 50
@@ -43,37 +40,17 @@ BASKET_TOP_K = 50
 
 def part_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top co-occurring part pairs across orders with support and
-    lift. distinct (order, part) → basket-size guard → orderkey-keyed
-    self-join (pk_a < pk_b) → pair counts → top-K → broadcast
-    join-back of the per-part order counts for lift."""
+    lift. guarded per-order part sets → in-row a<b pair explode →
+    pair counts → top-K → join-back of the per-part order counts for
+    lift."""
     cat = Catalog(spark, sf_dir)
-    # r12 optimization (guide §2.4, same move as plans/graph.py
-    # _kept_baskets): distinct (order, part) + window guard +
-    # order-keyed self-join (distinct exchange, a per-order SORT for
-    # the window, and two join exchanges) collapse into ONE
-    # collect_set aggregate on the natural order key; the pair
-    # generator becomes a shuffle-free in-row combination explode
-    # (fan-out bounded by the guard), and both lift denominators read
-    # the same pinned basket frame. size(set) ≡ COUNT(DISTINCT part)
-    # per order, and pair/part counts are order-insensitive, so the
-    # results are bit-identical.
     from ..cache import pin
-    # r13: explicit hash repartition before the pin — AQE's byte-based
-    # coalescing otherwise squeezes the (small-bytes, CPU-heavy)
-    # basket explode onto ~4 tasks; see plans/graph._kept_baskets for
-    # the full rationale and the MAX_BASKET scale precondition.
-    n_parts = spark.sparkContext.defaultParallelism
-    baskets = pin(
-        cat.lineitem.groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("parts"))
-        .filter(F.size("parts") <= MAX_BASKET_ITEMS)
-        .repartition(n_parts, "l_orderkey"))
+    # both lift denominators and the pair generator read one pinned
+    # basket frame
+    baskets = pin(_kept_baskets(cat.lineitem))
     pairs = (
-        baskets.select(F.explode(F.expr(
-            "filter(flatten(transform(parts, x -> transform(parts, "
-            "y -> struct(x AS part_a, y AS part_b)))), "
-            "p -> p.part_a < p.part_b)")).alias("p"))
-        .select("p.part_a", "p.part_b")
+        _basket_pairs(baskets, triangular=True)
+        .select(F.col("src").alias("part_a"), F.col("dst").alias("part_b"))
         .groupBy("part_a", "part_b")
         .agg(F.count("*").cast("long").alias("pair_orders"))
         .orderBy(F.col("pair_orders").desc(), "part_a", "part_b")
@@ -106,14 +83,7 @@ def part_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 MARKET_BASKET_SQL = f"""
-WITH items AS (
-    SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-kept AS (
-    SELECT i.l_orderkey, i.l_partkey FROM items i
-    JOIN (SELECT l_orderkey FROM items GROUP BY 1
-          HAVING COUNT(*) <= {MAX_BASKET_ITEMS}) s USING (l_orderkey)
-),
+WITH {_KEPT_SQL},
 pairs AS (
     SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
            CAST(COUNT(*) AS BIGINT) AS pair_orders

@@ -98,17 +98,6 @@ def _kept_baskets(lineitem: DataFrame) -> DataFrame:
     Set order is irrelevant downstream (pairs feed distinct /
     groupBy-count only), so results are bit-identical.
 
-    r13 optimization (guide §2.5 input skew / §1.2 per-task work):
-    the basket frame is small in BYTES but the downstream combination
-    explode is heavy in CPU, so AQE's byte-based coalescing squeezed
-    the post-aggregate stage onto ~4 tasks at sf0.1 (profiled: the
-    front end was a 1.0-1.2 s 4-task job inside every graph query).
-    The explicit hash repartition pins the explode stage at
-    defaultParallelism — cores-proportional, which is the right
-    sizing for a CPU-bound stage at any cluster size; the exchanged
-    rows are the compact per-order arrays, not lineitem. Same
-    discipline as llm/dedup._with_shingles.
-
     Scale precondition (VERDICT r12 #2): the per-order set is
     materialized BEFORE the size(parts) <= MAX_BASKET filter, so one
     pathological order key carrying millions of distinct parts would
@@ -120,11 +109,9 @@ def _kept_baskets(lineitem: DataFrame) -> DataFrame:
     aggregate (the pre-r12 two-pass form) before collecting sets —
     the two-pass shape costs one extra lineitem exchange, which is
     exactly what this fast path removes when the bound is known."""
-    n_parts = lineitem.sparkSession.sparkContext.defaultParallelism
     return (lineitem.groupBy("l_orderkey")
             .agg(F.collect_set("l_partkey").alias("parts"))
-            .filter(F.size("parts") <= MAX_BASKET)
-            .repartition(n_parts, "l_orderkey"))
+            .filter(F.size("parts") <= MAX_BASKET))
 
 
 def _basket_pairs(baskets: DataFrame, triangular: bool = False) -> DataFrame:

@@ -62,60 +62,26 @@ def _register_modules() -> None:
     from .functions import crypto  # noqa: F401
 
 
-#: Driver correctness-window priority. The driver's CORRECTNESS run
-#: checks the first 50 registered queries, so registration order is
-#: coverage policy, rotated each round (VERDICT r1/r2 adjudicated the
-#: rotation as documented coverage policy). Round-12 window executes
-#: the schedule VERDICT r11 #2/#6 prescribed: flagship +
-#: 4 never-checked (the new BPE tokenizer-apply pair and the new
-#: exact + near-dup dedup-on-ingest maintainers) +
-#: agg_approx_distinct (the one oracle never driver-checked as an
-#: oracle — it gained its DuckDB twin in r10, after its last window
-#: appearance in r9) + the remaining 22 r6-stale + 22 of the 49
-#: r7-stale (registry order) = 50.
-#: The window/pool arithmetic is MACHINE-CHECKED each pytest run by
-#: tests/test_functions.py::test_priority_window_rotation, which
-#: recomputes the pools from the CORRECTNESS_r0*.json artifacts on
-#: disk, so this comment cannot silently drift from the executed
-#: window (VERDICT r7 "what's wrong" #3):
-#: - Round 9 landed: never-checked pool = 0 for the first time
-#:   (machine-checked).
-#: - Round 10 landed: flagship + drift pair + 19 r4-stale +
-#:   28 r5-stale, all green (CORRECTNESS_r10 = 47 pass +
-#:   3 rows-only, 0 fail). Pool after r10: 0 r4-stale, 21 r5-stale.
-#: - Round 11 landed: flagship + 1 never-checked + the 21 r5-stale
-#:   + 27 r6-stale, all green (CORRECTNESS_r11 = 45 pass +
-#:   5 rows-only, 0 fail). Pool after r11: 0 r5-stale, 22 r6-stale.
-#: - Round 12 (positions 1-50 below): flagship + the 4 new
-#:   never-checked queries + agg_approx_distinct + the 22 r6-stale +
-#:   22 r7-stale. Pool after round 12: 0 never-checked, 0 r6-stale,
-#:   27 r7-stale.
-#: - Round 13+ (next cohort below): the remaining 27 r7-stale +
-#:   22 of the 47 r8-stale — the standing age-ordered rotation (the
-#:   freshest evidence rotates last).
-#:   Every displaced query remains value-checked on every pytest
-#:   run by the local DuckDB parity suite at sf0.001, and the r6
-#:   through r10 judges independently swept ALL registered oracles
-#:   green at sf0.01 (246/246 + 19 rows-only in r10).
+#: Correctness-window priority. The external CORRECTNESS run checks
+#: the first 50 registered queries, so registration order is coverage
+#: policy: after the flagship canary, queries it has never checked
+#: come first, then the rest oldest-checked first (age by the
+#: CORRECTNESS_rNN.json artifacts). The window arithmetic is
+#: machine-checked by
+#: tests/test_functions.py::test_priority_window_rotation. A query
+#: outside the window is still value-checked on every pytest run by
+#: the local DuckDB parity suite.
 _PRIORITY: list[str] = [
     "flagship_my_registrations",
-    # --- r12 window: the four NEVER-driver-checked queries (new
-    #     this round: the BPE tokenizer-apply pair and the exact +
-    #     near-dup dedup-on-ingest maintainers) — never-checked
-    #     always outranks stale-but-once-green ---
+    # --- never checked in a window: outranks stale-but-once-green ---
     "bpe_encode_stats",
     "bpe_encode_floor",
     "docs_dedup_ingest_incremental",
     "docs_neardup_ingest_incremental",
-    # --- r12 window: agg_approx_distinct — the ONLY oracle query
-    #     without a driver-green oracle row (last windowed in r9 as
-    #     rows-only; its DuckDB oracle landed in r10, so the oracle
-    #     itself has never run under the driver — VERDICT r11 #6).
-    #     Oracle-never-checked outranks stale-but-once-green, same
-    #     rationale as agg_approx_distinct_fast's r11 slot ---
+    # --- its oracle has never run in a window (the DuckDB twin
+    #     landed after its last, rows-only, window) ---
     "agg_approx_distinct",
-    # --- r12 window: the remaining 22 r6-stale (last driver-checked
-    #     CORRECTNESS_r06), registry order ---
+    # --- last checked in CORRECTNESS_r06, registry order ---
     "q11_part_value_concentration",
     "q15_top_supplier",
     "q16_part_supplier_variety",
@@ -138,8 +104,7 @@ _PRIORITY: list[str] = [
     "dedup_embedding_cosine_planted",
     "ann_recall_floor",
     "dup_ngram_spans",
-    # --- r12 window: 22 of the 49 r7-stale (last driver-checked
-    #     CORRECTNESS_r07), registry order ---
+    # --- last checked in CORRECTNESS_r07, registry order ---
     "part_market_basket",
     "events_funnel_conversion",
     "events_stickiness_monthly",
@@ -162,12 +127,8 @@ _PRIORITY: list[str] = [
     "orders_rolling_7d_revenue",
     "approx_quantile_accuracy_floor",
     "hll_distinct_accuracy_floor",
-    # ================= end of 50-slot r12 window =================
-    # --- r13 cohort, staged: the remaining 27 r7-stale (the first
-    #     six were displaced from the r12 window by the
-    #     agg_approx_distinct slot and the four new never-checked
-    #     queries), registry order — rotate into positions 2-28 next
-    #     round and bump the test's window_round to 13 ---
+    # ==================== end of the 50-slot window ====================
+    # --- next cohort: the rest of the r07 cohort, registry order ---
     "geo_revenue_rollup",
     "supplier_hhi_by_nation",
     "events_top_paths",
@@ -195,8 +156,7 @@ _PRIORITY: list[str] = [
     "bm25_top_docs",
     "lang_id_confusion",
     "token_bigram_pmi",
-    # --- r13 cohort, staged remainder: 22 of the 47 r8-stale (last
-    #     driver-checked CORRECTNESS_r08), registry order ---
+    # --- last checked in CORRECTNESS_r08, registry order ---
     "bloom_semijoin_revenue",
     "bloom_filter_floor",
     "orders_price_drift",
@@ -219,9 +179,7 @@ _PRIORITY: list[str] = [
     "orders_enriched_incremental",
     "nation_revenue_trend_ols",
     "event_value_trend_ols",
-    # (everything unlisted keeps registration order after these; the
-    #  remaining 25 r8-stale and the r9/r10/r11 cohorts rotate in age
-    #  order in later rounds)
+    # (everything unlisted keeps registration order after these)
 ]
 
 

@@ -80,18 +80,17 @@ def minhash_replay(spark, docs):
     return sh, sig, pairs
 
 
-def count_jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn()`` runs, counted by a job group
-    set for the call alone (AQE stage and broadcast jobs inherit it)."""
-    import uuid
+def group_run(spark, fn, name: str = "test") -> dict:
+    """``metrics.group_profile`` of the Spark jobs launched while
+    ``fn()`` runs, tagged by a job group set for the call alone (AQE
+    stage and broadcast jobs inherit it)."""
+    from data_warehouse_project_spark.metrics import group_profile, job_group
 
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+    with job_group(spark, name) as group:
         fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return group_profile(spark, group)
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs."""
+    return len(group_run(spark, fn)["jobs"])

@@ -13,7 +13,8 @@ from pyspark.sql import Row, functions as F
 from data_warehouse_project_spark.llm.distributions import (
     doc_zipf_fit, embedding_dim_stats)
 from data_warehouse_project_spark.plans.analytics import (
-    MAX_BASKET_ITEMS, events_funnel_conversion, part_market_basket)
+    events_funnel_conversion, part_market_basket)
+from data_warehouse_project_spark.plans.graph import MAX_BASKET
 
 T0 = "2024-01-01 00:00:00"
 
@@ -76,8 +77,8 @@ def test_market_basket_guard_and_lift(spark, tmp_path):
             li(3, 1, 1), li(3, 3, 2),
             # a duplicated (order, part) line must count once
             li(3, 3, 3)]
-    # one pathological basket with MAX_BASKET_ITEMS+1 distinct parts
-    rows += [li(4, 100 + i, i + 1) for i in range(MAX_BASKET_ITEMS + 1)]
+    # one pathological basket with MAX_BASKET+1 distinct parts
+    rows += [li(4, 100 + i, i + 1) for i in range(MAX_BASKET + 1)]
     df = spark.createDataFrame(rows).withColumn(
         "l_shipdate", F.to_timestamp("l_shipdate"))
     df.write.parquet(str(tmp_path / "lineitem.parquet"))
@@ -772,12 +773,11 @@ def _basket_reference(orders):
     """Sequential market-basket replay: distinct guarded items, pair
     counts, deterministic (count desc, a, b) top-K, support and
     lift."""
-    from data_warehouse_project_spark.plans.analytics import (
-        BASKET_TOP_K, MAX_BASKET_ITEMS)
+    from data_warehouse_project_spark.plans.analytics import BASKET_TOP_K
     kept = {}
     for ok, parts in enumerate(orders):
         ps = sorted(set(parts))
-        if 0 < len(ps) <= MAX_BASKET_ITEMS:
+        if 0 < len(ps) <= MAX_BASKET:
             kept[ok] = ps
     pairs = {}
     for ps in kept.values():

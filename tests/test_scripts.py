@@ -1,7 +1,7 @@
 """Fast checks of the measurement scripts under scripts/, without a
 Spark session: every script imports, the sf1 gate's family table
-matches its recorded bounds, and both CLIs reject bad usage before
-they build a session."""
+matches its recorded bounds, and the script CLIs and the package's
+``profile`` command reject bad usage before they build a session."""
 
 from __future__ import annotations
 
@@ -59,3 +59,10 @@ def test_measure_requires_a_subcommand():
     p = _run(os.path.join(SCRIPTS, "measure.py"))
     assert p.returncode != 0
     assert "scaling" in p.stderr
+
+
+def test_profile_rejects_unknown_query_without_a_jvm():
+    # a JVM start would log its log4j banner to stderr first
+    p = _run("-m", "data_warehouse_project_spark", "profile", "no_such_query")
+    assert p.returncode == 2, p.stderr[-2000:]
+    assert p.stderr == "unknown query 'no_such_query'; try 'list'\n"
