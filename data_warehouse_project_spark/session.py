@@ -41,8 +41,7 @@ import tempfile
 from pyspark.sql import SparkSession
 
 #: Static confs: fixed when the session's JVM starts, so they go on the
-#: builder (`get_spark` and the scripts that build their own session);
-#: `spark.conf.set` raises on them.
+#: builder (`get_spark`); `spark.conf.set` raises on them.
 STATIC_CONFS: dict[str, str] = {
     # Codegen class cache (see the module docstring): 8 192 covers the
     # 4 584 classes a cold sf0.01 registry sweep compiles, plus churn.

@@ -1,17 +1,17 @@
 #!/usr/bin/env bash
-# No-red-snapshot gate (adopted round 4, VERDICT r3 #3): run before
-# any end-of-round/snapshot commit. Mirrors the driver's gates
-# locally: the full pytest suite includes tests/test_registry_parity.py
-# (every registered query vs its DuckDB oracle at sf0.001), unit,
-# streaming-parity, layout, and plan-quality tests.
+# No-red-snapshot gate: run before any snapshot commit. Mirrors the
+# driver's gates locally: the default pytest tier checks every
+# registered query against its DuckDB oracle and on a zero-row corpus
+# (sf0.001), plus unit, streaming-parity, layout, plan-quality and
+# in-suite shuffle-bound tests.
 #
 # Usage: scripts/preflight.sh [extra pytest args]
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q "$@"
-# shuffle-volume gate (round 10; two-scale since round 11): plan-
-# structure regressions the wall-clock can't see — full headline
-# sweep vs recorded per-scale bounds at sf0.001 AND sf0.01, plus the
-# growth-ratio gate that trips on superlinear exchange growth
+# shuffle-volume gate: plan-structure regressions the wall-clock
+# can't see — full headline sweep vs recorded per-scale bounds at
+# sf0.001 AND sf0.01, plus the growth-ratio gate that trips on
+# superlinear exchange growth
 python scripts/shuffle_audit.py
 echo "preflight green — safe to commit"

@@ -57,6 +57,14 @@ NOISE_FLOOR_BYTES = 65536
 BOUNDS_PATH = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tests", "shuffle_bounds.json")
 DEFAULT_SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+#: Core count of the audit's session, gate and --record alike. Shuffle
+#: bytes are deterministic for a given plan AND partition count, and
+#: get_spark sizes both spark.sql.shuffle.partitions and the engine's
+#: defaultParallelism repartitions to the core count: at local[4]
+#: part_market_basket writes 160 691 / 1 763 028 B where the bounds
+#: (recorded at local[32]) say 461 880 / 2 696 271 B. A constant makes
+#: the gate independent of the host it runs on.
+AUDIT_CORES = 32
 
 
 def _scale_key(sf_dir: str) -> str:
@@ -152,7 +160,7 @@ def main() -> int:
     record = "--record" in sys.argv
     sf_dirs = args if args else DEFAULT_SF_DIRS
 
-    spark = get_spark("shuffle-audit")
+    spark = get_spark("shuffle-audit", cpus=AUDIT_CORES)
     qs = registry.queries()
     measured: dict[str, dict[str, dict[str, int]]] = {}
     for sf_dir in sf_dirs:

@@ -7,49 +7,38 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_warehouse_project_spark.cache import release_all
 from data_warehouse_project_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 #: tests/slow_tests.txt: one heavy test FUNCTION per line — marked
 #: `slow` here at collection time so pytest.ini's `-m "not slow"`
-#: default keeps the driver-facing tier <~10 min (VERDICT r12 #1).
-#: Data-driven (a single reviewable file) instead of 96 scattered
+#: default keeps the driver-facing tier inside its timeout.
+#: Data-driven (a single reviewable file) instead of scattered
 #: decorators; conftest hooks run before the mark plugin's
 #: deselection, so the dynamic marker participates in -m filtering.
-#: A line ``!<nodeid>[<param>]`` keeps that one parametrization of a
-#: listed function in the default tier.
 _SLOW_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "slow_tests.txt")
 
 
-def _slow_sets() -> tuple[set[str], set[str]]:
-    """(slow functions, parametrizations kept fast) — the ``!`` lines
-    of slow_tests.txt are the second set."""
-    slow, fast = set(), set()
+def _slow_set() -> set[str]:
     try:
         with open(_SLOW_PATH) as f:
-            for line in f:
-                line = line.strip()
-                if line.startswith("!"):
-                    fast.add(line[1:])
-                elif line and not line.startswith("#"):
-                    slow.add(line)
+            return {line for line in map(str.strip, f)
+                    if line and not line.startswith("#")}
     except OSError:
-        pass
-    return slow, fast
+        return set()
 
 
 def pytest_collection_modifyitems(config, items):
-    slow, fast = _slow_sets()
-    if not slow:
-        return
+    slow = _slow_set()
     for item in items:
         # function granularity: strip the parametrization suffix and
         # normalize the path to repo-relative (the recorded form)
         nodeid = (item.nodeid if item.nodeid.startswith("tests/")
                   else f"tests/{item.nodeid}")
-        if nodeid.split("[")[0] in slow and nodeid not in fast:
+        if nodeid.split("[")[0] in slow:
             item.add_marker(pytest.mark.slow)
 
 
@@ -63,6 +52,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def release_pins():
+    """Unpersist what a registry query pinned once its test is done, so
+    a sweep over every query does not accumulate cached frames."""
+    yield
+    release_all()
 
 
 @pytest.fixture(scope="session")

@@ -3,11 +3,9 @@ warehouse scale (a date-range filter matching nothing, an all-late
 micro-batch, a source partition with no files), and the degenerate
 bugs cluster exactly there — ANSI divide-by-zero, ``None - None``
 watermark arithmetic, MLlib fits on empty frames, schema inference
-over footerless writes. This module pins the fixed crash sites and the
-stats-family engine agreement on a zero-row corpus; the FULL registry
-sweep (every query crash-free, every non-allowlisted oracle matching)
-is ``scripts/empty_sweep.py``, kept out of the default suite for wall
-time.
+over footerless writes. Every registry query runs against a zero-row
+copy of the catalog: none may crash, and every oracle-backed query
+outside ``EMPTY_INPUT_DIVERGENT`` must match its DuckDB twin.
 """
 
 from __future__ import annotations
@@ -17,43 +15,6 @@ import pytest
 from data_warehouse_project_spark import registry
 from tests.oracle_utils import (EMPTY_INPUT_DIVERGENT, compare_empty,
                                 duckdb_con, make_empty_sf_dir)
-
-#: the round-9 crash sites + the degenerate-guard stats family — every
-#: name here either crashed or engine-diverged on empty input before
-#: the round-9 hardening
-RISK = [
-    # watermark-split arithmetic (None - None)
-    "events_click_purchase_incremental",
-    "events_distinct_users_incremental",
-    "events_funnel_incremental",
-    "events_sessions_incremental",
-    "events_sessions_late_tolerant",
-    "events_transitions_incremental",
-    "events_transitions_late_tolerant",
-    # driver-side seeds / eig / fits / schema inference
-    "embedding_kmeans_pinned",
-    "embedding_pca_variance",
-    "embedding_pca_project",
-    "pca_projection_floor",
-    "ann_ivf_cosine",
-    "semantic_dedup",
-    "corpus_build_post_state",
-    # ANSI divide-by-zero on aggregate rows
-    "aqp_error_floor",
-    "benford_first_digit_audit",
-    # SUM-over-empty vs COUNT alignment
-    "crypto_roundtrip",
-    "versioned_write_post_state",
-    # degenerate-guard stats family (r8/r9 advice class)
-    "orders_priority_kruskal",
-    "events_type_arm_chi2",
-    "events_ab_cuped_report",
-    "events_ab_mannwhitney",
-    "events_value_drift_daily",
-    "events_drift_daily_served",
-    "orders_revenue_cusum",
-    "orders_cusum_served",
-]
 
 
 @pytest.fixture(scope="module")
@@ -70,7 +31,8 @@ def empty_con(empty_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", RISK)
+@pytest.mark.usefixtures("release_pins")
+@pytest.mark.parametrize("name", sorted(registry.queries()))
 def test_empty_input_agrees_or_documented(spark, empty_dir, empty_con,
                                           name):
     fn, sql = registry.REGISTRY[name]

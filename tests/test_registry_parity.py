@@ -1,5 +1,11 @@
 """Differential test: every oracle-checkable registry query must match
-its DuckDB twin at sf0.001 — the local mirror of the driver's t2 gate.
+its DuckDB twin — the local mirror of the driver's t2 gate. The scale
+is the suite's (sf0.001 by default); another one, or a few queries:
+
+    SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \
+        python -m pytest tests/test_registry_parity.py [-k NAMES]
+
+At sf0.1 set SPARK_DRIVER_MEMORY=16g as well.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ def con(sf_dir):
     con.close()
 
 
+@pytest.mark.usefixtures("release_pins")
 @pytest.mark.parametrize("name", _names())
 def test_query_matches_oracle(spark, sf_dir, con, name):
     fn, sql = registry.REGISTRY[name]
