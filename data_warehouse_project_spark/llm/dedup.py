@@ -186,7 +186,7 @@ def _ngram_candidates(sh_all: DataFrame, df_cap: int) -> DataFrame:
     hot = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
            .filter(F.col("df") > df_cap)
            .select("shingle"))
-    blocked = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    blocked = sh.join(hot, "shingle", "left_anti")
     # r13 MEASURED AND REVERTED (negative result): replacing this
     # self-join with the MinHash-style groupBy(shingle) +
     # sort_array(collect_set) posting-list explode looked like it

@@ -62,7 +62,7 @@ def source_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_lang = pin(_lang_tokens(cat))
     tot = per_lang.agg(F.sum("n_tokens").alias("t_tokens"))
     with_p = (
-        per_lang.join(F.broadcast(tot))
+        per_lang.join(tot)
         .withColumn("p_raw", F.col("n_tokens") / F.col("t_tokens"))
         # sqrt is IEEE-correctly-rounded → bit-identical operand on
         # both engines; quantize before summing so the normalizer is
@@ -72,7 +72,7 @@ def source_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wtot = with_p.agg(F.sum("wq").alias("w_total"))
     return (
-        with_p.join(F.broadcast(wtot))
+        with_p.join(wtot)
         .select(
             "lang", "n_docs", "n_tokens",
             fround(F.col("p_raw"), 6).alias("p_raw"),
@@ -327,7 +327,7 @@ def source_length_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded
         .join(per_source, "source")
         .join(F.broadcast(per_band), "band")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .groupBy("source")
         .agg(F.max("n_s").alias("n_docs"),
              F.sum(term_q).alias("kl_q"))

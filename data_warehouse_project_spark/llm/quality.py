@@ -250,7 +250,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         per_tok.join(doc_n, "doc_id")
         .join(df_tbl, "term")
-        .join(F.broadcast(n_docs))
+        .join(n_docs)
         .withColumn(
             "tfidf",
             fround((F.col("c") / F.col("n_tokens"))
@@ -334,7 +334,7 @@ def source_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = per_src.agg(F.sum("weight").alias("w_total"))
     return (
-        per_src.join(F.broadcast(tot))
+        per_src.join(tot)
         .withColumn(
             "alloc_tokens",
             F.floor(F.lit(MIXTURE_TOKEN_BUDGET) * F.col("weight")
@@ -512,7 +512,7 @@ def length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars"))).alias("hi"),
     )
     return (
-        docs.join(F.broadcast(bounds))
+        docs.join(bounds)
         .filter(F.col("n_chars").between(F.col("lo"), F.col("hi")))
         .select("doc_id", "n_chars", "source")
     )

@@ -77,8 +77,8 @@ def bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / F.col("avgdl"))))
     scored = (
         cand.join(doclen, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .join(F.broadcast(scalars))
+        .join(dfs, "term")
+        .join(scalars)
         .withColumn("qterm",
                     F.floor(idf * tf_norm * F.lit(1e6) + F.lit(0.5))
                     .cast("long"))

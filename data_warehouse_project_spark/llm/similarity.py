@@ -48,7 +48,7 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.filter(F.col("vec_id") != QUERY_VEC_ID)
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(query))
+        .join(query)
         .select(
             "vec_id", "label",
             fround(F.expr(_COS_EXPR), 6).alias("cos_sim"),
@@ -191,7 +191,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("band", F.col("bucket").alias("qbucket")))
     candidates = (
         bucketed.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(qbuckets),
+        .join(qbuckets,
               (bucketed.band == qbuckets.band)
               & (F.col("bucket") == F.col("qbucket")))
         .select("vec_id")
@@ -202,7 +202,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.join(candidates, "vec_id", "left_semi")
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(query))
+        .join(query)
         .select("vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
@@ -299,7 +299,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     candidates = (
         bucketed.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(qbuckets),
+        .join(qbuckets,
               (bucketed.band == qbuckets.band)
               & (F.col("bucket") == F.col("qbucket")))
         .select("vec_id")
@@ -310,7 +310,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.join(candidates, "vec_id", "left_semi")
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(query))
+        .join(query)
         .select("vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
@@ -706,7 +706,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (assigned.filter(F.col("vec_id") == QUERY_VEC_ID)
              .select(F.col("embedding").alias("qe")))
     probe_cells = (
-        cent_df.join(F.broadcast(query))
+        cent_df.join(query)
         .withColumn("dist", F.expr(
             "aggregate(zip_with(centroid, qe, (c, q) -> "
             "(c - cast(q as double)) * (c - cast(q as double))), "
@@ -714,12 +714,12 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("dist").limit(nprobe).select("cell")
     )
 
-    candidates = assigned.join(F.broadcast(probe_cells), "cell").filter(
+    candidates = assigned.join(probe_cells, "cell").filter(
         F.col("vec_id") != QUERY_VEC_ID)
     return (
         candidates
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(query.select(F.col("qe").alias("b"))))
+        .join(query.select(F.col("qe").alias("b")))
         .select("vec_id", "label", fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(TOP_K)
@@ -811,7 +811,7 @@ def knn_batch_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cat.embeddings
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        .join(queries, F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
     )
@@ -869,7 +869,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("vec_id").alias("query_id"), "band",
                   F.col("bucket").alias("qbucket")))
     candidates = (
-        bucketed.join(F.broadcast(qb),
+        bucketed.join(qb,
                       (bucketed.band == qb.band)
                       & (F.col("bucket") == F.col("qbucket"))
                       & (F.col("vec_id") != F.col("query_id")))
@@ -882,7 +882,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         candidates
         .join(cat.embeddings.withColumnRenamed("embedding", "a"), "vec_id")
-        .join(F.broadcast(queries), F.col("query_id") == F.col("qid"))
+        .join(queries, F.col("query_id") == F.col("qid"))
         .select("query_id", "vec_id",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
     )
@@ -983,7 +983,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pin(
         cat.embeddings
         .withColumnRenamed("embedding", "a")
-        .join(F.broadcast(queries), F.col("vec_id") != F.col("anchor_id"))
+        .join(queries, F.col("vec_id") != F.col("anchor_id"))
         .select("anchor_id", "anchor_label", "vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim")))
     pos = top_k_per_group(

@@ -101,8 +101,7 @@ def _scored_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("token", "n_exact")
            .agg(F.min("n").cast("long").alias("n_est")))
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))
-    return est.crossJoin(F.broadcast(total)).select(
-        "token", "n_exact", "n_est",
+    return est.crossJoin(total).select("token", "n_exact", "n_est",
         (F.col("n_est") - F.col("n_exact")).cast("long")
         .alias("overestimate"),
         "n_total")
@@ -239,7 +238,7 @@ def _join_size_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("n_exact"), F.lit(0)).cast("long")
         .alias("n_rows"),
         F.count("*").cast("long").alias("n_keys"))
-    return exact.crossJoin(F.broadcast(est))
+    return exact.crossJoin(est)
 
 
 def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,10 +325,9 @@ def _equijoin_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.coalesce(F.sum(F.col("na") * F.col("nb")), F.lit(0))
              .cast("long").alias("exact_join_size")))
     totals = oc.agg(F.sum("n_exact").cast("long").alias("n_orders")) \
-        .crossJoin(F.broadcast(
-            ec.agg(F.sum("n_exact").cast("long").alias("n_events"))))
-    return (totals.crossJoin(F.broadcast(exact))
-            .crossJoin(F.broadcast(est)))
+        .crossJoin(ec.agg(F.sum("n_exact").cast("long").alias("n_events")))
+    return (totals.crossJoin(exact)
+            .crossJoin(est))
 
 
 def equijoin_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -664,8 +662,7 @@ def _frames_identical(a: DataFrame, b: DataFrame):
     """1-row frame with a TRUE iff the two frames hold exactly the
     same multiset of rows (symmetric exceptAll emptiness)."""
     return (a.exceptAll(b).agg(F.count("*").alias("x"))
-            .crossJoin(F.broadcast(
-                b.exceptAll(a).agg(F.count("*").alias("y"))))
+            .crossJoin(b.exceptAll(a).agg(F.count("*").alias("y")))
             .select(((F.col("x") == 0) & (F.col("y") == 0)).alias("ok")))
 
 
@@ -706,7 +703,7 @@ def sketch_fold_identity_floor(spark: SparkSession,
         _bloom_merge(_bloom_init(p1), p2), _bloom_init(parts)) \
         .withColumnRenamed("ok", "bloom_fold_identical")
 
-    return (cms_ok.crossJoin(F.broadcast(kmv_ok))
+    return (cms_ok.crossJoin(kmv_ok)
             .crossJoin(F.broadcast(bloom_ok)))
 
 
@@ -774,7 +771,7 @@ def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))
     return (summary
             .join(counts, "token")
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .select("token", "weight", "n_exact",
                     (F.col("n_exact") - F.col("weight")).cast("long")
                     .alias("underestimate"),
@@ -832,7 +829,7 @@ def mg_fold_bound_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("token", "weight"))
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))
     joined = (folded.join(counts, "token")
-              .crossJoin(F.broadcast(total)))
+              .crossJoin(total))
     s_mass = joined.agg(F.sum("weight").cast("long").alias("s")) \
         .collect()[0]["s"] or 0
     checks = joined.agg(
@@ -842,7 +839,7 @@ def mg_fold_bound_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
               - (F.col("n_total") - F.lit(s_mass))).alias("worst_slack"),
         F.max("n_total").alias("n_total"))
     present = folded.select("token")
-    missing_frequent = (counts.crossJoin(F.broadcast(total))
+    missing_frequent = (counts.crossJoin(total)
                         .where(F.col("n_exact") * (MG_K + 1)
                                > F.col("n_total"))
                         .join(present, "token", "left_anti")
@@ -886,7 +883,7 @@ def _mg_init(batch_docs: DataFrame) -> DataFrame:
                                    F.col("n_exact").alias("weight")))
     meta = total.select(F.lit(None).cast("string").alias("token"),
                         F.lit(0).cast("long").alias("weight"), "n_total")
-    return summ.crossJoin(F.broadcast(total)).unionByName(meta)
+    return summ.crossJoin(total).unionByName(meta)
 
 
 def _mg_merge(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
@@ -913,7 +910,7 @@ def _mg_merge(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
     new_meta = n_tot.select(F.lit(None).cast("string").alias("token"),
                             F.lit(0).cast("long").alias("weight"),
                             "n_total")
-    return summ.crossJoin(F.broadcast(n_tot)).unionByName(new_meta)
+    return summ.crossJoin(n_tot).unionByName(new_meta)
 
 
 def mg_fold_batch_into_state(batch_df: DataFrame, batch_id: int,

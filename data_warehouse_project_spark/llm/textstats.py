@@ -352,7 +352,7 @@ def doc_lm_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_pairs
         .join(lm_pairs, ["w1", "w2"])
         .join(left_totals, "w1")
-        .join(F.broadcast(vocab))
+        .join(vocab)
         .withColumn("p", (F.col("c_bigram") + F.lit(LM_SMOOTH_K))
                     / (F.col("c_left") + F.lit(LM_SMOOTH_K) * F.col("v")))
         .withColumn("term",
@@ -447,7 +447,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count("*").cast("long").alias("n_docs")))
     total = cells.agg(F.sum("n_docs").alias("total"))
     return (
-        cells.join(F.broadcast(total))
+        cells.join(total)
         .select(
             "labeled_lang", "predicted_lang", "n_docs",
             fround(F.col("n_docs") / F.col("total"), 6).alias("share"),
@@ -528,7 +528,7 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("c_uni").alias("c_w1")), "w1")
         .join(uni.select(F.col("w").alias("w2"),
                          F.col("c_uni").alias("c_w2")), "w2")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(
             "w1", "w2", "c_bigram", "c_w1", "c_w2",
             fround(F.log((d("c_bigram") * d("n_tokens") * d("n_tokens"))

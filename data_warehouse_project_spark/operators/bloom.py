@@ -231,22 +231,19 @@ def bloom_filter_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = pin(bloom_bits(dim, ["p_partkey"], BLOOM_M))
     fact = pin(cat.lineitem.select("l_partkey"))
     passed = pin(bloom_probe(fact, ["l_partkey"], bits, BLOOM_M))
-    true_match = fact.join(F.broadcast(dim),
+    true_match = fact.join(dim,
                            F.col("l_partkey") == F.col("p_partkey"),
                            "left_semi")
     # a passed row is a false positive iff it does NOT truly match
-    fp = passed.join(F.broadcast(dim),
+    fp = passed.join(dim,
                      F.col("l_partkey") == F.col("p_partkey"),
                      "left_anti")
     # a false negative is a truly-matching row that did NOT pass:
     # true_match minus (passed ∩ true_match) == n_true - (n_pass - n_fp)
     counts = (fact.agg(F.count("*").alias("n_fact"))
-              .crossJoin(F.broadcast(
-                  true_match.agg(F.count("*").alias("n_true"))))
-              .crossJoin(F.broadcast(
-                  passed.agg(F.count("*").alias("n_pass"))))
-              .crossJoin(F.broadcast(
-                  fp.agg(F.count("*").alias("n_fp")))))
+              .crossJoin(true_match.agg(F.count("*").alias("n_true")))
+              .crossJoin(passed.agg(F.count("*").alias("n_pass")))
+              .crossJoin(fp.agg(F.count("*").alias("n_fp"))))
     return counts.select(
         F.lit(BLOOM_M).cast("long").alias("m_bits"),
         F.lit(BLOOM_K).cast("long").alias("k_hashes"),

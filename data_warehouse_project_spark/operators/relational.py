@@ -149,12 +149,13 @@ WHERE c_name IS NOT NULL
 def join_inner_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: inner equi-join fact⋈dim (ref db.py:363-364, 391-392).
 
-    customer is dim-sized → broadcast hint; at 100 TB the orders fact
-    never shuffles for this join.
+    customer is dim-sized: Catalyst broadcasts it while its size
+    estimate fits autoBroadcastJoinThreshold, so the orders fact does
+    not shuffle for this join.
     """
     cat = Catalog(spark, sf_dir)
     return (
-        cat.orders.join(F.broadcast(cat.customer),
+        cat.orders.join(cat.customer,
                         F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "o_custkey", "c_name", "c_mktsegment", "o_totalprice")
     )
@@ -529,7 +530,7 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     return (
         cat.orders.filter(F.col("o_orderkey") <= 500)
-        .join(F.broadcast(cat.customer), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cat.customer, F.col("o_custkey") == F.col("c_custkey"))
         .select(
             "o_orderkey",
             F.date_format("o_orderdate", "dd MMM yyyy").alias("order_date_fmt"),

@@ -73,7 +73,7 @@ def acf_fold(daily: DataFrame, max_lag: int = _ACF_MAX_LAG) -> DataFrame:
     base = daily.agg(F.count("*").cast("long").alias("n"),
                      F.sum("v").cast("long").alias("s"))
     r = pin(daily
-            .crossJoin(F.broadcast(base))
+            .crossJoin(base)
             .select("day",
                     (F.col("v") - F.expr("s DIV n")).cast("long")
                     .alias("r")))
@@ -90,7 +90,7 @@ def acf_fold(daily: DataFrame, max_lag: int = _ACF_MAX_LAG) -> DataFrame:
             .groupBy("lag")
             .agg(F.count("*").cast("long").alias("n_pairs"),
                  F.sum("prod").cast("long").alias("num"))
-            .crossJoin(F.broadcast(den))
+            .crossJoin(den)
             .select(F.col("lag").cast("int").alias("lag"),
                     "n_pairs", "num", "den",
                     # den = 0 iff the series is constant (every
@@ -192,7 +192,7 @@ def xcorr_fold(daily: DataFrame, max_lag: int = _XCORR_MAX_LAG) -> DataFrame:
                      F.sum("x").cast("long").alias("sx"),
                      F.sum("y").cast("long").alias("sy"))
     r = pin(daily
-            .crossJoin(F.broadcast(base))
+            .crossJoin(base)
             .select("day",
                     (F.col("x") - F.expr("sx DIV n")).cast("long")
                     .alias("rx"),
@@ -221,7 +221,7 @@ def xcorr_fold(daily: DataFrame, max_lag: int = _XCORR_MAX_LAG) -> DataFrame:
             .groupBy("lag")
             .agg(F.count("*").cast("long").alias("n_pairs"),
                  F.sum("prod").cast("long").alias("num"))
-            .crossJoin(F.broadcast(den))
+            .crossJoin(den)
             .select(F.col("lag").cast("int").alias("lag"),
                     "n_pairs", "num", "den_x", "den_y",
                     # either series constant -> its den is 0: NULL

@@ -67,7 +67,7 @@ def part_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .withColumnRenamed("part_orders", "orders_a"), "part_a")
         .join(per_part.withColumnRenamed("l_partkey", "part_b")
                       .withColumnRenamed("part_orders", "orders_b"), "part_b")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
     )
     return (
         out.select(

@@ -133,7 +133,7 @@ def aqp_error_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_est"),
         (F.sum("cents") * F.lit(_AQP_WEIGHT)).cast("long")
         .alias("cents_est"))
-    j = exact.crossJoin(F.broadcast(est))
+    j = exact.crossJoin(est)
     # Empty/degenerate corpus: n_exact = 0 (and cents_exact NULL) —
     # the relative errors are undefined, and an unguarded divide is a
     # Spark-4 ANSI DIVIDE_BY_ZERO crash (round-9 empty-input sweep).

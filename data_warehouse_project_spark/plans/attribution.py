@@ -128,7 +128,7 @@ def attribution_frame(events: DataFrame) -> DataFrame:
     z = F.lit(0).cast("long")
     return (
         first.join(last, "touch_type", "full_outer")
-        .join(F.broadcast(linear), "touch_type", "full_outer")
+        .join(linear, "touch_type", "full_outer")
         .filter((F.coalesce(F.col("n_first"), z)
                  + F.coalesce(F.col("n_last"), z)
                  + F.coalesce(F.col("linear_cents"), z)) > 0)

@@ -267,7 +267,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5))
                              .cast("long")), F.lit(0)).alias("mon_cents"),
         )
-        .join(F.broadcast(anchor))
+        .join(anchor)
         .withColumn("recency_days",
                     F.datediff(F.col("anchor"), F.to_date("last_ts"))
                     .cast("long"))
@@ -312,7 +312,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (F.lit(4) - up) if invert else (F.lit(1) + up)
 
     scored = (
-        users.join(F.broadcast(bounds))
+        users.join(bounds)
         .withColumn("r_score", score("recency_days", "r", invert=True))
         .withColumn("f_score", score("freq", "f", invert=False))
         .withColumn("m_score", score("mon_units", "m", invert=False))
@@ -426,7 +426,7 @@ def events_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("h").alias("first_gap"),
         F.max("h").alias("last_gap"))
     return (
-        obs.join(F.broadcast(n_spine))
+        obs.join(n_spine)
         .join(gaps, "event_type", "left")
         .select(
             "event_type",
@@ -849,7 +849,7 @@ def t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(w_g).cast("long").alias("cum_n"),
         F.sum("n").over(w_gall).cast("long").alias("gsize"))
 
-    emd = (cum.join(F.broadcast(gcum), "sens")
+    emd = (cum.join(gcum, "sens")
            .groupBy("c_mktsegment", "c_nationkey")
            .agg(F.max("gsize").alias("gsize"),
                 F.max("n_total").alias("n_total"),

@@ -85,8 +85,7 @@ def cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("o_totalprice")).alias("o_totalprice"))
         .unionByName(
             orders.filter(k % _CDC_INS_MOD == 0)
-            .join(F.broadcast(orders.agg(
-                F.max("o_orderkey").alias("__maxk"))))
+            .join(orders.agg(F.max("o_orderkey").alias("__maxk")))
             .select((k + F.col("__maxk")).alias("o_orderkey"),
                     F.lit("O").alias("o_orderstatus"),
                     F.col("o_totalprice").alias("o_totalprice")))

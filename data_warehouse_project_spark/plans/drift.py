@@ -75,7 +75,7 @@ def cohort_drift(c: DataFrame) -> DataFrame:
                / F.lit(float(_BINS))).cast("long"),
     )
     binned = (
-        c.crossJoin(F.broadcast(bounds))
+        c.crossJoin(bounds)
         .select(F.expr("(cents - mn) DIV width").alias("bin"),
                 "early", "mn", "width")
         .groupBy("bin", "mn", "width")
@@ -327,7 +327,7 @@ def rolling_drift(v: DataFrame) -> DataFrame:
                / F.lit(float(_BINS))).cast("long"),
     )
     counts = (
-        v.crossJoin(F.broadcast(bounds.select("mn", "width")))
+        v.crossJoin(bounds.select("mn", "width"))
         .select("day_idx", "day",
                 F.expr("(vq - mn) DIV width").alias("bin"))
         .groupBy("day_idx", "day", "bin")
@@ -536,7 +536,7 @@ def cusum_fold(daily: DataFrame) -> DataFrame:
                  F.sum("cents").cast("long").alias("total_base")))
     mon = (daily
            .where(F.col("day") >= F.lit(_CUSUM_BASELINE_END).cast("date"))
-           .crossJoin(F.broadcast(base)))
+           .crossJoin(base))
     d_t = (F.col("cents") * F.col("n_base") - F.col("total_base")
            - F.expr(f"total_base DIV {_CUSUM_K_DEN}"))
     w = (Window.orderBy("day")

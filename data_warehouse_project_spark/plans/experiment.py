@@ -623,7 +623,7 @@ def events_type_arm_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "arm", "rt", "ct",
                     F.coalesce(F.col("o"), F.lit(0)).cast("long")
                     .alias("o"))
-            .crossJoin(F.broadcast(nrow)))
+            .crossJoin(nrow))
     e = (F.col("rt").cast("double") * F.col("ct").cast("double")
          / F.col("n").cast("double"))
     term = (F.col("o").cast("double") - e) * (F.col("o").cast("double")

@@ -69,13 +69,13 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast semi-prefilter: only ~1/3 of orders survive (a) (one
     # per (customer, status)), so aggregating lineitem for ALL orders
     # wastes 2/3 of the max_by work and shuffle. The surviving keys
-    # are dim-sized → broadcast them into the lineitem scan before
-    # aggregating. Semantics-preserving for the left join (unmatched
-    # surviving orders still yield nulls). Measured at sf0.1: 2.0 s →
-    # 1.7 s.
+    # are dim-sized, so the join broadcasts them into the lineitem
+    # scan before aggregating. Semantics-preserving for the left join
+    # (unmatched surviving orders still yield nulls). Measured at
+    # sf0.1: 2.0 s → 1.7 s.
     surviving = latest_orders.select(F.col("o_orderkey").alias("l_orderkey"))
     latest_line = (
-        lineitem.join(F.broadcast(surviving), "l_orderkey")
+        lineitem.join(surviving, "l_orderkey")
         .groupBy("l_orderkey")
         .agg(F.expr(
             "max_by(struct(l_linestatus, l_returnflag), "
@@ -90,7 +90,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         latest_orders
-        .join(F.broadcast(customer), latest_orders.o_custkey == customer.c_custkey)
+        .join(customer, latest_orders.o_custkey == customer.c_custkey)
         .join(latest_line, latest_orders.o_orderkey == latest_line.l_orderkey, "left")
         .select(
             "c_custkey", "c_name", "o_orderkey", "o_orderstatus",

@@ -421,8 +421,7 @@ def reach_hops(lineitem: DataFrame, hops: int = REACH_HOPS) -> DataFrame:
         nxt = (edges.join(F.broadcast(frontier),
                           edges.src == frontier.node)
                .select(F.col("dst").alias("node")).distinct()
-               .join(F.broadcast(
-                   visited.select("node")), "node", "left_anti"))
+               .join(visited.select("node"), "node", "left_anti"))
         nxt_h = nxt.select("node", F.lit(h).alias("hop"))
         visited = visited.unionByName(nxt_h)
         frontier = nxt

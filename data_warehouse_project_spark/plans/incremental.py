@@ -297,10 +297,10 @@ register("events_seasonal_served", events_seasonal_served, _SEASONAL_SQL)
 def _enrich_orders(orders: DataFrame, customer: DataFrame,
                    nation: DataFrame) -> DataFrame:
     return (orders
-            .join(F.broadcast(customer.select(
-                "c_custkey", "c_name", "c_mktsegment", "c_nationkey")),
+            .join(customer.select(
+                "c_custkey", "c_name", "c_mktsegment", "c_nationkey"),
                 F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(nation.select("n_nationkey", "n_name")),
+            .join(nation.select("n_nationkey", "n_name"),
                   F.col("c_nationkey") == F.col("n_nationkey"))
             .select("o_orderkey", "o_custkey", "o_orderdate",
                     "o_totalprice", "o_orderstatus",

@@ -121,7 +121,7 @@ def record_payment_post_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "registration_id", F.col("payment_status").alias("reg_status_after"))
     base = pays.agg(F.max("payment_id").alias("__base"))
     return (
-        stored.join(F.broadcast(base))
+        stored.join(base)
         .filter(F.col("payment_id") > F.col("__base"))
         .join(regs_after, "registration_id")
         .select("payment_id", "registration_id", "amount",
@@ -427,11 +427,10 @@ def gdpr_erasure_post_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     def counts(before: DataFrame, after: DataFrame, tbl: str,
                orphans) -> DataFrame:
         return (before.agg(F.count("*").cast("long").alias("n_before"))
-                .crossJoin(F.broadcast(
-                    after.agg(F.count("*").cast("long").alias("n_after"))))
-                .crossJoin(F.broadcast(
-                    orphans.agg(F.count("*").cast("long")
-                                .alias("n_orphans"))))
+                .crossJoin(
+                    after.agg(F.count("*").cast("long").alias("n_after")))
+                .crossJoin(orphans.agg(
+                    F.count("*").cast("long").alias("n_orphans")))
                 .select(F.lit(tbl).alias("tbl"), "n_before",
                         (F.col("n_before") - F.col("n_after"))
                         .cast("long").alias("n_deleted"),

@@ -122,7 +122,7 @@ def nation_revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.orders
         .join(cat.customer.select("c_custkey", "c_nationkey"),
               F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cat.nation.select("n_nationkey", "n_name")),
+        .join(cat.nation.select("n_nationkey", "n_name"),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .select(F.col("n_name").alias("nation"),
                 month_idx.alias("t"),
@@ -359,7 +359,7 @@ def conformal_fold(bt: DataFrame) -> DataFrame:
 
     bt = pin(bt)
     last_t = bt.agg(F.max("t").alias("last_t"))
-    cal = (bt.crossJoin(F.broadcast(last_t))
+    cal = (bt.crossJoin(last_t)
            # degenerate-window months score NULL errors (backtest
            # guard); exclude them explicitly — NULL ordering differs
            # between engines, so they must never reach the rank
@@ -381,7 +381,7 @@ def conformal_fold(bt: DataFrame) -> DataFrame:
                          F.col("n_cal")).cast("long").alias("k")))
     w = Window.orderBy("ae", "t")
     ranked = cal.select("ae", F.row_number().over(w).alias("rn"))
-    q = (ranked.crossJoin(F.broadcast(sizes))
+    q = (ranked.crossJoin(sizes)
          .where(F.col("rn") == F.col("k"))
          .select("n_cal", "k", F.col("ae").alias("q_scaled")))
     cov = (cal.crossJoin(F.broadcast(q))
@@ -390,7 +390,7 @@ def conformal_fold(bt: DataFrame) -> DataFrame:
                 F.max("q_scaled").alias("q_scaled"),
                 F.sum(F.when(F.col("ae") <= F.col("q_scaled"), 1)
                       .otherwise(0)).cast("long").alias("n_covered_cal")))
-    last = (bt.crossJoin(F.broadcast(last_t))
+    last = (bt.crossJoin(last_t)
             .where(F.col("t") == F.col("last_t"))
             .select(F.col("t").alias("last_t"),
                     F.col("actual_cents").alias("last_actual_cents"),
@@ -425,7 +425,7 @@ def revenue_forecast_conformal(spark: SparkSession,
     # model miss — drop it before calibration/deployment and deploy
     # on the last COMPLETE month (standard forecasting practice)
     mx = bt.agg(F.max("t").alias("mx"))
-    bt_full = (bt.crossJoin(F.broadcast(mx))
+    bt_full = (bt.crossJoin(mx)
                .where(F.col("t") < F.col("mx"))
                .drop("mx"))
     return conformal_fold(bt_full)

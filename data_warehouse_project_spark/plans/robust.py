@@ -67,7 +67,7 @@ def winsorized_stats(vals: DataFrame, group_col: str) -> DataFrame:
         )
     )
     folded = (
-        ranked.join(F.broadcast(bounds), group_col)
+        ranked.join(bounds, group_col)
         .groupBy(group_col)
         .agg(
             F.max("n").alias("n"),
@@ -221,7 +221,7 @@ def median_twopass(vals: DataFrame, group_col: str) -> DataFrame:
         .withColumn("cum_lo", F.col("cum_hi") - F.col("cnt"))
     )
     cands = (
-        hist.join(F.broadcast(bounds.select(group_col, "k1", "k2")),
+        hist.join(bounds.select(group_col, "k1", "k2"),
                   group_col)
         .where(((F.col("cum_lo") < F.col("k1"))
                 & (F.col("cum_hi") >= F.col("k1")))
@@ -370,7 +370,7 @@ def nation_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.orders
         .join(cat.customer.select("c_custkey", "c_nationkey"),
               F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cat.nation.select("n_nationkey", "n_name")),
+        .join(cat.nation.select("n_nationkey", "n_name"),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .select(F.col("n_name").alias("nation"),
                 month_idx.alias("t"),
@@ -464,7 +464,7 @@ def median_ci_fold(vals: DataFrame) -> DataFrame:
         F.lit(1).cast("long"),
         F.floor((nd - F.lit(_CI_Z) * F.sqrt(nd)) / F.lit(2.0))
         .cast("long"))
-    joined = (cum.crossJoin(F.broadcast(n_row))
+    joined = (cum.crossJoin(n_row)
               .withColumn("rank_lo", lo)
               .withColumn("rank_med",
                           F.expr("(n + 1) DIV 2").cast("long"))

@@ -57,7 +57,7 @@ def customer_churn_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.min("o_orderdate").alias("first_dt"),
                      F.max("o_orderdate").alias("last_dt")))
     horizon = per_cust.agg(F.max("last_dt").alias("h"))
-    lifet = (per_cust.crossJoin(F.broadcast(horizon))
+    lifet = (per_cust.crossJoin(horizon)
              .select(
                  (F.datediff("h", "last_dt") > _CHURN_GAP_DAYS)
                  .alias("churned"),

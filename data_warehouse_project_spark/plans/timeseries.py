@@ -298,7 +298,7 @@ def orders_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
                         .cast("long")).alias("cents")))
     d0 = daily.agg(F.min("day").alias("d0"))
-    m = (daily.join(F.broadcast(d0))
+    m = (daily.join(d0)
          .select(F.datediff("day", "d0").cast("long").alias("x"), "cents")
          .agg(F.count("*").cast("long").alias("n"),
               F.sum("x").cast("long").alias("sx"),

@@ -7,8 +7,12 @@ modeled on the public TPC-H spec (Q1/Q3/Q5), adapted to the driver
 schema's columns (no o_shippriority / l_commitdate etc.).
 
 Scale notes per query are inline; the common theme: filter before
-shuffle, aggregate before join where semantics allow, broadcast every
-dim, and let AQE pick the fact-fact strategy.
+shuffle, aggregate before join where semantics allow, and let Catalyst
+broadcast the dims it sizes under autoBroadcastJoinThreshold and AQE
+pick the fact-fact strategy. An explicit F.broadcast stays only on a
+joined dim (q5's supplier⋈nation⋈region, q10's customer⋈nation):
+without CBO Catalyst estimates a join as the product of its inputs,
+so it would shuffle them.
 """
 
 from __future__ import annotations
@@ -78,7 +82,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lines
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
              .alias("revenue"))
@@ -109,7 +113,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; only lineitem⋈orders shuffles."""
     cat = Catalog(spark, sf_dir)
     nr = (
-        cat.nation.join(F.broadcast(cat.region),
+        cat.nation.join(cat.region,
                         F.col("n_regionkey") == F.col("r_regionkey"))
         .filter(F.col("r_name") == "ASIA")
         .select("n_nationkey", "n_name")
@@ -123,7 +127,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))),
             F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cat.customer),
+        .join(cat.customer,
               (F.col("o_custkey") == F.col("c_custkey"))
               & (F.col("c_nationkey") == F.col("s_nationkey")))
         .groupBy("n_name")
@@ -226,7 +230,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp_ntz")))
     returned = cat.lineitem.filter(F.col("l_returnflag") == "R")
     cust_nation = cat.customer.join(
-        F.broadcast(cat.nation),
+        cat.nation,
         F.col("c_nationkey") == F.col("n_nationkey"))
     return (
         returned.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -299,7 +303,7 @@ def q14_conditional_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.lineitem
         .filter((F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
                 & (F.col("l_shipdate") < F.lit("1997-02-01").cast("timestamp_ntz")))
-        .join(F.broadcast(cat.part), F.col("l_partkey") == F.col("p_partkey"))
+        .join(cat.part, F.col("l_partkey") == F.col("p_partkey"))
     )
     term = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     scaled = F.floor(term * F.lit(1e4) + F.lit(0.5)).cast("long")
@@ -338,7 +342,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         big_orders
         .join(cat.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cat.customer), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cat.customer, F.col("o_custkey") == F.col("c_custkey"))
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate",
                 "o_totalprice", "total_qty")
         .orderBy(F.col("total_qty").desc(), F.col("o_orderkey"))

@@ -13,6 +13,12 @@ goes through the scaled-integer layer; every threshold against an
 aggregate is integer math so Spark and the DuckDB oracle agree bit-for-
 bit. Single IEEE ops on identical operands (one divide, one multiply)
 are deterministic and used freely.
+
+Join strategy: Catalyst broadcasts each dim its size estimate fits
+under autoBroadcastJoinThreshold. The explicit F.broadcast hints left
+here sit on joined dims and on per-key aggregates over the fact:
+without CBO Catalyst sizes a join as the product of its inputs and
+an aggregate as its input, so it would shuffle them.
 """
 
 from __future__ import annotations
@@ -47,7 +53,7 @@ def q2_min_unitprice_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                             & (F.col("p_size") <= 10))
     offers = (
         cat.lineitem
-        .join(F.broadcast(parts.select("p_partkey")),
+        .join(parts.select("p_partkey"),
               F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity"))
@@ -60,8 +66,8 @@ def q2_min_unitprice_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(best),
               (F.col("l_partkey") == F.col("b_partkey"))
               & (F.col("unit_price") == F.col("best_price")))
-        .join(F.broadcast(cat.part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(cat.supplier),
+        .join(cat.part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(cat.supplier,
               F.col("l_suppkey") == F.col("s_suppkey"))
         .select("p_partkey", "p_brand", "s_suppkey", "s_name", "s_acctbal",
                 F.col("unit_price").alias("best_price"))
@@ -117,8 +123,8 @@ def q7_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("l_shipdate") >= _TS("1996-01-01"))
                 & (F.col("l_shipdate") < _TS("1998-01-01")))
         .join(cat.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation",
                  F.year("l_shipdate").alias("l_year"))
@@ -159,9 +165,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     asia_cust = (
         cat.customer
-        .join(F.broadcast(cat.nation),
+        .join(cat.nation,
               F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(cat.region),
+        .join(cat.region,
               F.col("n_regionkey") == F.col("r_regionkey"))
         .filter(F.col("r_name") == "ASIA")
         .select("c_custkey")
@@ -170,15 +176,15 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_nation = F.col("s_nationkey") == 12
     return (
         cat.lineitem
-        .join(F.broadcast(cat.part.filter(F.col("p_type") == "PROMO")
-                          .select("p_partkey")),
+        .join(cat.part.filter(F.col("p_type") == "PROMO")
+              .select("p_partkey"),
               F.col("l_partkey") == F.col("p_partkey"))
         .join(cat.orders.filter(
             (F.col("o_orderdate") >= _TS("1996-01-01"))
             & (F.col("o_orderdate") < _TS("1998-01-01"))),
             F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(asia_cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cat.supplier.select("s_suppkey", "s_nationkey")),
+        .join(cat.supplier.select("s_suppkey", "s_nationkey"),
               F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
@@ -232,13 +238,13 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cat.lineitem
-        .join(F.broadcast(cat.part
-                          .filter(F.col("p_name").like("%widget%"))
-                          .select("p_partkey", "p_retailprice")),
+        .join(cat.part
+              .filter(F.col("p_name").like("%widget%"))
+              .select("p_partkey", "p_retailprice"),
               F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(cat.supplier.select("s_suppkey", "s_nationkey")),
+        .join(cat.supplier.select("s_suppkey", "s_nationkey"),
               F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(cat.nation),
+        .join(cat.nation,
               F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"),
                  F.year("l_shipdate").alias("o_year"))
@@ -275,7 +281,7 @@ def q11_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the guard sum would widen to DECIMAL(38,0) — same plan."""
     cat = Catalog(spark, sf_dir)
     supp3 = (cat.supplier
-             .join(F.broadcast(cat.nation.filter(F.col("n_name") == "NATION_3")),
+             .join(cat.nation.filter(F.col("n_name") == "NATION_3"),
                    F.col("s_nationkey") == F.col("n_nationkey"))
              .select("s_suppkey"))
     from ..cache import pin
@@ -291,7 +297,7 @@ def q11_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = per_part.agg(F.sum("value_s").alias("total_s"))
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("value_s") * 1000 > F.col("total_s"))
         .select(
             "l_partkey",
@@ -386,9 +392,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = pin(rev)
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .filter(F.col("total_revenue") == F.col("mx"))
-        .join(F.broadcast(cat.supplier),
+        .join(cat.supplier,
               F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
@@ -429,10 +435,10 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded = cat.supplier.filter(F.col("s_acctbal") < 1000).select("s_suppkey")
     return (
         cat.lineitem
-        .join(F.broadcast(parts.select("p_partkey", "p_brand", "p_type",
-                                       "p_size")),
+        .join(parts.select("p_partkey", "p_brand", "p_type",
+                           "p_size"),
               F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(excluded),
+        .join(excluded,
               F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
@@ -467,7 +473,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold; the output sum uses dsum."""
     cat = Catalog(spark, sf_dir)
     bparts = cat.part.filter(F.col("p_brand") == "Brand#15").select("p_partkey")
-    rel = cat.lineitem.join(F.broadcast(bparts),
+    rel = cat.lineitem.join(bparts,
                             F.col("l_partkey") == F.col("p_partkey"))
     limits = (
         rel.groupBy(F.col("l_partkey").alias("a_partkey"))
@@ -502,7 +508,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds push to the lineitem scan as an OR-range filter."""
     cat = Catalog(spark, sf_dir)
     j = cat.lineitem.join(
-        F.broadcast(cat.part.select("p_partkey", "p_brand", "p_size")),
+        cat.part.select("p_partkey", "p_brand", "p_size"),
         F.col("l_partkey") == F.col("p_partkey"))
     cond = (
         ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
@@ -546,7 +552,7 @@ def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.lineitem
         .filter((F.col("l_shipdate") >= _TS("1997-01-01"))
                 & (F.col("l_shipdate") < _TS("1998-01-01")))
-        .join(F.broadcast(bolt_keys), F.col("l_partkey") == F.col("p_partkey"))
+        .join(bolt_keys, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .filter(F.col("qty") > 200.0)
@@ -612,7 +618,7 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_order
         .filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(F.broadcast(cat.supplier),
+        .join(cat.supplier,
               F.col("late_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
@@ -659,10 +665,10 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= _TS("2000-01-01")).select("o_custkey")
     return (
         cat.customer
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .filter(scaled_bal * F.col("cnt") > F.col("tot"))
         .join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .join(F.broadcast(cat.nation),
+        .join(cat.nation,
               F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count("*").alias("numcust"),

@@ -161,7 +161,7 @@ def top_k_per_group_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k-per-group operator (operators.windows) as a query."""
     from ..operators.windows import top_k_per_group
     cat = Catalog(spark, sf_dir)
-    joined = cat.orders.join(F.broadcast(cat.customer),
+    joined = cat.orders.join(cat.customer,
                              F.col("o_custkey") == F.col("c_custkey"))
     # descending=True applies to every key; negate the tiebreaker so it
     # sorts ascending (price DESC, orderkey ASC — deterministic ties)
@@ -350,7 +350,7 @@ def part_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (Window.orderBy(F.col("revenue").desc(), F.col("l_partkey"))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (
-        top.join(F.broadcast(total))
+        top.join(total)
         .select(
             "l_partkey", "revenue",
             fround(F.col("revenue") / F.col("total_revenue"), 6)
@@ -606,7 +606,7 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         base.join(med, "l_suppkey")
-        .join(F.broadcast(cat.supplier.select("s_suppkey", "s_name")),
+        .join(cat.supplier.select("s_suppkey", "s_name"),
               F.col("l_suppkey") == F.col("s_suppkey"))
         .select("l_suppkey", "s_name", "n_lines", "revenue",
                 fround(F.col("n_returned") / F.col("n_lines"), 6)
@@ -681,7 +681,7 @@ def order_aging_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = ub
     band = band.otherwise(F.lit(f"{_AGING_BANDS[-1] + 1:03d}+"))
     return (
-        cat.orders.join(F.broadcast(anchor))
+        cat.orders.join(anchor)
         .groupBy("o_orderstatus", band.alias("age_band"))
         .agg(F.count("*").cast("long").alias("n_orders"),
              dsum(F.col("o_totalprice")).alias("total_value"))
@@ -1001,7 +1001,7 @@ def geo_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(F.broadcast(cat.nation.select("n_nationkey", "n_name",
                                                "n_regionkey")),
                  F.col("c_nationkey") == F.col("n_nationkey"))
-           .join(F.broadcast(cat.region.select("r_regionkey", "r_name")),
+           .join(cat.region.select("r_regionkey", "r_name"),
                  F.col("n_regionkey") == F.col("r_regionkey"))
            .select("c_custkey", F.col("r_name").alias("region"),
                    F.col("n_name").alias("nation")))
@@ -1066,11 +1066,11 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    + F.lit(0.5)).cast("long"))
                      .alias("cents")))
     keyed = (per_supp
-             .join(F.broadcast(cat.supplier.select("s_suppkey",
-                                                   "s_nationkey")),
+             .join(cat.supplier.select("s_suppkey",
+                                       "s_nationkey"),
                    per_supp.l_suppkey == F.col("s_suppkey"))
-             .join(F.broadcast(cat.nation.select("n_nationkey",
-                                                 "n_name")),
+             .join(cat.nation.select("n_nationkey",
+                                     "n_name"),
                    F.col("s_nationkey") == F.col("n_nationkey"))
              .select(F.col("n_name").alias("nation"), "cents"))
     from ..cache import pin
@@ -1166,14 +1166,14 @@ def nation_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
         .cast("long").alias("cents"))
     mx = o.agg(F.max("m").alias("mx"))
-    two = (o.crossJoin(F.broadcast(mx))
+    two = (o.crossJoin(mx)
            .where((F.col("m") == F.col("mx") - 1)
                   | (F.col("m") == F.col("mx") - 2)))
     cells = (two
              .join(cat.customer.select("c_custkey", "c_nationkey"),
                    F.col("o_custkey") == F.col("c_custkey"))
-             .join(F.broadcast(cat.nation
-                               .select("n_nationkey", "n_name")),
+             .join(cat.nation
+                   .select("n_nationkey", "n_name"),
                    F.col("c_nationkey") == F.col("n_nationkey"))
              .groupBy("n_name")
              .agg(F.sum(F.when(F.col("m") == F.col("mx") - 2,
@@ -1184,7 +1184,7 @@ def nation_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .cast("long").alias("cur_cents")))
     delta = (F.col("cur_cents") - F.col("prev_cents")).cast("long")
     tot = cells.agg(F.sum(delta).cast("long").alias("total_delta"))
-    return (cells.crossJoin(F.broadcast(tot))
+    return (cells.crossJoin(tot)
             .select(F.col("n_name").alias("nation"),
                     "prev_cents", "cur_cents",
                     delta.alias("delta_cents"),

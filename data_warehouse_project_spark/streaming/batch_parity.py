@@ -545,7 +545,7 @@ def events_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = trans.agg(F.sum("n").alias("total"))
     return (
-        trans.join(F.broadcast(total))
+        trans.join(total)
         .select("prev_type", "next_type", "n",
                 fround(F.col("n") / F.col("total"), 6).alias("share"))
         .orderBy(F.col("n").desc(), "prev_type", "next_type")
@@ -722,10 +722,10 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("n_events") == 1).cast("long")).alias("n_single"))
     return (
         base
-        .join(F.broadcast(disc_q("dur_min", 1, 2, "p50_dur_min")))
-        .join(F.broadcast(disc_q("dur_min", 9, 10, "p90_dur_min")))
-        .join(F.broadcast(disc_q("n_events", 1, 2, "p50_events")))
-        .join(F.broadcast(disc_q("n_events", 9, 10, "p90_events")))
+        .join(disc_q("dur_min", 1, 2, "p50_dur_min"))
+        .join(disc_q("dur_min", 9, 10, "p90_dur_min"))
+        .join(disc_q("n_events", 1, 2, "p50_events"))
+        .join(disc_q("n_events", 9, 10, "p90_events"))
         .select(
             "n_sessions",
             fround(F.col("n_single") / F.col("n_sessions"), 6)

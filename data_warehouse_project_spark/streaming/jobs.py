@@ -320,10 +320,9 @@ def user_running_totals_tws(events: DataFrame) -> DataFrame:
     state sizes the grouped-tuple API can't, and RocksDB changelog
     checkpointing bounds commit cost at 100 TB/day state churn).
 
-    Runtime requirements (env-gated, like the Delta write path): the
-    RocksDB state store provider (bundled with Spark) and the
-    `protobuf` Python package (TWS's state-server wire protocol —
-    absent in this sandbox, so the parity test skips here and runs
+    Runtime requirements: the RocksDB state store provider (bundled
+    with Spark) and the `protobuf` Python package (TWS's state-server
+    wire protocol; the parity test skips where it is missing and runs
     wherever `google.protobuf` imports; plan construction is always
     exercised).
     """

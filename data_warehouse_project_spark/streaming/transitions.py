@@ -155,7 +155,7 @@ def state_to_report(state: DataFrame) -> DataFrame:
              .select("prev_type", "next_type", "n"))
     total = trans.agg(F.sum("n").alias("total"))
     return (
-        trans.join(F.broadcast(total))
+        trans.join(total)
         .select("prev_type", "next_type", F.col("n").cast("long").alias("n"),
                 fround(F.col("n") / F.col("total"), 6).alias("share"))
         .orderBy(F.col("n").desc(), "prev_type", "next_type")

@@ -311,109 +311,6 @@ def read_table_version(spark: SparkSession, path: str,
 
 
 # --------------------------------------------------------------------------
-# Delta-gated transactional record_payment (ref db.py:450-468)
-# --------------------------------------------------------------------------
-
-#: Set DWPS_DELTA=1 (and run with the public `delta-spark` package on
-#: the classpath) to execute record_payment against Delta tables with
-#: per-table ACID + idempotent-retry guarantees. Not installable in
-#: this sandbox — execution is import-gated; plan/option construction
-#: below is pure and unit-tested (same policy as the JDBC source
-#: variant in sources/catalog.py).
-DELTA_ENV = "DWPS_DELTA"
-
-
-def delta_record_payment_ops(
-    payments_path: str,
-    registrations_path: str,
-    batch_id: int,
-    app_id: str = "dwps-record-payment",
-) -> list[dict]:
-    """The ordered operation plan a Delta deployment executes for
-    S14's insert+update pair (ref db.py:450-468).
-
-    Delta transactions are per-table (no multi-table commit in the
-    open format), so the pair CANNOT be one atomic unit — instead
-    each step is individually atomic AND idempotent, which makes the
-    sequence safe to re-run from any crash point:
-
-    1. append the keyed payment batch with
-       ``txnAppId``/``txnVersion`` — Delta's idempotent-writes
-       option: a replay of the same (appId, version) is a no-op, so
-       an at-least-once driver cannot double-insert;
-    2. MERGE the status flip into registrations keyed on
-       registration_id — re-running the MERGE after a crash sets
-       payment_status='Success' to the same value (naturally
-       idempotent).
-
-    A reader between 1 and 2 sees the payment with a still-Pending
-    registration — exactly the reference's MySQL behavior between its
-    two statements before COMMIT; `record_payment_atomic` remains the
-    formulation with no such window.
-    """
-    return [
-        {
-            "step": "append_payments",
-            "format": "delta",
-            "mode": "append",
-            "path": payments_path,
-            "options": {"txnAppId": app_id, "txnVersion": str(batch_id)},
-        },
-        {
-            "step": "flip_registrations",
-            "op": "merge",
-            "path": registrations_path,
-            "merge_on": "t.registration_id = s.registration_id",
-            "when_matched_update": {"payment_status": "'Success'"},
-        },
-    ]
-
-
-def delta_enabled() -> bool:
-    """True when the env opts in AND delta-spark is importable."""
-    if os.environ.get(DELTA_ENV) != "1":
-        return False
-    try:
-        import delta  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def record_payment_delta(
-    spark: SparkSession,
-    payments_path: str,
-    registrations_path: str,
-    payment_row: DataFrame,
-    batch_id: int,
-) -> None:
-    """Execute the Delta plan (out-of-sandbox: requires delta-spark).
-
-    Raises RuntimeError unless `delta_enabled()`."""
-    if not delta_enabled():
-        raise RuntimeError(
-            f"Delta path requires {DELTA_ENV}=1 and the delta-spark "
-            "package (not available in this sandbox)")
-    from delta.tables import DeltaTable  # noqa: PLC0415
-
-    existing = spark.read.format("delta").load(payments_path)
-    keyed = with_surrogate_keys(
-        payment_row, "payment_id", existing=existing,
-        order_by=["registration_id", "payment_date"])
-    ops = delta_record_payment_ops(
-        payments_path, registrations_path, batch_id)
-    append = ops[0]
-    (keyed.write.format(append["format"]).mode(append["mode"])
-     .options(**append["options"]).save(append["path"]))
-    merge = ops[1]
-    (DeltaTable.forPath(spark, merge["path"]).alias("t")
-     .merge(keyed.select("registration_id").distinct().alias("s"),
-            merge["merge_on"])
-     .whenMatchedUpdate(set=merge["when_matched_update"])
-     .execute())
-
-
-# --------------------------------------------------------------------------
 # MERGE / SCD2 — warehouse mutation semantics on immutable storage
 # --------------------------------------------------------------------------
 
@@ -624,7 +521,7 @@ def write_zordered(df: DataFrame, path: str, col_x: str, col_y: str,
     stats = df.agg(
         F.min(col_x).alias("minx"), F.max(col_x).alias("maxx"),
         F.min(col_y).alias("miny"), F.max(col_y).alias("maxy"))
-    q = df.join(F.broadcast(stats))
+    q = df.join(stats)
     bits = 16
     scale = (1 << bits) - 1
     qx = F.floor((F.col(col_x) - F.col("minx")) * scale

@@ -149,16 +149,15 @@ def gate_violations(measured: dict[str, dict[str, dict[str, int]]],
     return violations
 
 
-def main() -> int:
-    from bench import HEADLINE  # noqa: E402
+def measure(sf_dirs: list[str],
+            names: list[str]) -> dict[str, dict[str, dict[str, int]]]:
+    """Shuffle and spill bytes of each named registry query at each
+    scale, read in one session at AUDIT_CORES: scale-key -> query ->
+    measure_query_shuffle's byte totals."""
     from data_warehouse_project_spark import registry  # noqa: E402
     from data_warehouse_project_spark.metrics import (  # noqa: E402
         measure_query_shuffle)
     from data_warehouse_project_spark.session import get_spark  # noqa: E402
-
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    record = "--record" in sys.argv
-    sf_dirs = args if args else DEFAULT_SF_DIRS
 
     spark = get_spark("shuffle-audit", cpus=AUDIT_CORES)
     qs = registry.queries()
@@ -166,14 +165,22 @@ def main() -> int:
     for sf_dir in sf_dirs:
         sk = _scale_key(sf_dir)
         measured[sk] = {}
-        for name in HEADLINE:
-            measured[sk][name] = measure_query_shuffle(
+        for name in names:
+            m = measured[sk][name] = measure_query_shuffle(
                 spark, qs[name], sf_dir)
             print(f"# [{sk}] {name}: "
-                  f"write={measured[sk][name]['shuffle_write_bytes']:,}B "
-                  f"spill={measured[sk][name]['spilled_bytes']:,}B",
-                  file=sys.stderr)
+                  f"write={m['shuffle_write_bytes']:,}B "
+                  f"spill={m['spilled_bytes']:,}B", file=sys.stderr)
     spark.stop()
+    return measured
+
+
+def main() -> int:
+    from bench import HEADLINE  # noqa: E402
+
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    record = "--record" in sys.argv
+    measured = measure(args if args else DEFAULT_SF_DIRS, HEADLINE)
 
     if record:
         # merge: re-recording one scale must not drop the other's

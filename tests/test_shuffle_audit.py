@@ -22,20 +22,28 @@ the 2.5x headroom (the round-10 audit measured 10x data moving bytes
 Spill must be exactly zero — nothing in the suite spills at test
 scales; any spill at sf0.001 is a partitioning bug, not a tuning
 matter.
+
+The bytes depend on the partition count, and the bounds were recorded
+at ``shuffle_audit.AUDIT_CORES``; so the gated queries are measured
+once, in a child process whose session runs at that core count, and
+gated by the audit's own ``gate_violations``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
-from data_warehouse_project_spark import registry
-from data_warehouse_project_spark.metrics import measure_query_shuffle
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BOUNDS_PATH = os.path.join(ROOT, "tests", "shuffle_bounds.json")
+SCRIPTS = os.path.join(ROOT, "scripts")
+sys.path.insert(0, SCRIPTS)
 
-BOUNDS_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "tests", "shuffle_bounds.json")
+from shuffle_audit import gate_violations  # noqa: E402
 
 GATED = [
     "part_affinity_topk",
@@ -48,33 +56,33 @@ GATED = [
 
 
 @pytest.fixture(scope="module")
-def bounds():
+def audit(sf_dir):
+    """(measured, bounds file): the GATED queries' bytes at the suite's
+    scale, read by ``shuffle_audit.measure`` in a child process."""
     with open(BOUNDS_PATH) as f:
         rec = json.load(f)
     # v2 schema (VERDICT r10 #4): per-scale bounds + growth headroom
     assert "sf0.001" in rec["scales"] and "sf0.01" in rec["scales"]
-    return rec["scales"]["sf0.001"], rec["headroom"]
+    code = ("import json, shuffle_audit; print(json.dumps("
+            f"shuffle_audit.measure([{sf_dir!r}], {GATED!r})))")
+    out = subprocess.run([sys.executable, "-c", code], cwd=SCRIPTS,
+                         capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr[-4000:]
+    return json.loads(out.stdout.splitlines()[-1]), rec
 
 
 @pytest.mark.parametrize("name", GATED)
-def test_shuffle_volume_within_bounds(spark, sf_dir, name, bounds):
-    bound_map, headroom = bounds
-    m = measure_query_shuffle(spark, registry.queries()[name], sf_dir)
-    assert m["spilled_bytes"] == 0, m
-    # 64 KiB absolute floor: below it per-partition framing noise
-    # dwarfs the signal (same rule as the full sweep)
-    limit = max(bound_map[name] * headroom, 65536)
-    assert m["shuffle_write_bytes"] <= limit, (
-        name, m["shuffle_write_bytes"], bound_map[name])
+def test_shuffle_volume_within_bounds(audit, name):
+    measured, rec = audit
+    one = {sk: {name: per_query[name]} for sk, per_query in measured.items()}
+    assert gate_violations(one, rec) == [], one
 
 
 def test_bounds_cover_every_headline_query():
     # the recorded bounds file must stay in lockstep with bench.py's
     # headline list — an unrecorded new query would silently escape
     # the full sweep's gate — at BOTH recorded scales
-    import sys
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
+    sys.path.insert(0, ROOT)
     from bench import HEADLINE
     with open(BOUNDS_PATH) as f:
         rec = json.load(f)
@@ -84,10 +92,6 @@ def test_bounds_cover_every_headline_query():
 
 
 def _gate(measured, scales, **over):
-    import sys
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts"))
-    from shuffle_audit import gate_violations
     rec = {"headroom": 2.5, "growth_headroom": 1.6, "scales": scales}
     rec.update(over)
     return gate_violations(measured, rec)
@@ -154,9 +158,6 @@ def test_sf1_gate_spill_allowlist():
     """sf1_regression's gate: the adjudicated map-side-combiner spill
     (part_affinity_topk) passes at <= recorded * headroom and trips
     past it; every other query still requires zero spill."""
-    import sys
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scripts"))
     from sf1_regression import gate
     scales = {"sf0.1": {"part_affinity_topk": 100_000_000, "q": 1_000_000},
               "sf1.0": {"part_affinity_topk": 1_000_000_000,

@@ -165,8 +165,7 @@ def test_stateful_running_totals(spark, sf_dir, events_stream,
 
 def test_transform_with_state_plan_constructs(spark, events_stream):
     # plan construction (analysis, schema) must work everywhere even
-    # though execution needs protobuf — mirrors the Delta env-gate
-    # pattern of always exercising the buildable surface
+    # though execution needs protobuf
     df = jobs.user_running_totals_tws(events_stream)
     assert df.isStreaming
     assert [f.name for f in df.schema.fields] \

@@ -286,34 +286,6 @@ def test_surrogate_keys_bulk_layout_invariant(spark):
     assert a == b
 
 
-def test_delta_record_payment_plan_construction(monkeypatch):
-    # the Delta path is import-gated (delta-spark is not in this
-    # sandbox); the operation plan itself is pure and checkable
-    from data_warehouse_project_spark import writes
-
-    ops = writes.delta_record_payment_ops("/tbl/payments", "/tbl/regs", 7)
-    assert [o["step"] for o in ops] == ["append_payments",
-                                       "flip_registrations"]
-    append, merge = ops
-    # idempotent-retry identity on the append
-    assert append["options"]["txnAppId"] == "dwps-record-payment"
-    assert append["options"]["txnVersion"] == "7"
-    assert append["mode"] == "append" and append["format"] == "delta"
-    # the flip is a keyed MERGE, not a blind overwrite
-    assert merge["op"] == "merge"
-    assert "registration_id" in merge["merge_on"]
-    assert merge["when_matched_update"] == {"payment_status": "'Success'"}
-
-    # gate behavior: off by default; env alone is insufficient without
-    # the package
-    monkeypatch.delenv(writes.DELTA_ENV, raising=False)
-    assert writes.delta_enabled() is False
-    monkeypatch.setenv(writes.DELTA_ENV, "1")
-    assert writes.delta_enabled() is False  # delta not importable here
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        writes.record_payment_delta(None, "p", "r", None, 1)
-
-
 def test_gdpr_erasure_cascade_invariants(spark, sf_dir):
     """Erasure post-state: deleted counts consistent with the cohort
     rule, all three tables report a clean (orphan-free) persisted
