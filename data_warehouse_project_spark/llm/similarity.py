@@ -48,7 +48,7 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.filter(F.col("vec_id") != QUERY_VEC_ID)
         .withColumnRenamed("embedding", "a")
-        .join(query)
+        .join(F.broadcast(query))
         .select(
             "vec_id", "label",
             fround(F.expr(_COS_EXPR), 6).alias("cos_sim"),
@@ -202,7 +202,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.join(candidates, "vec_id", "left_semi")
         .withColumnRenamed("embedding", "a")
-        .join(query)
+        .join(F.broadcast(query))
         .select("vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
@@ -310,7 +310,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cat.embeddings.join(candidates, "vec_id", "left_semi")
         .withColumnRenamed("embedding", "a")
-        .join(query)
+        .join(F.broadcast(query))
         .select("vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
@@ -706,7 +706,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (assigned.filter(F.col("vec_id") == QUERY_VEC_ID)
              .select(F.col("embedding").alias("qe")))
     probe_cells = (
-        cent_df.join(query)
+        cent_df.join(F.broadcast(query))
         .withColumn("dist", F.expr(
             "aggregate(zip_with(centroid, qe, (c, q) -> "
             "(c - cast(q as double)) * (c - cast(q as double))), "
@@ -719,7 +719,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         candidates
         .withColumnRenamed("embedding", "a")
-        .join(query.select(F.col("qe").alias("b")))
+        .join(F.broadcast(query.select(F.col("qe").alias("b"))))
         .select("vec_id", "label", fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(TOP_K)
@@ -811,7 +811,7 @@ def knn_batch_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         cat.embeddings
         .withColumnRenamed("embedding", "a")
-        .join(queries, F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim"))
     )
@@ -983,7 +983,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pin(
         cat.embeddings
         .withColumnRenamed("embedding", "a")
-        .join(queries, F.col("vec_id") != F.col("anchor_id"))
+        .join(F.broadcast(queries), F.col("vec_id") != F.col("anchor_id"))
         .select("anchor_id", "anchor_label", "vec_id", "label",
                 fround(F.expr(_COS_EXPR), 6).alias("cos_sim")))
     pos = top_k_per_group(

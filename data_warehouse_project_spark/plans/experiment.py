@@ -618,7 +618,9 @@ def events_type_arm_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").cast("long").alias("rt"))
     ct = cells.groupBy("arm").agg(F.sum("o").cast("long").alias("ct"))
     nrow = cells.agg(F.sum("o").cast("long").alias("n"))
-    grid = (rt.crossJoin(ct)
+    # ct is one row per arm; Catalyst sizes it as the events scan, so
+    # without the hint a large scan turns the grid into a cartesian
+    grid = (rt.crossJoin(F.broadcast(ct))
             .join(cells, ["event_type", "arm"], "left")
             .select("event_type", "arm", "rt", "ct",
                     F.coalesce(F.col("o"), F.lit(0)).cast("long")

@@ -123,8 +123,8 @@ def q7_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("l_shipdate") >= _TS("1996-01-01"))
                 & (F.col("l_shipdate") < _TS("1998-01-01")))
         .join(cat.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation",
                  F.year("l_shipdate").alias("l_year"))

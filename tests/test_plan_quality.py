@@ -394,6 +394,36 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
     assert not offenders, offenders
 
 
+#: Broadcast threshold of the scale simulation below: every side that
+#: Catalyst sizes from a table scan is past it even at sf0.001, while a
+#: global aggregate or a LIMIT, which it sizes by row count, stays under.
+PAST_SCALE_THRESHOLD = "1024"
+
+
+def test_registry_cartesian_free_past_broadcast_threshold(spark, sf_dir):
+    """The hygiene rule above at scale. A join with no equality key
+    broadcasts a side only while Catalyst's estimate of it fits the
+    threshold; past it the planner picks a CartesianProduct, which AQE
+    cannot re-plan (there is no exchange below it). A filtered fact is
+    estimated at the whole scan, so such a side needs its explicit
+    F.broadcast; a one-row aggregate does not. Unlike `no_broadcast`
+    (-1), this threshold keeps the sides bounded by construction
+    broadcastable, as they stay at any scale."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                   PAST_SCALE_THRESHOLD)
+    try:
+        offenders = []
+        for name, fn in registry.queries().items():
+            if "CartesianProduct" in _plan(fn(spark, sf_dir), "simple"):
+                offenders.append(name)
+            release_all()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        release_all()
+    assert not offenders, offenders
+
+
 def test_r5_paths_stay_jvm_side(r5_plans):
     for name, plan in r5_plans.items():
         if name == "ann_recall_report":
