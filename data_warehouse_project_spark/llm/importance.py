@@ -70,7 +70,7 @@ def dsir_scores(docs: DataFrame, is_target: Column) -> DataFrame:
         F.count("*").alias("v"))
     k = F.lit(DSIR_SMOOTH_K)
     lam = (
-        raw.join(F.broadcast(totals))
+        raw.join(totals)
         .withColumn(
             "p_tgt", (F.col("c_tgt") + k) / (F.col("n_tgt") + k * F.col("v")))
         .withColumn(

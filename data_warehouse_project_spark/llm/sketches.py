@@ -154,41 +154,21 @@ register("cms_heavy_hitters", cms_heavy_hitters, None)
 register("cms_accuracy_floor", cms_accuracy_floor, CMS_ACCURACY_SQL)
 
 
-def _cms_init(batch_docs: DataFrame) -> DataFrame:
+def cms_state(batch_docs: DataFrame) -> DataFrame:
+    """CMS maintainer state of one batch: ≤ CMS_D·CMS_W (seed, bucket, n)
+    rows, whatever the corpus size."""
     return cms_table(_token_counts(batch_docs))
 
 
-def _cms_merge(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
+def merge_cms_state(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
     """Cell-wise addition — the CMS merge is exact (integer sums), so
     the folded sketch is BIT-IDENTICAL to a single-pass build over
     the union (unit-pinned), the same guarantee class as the HLL
     rollup's register-maxima merge."""
-    delta = _cms_init(batch_docs)
+    delta = cms_state(batch_docs)
     return (prev.unionByName(delta)
             .groupBy("seed", "bucket")
             .agg(F.sum("n").cast("long").alias("n")))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Idempotent CMS fold on the shared template
-    (streaming/state_fold.py): batch-id replay guard, atomic staged
-    swap. State is ≤ d·w rows of longs regardless of corpus — the
-    smallest state table in the engine."""
-    from ..streaming.state_fold import fold_batch
-    return fold_batch(batch_df, batch_id, state_path,
-                      _cms_init, _cms_merge)
-
-
-def run_cms_maintainer(docs_stream: DataFrame, state_path: str,
-                       checkpoint: str):
-    """foreachBatch CMS maintainer over a streaming documents source:
-    an always-current bounded-memory token-frequency sketch (serve
-    point estimates by probing the d cells of a token, no corpus
-    rescan ever)."""
-    from ..streaming.state_fold import run_maintainer
-    return run_maintainer(docs_stream, state_path, checkpoint,
-                          _cms_init, _cms_merge)
 
 
 # --------------------------------------------------------------------------
@@ -612,14 +592,16 @@ register("kmv_customer_overlap", kmv_customer_overlap, None)
 register("kmv_accuracy_floor", kmv_accuracy_floor, KMV_ACCURACY_SQL)
 
 
-def _kmv_init(batch_orders: DataFrame) -> DataFrame:
+def kmv_state(batch_orders: DataFrame) -> DataFrame:
+    """KMV maintainer state of one batch: ≤ KMV_K (g, h, r) rows per
+    order year."""
     return kmv_sketch(
         batch_orders.select(F.year("o_orderdate").alias("y"),
                             "o_custkey"),
         "y", "o_custkey")
 
 
-def _kmv_merge(prev: DataFrame, batch_orders: DataFrame) -> DataFrame:
+def merge_kmv_state(prev: DataFrame, batch_orders: DataFrame) -> DataFrame:
     """Union hashes, re-truncate — the KMV merge is EXACT: any of the
     union's k smallest distinct hashes is necessarily among the k
     smallest of whichever side it arrived in, so
@@ -628,34 +610,11 @@ def _kmv_merge(prev: DataFrame, batch_orders: DataFrame) -> DataFrame:
     history (unit-pinned) — the same guarantee class as the CMS
     cell-addition and HLL register-maxima merges."""
     merged = (prev.select("g", "h")
-              .unionByName(_kmv_init(batch_orders).select("g", "h"))
+              .unionByName(kmv_state(batch_orders).select("g", "h"))
               .distinct())
     w = Window.partitionBy("g").orderBy("h")
     return (merged.withColumn("r", F.row_number().over(w))
             .filter(F.col("r") <= KMV_K))
-
-
-def kmv_fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                              state_path: str) -> bool:
-    """Idempotent KMV fold on the shared template
-    (streaming/state_fold.py): batch-id replay guard, atomic staged
-    swap. State is ≤ k rows per group forever — every overlap
-    question (union / intersection / Jaccard between any two groups)
-    is served from state without rescanning history."""
-    from ..streaming.state_fold import fold_batch
-    return fold_batch(batch_df, batch_id, state_path,
-                      _kmv_init, _kmv_merge)
-
-
-def run_kmv_maintainer(orders_stream: DataFrame, state_path: str,
-                       checkpoint: str):
-    """foreachBatch KMV maintainer over a streaming orders source: an
-    always-current bounded-state distinct-set summary per year, from
-    which kmv_estimates / kmv_pair_estimates price cardinalities and
-    overlaps O(groups·k) at serve time."""
-    from ..streaming.state_fold import run_maintainer
-    return run_maintainer(orders_stream, state_path, checkpoint,
-                          _kmv_init, _kmv_merge)
 
 
 def _frames_identical(a: DataFrame, b: DataFrame):
@@ -679,28 +638,28 @@ def sketch_fold_identity_floor(spark: SparkSession,
     data in the driver's own environment, so a merge regression (or
     an engine-version change in hashing/aggregation) flips a boolean
     in CORRECTNESS rather than only failing CI."""
-    from ..operators.bloom import _bloom_init, _bloom_merge
+    from ..operators.bloom import bloom_state, merge_bloom_state
     cat = Catalog(spark, sf_dir)
 
     docs = cat.documents
     d1 = docs.filter(F.col("doc_id") % 2 == 0)
     d2 = docs.filter(F.col("doc_id") % 2 == 1)
     cms_ok = _frames_identical(
-        _cms_merge(_cms_init(d1), d2), _cms_init(docs)) \
+        merge_cms_state(cms_state(d1), d2), cms_state(docs)) \
         .withColumnRenamed("ok", "cms_fold_identical")
 
     orders = cat.orders
     o1 = orders.filter(F.col("o_orderkey") % 2 == 0)
     o2 = orders.filter(F.col("o_orderkey") % 2 == 1)
     kmv_ok = _frames_identical(
-        _kmv_merge(_kmv_init(o1), o2), _kmv_init(orders)) \
+        merge_kmv_state(kmv_state(o1), o2), kmv_state(orders)) \
         .withColumnRenamed("ok", "kmv_fold_identical")
 
     parts = cat.part
     p1 = parts.filter(F.col("p_partkey") % 2 == 0)
     p2 = parts.filter(F.col("p_partkey") % 2 == 1)
     bloom_ok = _frames_identical(
-        _bloom_merge(_bloom_init(p1), p2), _bloom_init(parts)) \
+        merge_bloom_state(bloom_state(p1), p2), bloom_state(parts)) \
         .withColumnRenamed("ok", "bloom_fold_identical")
 
     return (cms_ok.crossJoin(kmv_ok)
@@ -810,7 +769,7 @@ ORDER BY weight DESC, token
 def mg_fold_bound_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible Misra-Gries quality gate, pinned-constant
     oracle: fold the corpus through a two-batch merge tree — the
-    MAINTAINER'S OWN fold functions (_mg_init/_mg_merge on a doc_id
+    MAINTAINER'S OWN fold functions (mg_state/merge_mg_state on a doc_id
     parity split), so the gate exercises the exact code the streaming
     path runs — and assert the mergeable-summaries guarantees on
     the REAL data: (a) ≤ k survivors, (b) every weight is a lower
@@ -823,8 +782,9 @@ def mg_fold_bound_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cache import pin
     docs = Catalog(spark, sf_dir).documents
     counts = pin(_token_counts(docs))
-    state = pin(_mg_merge(_mg_init(docs.filter(F.col("doc_id") % 2 == 0)),
-                          docs.filter(F.col("doc_id") % 2 == 1)))
+    state = pin(merge_mg_state(
+        mg_state(docs.filter(F.col("doc_id") % 2 == 0)),
+        docs.filter(F.col("doc_id") % 2 == 1)))
     folded = (state.where(F.col("token").isNotNull())
               .select("token", "weight"))
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))
@@ -870,7 +830,7 @@ register("mg_fold_bound_floor", mg_fold_bound_floor, MG_FOLD_BOUND_SQL)
 # --- Misra-Gries maintainer (shared idempotent-fold template) ---
 
 
-def _mg_init(batch_docs: DataFrame) -> DataFrame:
+def mg_state(batch_docs: DataFrame) -> DataFrame:
     """MG state from one batch: the reduced summary plus one NULL-token
     meta row carrying the batch's total token mass (the N the error
     bound is stated against — it must ride in state because the
@@ -886,13 +846,13 @@ def _mg_init(batch_docs: DataFrame) -> DataFrame:
     return summ.crossJoin(total).unionByName(meta)
 
 
-def _mg_merge(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
+def merge_mg_state(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
     """Mergeable-summaries merge: weight addition over the union of
     the two summaries, then one mg_reduce; total mass adds. The
     (N − S)/(k+1) guarantee survives this by the PODS'12 argument
     (each reduce removes ≥ (k+1)·w* of mass, so the per-token
     cumulative subtraction is bounded by the mass the state lost)."""
-    delta = _mg_init(batch_docs)
+    delta = mg_state(batch_docs)
 
     def meta(df: DataFrame) -> DataFrame:
         return df.where(F.col("token").isNull()).select("n_total")
@@ -911,25 +871,3 @@ def _mg_merge(prev: DataFrame, batch_docs: DataFrame) -> DataFrame:
                             F.lit(0).cast("long").alias("weight"),
                             "n_total")
     return summ.crossJoin(n_tot).unionByName(new_meta)
-
-
-def mg_fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                             state_path: str) -> bool:
-    """Idempotent MG fold on the shared template: state is ≤ k+1 rows
-    (summary + meta) regardless of corpus — with the CMS table, the
-    two smallest state tables in the engine."""
-    from ..streaming.state_fold import fold_batch
-    return fold_batch(batch_df, batch_id, state_path,
-                      _mg_init, _mg_merge)
-
-
-def run_mg_maintainer(docs_stream: DataFrame, state_path: str,
-                      checkpoint: str):
-    """foreachBatch MG maintainer over a streaming documents source:
-    an always-current deterministic-bound heavy-hitters list served
-    O(k) from state (the CMS maintainer's counterpart where the
-    consumer needs guaranteed-under rather than guaranteed-over
-    estimates)."""
-    from ..streaming.state_fold import run_maintainer
-    return run_maintainer(docs_stream, state_path, checkpoint,
-                          _mg_init, _mg_merge)

@@ -270,13 +270,15 @@ register("bloom_semijoin_revenue", bloom_semijoin_revenue,
 register("bloom_filter_floor", bloom_filter_floor, BLOOM_FLOOR_SQL)
 
 
-def _bloom_init(batch_parts: DataFrame) -> DataFrame:
+def bloom_state(batch_parts: DataFrame) -> DataFrame:
+    """Bloom maintainer state of one batch of parts: ≤ BLOOM_M/64 =
+    1 024 (w, bits) rows."""
     return bloom_bits(
         batch_parts.filter(F.col("p_size") <= _PART_SIZE_MAX)
         .select("p_partkey"), ["p_partkey"], BLOOM_M)
 
 
-def _bloom_merge(prev: DataFrame, batch_parts: DataFrame) -> DataFrame:
+def merge_bloom_state(prev: DataFrame, batch_parts: DataFrame) -> DataFrame:
     """Word-wise OR — the Bloom merge is EXACT (a bit is set in the
     union iff some batch set it), so the folded filter is
     BIT-IDENTICAL to a single-pass build over all history
@@ -285,27 +287,5 @@ def _bloom_merge(prev: DataFrame, batch_parts: DataFrame) -> DataFrame:
     only — a Bloom filter cannot delete; key removal means rebuild,
     which the floor's exactness contract makes safe to defer (false
     positives never corrupt results, they only cost probe passes)."""
-    return (prev.unionByName(_bloom_init(batch_parts))
+    return (prev.unionByName(bloom_state(batch_parts))
             .groupBy("w").agg(F.bit_or("bits").alias("bits")))
-
-
-def bloom_fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                                state_path: str) -> bool:
-    """Idempotent Bloom fold on the shared template
-    (streaming/state_fold.py): batch-id replay guard, atomic staged
-    swap. State ≤ BLOOM_M/64 = 1 024 rows forever — the always-current
-    join pre-filter a long-running pipeline probes without ever
-    rescanning the dimension's history."""
-    from ..streaming.state_fold import fold_batch
-    return fold_batch(batch_df, batch_id, state_path,
-                      _bloom_init, _bloom_merge)
-
-
-def run_bloom_maintainer(parts_stream: DataFrame, state_path: str,
-                         checkpoint: str):
-    """foreachBatch Bloom maintainer over a streaming parts source:
-    keeps the qualifying-key filter current as dim rows arrive, so
-    fact-side consumers always probe against the full key history."""
-    from ..streaming.state_fold import run_maintainer
-    return run_maintainer(parts_stream, state_path, checkpoint,
-                          _bloom_init, _bloom_merge)

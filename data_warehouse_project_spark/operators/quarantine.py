@@ -6,11 +6,12 @@ NAMES of the rules it violated, so bad data is triaged instead of
 dropped.
 
 Scale design: rule evaluation is one pass of pure column expressions
-(each rule a boolean Column); the violation list is an array built
-scan-side, and both outputs are filters over the SAME tagged frame —
-at 100 TB the clean and quarantine sinks are written from one job
-(`df.persist()` or `foreachBatch` fan-out) so the source is read
-once. No Python, no second scan, no shuffle at all.
+(each rule a boolean Column), and the violation list is an array
+built scan-side. The clean sink keeps the tagged rows with an empty
+`violations` array, the quarantine sink the rest — at 100 TB both
+are written from one job (`df.persist()` or `foreachBatch` fan-out)
+so the source is read once. No Python, no second scan, no shuffle at
+all.
 """
 
 from __future__ import annotations
@@ -34,17 +35,6 @@ def tag_violations(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
         F.array_compact(F.array(*checks)) if checks else
         F.array().cast("array<string>"),
     )
-
-
-def split_quarantine(
-    df: DataFrame, rules: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): clean rows drop the marker column;
-    quarantined rows keep the violation names for triage."""
-    tagged = tag_violations(df, rules)
-    clean = tagged.filter(F.size("violations") == 0).drop("violations")
-    quarantined = tagged.filter(F.size("violations") > 0)
-    return clean, quarantined
 
 
 #: ingest rules for the events stream (the reference's validation

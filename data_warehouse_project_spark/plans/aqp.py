@@ -64,9 +64,9 @@ _AQP_WEIGHT = 16 // len(_AQP_NIBBLES)
 _AQP_REL_ERR_MAX = 0.20
 
 
-def _sampled(orders: DataFrame) -> DataFrame:
+def aqp_sample_state(orders: DataFrame) -> DataFrame:
     """The deterministic 1/8 Bernoulli sample of orders, with exact
-    integer cents attached."""
+    integer cents attached; also the sample maintainer's state."""
     nib = F.substring(
         F.sha2(F.concat(F.lit(_AQP_SALT),
                         F.col("o_orderkey").cast("string")), 256),
@@ -86,7 +86,7 @@ def orders_aqp_monthly_revenue(spark: SparkSession,
     cheaper than the exact rollup; the floor query quantifies what
     that costs in accuracy."""
     cat = Catalog(spark, sf_dir)
-    return estimates_from_sample(_sampled(cat.orders))
+    return estimates_from_sample(aqp_sample_state(cat.orders))
 
 
 _SAMPLED_SQL = f"""
@@ -128,7 +128,7 @@ def aqp_error_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)
                       + F.lit(0.5)).cast("long")).cast("long")
         .alias("cents_exact"))
-    est = _sampled(cat.orders).agg(
+    est = aqp_sample_state(cat.orders).agg(
         (F.count("*") * F.lit(_AQP_WEIGHT)).cast("long")
         .alias("n_est"),
         (F.sum("cents") * F.lit(_AQP_WEIGHT)).cast("long")
@@ -200,33 +200,10 @@ register("aqp_error_floor", aqp_error_floor, AQP_ERROR_FLOOR_SQL)
 # re-hashing the corpus.
 
 
-def make_aqp_sample_fns():
-    """(init_fn, merge_fn) for the shared fold template: state rows
-    ARE the sampled order rows (key, date, exact cents)."""
-    def init(batch_orders: DataFrame) -> DataFrame:
-        return _sampled(batch_orders)
-
-    def merge(prev: DataFrame, batch_orders: DataFrame) -> DataFrame:
-        return prev.unionByName(_sampled(batch_orders))
-
-    return init, merge
-
-
-def aqp_sample_fold(batch_df: DataFrame, batch_id: int,
-                    state_path: str) -> bool:
-    """Idempotent sample fold (batch-id replay guard, staged swap)."""
-    from ..streaming.state_fold import fold_batch
-    init, merge = make_aqp_sample_fns()
-    return fold_batch(batch_df, batch_id, state_path, init, merge)
-
-
-def run_aqp_sample_maintainer(orders_stream: DataFrame, state_path: str,
-                              checkpoint: str):
-    """foreachBatch sample maintainer (restart-safe, replay-safe)."""
-    from ..streaming.state_fold import run_maintainer
-    init, merge = make_aqp_sample_fns()
-    return run_maintainer(orders_stream, state_path, checkpoint,
-                          init, merge)
+def merge_aqp_sample_state(prev: DataFrame,
+                           batch_orders: DataFrame) -> DataFrame:
+    """Fold a batch into the sample state: append the batch's sample."""
+    return prev.unionByName(aqp_sample_state(batch_orders))
 
 
 def estimates_from_sample(sampled: DataFrame) -> DataFrame:
@@ -256,8 +233,8 @@ def orders_aqp_sample_incremental(spark: SparkSession,
     orders = cat.orders
     first = orders.filter(F.col("o_orderkey") % 2 == 0)
     second = orders.filter(F.col("o_orderkey") % 2 == 1)
-    init, merge = make_aqp_sample_fns()
-    return estimates_from_sample(merge(init(first), second))
+    return estimates_from_sample(
+        merge_aqp_sample_state(aqp_sample_state(first), second))
 
 
 register("orders_aqp_sample_incremental", orders_aqp_sample_incremental,

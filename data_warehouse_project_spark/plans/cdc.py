@@ -187,8 +187,8 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each edge reduces the fact to a key-frequency frame in one
     map-side-combined groupBy; every statistic — including the
     deterministic top key (min key among the max-frequency ties) —
-    derives from that reduced frame. The one-row stats attach back by
-    broadcast, so nothing rescans the fact."""
+    derives from that reduced frame. The one-row stats join back to it,
+    so nothing rescans the fact."""
     cat = Catalog(spark, sf_dir)
     rows = []
     for label, table, key in _SKEW_EDGES:
@@ -202,12 +202,12 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("freq").cast("long").alias("n_rows"),
             F.max("freq").cast("long").alias("max_freq"))
         top = (
-            g.join(F.broadcast(stats.select("max_freq")),
+            g.join(stats.select("max_freq"),
                    F.col("freq") == F.col("max_freq"))
             .agg(F.min("k").cast("long").alias("top_key"))
         )
         rows.append(
-            stats.join(F.broadcast(top))  # 1-row × 1-row
+            stats.join(top)  # 1-row × 1-row
             .select(
                 F.lit(label).alias("edge"), "n_rows", "n_keys",
                 "max_freq", "top_key",

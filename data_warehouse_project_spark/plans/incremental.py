@@ -74,40 +74,6 @@ def state_to_report(state: DataFrame) -> DataFrame:
     )
 
 
-#: sentinel column carried on every state row: the id of the last
-#: micro-batch folded in. foreachBatch is AT-LEAST-ONCE — a crash
-#: after the state swap but before the checkpoint commits the offset
-#: replays the batch, and the additive stats (n_events, sum) are NOT
-#: idempotent under re-merge (HLL union is). Storing the batch id IN
-#: the state table keeps exactly one atomic swap: state and progress
-#: marker can never disagree.
-_BATCH_COL = "last_batch_id"
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the rollup state pair
-    (streaming/state_fold.py). Exposed module-level so the crash
-    window itself stays unit-testable (tests/test_streaming.py
-    replays a batch deliberately)."""
-    from ..streaming.state_fold import fold_batch
-    return fold_batch(batch_df, batch_id, state_path,
-                      hourly_rollup_state, merge_hourly_state)
-
-
-def run_rollup_maintainer(events_stream: DataFrame, state_path: str,
-                          checkpoint: str):
-    """Streaming materialized-view maintenance via the shared
-    foreachBatch template (streaming/state_fold.py): restart-safe
-    (checkpoint replays unprocessed batches), replay-safe (batch-id
-    sentinel), atomic staged-swap state. The dashboard reads
-    state_to_report(state) at any time instead of rescanning
-    events."""
-    from ..streaming.state_fold import run_maintainer
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          hourly_rollup_state, merge_hourly_state)
-
-
 def _two_batch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registry entries' shared arrival simulation: split events
     into two batches by event_id parity, build state from the first,
@@ -193,7 +159,7 @@ def run_anomaly_alert_maintainer(events_stream: DataFrame, state_path: str,
 
     Crash-safety: the alert append is OUTSIDE the state's atomic
     swap, so ordering alone can't make the pair exactly-once.
-    Instead BOTH halves are idempotent — fold_batch_into_state skips
+    Instead BOTH halves are idempotent — fold_batch skips
     replayed batch ids, and the alert anti-join dedups on
     (event_type, hour) — so an at-least-once foreachBatch replay
     can neither double-count state nor double-alert, and a crash
@@ -203,11 +169,14 @@ def run_anomaly_alert_maintainer(events_stream: DataFrame, state_path: str,
     """
     import os as _os
 
+    from ..streaming.state_fold import BATCH_COL, fold_batch
+
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fold_batch_into_state(batch_df, batch_id, state_path)
+        fold_batch(batch_df, batch_id, state_path,
+                   hourly_rollup_state, merge_hourly_state)
         anoms = anomalies_from_rollup_state(
-            spark.read.parquet(state_path).drop(_BATCH_COL))
+            spark.read.parquet(state_path).drop(BATCH_COL))
         if _os.path.exists(alerts_path):
             seen = spark.read.parquet(alerts_path).select(
                 "event_type", "hour")
@@ -318,31 +287,6 @@ def make_enriched_view_fns(customer: DataFrame, nation: DataFrame):
         return prev.unionByName(init(batch_orders))
 
     return init, merge
-
-
-def enriched_view_fold(batch_df: DataFrame, batch_id: int,
-                       state_path: str, customer: DataFrame,
-                       nation: DataFrame) -> bool:
-    """Idempotent enriched-view fold on the shared template
-    (streaming/state_fold.py): batch-id replay guard, atomic staged
-    swap — a replayed fact batch cannot double-append."""
-    from ..streaming.state_fold import fold_batch
-    init, merge = make_enriched_view_fns(customer, nation)
-    return fold_batch(batch_df, batch_id, state_path, init, merge)
-
-
-def run_enriched_view_maintainer(orders_stream: DataFrame,
-                                 state_path: str, checkpoint: str,
-                                 customer: DataFrame,
-                                 nation: DataFrame):
-    """foreachBatch join-view maintainer (shared template;
-    restart-safe, replay-safe, atomic staged-swap state): consumers
-    read the always-current denormalized view instead of re-running
-    the star join."""
-    from ..streaming.state_fold import run_maintainer
-    init, merge = make_enriched_view_fns(customer, nation)
-    return run_maintainer(orders_stream, state_path, checkpoint,
-                          init, merge)
 
 
 def orders_enriched_incremental(spark: SparkSession,

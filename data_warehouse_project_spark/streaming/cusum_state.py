@@ -35,7 +35,6 @@ from ..plans.drift import (ORDERS_REVENUE_CUSUM_SQL, cusum_fold,
 from ..registry import register
 from ..sources.catalog import Catalog
 from ..plans.acf import _acf_sql, acf_fold
-from .state_fold import fold_batch, run_maintainer
 
 
 def _daily(orders_batch: DataFrame) -> DataFrame:
@@ -57,18 +56,6 @@ def merge_cusum_state(prev: DataFrame,
     return (prev.unionByName(_daily(orders_batch))
             .groupBy("day")
             .agg(F.sum("cents").cast("long").alias("cents")))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    return fold_batch(batch_df, batch_id, state_path,
-                      cusum_state, merge_cusum_state)
-
-
-def run_cusum_maintainer(orders_stream: DataFrame, state_path: str,
-                         checkpoint: str):
-    return run_maintainer(orders_stream, state_path, checkpoint,
-                          cusum_state, merge_cusum_state)
 
 
 def cusum_report_from_state(state: DataFrame) -> DataFrame:

@@ -54,8 +54,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import (N_INGEST_BATCHES, fold_batch, ingest_batches,
-                         ntile_batched, replay, run_maintainer)
+from .state_fold import (N_INGEST_BATCHES, ingest_batches, ntile_batched,
+                         replay)
 
 
 def fingerprinted(docs: DataFrame) -> DataFrame:
@@ -85,21 +85,6 @@ def merge_dedup_state(prev: DataFrame, batch: DataFrame) -> DataFrame:
             .groupBy("fingerprint")
             .agg(F.min("first_doc_id").alias("first_doc_id"),
                  F.sum("n_seen").cast("long").alias("n_seen")))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the dedup state pair."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      dedup_state, merge_dedup_state)
-
-
-def run_dedup_ingest_maintainer(docs_stream: DataFrame, state_path: str,
-                                checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe)."""
-    return run_maintainer(docs_stream, state_path, checkpoint,
-                          dedup_state, merge_dedup_state)
 
 
 def docs_dedup_ingest_incremental(spark: SparkSession,

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, replay, run_maintainer, ts_split
+from .state_fold import replay, ts_split
 
 #: max relative error the per-key gate tolerates, percent. Default
 #: lgConfigK=12 gives ~1.6% rsd; 5% ≈ 3 sigma, and per-(type, day)
@@ -79,22 +79,6 @@ def state_to_estimates(state: DataFrame) -> DataFrame:
                     F.hll_sketch_estimate("sk").cast("long")
                     .alias("approx_users"))
             .orderBy("event_type", "day"))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the HLL state pair
-    (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      distinct_state, merge_distinct_state)
-
-
-def run_distinct_users_maintainer(events_stream: DataFrame,
-                                  state_path: str, checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          distinct_state, merge_distinct_state)
 
 
 def events_distinct_users_incremental(spark: SparkSession,

@@ -40,7 +40,6 @@ from ..functions.compat import sql_fround
 from ..plans.drift import _ALARM_TVD, _BINS, _TQ, drift_from_cells
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, run_maintainer
 
 #: deploy-time histogram spec: value-hundredths, 16 bins of width 2048
 #: covering [0, 32768); excursions clamp into the edge bins
@@ -75,18 +74,6 @@ def merge_drift_state(prev: DataFrame, batch_events: DataFrame) -> DataFrame:
         .groupBy("day_idx", "day", "bin")
         .agg(F.sum("n").cast("long").alias("n"))
     )
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    return fold_batch(batch_df, batch_id, state_path,
-                      drift_state, merge_drift_state)
-
-
-def run_drift_maintainer(events_stream: DataFrame, state_path: str,
-                         checkpoint: str):
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          drift_state, merge_drift_state)
 
 
 def drift_report_from_state(state: DataFrame) -> DataFrame:

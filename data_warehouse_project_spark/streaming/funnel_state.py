@@ -33,7 +33,7 @@ from ..plans.analytics import (FUNNEL_SQL, funnel_per_user,
                                funnel_report_from_per_user)
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, replay, run_maintainer, ts_split
+from .state_fold import replay, ts_split
 
 
 def _events_cols(events: DataFrame) -> DataFrame:
@@ -74,22 +74,6 @@ def state_to_report(state: DataFrame) -> DataFrame:
     """Render the state as the batch twin's 3-row conversion report."""
     return funnel_report_from_per_user(
         state.select("user_id", "t_view", "t_click", "t_purchase"))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the funnel state pair
-    (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      funnel_state, merge_funnel_state)
-
-
-def run_funnel_maintainer(events_stream: DataFrame, state_path: str,
-                          checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe, atomic staged-swap state table)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          funnel_state, merge_funnel_state)
 
 
 def events_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

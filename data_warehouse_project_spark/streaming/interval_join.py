@@ -59,8 +59,7 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_CLICK_PURCHASE_SQL
-from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
-                         ts_split)
+from .state_fold import LATENESS_S, replay, ts_split
 
 #: join window (seconds): purchase in [click_ts, click_ts + WINDOW]
 WINDOW_S = 3600
@@ -208,27 +207,6 @@ def state_to_matches(state: DataFrame) -> DataFrame:
                     "purchase_ts",
                     fround(F.col("purchase_value"), 6)
                     .alias("purchase_value")))
-
-
-def dropped_late_count(state: DataFrame) -> int:
-    """The watermark row's dropped-event metric (monitoring surface)."""
-    return state.filter(F.col("kind") == "w").collect()[0]["dropped"]
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the interval-join
-    state pair (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      interval_join_state, merge_interval_join_state)
-
-
-def run_interval_join_maintainer(events_stream: DataFrame,
-                                 state_path: str, checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe, atomic staged-swap state)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          interval_join_state, merge_interval_join_state)
 
 
 def events_click_purchase_incremental(spark: SparkSession,

@@ -60,8 +60,7 @@ from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import (EVENTS_SESSIONIZE_SQL, SESSION_GAP_S,
                            session_islands)
-from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
-                         ts_split)
+from .state_fold import LATENESS_S, replay, ts_split
 
 #: dsum final-shift constants (compat.dsum, scale=2)
 _DOWN = 10 ** (GUARD - 2)
@@ -234,24 +233,6 @@ def state_to_view(state: DataFrame) -> DataFrame:
         "n_events",
         (F.floor((F.col("value_q") + F.lit(_HALF)) / F.lit(float(_DOWN)))
          .cast("double") / F.lit(100.0)).alias("session_value"))
-
-
-def dropped_late_count(state: DataFrame) -> int:
-    return state.filter(F.col("kind") == "w").collect()[0]["dropped"]
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      late_sessions_state, merge_late_sessions_state)
-
-
-def run_late_sessions_maintainer(events_stream: DataFrame,
-                                 state_path: str, checkpoint: str):
-    """foreachBatch maintainer (shared template)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          late_sessions_state, merge_late_sessions_state)
 
 
 def events_sessions_late_tolerant(spark: SparkSession,

@@ -55,8 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_TRANSITIONS_SQL, TRANSITION_TOP_K
-from .state_fold import (LATENESS_S, fold_batch, replay, run_maintainer,
-                         ts_split)
+from .state_fold import LATENESS_S, replay, ts_split
 
 
 def _events_cols(events: DataFrame) -> DataFrame:
@@ -208,29 +207,6 @@ def state_to_report(state: DataFrame) -> DataFrame:
         .orderBy(F.col("n").desc(), "prev_type", "next_type")
         .limit(TRANSITION_TOP_K)
     )
-
-
-def dropped_late_count(state: DataFrame) -> int:
-    """The watermark row's dropped-event metric (monitoring surface)."""
-    return state.filter(F.col("kind") == "w").collect()[0]["dropped"]
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the late-tolerant
-    state pair (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      late_transitions_state,
-                      merge_late_transitions_state)
-
-
-def run_late_transitions_maintainer(events_stream: DataFrame,
-                                    state_path: str, checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe, atomic staged-swap state)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          late_transitions_state,
-                          merge_late_transitions_state)
 
 
 def events_transitions_late_tolerant(spark: SparkSession,

@@ -52,8 +52,7 @@ from ..llm.dedup import (MAX_BUCKET, _verify_jaccard, band_buckets,
                          minhash_signatures_from)
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import (fold_batch, ingest_batches, ntile_batched,
-                         run_maintainer)
+from .state_fold import ingest_batches, ntile_batched
 
 
 def banded(docs: DataFrame) -> DataFrame:
@@ -66,21 +65,6 @@ def merge_band_state(prev: DataFrame, batch: DataFrame) -> DataFrame:
     all history after any batch split."""
     return (prev.select("doc_id", "band", "bucket")
             .unionByName(banded(batch)))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the band state."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      banded, merge_band_state)
-
-
-def run_neardup_ingest_maintainer(docs_stream: DataFrame, state_path: str,
-                                  checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe)."""
-    return run_maintainer(docs_stream, state_path, checkpoint,
-                          banded, merge_band_state)
 
 
 def arrival_candidates(state: DataFrame | None,

@@ -58,7 +58,7 @@ from ..functions.compat import GUARD, _scaled
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_SESSIONIZE_SQL, session_islands
-from .state_fold import fold_batch, replay, run_maintainer, ts_split
+from .state_fold import replay, ts_split
 
 #: dsum(scale=2, guard=GUARD) final-shift constants (compat.dsum)
 _DOWN = 10 ** (GUARD - 2)
@@ -171,22 +171,6 @@ def state_to_view(state: DataFrame) -> DataFrame:
         "n_events",
         (F.floor((F.col("value_q") + F.lit(_HALF)) / F.lit(float(_DOWN)))
          .cast("double") / F.lit(100.0)).alias("session_value"))
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the session state pair
-    (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      sessions_state, merge_sessions_state)
-
-
-def run_sessions_maintainer(events_stream: DataFrame, state_path: str,
-                            checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe, atomic staged-swap state)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          sessions_state, merge_sessions_state)
 
 
 def events_sessions_incremental(spark: SparkSession,

@@ -1,7 +1,7 @@
 """Shared incremental-maintainer machinery — ONE implementation of
-the idempotent fold + foreachBatch runner template that the four
-stateful maintainers (hourly rollup, transition miner, windowed
-funnel, HLL distinct-users) previously each carried verbatim.
+the idempotent fold + foreachBatch runner template. A maintainer is
+its module's (init, merge) pair, passed to ``fold_batch``,
+``run_maintainer`` or ``replay``.
 
 The template (identical semantics in every consumer):
 - state lives in one parquet table, replaced by writes.overwrite_table
@@ -13,10 +13,6 @@ The template (identical semantics in every consumer):
   keeps state and progress marker from ever disagreeing);
 - ``init_fn(batch)`` builds state from the first batch ever seen,
   ``merge_fn(prev, batch)`` folds a later batch into prior state.
-
-Each maintainer module keeps its public ``fold_batch_into_state`` /
-``run_*_maintainer`` names (tests and callers unchanged) as thin
-bindings of this helper to its own (init, merge) pair.
 
 The registered ``*_incremental`` queries prove the same pairs against
 full-recompute oracles without a stream: ``ts_split`` /
@@ -171,6 +167,11 @@ def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):
     admitted = (ev if horizon_old is None
                 else ev.filter(F.col("ts") > F.lit(horizon_old)))
     return wm_old, dropped, wm_new, horizon_new, admitted, n_late
+
+
+def dropped_late_count(state: DataFrame) -> int:
+    """The watermark row's dropped-event metric (monitoring surface)."""
+    return state.filter(F.col("kind") == "w").collect()[0]["dropped"]
 
 
 def ts_split(ev: DataFrame, held_back_s: int | None = None

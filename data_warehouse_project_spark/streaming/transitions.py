@@ -43,7 +43,7 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import TRANSITION_TOP_K, EVENTS_TRANSITIONS_SQL
-from .state_fold import fold_batch, replay, run_maintainer, ts_split
+from .state_fold import replay, ts_split
 
 #: unified state schema (kind 'c' = count row, 'l' = last-event row)
 _STATE_COLS = ["kind", "prev_type", "next_type", "n",
@@ -161,22 +161,6 @@ def state_to_report(state: DataFrame) -> DataFrame:
         .orderBy(F.col("n").desc(), "prev_type", "next_type")
         .limit(TRANSITION_TOP_K)
     )
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Shared idempotent-fold template bound to the transition state
-    pair (streaming/state_fold.py)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      transitions_state, merge_transitions_state)
-
-
-def run_transitions_maintainer(events_stream: DataFrame, state_path: str,
-                               checkpoint: str):
-    """foreachBatch maintainer (shared template; restart-safe,
-    replay-safe, atomic staged-swap state)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          transitions_state, merge_transitions_state)
 
 
 def events_transitions_incremental(spark: SparkSession,

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import fold_batch, replay, run_maintainer
+from .state_fold import replay
 
 #: retain windows with window_hour > hwm_hour - TTL_HOURS (the 72
 #: most recent hourly windows relative to the event-time watermark)
@@ -127,23 +127,6 @@ def state_to_report(state: DataFrame) -> DataFrame:
         (F.col("hwm_hour") - F.col("window_hour")).cast("long")
         .alias("hours_behind_hwm"),
     )
-
-
-def fold_batch_into_state(batch_df: DataFrame, batch_id: int,
-                          state_path: str) -> bool:
-    """Idempotent fold bound to the TTL'd window pair (shared
-    template: streaming/state_fold.py — batch-id replay guard,
-    atomic staged swap)."""
-    return fold_batch(batch_df, batch_id, state_path,
-                      window_state, merge_window_state)
-
-
-def run_ttl_window_maintainer(events_stream: DataFrame, state_path: str,
-                              checkpoint: str):
-    """foreachBatch maintainer: restart-safe, replay-safe, bounded
-    state (see module docstring)."""
-    return run_maintainer(events_stream, state_path, checkpoint,
-                          window_state, merge_window_state)
 
 
 def _replay_by_event_id(ev: DataFrame) -> DataFrame:

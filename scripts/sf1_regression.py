@@ -27,8 +27,10 @@ disjoint so the distribution its plans depend on is kept
 Derived tables go under .localdata/sf1.0 (gitignored); the other
 tables are symlinks to sf0.1.
 
-Bytes, not wall: shuffle volume is deterministic given data + plan,
-so this is safe to run on a loaded host.
+Bytes, not wall: shuffle volume is deterministic given data, plan and
+partition count, so this is safe to run on a loaded host. The session
+runs at shuffle_audit.AUDIT_CORES, as the two-scale audit does, so the
+readings do not depend on the host's core count.
 
 NOT wired into preflight/pytest: the sweep costs ~10-15 min (the
 sf1.0 corpora are 10x sf0.1; triangle alone runs ~40 s). Run it
@@ -58,13 +60,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
+from shuffle_audit import (  # noqa: E402
+    AUDIT_CORES, GROWTH_HEADROOM, HEADROOM, gate_violations)
+
 BOUNDS_PATH = os.path.join(REPO, "tests", "sf1_bounds.json")
 SRC = "/root/testdata/sf0.1"
 DST = os.path.join(REPO, ".localdata", "sf1.0")
 COPIES = 10
-
-HEADROOM = 2.5
-GROWTH_HEADROOM = 1.6
 
 #: queries whose sf1.0 spill is an adjudicated design tradeoff, not a
 #: defect — gated at recorded * HEADROOM instead of zero. Currently
@@ -270,7 +272,6 @@ def measure(spark, families) -> dict[str, dict[str, dict[str, int]]]:
 
 def gate(measured, rec) -> list[dict]:
     """shuffle_audit's three-kind gate, plus the spill allowlist."""
-    from shuffle_audit import gate_violations
     violations = gate_violations(measured, rec)
     spill_bounds = rec.get("spill", {})
     kept = []
@@ -298,7 +299,7 @@ def main() -> int:
         return 2
 
     from data_warehouse_project_spark.session import get_spark
-    spark = get_spark("sf1-regression")
+    spark = get_spark("sf1-regression", cpus=AUDIT_CORES)
     ensure_built(spark, families)
     measured = measure(spark, families)
     spark.stop()

@@ -13,6 +13,8 @@ import hashlib
 from data_warehouse_project_spark.plans.aqp import (
     _AQP_NIBBLES, _AQP_SALT, _AQP_WEIGHT, aqp_error_floor,
     orders_aqp_monthly_revenue)
+from data_warehouse_project_spark.streaming.state_fold import (
+    BATCH_COL, fold_batch, run_maintainer)
 
 _O_SCHEMA = ("o_orderkey long, o_custkey long, o_orderstatus string, "
              "o_totalprice double, o_orderdate timestamp_ntz, "
@@ -78,17 +80,18 @@ def test_aqp_sample_fold_replay_restart_and_merge_lemma(spark, sf_dir,
     from data_warehouse_project_spark.plans import aqp as AQP
     from data_warehouse_project_spark.sources.catalog import Catalog
 
+    init, merge = AQP.aqp_sample_state, AQP.merge_aqp_sample_state
     cat = Catalog(spark, sf_dir)
     orders = cat.orders.limit(400).cache()
     b1 = orders.filter(F.col("o_orderkey") % 2 == 0)
     b2 = orders.filter(F.col("o_orderkey") % 2 == 1)
 
     state = str(tmp_path / "aqp_state")
-    assert AQP.aqp_sample_fold(b1, 0, state) is True
-    assert AQP.aqp_sample_fold(b2, 1, state) is True
-    assert AQP.aqp_sample_fold(b2, 1, state) is False     # replay
-    folded = spark.read.parquet(state).drop("last_batch_id")
-    single = AQP._sampled(orders)
+    assert fold_batch(b1, 0, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is False     # replay
+    folded = spark.read.parquet(state).drop(BATCH_COL)
+    single = AQP.aqp_sample_state(orders)
     assert folded.exceptAll(single).count() == 0
     assert single.exceptAll(folded).count() == 0
 
@@ -106,12 +109,12 @@ def test_aqp_sample_fold_replay_restart_and_merge_lemma(spark, sf_dir,
 
     def run():
         stream = spark.readStream.schema(sch).parquet(landing)
-        AQP.run_aqp_sample_maintainer(stream, st2, ck)
+        run_maintainer(stream, st2, ck, init, merge)
 
     run()
     b2.coalesce(1).write.mode("append").parquet(landing)
     run()
-    got = spark.read.parquet(st2).drop("last_batch_id")
+    got = spark.read.parquet(st2).drop(BATCH_COL)
     assert got.exceptAll(single).count() == 0
     assert single.exceptAll(got).count() == 0
     orders.unpersist()

@@ -14,6 +14,8 @@ from pyspark.sql import Row, functions as F
 from data_warehouse_project_spark.plans.drift import (
     _ALARM_TVD, _BINS, cohort_drift, events_type_mix_weekly_drift,
     rolling_drift)
+from data_warehouse_project_spark.streaming.state_fold import (
+    fold_batch, run_maintainer)
 
 
 def _cohort_frame(spark, early_cents, late_cents):
@@ -148,13 +150,14 @@ def test_drift_fold_replay_is_idempotent(spark, tmp_path):
     cell counts must not double."""
     from data_warehouse_project_spark.streaming import drift_state as D
 
+    init, merge = D.drift_state, D.merge_drift_state
     state = str(tmp_path / "state")
     b0 = _events(spark, [(1, 1, 5.0), (2, 1, 9.0)])
     b1 = _events(spark, [(3, 2, 100.0)])
-    assert D.fold_batch_into_state(b0, 0, state) is True
-    assert D.fold_batch_into_state(b1, 1, state) is True
-    assert D.fold_batch_into_state(b1, 1, state) is False
-    assert D.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
     cells = {(r["day"].day, r["bin"]): r["n"]
              for r in spark.read.parquet(state).collect()}
     # 5.0 and 9.0 -> vq 500/900 -> bin 0; 100.0 -> vq 10000 -> bin 4
@@ -168,6 +171,7 @@ def test_drift_maintainer_restart_matches_full_recompute(spark, tmp_path):
     output over the same data."""
     from data_warehouse_project_spark.streaming import drift_state as D
 
+    init, merge = D.drift_state, D.merge_drift_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -178,7 +182,7 @@ def test_drift_maintainer_restart_matches_full_recompute(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(_EV_SCHEMA).parquet(landing)
-        D.run_drift_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(1, 1, 5.0), (2, 1, 9.0), (3, 2, 5.5)])
     run()
@@ -304,13 +308,14 @@ def _orders(spark, rows):
 def test_cusum_fold_replay_is_idempotent(spark, tmp_path):
     from data_warehouse_project_spark.streaming import cusum_state as C
 
+    init, merge = C.cusum_state, C.merge_cusum_state
     state = str(tmp_path / "state")
     b0 = _orders(spark, [(1, "1995-01-01", 10.0), (2, "1995-01-01", 5.0)])
     b1 = _orders(spark, [(3, "1995-01-02", 7.0)])
-    assert C.fold_batch_into_state(b0, 0, state) is True
-    assert C.fold_batch_into_state(b1, 1, state) is True
-    assert C.fold_batch_into_state(b1, 1, state) is False
-    assert C.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
     daily = {str(r["day"])[:10]: r["cents"]
              for r in spark.read.parquet(state).collect()}
     assert daily == {"1995-01-01": 1500, "1995-01-02": 700}
@@ -344,6 +349,7 @@ def test_cusum_merge_absorbs_late_days(spark):
 def test_cusum_maintainer_restart_matches_full_recompute(spark, tmp_path):
     from data_warehouse_project_spark.streaming import cusum_state as C
 
+    init, merge = C.cusum_state, C.merge_cusum_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -354,7 +360,7 @@ def test_cusum_maintainer_restart_matches_full_recompute(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(_ORD_SCHEMA).parquet(landing)
-        C.run_cusum_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(k, f"1995-0{1 + k % 3}-{1 + k % 9:02d}", 50.0 + k)
           for k in range(30)])

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from data_warehouse_project_spark.operators.asof import asof_join
 from data_warehouse_project_spark.operators.skew import salted_agg, salted_join
 from data_warehouse_project_spark.operators.windows import top_k_per_group
+from data_warehouse_project_spark.streaming.state_fold import (
+    dropped_late_count)
 
 
 def test_salted_agg_equals_plain_agg(spark, sf_dir):
@@ -572,7 +574,7 @@ def test_late_transitions_any_split_matches_model(spark, events, mask):
         for a, b in zip(seq, seq[1:]):
             model[(a, b)] = model.get((a, b), 0) + 1
     assert got == model, (events, mask)
-    assert L.dropped_late_count(state) == 0
+    assert dropped_late_count(state) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -639,7 +641,7 @@ def test_late_sessions_any_split_matches_model(spark, events, mask):
     expected = {(u, s): (t(a), t(b), n, v)
                 for (u, s), (a, b, n, v) in model.items()}
     assert got == expected, (events, mask)
-    assert L.dropped_late_count(state) == 0
+    assert dropped_late_count(state) == 0
 
 
 def test_bloom_probe_planted_membership(spark):
@@ -757,7 +759,7 @@ def test_interval_join_any_split_matches_model(spark, events, mask):
             if 0 <= pm - cm <= 60:
                 model.add((cu, ci, pi))
     assert got == model, (events, mask)
-    assert IJ.dropped_late_count(state) == 0
+    assert dropped_late_count(state) == 0
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_project_spark.streaming import batch_parity, jobs
+from data_warehouse_project_spark.streaming.state_fold import (
+    BATCH_COL, dropped_late_count, fold_batch, run_maintainer)
 
 
 @pytest.fixture(scope="module")
@@ -334,9 +336,7 @@ def test_dedup_within_watermark_state_eviction(spark, tmp_path):
                   .schema("event_id long, ts timestamp, user_id long, "
                           "event_type string, value double")
                   .parquet(landing))
-        dedup = (stream.withWatermark("ts", "1 hour")
-                 .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-                 .select("event_id"))
+        dedup = jobs.deduplicated_within_watermark(stream).select("event_id")
         jobs.run_to_parquet(dedup, out, ck)
         return {r["event_id"] for r in spark.read.parquet(out).collect()}
 
@@ -441,6 +441,8 @@ def test_streaming_rollup_maintainer_matches_batch(spark, tmp_path):
 
     from data_warehouse_project_spark.plans import incremental
 
+    init, merge = (incremental.hourly_rollup_state,
+                   incremental.merge_hourly_state)
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -455,7 +457,7 @@ def test_streaming_rollup_maintainer_matches_batch(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        incremental.run_rollup_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(10, 0, "click", 1.0, 1), (10, 30, "click", 2.0, 2),
           (11, 0, "view", 4.0, 1)])
@@ -479,12 +481,14 @@ def test_streaming_rollup_maintainer_matches_batch(spark, tmp_path):
 def test_rollup_maintainer_replay_is_idempotent(spark, tmp_path):
     """The at-least-once crash window: a batch whose state swap
     committed but whose checkpoint offset did NOT is replayed on
-    restart — fold_batch_into_state must skip it, not double-count
+    restart — fold_batch must skip it, not double-count
     the additive stats (ADVICE r2, incremental.py)."""
     import datetime as dt
 
     from data_warehouse_project_spark.plans import incremental
 
+    init, merge = (incremental.hourly_rollup_state,
+                   incremental.merge_hourly_state)
     state = str(tmp_path / "state")
     schema = ("ts timestamp, event_type string, value double, "
               "user_id long")
@@ -497,12 +501,12 @@ def test_rollup_maintainer_replay_is_idempotent(spark, tmp_path):
     b0 = batch([(10, 0, "click", 1.0, 1), (11, 0, "view", 4.0, 2)])
     b1 = batch([(10, 30, "click", 2.0, 3)])
 
-    assert incremental.fold_batch_into_state(b0, 0, state) is True
-    assert incremental.fold_batch_into_state(b1, 1, state) is True
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
     # crash after swap, before checkpoint commit → batch 1 replays
-    assert incremental.fold_batch_into_state(b1, 1, state) is False
+    assert fold_batch(b1, 1, state, init, merge) is False
     # an old batch id never reapplies either
-    assert incremental.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
 
     got = {(r["hour"].hour, r["event_type"]): (r["n_events"], r["sum_value"])
            for r in incremental.state_to_report(
@@ -521,6 +525,8 @@ def test_transitions_maintainer_restart_matches_batch(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import transitions
 
+    init, merge = (transitions.transitions_state,
+                   transitions.merge_transitions_state)
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -534,7 +540,7 @@ def test_transitions_maintainer_restart_matches_batch(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        transitions.run_transitions_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     # user 1: click→view within chunk 1; user 2: single click
     feed([(1, 10, 9, 0, "click"), (1, 11, 9, 30, "view"),
@@ -572,6 +578,8 @@ def test_transitions_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import transitions
 
+    init, merge = (transitions.transitions_state,
+                   transitions.merge_transitions_state)
     state = str(tmp_path / "state")
     schema = "user_id long, event_id long, ts timestamp, event_type string"
 
@@ -583,10 +591,10 @@ def test_transitions_fold_replay_is_idempotent(spark, tmp_path):
     b0 = batch([(1, 10, 9, 0, "click"), (1, 11, 9, 30, "view")])
     b1 = batch([(1, 20, 10, 0, "purchase")])
 
-    assert transitions.fold_batch_into_state(b0, 0, state) is True
-    assert transitions.fold_batch_into_state(b1, 1, state) is True
-    assert transitions.fold_batch_into_state(b1, 1, state) is False
-    assert transitions.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
 
     got = {(r["prev_type"], r["next_type"]): r["n"]
            for r in transitions.state_to_report(
@@ -671,7 +679,8 @@ def test_anomaly_alerter_alert_once_across_restarts(spark, tmp_path):
 
     # direct replay of an already-folded batch must not re-alert
     batch = spark.read.parquet(landing)
-    applied = incremental.fold_batch_into_state(batch, 0, state)
+    applied = fold_batch(batch, 0, state, incremental.hourly_rollup_state,
+                         incremental.merge_hourly_state)
     assert applied is False
 
 
@@ -686,6 +695,7 @@ def test_funnel_maintainer_restart_matches_batch(spark, tmp_path):
     from data_warehouse_project_spark.plans.analytics import funnel_report
     from data_warehouse_project_spark.streaming import funnel_state
 
+    init, merge = funnel_state.funnel_state, funnel_state.merge_funnel_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -699,7 +709,7 @@ def test_funnel_maintainer_restart_matches_batch(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        funnel_state.run_funnel_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     # chunk 1: user 1 view+click; user 2 view only; user 3 click only
     # (pre-view — must never count)
@@ -734,6 +744,7 @@ def test_funnel_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import funnel_state
 
+    init, merge = funnel_state.funnel_state, funnel_state.merge_funnel_state
     state = str(tmp_path / "state")
     schema = "user_id long, event_id long, ts timestamp, event_type string"
 
@@ -745,10 +756,10 @@ def test_funnel_fold_replay_is_idempotent(spark, tmp_path):
     b0 = batch([(1, 10, 9, 0, "view")])
     b1 = batch([(1, 20, 10, 0, "click")])
 
-    assert funnel_state.fold_batch_into_state(b0, 0, state) is True
-    assert funnel_state.fold_batch_into_state(b1, 1, state) is True
-    assert funnel_state.fold_batch_into_state(b1, 1, state) is False
-    assert funnel_state.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
 
     got = {r["event_type"]: r["n_users"] for r in
            funnel_state.state_to_report(
@@ -766,6 +777,8 @@ def test_distinct_users_maintainer_restart_matches_single_pass(
 
     from data_warehouse_project_spark.streaming import distinct_users
 
+    init, merge = (distinct_users.distinct_state,
+                   distinct_users.merge_distinct_state)
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -779,7 +792,7 @@ def test_distinct_users_maintainer_restart_matches_single_pass(
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        distinct_users.run_distinct_users_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     # day 1: users 1,2 click (user 1 twice); user 1 views
     feed([(1, 10, 1, 9, "click"), (1, 11, 1, 10, "click"),
@@ -793,7 +806,7 @@ def test_distinct_users_maintainer_restart_matches_single_pass(
 
     est = {(r["event_type"], r["day"].day): r["approx_users"]
            for r in distinct_users.state_to_estimates(
-               spark.read.parquet(state).drop("last_batch_id")).collect()}
+               spark.read.parquet(state).drop(BATCH_COL)).collect()}
     assert est == {("click", 1): 3, ("view", 1): 1, ("click", 2): 1}
     # single-pass parity on the same landing data
     full = {(r["event_type"], r["day"].day): r["approx_users"]
@@ -805,7 +818,7 @@ def test_distinct_users_maintainer_restart_matches_single_pass(
     run()
     again = {(r["event_type"], r["day"].day): r["approx_users"]
              for r in distinct_users.state_to_estimates(
-                 spark.read.parquet(state).drop("last_batch_id")).collect()}
+                 spark.read.parquet(state).drop(BATCH_COL)).collect()}
     assert again == est
 
 
@@ -818,6 +831,8 @@ def test_distinct_users_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import distinct_users
 
+    init, merge = (distinct_users.distinct_state,
+                   distinct_users.merge_distinct_state)
     state = str(tmp_path / "state")
     schema = "user_id long, event_id long, ts timestamp, event_type string"
 
@@ -829,14 +844,14 @@ def test_distinct_users_fold_replay_is_idempotent(spark, tmp_path):
     b0 = batch([(1, 10, 9, "click"), (2, 11, 10, "click")])
     b1 = batch([(3, 20, 11, "click")])
 
-    assert distinct_users.fold_batch_into_state(b0, 0, state) is True
-    assert distinct_users.fold_batch_into_state(b1, 1, state) is True
-    assert distinct_users.fold_batch_into_state(b1, 1, state) is False
-    assert distinct_users.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
 
     est = {(r["event_type"], r["day"].day): r["approx_users"]
            for r in distinct_users.state_to_estimates(
-               spark.read.parquet(state).drop("last_batch_id")).collect()}
+               spark.read.parquet(state).drop(BATCH_COL)).collect()}
     assert est == {("click", 1): 3}
 
 
@@ -862,6 +877,7 @@ def test_ttl_window_maintainer_restart_evicts_and_matches_batch(
 
     from data_warehouse_project_spark.streaming import ttl_window
 
+    init, merge = ttl_window.window_state, ttl_window.merge_window_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -877,7 +893,7 @@ def test_ttl_window_maintainer_restart_evicts_and_matches_batch(
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        ttl_window.run_ttl_window_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     # chunk 1: two early windows (hour 0 and hour 1)
     feed([(1, 0, 10, "click", 1.0), (2, 0, 11, "click", 2.5),
@@ -929,6 +945,7 @@ def test_ttl_window_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import ttl_window
 
+    init, merge = ttl_window.window_state, ttl_window.merge_window_state
     state = str(tmp_path / "state")
     schema = ("event_id long, ts timestamp, user_id long, "
               "event_type string, value double")
@@ -937,11 +954,11 @@ def test_ttl_window_fold_replay_is_idempotent(spark, tmp_path):
          for e, h, u, et, v in rows], schema)
     b0 = mk([(1, 0, 10, "click", 1.0)])
     b1 = mk([(2, 1, 11, "view", 2.0)])
-    assert ttl_window.fold_batch_into_state(b0, 0, state) is True
-    assert ttl_window.fold_batch_into_state(b1, 1, state) is True
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
     # replayed and out-of-order batch ids are both skipped
-    assert ttl_window.fold_batch_into_state(b1, 1, state) is False
-    assert ttl_window.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
     rep = {(r["window_hour"], r["event_type"]): r["n_events"]
            for r in ttl_window.state_to_report(
                spark.read.parquet(state)).collect()}
@@ -985,6 +1002,7 @@ def test_cms_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     batch ids must be skipped."""
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.cms_state, sketches.merge_cms_state
     state = str(tmp_path / "cms_state")
     rows_a = [(i, "alpha beta " * 4) for i in range(5)]
     rows_b = [(i + 5, "beta gamma " * 3) for i in range(5)]
@@ -992,13 +1010,13 @@ def test_cms_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     a = spark.createDataFrame(rows_a, schema)
     b = spark.createDataFrame(rows_b, schema)
 
-    assert sketches.fold_batch_into_state(a, 0, state) is True
-    assert sketches.fold_batch_into_state(b, 1, state) is True
-    assert sketches.fold_batch_into_state(b, 1, state) is False  # replay
+    assert fold_batch(a, 0, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is False  # replay
 
     folded = {(r["seed"], r["bucket"]): r["n"]
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()}
+              .drop(BATCH_COL).collect()}
     single = {(r["seed"], r["bucket"]): r["n"]
               for r in sketches.cms_table(
                   sketches._token_counts(a.unionByName(b))).collect()}
@@ -1008,6 +1026,7 @@ def test_cms_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
 def test_cms_streaming_maintainer_restart(spark, tmp_path):
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.cms_state, sketches.merge_cms_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1019,7 +1038,7 @@ def test_cms_streaming_maintainer_restart(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        sketches.run_cms_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(1, "alpha beta alpha")])
     run()
@@ -1027,7 +1046,7 @@ def test_cms_streaming_maintainer_restart(spark, tmp_path):
     run()  # restart of the same checkpoint
     folded = {(r["seed"], r["bucket"]): r["n"]
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()}
+              .drop(BATCH_COL).collect()}
     single = {(r["seed"], r["bucket"]): r["n"]
               for r in sketches.cms_table(sketches._token_counts(
                   spark.read.parquet(landing))).collect()}
@@ -1091,6 +1110,7 @@ def test_sessions_maintainer_restart_matches_batch(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import sessions as S
 
+    init, merge = S.sessions_state, S.merge_sessions_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1105,7 +1125,7 @@ def test_sessions_maintainer_restart_matches_batch(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        S.run_sessions_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     # chunk 1: user 1 two events 10 min apart (one session); user 2
     # one event; user 3 one event
@@ -1153,6 +1173,7 @@ def test_sessions_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import sessions as S
 
+    init, merge = S.sessions_state, S.merge_sessions_state
     state = str(tmp_path / "state")
     schema = ("user_id long, event_id long, ts timestamp, "
               "event_type string, value double")
@@ -1165,10 +1186,10 @@ def test_sessions_fold_replay_is_idempotent(spark, tmp_path):
     b0 = batch([(1, 10, 9, 0, 1.00), (1, 11, 9, 10, 2.00)])
     b1 = batch([(1, 20, 9, 30, 4.00)])
 
-    assert S.fold_batch_into_state(b0, 0, state) is True
-    assert S.fold_batch_into_state(b1, 1, state) is True
-    assert S.fold_batch_into_state(b1, 1, state) is False
-    assert S.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
 
     got = {(r["user_id"], r["session_seq"]):
            (r["n_events"], r["session_value"])
@@ -1206,7 +1227,7 @@ def test_late_transitions_fix_disorder_strict_miscounts(spark, tmp_path):
     got = {(r["prev_type"], r["next_type"]): r["n"]
            for r in L.state_to_report(late_state).collect()}
     assert got == {("a", "b"): 1, ("b", "c"): 1}
-    assert L.dropped_late_count(late_state) == 0
+    assert dropped_late_count(late_state) == 0
 
     strict = {(r["prev_type"], r["next_type"]): r["n"]
               for r in T.state_to_report(T.merge_transitions_state(
@@ -1235,7 +1256,7 @@ def test_late_transitions_drops_and_counts_beyond_horizon(spark, tmp_path):
     got = {(r["prev_type"], r["next_type"]): r["n"]
            for r in L.state_to_report(state).collect()}
     assert got == {("a", "c"): 1}
-    assert L.dropped_late_count(state) == 1
+    assert dropped_late_count(state) == 1
 
 
 def test_late_transitions_fold_replay_is_idempotent(spark, tmp_path):
@@ -1244,6 +1265,7 @@ def test_late_transitions_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import late_transitions as L
 
+    init, merge = L.late_transitions_state, L.merge_late_transitions_state
     state = str(tmp_path / "state")
     schema = "user_id long, event_id long, ts timestamp, event_type string"
 
@@ -1254,9 +1276,9 @@ def test_late_transitions_fold_replay_is_idempotent(spark, tmp_path):
 
     b0 = batch([(1, 10, 9, 0, "a"), (1, 11, 9, 30, "b")])
     b1 = batch([(1, 20, 10, 0, "c")])
-    assert L.fold_batch_into_state(b0, 0, state) is True
-    assert L.fold_batch_into_state(b1, 1, state) is True
-    assert L.fold_batch_into_state(b1, 1, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
     got = {(r["prev_type"], r["next_type"]): r["n"]
            for r in L.state_to_report(spark.read.parquet(state)).collect()}
     assert got == {("a", "b"): 1, ("b", "c"): 1}
@@ -1270,6 +1292,7 @@ def test_late_transitions_maintainer_restart_with_disorder(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import late_transitions as L
 
+    init, merge = L.late_transitions_state, L.merge_late_transitions_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1282,7 +1305,7 @@ def test_late_transitions_maintainer_restart_with_disorder(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        L.run_late_transitions_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(1, 10, 0, "a"), (1, 11, 10, "c"), (2, 12, 8, "a")])
     run()
@@ -1333,7 +1356,7 @@ def test_late_sessions_fix_disorder_strict_miscounts(spark, tmp_path):
         (1, 1): (t(0, 0), t(0, 0), 1, 1.00),
         (1, 2): (t(0, 40), t(1, 0), 2, 6.00),
     }
-    assert L.dropped_late_count(late_state) == 0
+    assert dropped_late_count(late_state) == 0
 
     strict = {(r["user_id"], r["session_seq"]):
               (r["session_start"], r["session_end"], r["n_events"],
@@ -1363,7 +1386,7 @@ def test_late_sessions_drops_and_counts_beyond_horizon(spark, tmp_path):
     view = {(r["user_id"], r["session_seq"]): r["n_events"]
             for r in L.state_to_view(state).collect()}
     assert view == {(1, 1): 1, (1, 2): 1}              # late event absent
-    assert L.dropped_late_count(state) == 1
+    assert dropped_late_count(state) == 1
 
 
 def test_late_sessions_fold_replay_is_idempotent(spark, tmp_path):
@@ -1372,6 +1395,7 @@ def test_late_sessions_fold_replay_is_idempotent(spark, tmp_path):
 
     from data_warehouse_project_spark.streaming import late_sessions as L
 
+    init, merge = L.late_sessions_state, L.merge_late_sessions_state
     state = str(tmp_path / "state")
     schema = ("user_id long, event_id long, ts timestamp, "
               "event_type string, value double")
@@ -1383,9 +1407,9 @@ def test_late_sessions_fold_replay_is_idempotent(spark, tmp_path):
 
     b0 = batch([(1, 10, 9, 0, 1.00), (1, 11, 9, 10, 2.00)])
     b1 = batch([(1, 20, 9, 30, 4.00)])
-    assert L.fold_batch_into_state(b0, 0, state) is True
-    assert L.fold_batch_into_state(b1, 1, state) is True
-    assert L.fold_batch_into_state(b1, 1, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
     got = {(r["user_id"], r["session_seq"]):
            (r["n_events"], r["session_value"])
            for r in L.state_to_view(spark.read.parquet(state)).collect()}
@@ -1401,6 +1425,7 @@ def test_late_sessions_maintainer_restart_with_disorder(spark, tmp_path):
     from data_warehouse_project_spark.streaming import (late_sessions as L,
                                                         sessions as S)
 
+    init, merge = L.late_sessions_state, L.merge_late_sessions_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1415,7 +1440,7 @@ def test_late_sessions_maintainer_restart_with_disorder(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        L.run_late_sessions_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(1, 10, 0, 0, 1.0), (1, 11, 1, 0, 2.0), (2, 12, 0, 30, 3.0)])
     run()
@@ -1445,6 +1470,7 @@ def test_kmv_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
 
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.kmv_state, sketches.merge_kmv_state
     state = str(tmp_path / "kmv_state")
     schema = "o_orderdate date, o_custkey long"
     # two batches over the same two years, 100 keys each with overlap
@@ -1457,16 +1483,16 @@ def test_kmv_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
         + [(dt.date(1996, 4, 1 + i % 27), 1050 + i) for i in range(100)],
         schema)
 
-    assert sketches.kmv_fold_batch_into_state(a, 0, state) is True
-    assert sketches.kmv_fold_batch_into_state(b, 1, state) is True
-    assert sketches.kmv_fold_batch_into_state(b, 1, state) is False
-    assert sketches.kmv_fold_batch_into_state(a, 0, state) is False
+    assert fold_batch(a, 0, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is False
+    assert fold_batch(a, 0, state, init, merge) is False
 
     folded = {(r["g"], r["h"], r["r"])
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()}
+              .drop(BATCH_COL).collect()}
     single = {(r["g"], r["h"], r["r"])
-              for r in sketches._kmv_init(a.unionByName(b)).collect()}
+              for r in sketches.kmv_state(a.unionByName(b)).collect()}
     assert folded == single
     # both years saturated (150 distinct keys > k)
     gs = {}
@@ -1480,6 +1506,7 @@ def test_kmv_streaming_maintainer_restart(spark, tmp_path):
 
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.kmv_state, sketches.merge_kmv_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1491,7 +1518,7 @@ def test_kmv_streaming_maintainer_restart(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        sketches.run_kmv_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(dt.date(1995, 1, 1 + i % 27), i) for i in range(80)])
     run()
@@ -1499,9 +1526,9 @@ def test_kmv_streaming_maintainer_restart(spark, tmp_path):
     run()  # restart of the same checkpoint
     folded = {(r["g"], r["h"], r["r"])
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()}
+              .drop(BATCH_COL).collect()}
     single = {(r["g"], r["h"], r["r"])
-              for r in sketches._kmv_init(
+              for r in sketches.kmv_state(
                   spark.read.parquet(landing)).collect()}
     assert folded == single
 
@@ -1512,6 +1539,7 @@ def test_bloom_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     batch ids must be skipped."""
     from data_warehouse_project_spark.operators import bloom
 
+    init, merge = bloom.bloom_state, bloom.merge_bloom_state
     state = str(tmp_path / "bloom_state")
     schema = "p_partkey long, p_size long"
     # sizes alternate qualifying (<=2) and not; batches overlap keys
@@ -1520,23 +1548,23 @@ def test_bloom_maintainer_fold_is_exact_and_replay_safe(spark, tmp_path):
     b = spark.createDataFrame(
         [(k, 1 + (k % 4)) for k in range(30, 90)], schema)
 
-    assert bloom.bloom_fold_batch_into_state(a, 0, state) is True
-    assert bloom.bloom_fold_batch_into_state(b, 1, state) is True
-    assert bloom.bloom_fold_batch_into_state(b, 1, state) is False
-    assert bloom.bloom_fold_batch_into_state(a, 0, state) is False
+    assert fold_batch(a, 0, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is False
+    assert fold_batch(a, 0, state, init, merge) is False
 
     folded = [(r["w"], r["bits"])
               for r in spark.read.parquet(state)
-              .drop("last_batch_id").collect()]
+              .drop(BATCH_COL).collect()]
     single = {(r["w"], r["bits"])
-              for r in bloom._bloom_init(a.unionByName(b)).collect()}
+              for r in bloom.bloom_state(a.unionByName(b)).collect()}
     assert len(folded) == len(set(folded)), "one row per word"
     assert set(folded) == single
     # the folded filter still admits every qualifying key (no false
     # negatives through the fold path)
     qualifying = a.unionByName(b).filter("p_size <= 2") \
         .select("p_partkey").distinct()
-    bits = spark.read.parquet(state).drop("last_batch_id")
+    bits = spark.read.parquet(state).drop(BATCH_COL)
     passed = bloom.bloom_probe(
         qualifying.withColumnRenamed("p_partkey", "l_partkey"),
         ["l_partkey"], bits, bloom.BLOOM_M)
@@ -1608,7 +1636,7 @@ def test_interval_join_cross_batch_pairs_hand_computed(spark):
         (6, 602, 601),    # cross-batch BACKWARD: late click after its
                           # purchase — impossible for per-batch joins
     }
-    assert IJ.dropped_late_count(s3) == 1   # the h=8 purchase
+    assert dropped_late_count(s3) == 1   # the h=8 purchase
     # eviction really happened: no u1/u2 buffer rows linger
     bufs = {(r["kind"], r["user_id"]) for r in
             s3.filter("kind in ('c','p')").collect()}
@@ -1618,16 +1646,17 @@ def test_interval_join_cross_batch_pairs_hand_computed(spark):
 def test_interval_join_fold_replay_and_restart(spark, tmp_path):
     from data_warehouse_project_spark.streaming import interval_join as IJ
 
+    init, merge = IJ.interval_join_state, IJ.merge_interval_join_state
     state = str(tmp_path / "ij_state")
     # watermark h=5 -> horizon h=-1: the h=1 click stays buffered and
     # the h=1.4 purchase is admissible in the next fold
     b1 = _ij_events(spark, [(1, 11, 1.0, "click", 0),
                             (9, 91, 5.0, "click", 0)])
     b2 = _ij_events(spark, [(1, 12, 1.4, "purchase", 5)])
-    assert IJ.fold_batch_into_state(b1, 0, state) is True
-    assert IJ.fold_batch_into_state(b2, 1, state) is True
-    assert IJ.fold_batch_into_state(b2, 1, state) is False  # replay
-    assert IJ.fold_batch_into_state(b1, 0, state) is False
+    assert fold_batch(b1, 0, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is False  # replay
+    assert fold_batch(b1, 0, state, init, merge) is False
     got = [r for r in spark.read.parquet(state).collect()
            if r["kind"] == "m"]
     assert len(got) == 1 and got[0]["click_id"] == 11 \
@@ -1645,10 +1674,10 @@ def test_interval_join_fold_replay_and_restart(spark, tmp_path):
 
     feed(b1)
     stream = spark.readStream.schema(sch).parquet(landing)
-    IJ.run_interval_join_maintainer(stream, st2, ck)
+    run_maintainer(stream, st2, ck, init, merge)
     feed(b2)
     stream = spark.readStream.schema(sch).parquet(landing)
-    IJ.run_interval_join_maintainer(stream, st2, ck)
+    run_maintainer(stream, st2, ck, init, merge)
     got2 = [r for r in spark.read.parquet(st2).collect()
             if r["kind"] == "m"]
     assert len(got2) == 1 and got2[0]["click_id"] == 11
@@ -1759,15 +1788,12 @@ def test_enriched_view_fold_replay_restart_and_single_pass(spark, sf_dir,
     b1 = orders.filter(F.col("o_orderkey") % 2 == 0)
     b2 = orders.filter(F.col("o_orderkey") % 2 == 1)
 
+    init, merge = INC.make_enriched_view_fns(cat.customer, cat.nation)
     state = str(tmp_path / "ev_state")
-    assert INC.enriched_view_fold(b1, 0, state, cat.customer,
-                                  cat.nation) is True
-    assert INC.enriched_view_fold(b2, 1, state, cat.customer,
-                                  cat.nation) is True
-    assert INC.enriched_view_fold(b2, 1, state, cat.customer,
-                                  cat.nation) is False   # replay
-    folded = spark.read.parquet(state).drop("last_batch_id")
-    init, _ = INC.make_enriched_view_fns(cat.customer, cat.nation)
+    assert fold_batch(b1, 0, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is True
+    assert fold_batch(b2, 1, state, init, merge) is False   # replay
+    folded = spark.read.parquet(state).drop(BATCH_COL)
     single = init(orders)
     assert folded.count() == orders.count()
     assert folded.exceptAll(single).count() == 0
@@ -1782,13 +1808,12 @@ def test_enriched_view_fold_replay_restart_and_single_pass(spark, sf_dir,
 
     def run():
         stream = spark.readStream.schema(sch).parquet(landing)
-        INC.run_enriched_view_maintainer(stream, st2, ck,
-                                         cat.customer, cat.nation)
+        run_maintainer(stream, st2, ck, init, merge)
 
     run()
     b2.coalesce(1).write.mode("append").parquet(landing)
     run()
-    got = spark.read.parquet(st2).drop("last_batch_id")
+    got = spark.read.parquet(st2).drop(BATCH_COL)
     assert got.count() == orders.count()
     assert got.exceptAll(single).count() == 0
     orders.unpersist()
@@ -1802,6 +1827,7 @@ def test_mg_maintainer_replay_safe_and_bound_through_fold(spark, tmp_path):
 
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.mg_state, sketches.merge_mg_state
     state = str(tmp_path / "mg_state")
     schema = "doc_id long, text string"
     text_a = "alpha " * 30 + "beta " * 9 + "gamma delta epsilon zeta"
@@ -1809,11 +1835,11 @@ def test_mg_maintainer_replay_safe_and_bound_through_fold(spark, tmp_path):
     a = spark.createDataFrame([(1, text_a)], schema)
     b = spark.createDataFrame([(2, text_b)], schema)
 
-    assert sketches.mg_fold_batch_into_state(a, 0, state) is True
-    assert sketches.mg_fold_batch_into_state(b, 1, state) is True
-    assert sketches.mg_fold_batch_into_state(b, 1, state) is False
+    assert fold_batch(a, 0, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is True
+    assert fold_batch(b, 1, state, init, merge) is False
 
-    rows = spark.read.parquet(state).drop("last_batch_id").collect()
+    rows = spark.read.parquet(state).drop(BATCH_COL).collect()
     exact = Counter((text_a + " " + text_b).split())
     n_total = sum(exact.values())
     meta = [r for r in rows if r["token"] is None]
@@ -1833,6 +1859,7 @@ def test_mg_maintainer_replay_safe_and_bound_through_fold(spark, tmp_path):
 def test_mg_streaming_maintainer_restart(spark, tmp_path):
     from data_warehouse_project_spark.llm import sketches
 
+    init, merge = sketches.mg_state, sketches.merge_mg_state
     landing = str(tmp_path / "landing")
     state = str(tmp_path / "state")
     ck = str(tmp_path / "ck")
@@ -1844,13 +1871,13 @@ def test_mg_streaming_maintainer_restart(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        sketches.run_mg_maintainer(stream, state, ck)
+        run_maintainer(stream, state, ck, init, merge)
 
     feed([(1, "alpha beta alpha alpha")])
     run()
     feed([(2, "beta gamma beta")])
     run()  # restart of the same checkpoint
-    rows = spark.read.parquet(state).drop("last_batch_id").collect()
+    rows = spark.read.parquet(state).drop(BATCH_COL).collect()
     meta = [r for r in rows if r["token"] is None]
     assert meta[0]["n_total"] == 7
     real = {r["token"]: r["weight"] for r in rows
@@ -1908,15 +1935,19 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
             [(u, e, dt.datetime(2024, 1, 1, h), et, 1.0)
              for u, e, h, et in rows], s_schema)
 
-    for mod, batch in [(T, t_batch), (S, s_batch)]:
+    for mod, batch, init, merge in [
+            (T, t_batch, T.late_transitions_state,
+             T.merge_late_transitions_state),
+            (S, s_batch, S.late_sessions_state,
+             S.merge_late_sessions_state)]:
         state = str(tmp_path / f"state_{mod.__name__.rsplit('.', 1)[-1]}")
         b0 = batch([(1, 10, 0, "a"), (1, 11, 10, "c")])
         b1 = batch([(1, 20, 5, "b")])
         actions["n"] = 0
-        assert mod.fold_batch_into_state(b0, 0, state) is True
+        assert fold_batch(b0, 0, state, init, merge) is True
         assert actions["n"] <= 3, (mod.__name__, "init", actions["n"])
         actions["n"] = 0
-        assert mod.fold_batch_into_state(b1, 1, state) is True
+        assert fold_batch(b1, 1, state, init, merge) is True
         assert actions["n"] <= 4, (mod.__name__, "merge", actions["n"])
 
 
@@ -2074,14 +2105,15 @@ def test_dedup_ingest_maintainer_replay_is_idempotent(spark, tmp_path):
     single-pass build afterward."""
     from data_warehouse_project_spark.streaming import dedup_ingest as D
 
+    init, merge = D.dedup_state, D.merge_dedup_state
     docs = _planted_docs(spark)
     b0 = docs.filter(F.col("doc_id") <= 3)
     b1 = docs.filter(F.col("doc_id") > 3)
     state = str(tmp_path / "dedup_state")
-    assert D.fold_batch_into_state(b0, 0, state) is True
-    assert D.fold_batch_into_state(b1, 1, state) is True
-    assert D.fold_batch_into_state(b1, 1, state) is False
-    assert D.fold_batch_into_state(b0, 0, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
+    assert fold_batch(b0, 0, state, init, merge) is False
     got = {r["fingerprint"]: (r["first_doc_id"], r["n_seen"])
            for r in spark.read.parquet(state).collect()}
     want = {r["fingerprint"]: (r["first_doc_id"], r["n_seen"])
@@ -2149,13 +2181,14 @@ def test_neardup_ingest_fold_is_oneshot_banding(spark, tmp_path):
     no-ops."""
     from data_warehouse_project_spark.streaming import neardup_ingest as N
 
+    init, merge = N.banded, N.merge_band_state
     docs = _neardup_docs(spark)
     b0 = docs.filter(F.col("doc_id") <= 3)
     b1 = docs.filter(F.col("doc_id") > 3)
     state = str(tmp_path / "nd_state")
-    assert N.fold_batch_into_state(b0, 0, state) is True
-    assert N.fold_batch_into_state(b1, 1, state) is True
-    assert N.fold_batch_into_state(b1, 1, state) is False
+    assert fold_batch(b0, 0, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is True
+    assert fold_batch(b1, 1, state, init, merge) is False
     got = sorted(map(tuple, spark.read.parquet(state)
                      .select("doc_id", "band", "bucket").collect()))
     want = sorted(map(tuple, N.banded(docs).collect()))
