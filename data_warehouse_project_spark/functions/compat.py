@@ -87,12 +87,19 @@ def sql_fround(expr: str, scale: int) -> str:
     return f"(FLOOR(({expr}) * {s} + 0.5) / {s})"
 
 
-def dsum(term: Column, scale: int = 2, guard: int = GUARD) -> Column:
-    """Order-independent SUM rounded half-up to ``scale`` decimals."""
-    total = F.sum(_scaled(term, guard))                      # exact long
+def dsum_shift(total: Column, scale: int = 2, guard: int = GUARD) -> Column:
+    """dsum's final shift: an exact sum of ``guard``-scaled longs,
+    rounded half-up to ``scale`` decimals with one floor and one
+    divide. Maintainers that carry the integer sum in state apply it
+    at serve time."""
     down = 10 ** (guard - scale)
     out = F.floor((total + F.lit(down // 2)) / F.lit(float(down)))
     return out.cast("double") / F.lit(float(10 ** scale))
+
+
+def dsum(term: Column, scale: int = 2, guard: int = GUARD) -> Column:
+    """Order-independent SUM rounded half-up to ``scale`` decimals."""
+    return dsum_shift(F.sum(_scaled(term, guard)), scale, guard)
 
 
 def sql_dsum(term_sql: str, scale: int = 2, guard: int = GUARD) -> str:
@@ -107,10 +114,8 @@ def sql_dsum(term_sql: str, scale: int = 2, guard: int = GUARD) -> str:
 def dsum_over(term: Column, window, scale: int = 2,
               guard: int = GUARD) -> Column:
     """Windowed variant of dsum."""
-    total = F.sum(_scaled(term, guard)).over(window)
-    down = 10 ** (guard - scale)
-    out = F.floor((total + F.lit(down // 2)) / F.lit(float(down)))
-    return out.cast("double") / F.lit(float(10 ** scale))
+    return dsum_shift(F.sum(_scaled(term, guard)).over(window), scale,
+                      guard)
 
 
 def sql_dsum_over(term_sql: str, over_sql: str, scale: int = 2,

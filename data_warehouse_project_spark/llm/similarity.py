@@ -681,7 +681,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs knn_brute_cosine asserted in unit tests.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     nprobe = 8
     cat = Catalog(spark, sf_dir)

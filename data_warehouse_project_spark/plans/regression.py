@@ -326,7 +326,6 @@ register("revenue_forecast_backtest", revenue_forecast_backtest,
 #: conformal miscoverage level: 1 - alpha = 90% target coverage,
 #: carried as the exact rational 9/10 so the conformal rank
 #: k = ceil((n+1) * 9/10) stays in integer arithmetic
-_CONF_ALPHA = 0.1
 _CONF_NUM, _CONF_DEN = 9, 10
 
 #: scale for the quantized absolute residuals: err_cents is fround'd

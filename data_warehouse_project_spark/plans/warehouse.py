@@ -17,8 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.compat import (davg, dsum, dsum_over, fround, sql_davg,
-                                sql_dsum, sql_dsum_over, sql_fround)
+from ..functions.compat import (dsum, dsum_over, fround, sql_davg, sql_dsum,
+                                sql_dsum_over, sql_fround)
 from ..registry import register
 from ..sources.catalog import Catalog
 

@@ -39,11 +39,12 @@ predicate otherwise).
 
 State: ONE parquet table, four row kinds ('m' matches — the
 append-only result, 'c'/'p' buffered clicks/purchases, 'w'
-watermark + dropped count), atomic staged swap, shared batch-id
-replay sentinel (state_fold.py). Per-fold work: the 'w' scalar read,
-one user-keyed join of batch-sized × buffer-sized frames, one union.
-History is never rescanned; the buffers are bounded by
-WINDOW + LATENESS hours of events regardless of stream length.
+watermark + dropped count; the state_fold.tagged_state layout),
+atomic staged swap, shared batch-id replay sentinel (state_fold.py).
+Per-fold work: the 'w' scalar read, one user-keyed join of
+batch-sized × buffer-sized frames, one union. History is never
+rescanned; the buffers are bounded by WINDOW + LATENESS hours of
+events regardless of stream length.
 
 Serving selects the 'm' rows — already exactly the batch twin's
 full-recompute rows over every admitted event (the registered
@@ -59,10 +60,14 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_CLICK_PURCHASE_SQL
-from .state_fold import LATENESS_S, replay, ts_split
+from .state_fold import (LATENESS_S, first_watermark, replay, tagged_state,
+                         ts_split, watermark_prologue, watermark_row)
 
 #: join window (seconds): purchase in [click_ts, click_ts + WINDOW]
 WINDOW_S = 3600
+
+#: a buffered click's or purchase's columns ('c' and 'p' rows)
+_BUFFER_COLS = ("user_id", "event_id", "ts", "value")
 
 
 def _sides(events: DataFrame) -> DataFrame:
@@ -91,48 +96,6 @@ def _match(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
                     "purchase_value"))
 
 
-def _assemble(matches: DataFrame, buf_c: DataFrame, buf_p: DataFrame,
-              wm_ts, dropped: int, spark: SparkSession) -> DataFrame:
-    ts_type = matches.schema["click_ts"].dataType
-
-    def _buf(b: DataFrame, kind: str) -> DataFrame:
-        return b.select(
-            F.lit(kind).alias("kind"),
-            "user_id",
-            F.lit(None).cast("long").alias("click_id"),
-            F.lit(None).cast("long").alias("purchase_id"),
-            F.lit(None).cast(ts_type).alias("click_ts"),
-            F.lit(None).cast(ts_type).alias("purchase_ts"),
-            F.lit(None).cast("double").alias("purchase_value"),
-            "event_id", "ts", "value",
-            F.lit(None).cast(ts_type).alias("wm"),
-            F.lit(None).cast("long").alias("dropped"))
-
-    m = matches.select(
-        F.lit("m").alias("kind"), "user_id", "click_id", "purchase_id",
-        "click_ts", "purchase_ts", "purchase_value",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast("long").alias("click_id"),
-        F.lit(None).cast("long").alias("purchase_id"),
-        F.lit(None).cast(ts_type).alias("click_ts"),
-        F.lit(None).cast(ts_type).alias("purchase_ts"),
-        F.lit(None).cast("double").alias("purchase_value"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return (m.unionByName(_buf(buf_c, "c")).unionByName(_buf(buf_p, "p"))
-            .unionByName(w))
-
-
 def _evict(buf_c: DataFrame, buf_p: DataFrame, horizon):
     """Drop buffer rows that can no longer gain a partner (see module
     docstring for why these bounds are exactly the no-future-match
@@ -147,18 +110,15 @@ def _evict(buf_c: DataFrame, buf_p: DataFrame, horizon):
 def interval_join_state(events: DataFrame) -> DataFrame:
     """Build state from the first batch: match within the batch,
     buffer what can still gain partners."""
-    import datetime as dt
-    spark = events.sparkSession
     ev = _sides(events)
-    wm = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    wm, horizon = first_watermark(ev, LATENESS_S)
     clicks = ev.filter(F.col("event_type") == "click")
     purchases = ev.filter(F.col("event_type") == "purchase")
-    matches = _match(clicks, purchases)
-    if wm is None:
-        return _assemble(matches, clicks, purchases, None, 0, spark)
-    horizon = wm - dt.timedelta(seconds=LATENESS_S)
-    buf_c, buf_p = _evict(clicks, purchases, horizon)
-    return _assemble(matches, buf_c, buf_p, wm, 0, spark)
+    buf_c, buf_p = _evict(clicks.select(*_BUFFER_COLS),
+                          purchases.select(*_BUFFER_COLS), horizon)
+    return tagged_state(m=_match(clicks, purchases), c=buf_c, p=buf_p,
+                        w=watermark_row(ev.sparkSession, wm, 0,
+                                        ev.schema["ts"].dataType))
 
 
 def merge_interval_join_state(prev: DataFrame,
@@ -166,37 +126,30 @@ def merge_interval_join_state(prev: DataFrame,
     """Fold one arbitrarily-ordered batch: admit strictly above the
     previous horizon (drop-and-count the rest), join admitted against
     buffer ∪ admitted, append matches, re-buffer with eviction."""
-    from .state_fold import watermark_prologue
-    spark = prev.sparkSession
-    ev = _sides(batch_events)
-    _, dropped, wm_new, horizon_new, admitted, n_late = \
-        watermark_prologue(prev, ev, LATENESS_S)
+    dropped, wm_new, horizon_new, admitted, n_late = \
+        watermark_prologue(prev, _sides(batch_events), LATENESS_S)
     if wm_new is None:
         return prev
 
-    adm_c = admitted.filter(F.col("event_type") == "click")
-    adm_p = admitted.filter(F.col("event_type") == "purchase")
-    buf_c = (prev.filter(F.col("kind") == "c")
-             .select("user_id", "event_id", "ts", "value"))
-    buf_p = (prev.filter(F.col("kind") == "p")
-             .select("user_id", "event_id", "ts", "value"))
+    adm_c = (admitted.filter(F.col("event_type") == "click")
+             .select(*_BUFFER_COLS))
+    adm_p = (admitted.filter(F.col("event_type") == "purchase")
+             .select(*_BUFFER_COLS))
+    buf_c = prev.filter(F.col("kind") == "c").select(*_BUFFER_COLS)
+    buf_p = prev.filter(F.col("kind") == "p").select(*_BUFFER_COLS)
 
-    new_matches = (_match(adm_c, buf_p.unionByName(
-        adm_p.select("user_id", "event_id", "ts", "value")))
-        .unionByName(_match(buf_c, adm_p)))
+    new_matches = (_match(adm_c, buf_p.unionByName(adm_p))
+                   .unionByName(_match(buf_c, adm_p)))
     matches = (prev.filter(F.col("kind") == "m")
                .select("user_id", "click_id", "purchase_id", "click_ts",
                        "purchase_ts", "purchase_value")
                .unionByName(new_matches))
-
-    keep_c, keep_p = _evict(
-        buf_c.unionByName(adm_c.select("user_id", "event_id", "ts",
-                                       "value")),
-        buf_p.unionByName(adm_p.select("user_id", "event_id", "ts",
-                                       "value")),
-        horizon_new)
-    return _assemble(matches, keep_c, keep_p, wm_new,
-                     dropped + n_late, spark)
+    keep_c, keep_p = _evict(buf_c.unionByName(adm_c),
+                            buf_p.unionByName(adm_p), horizon_new)
+    return tagged_state(m=matches, c=keep_c, p=keep_p,
+                        w=watermark_row(prev.sparkSession, wm_new,
+                                        dropped + n_late,
+                                        keep_c.schema["ts"].dataType))
 
 
 def state_to_matches(state: DataFrame) -> DataFrame:

@@ -19,14 +19,14 @@ rule must clear the gap too:
     the horizon, so any future event e has e.ts > horizon ≥
     session_end + GAP — it can never attach, extend, or bridge).
 
-State design: ONE parquet table, three row kinds — 's' finalized
-session rows (immutable, carrying their final per-user session_seq),
-'b' the raw buffered events of every unfinalized island (the
-lateness+gap tail; raw events rather than aggregates because a
-bridging event must re-segment the tail, and interval endpoints
-alone can't reproduce interior chain gaps), 'w' watermark +
-dropped-late metric. One atomic staged swap, the shared batch-id
-replay sentinel (state_fold.py).
+State design: ONE parquet table (the state_fold.tagged_state
+layout), three row kinds — 's' finalized session rows (immutable,
+carrying their final per-user session_seq), 'b' the raw buffered
+events of every unfinalized island (the lateness+gap tail; raw events
+rather than aggregates because a bridging event must re-segment the
+tail, and interval endpoints alone can't reproduce interior chain
+gaps), 'w' watermark + dropped-late metric. One atomic staged swap,
+the shared batch-id replay sentinel (state_fold.py).
 
 Fold: admit batch events strictly above the previous horizon
 (drop-and-count older), advance the watermark, run the batch twin's
@@ -42,11 +42,11 @@ disorder inside LATENESS. Values stay dsum-exact: events carry their
 GUARD-scaled integer vq in the buffer; session sums are integer
 adds, shifted once at serve (sessions.py's policy).
 
-Scale: per fold — one bounded 'w' scalar read, one merged
-batch-metadata action, one user-keyed island window over
-(buffer-for-batch-users ∪ admitted) with untouched buffer users
-re-segmented only against the advancing horizon, and a final-vs-tail
-split. State is O(finalized sessions + events inside the
+Scale: per fold — one action that reads the 'w' scalar and the
+batch metadata together, one user-keyed island window over
+(buffer ∪ admitted), and a final-vs-tail split; a buffered user with
+no new events is re-segmented too, so its islands finalize as the
+horizon advances. State is O(finalized sessions + events inside the
 lateness+gap window + 1); the finalized majority is append-only —
 the same partitioned-log refinement note as sessions.py applies.
 """
@@ -55,16 +55,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.compat import GUARD, _scaled
+from ..functions.compat import GUARD, _scaled, dsum_shift
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import (EVENTS_SESSIONIZE_SQL, SESSION_GAP_S,
                            session_islands)
-from .state_fold import LATENESS_S, replay, ts_split
+from .state_fold import (LATENESS_S, first_watermark, replay, tagged_state,
+                         ts_split, watermark_prologue, watermark_row)
 
-#: dsum final-shift constants (compat.dsum, scale=2)
-_DOWN = 10 ** (GUARD - 2)
-_HALF = _DOWN // 2
+#: a buffered event's columns ('b' rows)
+_BUFFER_COLS = ("user_id", "event_id", "ts", "vq")
+#: a finalized session's columns ('s' rows)
+_FINAL_COLS = ("user_id", "session_seq", "session_start", "session_end",
+               "n_events", "value_q")
 
 
 def _event_rows(events: DataFrame) -> DataFrame:
@@ -81,7 +84,7 @@ def _islands_with_events(rows: DataFrame):
                  F.max("ts").alias("session_end"),
                  F.count("*").cast("long").alias("n_events"),
                  F.sum("vq").cast("long").alias("value_q")))
-    return seq.select("user_id", "event_id", "ts", "vq", "isl"), aggs
+    return seq.select(*_BUFFER_COLS, "isl"), aggs
 
 
 def _split_final(rows: DataFrame, horizon):
@@ -95,79 +98,36 @@ def _split_final(rows: DataFrame, horizon):
     open_keys = (aggs.filter(F.col("session_end") > F.lit(cutoff))
                  .select("user_id", "isl"))
     buffer = (ev.join(open_keys, ["user_id", "isl"], "left_semi")
-              .select("user_id", "event_id", "ts", "vq"))
+              .select(*_BUFFER_COLS))
     return final, buffer
 
 
-def _assemble(final: DataFrame, buffer: DataFrame, wm_ts, dropped: int,
-              spark: SparkSession) -> DataFrame:
-    ts_type = buffer.schema["ts"].dataType
-    s = final.select(
-        F.lit("s").alias("kind"), "user_id", "session_seq",
-        "session_start", "session_end", "n_events", "value_q",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("vq"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    b = buffer.select(
-        F.lit("b").alias("kind"), "user_id",
-        F.lit(None).cast("long").alias("session_seq"),
-        F.lit(None).cast(ts_type).alias("session_start"),
-        F.lit(None).cast(ts_type).alias("session_end"),
-        F.lit(None).cast("long").alias("n_events"),
-        F.lit(None).cast("long").alias("value_q"),
-        "event_id", "ts", "vq",
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast("long").alias("session_seq"),
-        F.lit(None).cast(ts_type).alias("session_start"),
-        F.lit(None).cast(ts_type).alias("session_end"),
-        F.lit(None).cast("long").alias("n_events"),
-        F.lit(None).cast("long").alias("value_q"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("vq"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return s.unionByName(b).unionByName(w)
-
-
 def _number_finals(final: DataFrame, base: DataFrame | None) -> DataFrame:
-    """Assign per-user session_seq to newly finalized sessions:
-    prior max finalized seq (0 if none) + rank by start order. A None
-    base (the bootstrap fold — nothing finalized before) skips the
-    join and numbers from 1."""
+    """Assign per-user session_seq to newly finalized (or, at serve,
+    buffered) sessions: prior max finalized seq (0 if none) + rank by
+    start order. A None base (the bootstrap fold — nothing finalized
+    before) skips the join and numbers from 1."""
     w = Window.partitionBy("user_id").orderBy("session_start",
                                               "session_end")
     if base is None:
-        joined = final.withColumn("max_seq", F.lit(None).cast("long"))
+        joined, seq0 = final, F.lit(0)
     else:
         joined = final.join(base, "user_id", "left")
-    return (joined
-            .select("user_id",
-                    (F.coalesce(F.col("max_seq"), F.lit(0))
-                     + F.row_number().over(w)).cast("long")
-                    .alias("session_seq"),
-                    "session_start", "session_end", "n_events",
-                    "value_q"))
+        seq0 = F.coalesce(F.col("max_seq"), F.lit(0))
+    return joined.select(
+        "user_id",
+        (seq0 + F.row_number().over(w)).cast("long").alias("session_seq"),
+        *_FINAL_COLS[2:])
 
 
 def late_sessions_state(events: DataFrame) -> DataFrame:
     """Build state from the first batch ever seen."""
-    import datetime as dt
-    spark = events.sparkSession
     ev = _event_rows(events)
-    wm = ev.agg(F.max("ts").alias("wm")).collect()[0]["wm"]
-    # empty first batch: any horizon segments the empty frame to an
-    # empty final/buffer pair with the right schema
-    horizon = (dt.datetime(1970, 1, 2) if wm is None
-               else wm - dt.timedelta(seconds=LATENESS_S))
+    wm, horizon = first_watermark(ev, LATENESS_S)
     final, buffer = _split_final(ev, horizon)
-    return _assemble(_number_finals(final, None), buffer, wm, 0, spark)
+    return tagged_state(s=_number_finals(final, None), b=buffer,
+                        w=watermark_row(ev.sparkSession, wm, 0,
+                                        ev.schema["ts"].dataType))
 
 
 def merge_late_sessions_state(prev: DataFrame,
@@ -175,64 +135,38 @@ def merge_late_sessions_state(prev: DataFrame,
     """Fold one arbitrarily-ordered batch (see module docstring;
     admission is strictly above the previous horizon — the shared
     state_fold.watermark_prologue holds the one copy of that
-    correctness argument)."""
-    from .state_fold import watermark_prologue
-    spark = prev.sparkSession
-    ev = _event_rows(batch_events)
-    _, dropped, wm_new, horizon_new, admitted, n_late = \
-        watermark_prologue(prev, ev, LATENESS_S)
+    correctness argument). The split runs once over (buffer ∪
+    admitted): it works per user, so a user without new events still
+    finalizes the islands the advancing horizon clears."""
+    dropped, wm_new, horizon_new, admitted, n_late = \
+        watermark_prologue(prev, _event_rows(batch_events), LATENESS_S)
     if wm_new is None:
         return prev
 
-    buffer_prev = (prev.filter(F.col("kind") == "b")
-                   .select("user_id", "event_id", "ts", "vq"))
-    batch_users = admitted.select("user_id").distinct()
-    touched = buffer_prev.join(batch_users, "user_id", "left_semi")
-    untouched = buffer_prev.join(batch_users, "user_id", "left_anti")
-
-    final_t, buffer_t = _split_final(touched.unionByName(admitted),
-                                     horizon_new)
-    # untouched users' buffered islands may still clear the advancing
-    # finalization boundary with no new events
-    final_u, buffer_u = _split_final(untouched, horizon_new)
-
-    finals_prev = prev.filter(F.col("kind") == "s").select(
-        "user_id", "session_seq", "session_start", "session_end",
-        "n_events", "value_q")
+    final, buffer = _split_final(
+        prev.filter(F.col("kind") == "b").select(*_BUFFER_COLS)
+        .unionByName(admitted), horizon_new)
+    finals_prev = prev.filter(F.col("kind") == "s").select(*_FINAL_COLS)
     base = (finals_prev.groupBy("user_id")
             .agg(F.max("session_seq").cast("long").alias("max_seq")))
-    numbered = _number_finals(final_t.unionByName(final_u), base)
-    return _assemble(finals_prev.unionByName(numbered),
-                     buffer_t.unionByName(buffer_u),
-                     wm_new, dropped + n_late, spark)
+    return tagged_state(
+        s=finals_prev.unionByName(_number_finals(final, base)), b=buffer,
+        w=watermark_row(prev.sparkSession, wm_new, dropped + n_late,
+                        buffer.schema["ts"].dataType))
 
 
 def state_to_view(state: DataFrame) -> DataFrame:
     """Serve the batch twin's session view: finalized rows ∪ the
     buffered tail's islands, numbered after each user's finalized
     count; dsum's final shift applied to the exact integer sums."""
-    finals = state.filter(F.col("kind") == "s").select(
-        "user_id", "session_seq", "session_start", "session_end",
-        "n_events", "value_q")
+    finals = state.filter(F.col("kind") == "s").select(*_FINAL_COLS)
     base = (finals.groupBy("user_id")
             .agg(F.max("session_seq").cast("long").alias("max_seq")))
     _, tail_aggs = _islands_with_events(
-        state.filter(F.col("kind") == "b")
-        .select("user_id", "event_id", "ts", "vq"))
-    w = Window.partitionBy("user_id").orderBy("session_start",
-                                              "session_end")
-    tail = (tail_aggs.join(base, "user_id", "left")
-            .select("user_id",
-                    (F.coalesce(F.col("max_seq"), F.lit(0))
-                     + F.row_number().over(w)).cast("long")
-                    .alias("session_seq"),
-                    "session_start", "session_end", "n_events",
-                    "value_q"))
-    return finals.unionByName(tail).select(
+        state.filter(F.col("kind") == "b").select(*_BUFFER_COLS))
+    return finals.unionByName(_number_finals(tail_aggs, base)).select(
         "user_id", "session_seq", "session_start", "session_end",
-        "n_events",
-        (F.floor((F.col("value_q") + F.lit(_HALF)) / F.lit(float(_DOWN)))
-         .cast("double") / F.lit(100.0)).alias("session_value"))
+        "n_events", dsum_shift(F.col("value_q")).alias("session_value"))
 
 
 def events_sessions_late_tolerant(spark: SparkSession,

@@ -33,18 +33,19 @@ Instead of retracting, this maintainer refuses to finalize early:
   row), never silently miscounted.
 
 State design: ONE parquet table, three row kinds ('c' finalized
-counts, 'b' buffer events, 'w' watermark + dropped-count metric),
-one atomic staged swap, the shared batch-id replay sentinel
-(state_fold.py). State size is O(event_type² + users + events inside
-the lateness window) — the lateness window is the price of disorder
-tolerance, and it is exactly the state Structured Streaming's own
-watermarked operators keep.
+counts, 'b' buffer events, 'w' watermark + dropped-count metric; the
+state_fold.tagged_state layout), one atomic staged swap, the shared
+batch-id replay sentinel (state_fold.py). State size is
+O(event_type² + users + events inside the lateness window) — the
+lateness window is the price of disorder tolerance, and it is exactly
+the state Structured Streaming's own watermarked operators keep.
 
-Scale: per fold — one bounded scalar read (the 'w' row), one
-user-keyed window over (buffer-for-batch-users ∪ admitted batch),
-a (type × type) delta aggregate, and a count merge. Users untouched
-by the batch pass through the immutable union unchanged (the same
-O(batch) discipline as sessions.py's semi-join). History is never
+Scale: per fold — one bounded scalar read (the 'w' row, merged with
+the batch's max ts), one user-keyed window over (buffer ∪ admitted
+batch), a (type × type) delta aggregate, and a count merge. The
+buffer is the lateness window plus one anchor per user, so the window
+is O(batch + buffer); a buffered user with no new events still
+finalizes what the advancing horizon clears. History is never
 rescanned.
 """
 
@@ -55,49 +56,11 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_TRANSITIONS_SQL, TRANSITION_TOP_K
-from .state_fold import LATENESS_S, replay, ts_split
+from .state_fold import (LATENESS_S, first_watermark, replay, tagged_state,
+                         ts_split, watermark_prologue, watermark_row)
 
-
-def _events_cols(events: DataFrame) -> DataFrame:
-    return events.select("user_id", "event_id", "ts", "event_type")
-
-
-def _empty_like(kind_rows: DataFrame) -> DataFrame:
-    return kind_rows.filter(F.lit(False))
-
-
-def _assemble(counts: DataFrame, buffer: DataFrame,
-              wm_ts, dropped: int, spark: SparkSession) -> DataFrame:
-    """Union the three row kinds into the single state schema."""
-    ts_type = buffer.schema["ts"].dataType
-    c = counts.select(
-        F.lit("c").alias("kind"), "prev_type", "next_type", "n",
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("string").alias("event_type"),
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    b = buffer.select(
-        F.lit("b").alias("kind"),
-        F.lit(None).cast("string").alias("prev_type"),
-        F.lit(None).cast("string").alias("next_type"),
-        F.lit(None).cast("long").alias("n"),
-        "user_id", "ts", "event_id", "event_type",
-        F.lit(None).cast(ts_type).alias("wm"),
-        F.lit(None).cast("long").alias("dropped"))
-    w = spark.createDataFrame([("w",)], "kind string").select(
-        "kind",
-        F.lit(None).cast("string").alias("prev_type"),
-        F.lit(None).cast("string").alias("next_type"),
-        F.lit(None).cast("long").alias("n"),
-        F.lit(None).cast("long").alias("user_id"),
-        F.lit(None).cast(ts_type).alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("string").alias("event_type"),
-        F.lit(wm_ts).cast(ts_type).alias("wm"),
-        F.lit(dropped).cast("long").alias("dropped"))
-    return c.unionByName(b).unionByName(w)
+#: an event's columns in the fold (the 'b' rows)
+_BUFFER_COLS = ("user_id", "ts", "event_id", "event_type")
 
 
 def _tail_split(events: DataFrame, horizon) -> tuple[DataFrame, DataFrame]:
@@ -119,66 +82,45 @@ def _tail_split(events: DataFrame, horizon) -> tuple[DataFrame, DataFrame]:
                   F.struct("ts", "event_id")).alias("s"))
               .select("user_id", "s.ts", "s.event_id", "s.event_type"))
     buffer = (events.filter(F.col("ts") > F.lit(horizon))
-              .select("user_id", "ts", "event_id", "event_type")
-              .unionByName(anchor))
+              .select(*_BUFFER_COLS).unionByName(anchor))
     return delta, buffer
 
 
 def late_transitions_state(events: DataFrame) -> DataFrame:
     """Build state from the first batch: watermark = max ts, finalize
     below (watermark − LATENESS), buffer the tail + anchors."""
-    spark = events.sparkSession
-    ev = _events_cols(events)
-    row = ev.agg(F.max("ts").alias("wm")).collect()[0]
-    wm = row["wm"]
-    if wm is None:
-        counts = (ev.groupBy(F.col("event_type").alias("prev_type"),
-                             F.col("event_type").alias("next_type"))
-                  .agg(F.count("*").cast("long").alias("n"))
-                  .filter(F.lit(False)))
-        return _assemble(counts, _empty_like(
-            ev.select("user_id", "ts", "event_id", "event_type")),
-            None, 0, spark)
-    import datetime as dt
-    horizon = wm - dt.timedelta(seconds=LATENESS_S)
+    ev = events.select(*_BUFFER_COLS)
+    wm, horizon = first_watermark(ev, LATENESS_S)
     delta, buffer = _tail_split(ev, horizon)
-    return _assemble(delta, buffer, wm, 0, spark)
+    return tagged_state(c=delta, b=buffer, w=watermark_row(
+        ev.sparkSession, wm, 0, ev.schema["ts"].dataType))
 
 
 def merge_late_transitions_state(prev: DataFrame,
                                  batch_events: DataFrame) -> DataFrame:
     """Fold one arbitrarily-ordered batch: admit events strictly
     above the PREVIOUS horizon (drop-and-count the rest), advance the
-    watermark, finalize newly-below-horizon pairs, re-buffer."""
-    from .state_fold import watermark_prologue
-    spark = prev.sparkSession
-    ev = _events_cols(batch_events)
-    _, dropped, wm_new, horizon_new, admitted, n_late = \
-        watermark_prologue(prev, ev, LATENESS_S)
+    watermark, finalize newly-below-horizon pairs, re-buffer. The
+    split runs once over (buffer ∪ admitted): it works per user, so a
+    user without new events still finalizes the pairs the advancing
+    horizon clears."""
+    dropped, wm_new, horizon_new, admitted, n_late = \
+        watermark_prologue(prev, batch_events.select(*_BUFFER_COLS),
+                           LATENESS_S)
     if wm_new is None:           # still no events anywhere
         return prev
 
-    buffer_prev = (prev.filter(F.col("kind") == "b")
-                   .select("user_id", "ts", "event_id", "event_type"))
-    batch_users = admitted.select("user_id").distinct()
-    touched = buffer_prev.join(batch_users, "user_id", "left_semi")
-    untouched = buffer_prev.join(batch_users, "user_id", "left_anti")
-
-    # untouched users still move below the advancing horizon: their
-    # buffered pairs may finalize this fold even with no new events
-    delta_t, buffer_t = _tail_split(
-        touched.unionByName(admitted.select("user_id", "ts", "event_id",
-                                            "event_type")),
-        horizon_new)
-    delta_u, buffer_u = _tail_split(untouched, horizon_new)
-
+    delta, buffer = _tail_split(
+        prev.filter(F.col("kind") == "b").select(*_BUFFER_COLS)
+        .unionByName(admitted), horizon_new)
     counts = (prev.filter(F.col("kind") == "c")
               .select("prev_type", "next_type", "n")
-              .unionByName(delta_t).unionByName(delta_u)
+              .unionByName(delta)
               .groupBy("prev_type", "next_type")
               .agg(F.sum("n").cast("long").alias("n")))
-    return _assemble(counts, buffer_t.unionByName(buffer_u),
-                     wm_new, dropped + n_late, spark)
+    return tagged_state(c=counts, b=buffer, w=watermark_row(
+        prev.sparkSession, wm_new, dropped + n_late,
+        buffer.schema["ts"].dataType))
 
 
 def state_to_report(state: DataFrame) -> DataFrame:
@@ -186,8 +128,7 @@ def state_to_report(state: DataFrame) -> DataFrame:
     buffered tail's transitions (anchor → first unfinalized pair
     included — it was deliberately NOT finalized)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tail = (state.filter(F.col("kind") == "b")
-            .select("user_id", "ts", "event_id", "event_type")
+    tail = (state.filter(F.col("kind") == "b").select(*_BUFFER_COLS)
             .withColumn("prev_type2", F.lag("event_type").over(w))
             .filter(F.col("prev_type2").isNotNull())
             .groupBy(F.col("prev_type2").alias("prev_type"),

@@ -54,15 +54,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.compat import GUARD, _scaled
+from ..functions.compat import GUARD, _scaled, dsum_shift
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import EVENTS_SESSIONIZE_SQL, session_islands
 from .state_fold import replay, ts_split
-
-#: dsum(scale=2, guard=GUARD) final-shift constants (compat.dsum)
-_DOWN = 10 ** (GUARD - 2)
-_HALF = _DOWN // 2
 
 
 def _scaled_events(events: DataFrame) -> DataFrame:
@@ -168,9 +164,7 @@ def state_to_view(state: DataFrame) -> DataFrame:
     dsum's final shift to the exact carried integer sum."""
     return state.select(
         "user_id", "session_seq", "session_start", "session_end",
-        "n_events",
-        (F.floor((F.col("value_q") + F.lit(_HALF)) / F.lit(float(_DOWN)))
-         .cast("double") / F.lit(100.0)).alias("session_value"))
+        "n_events", dsum_shift(F.col("value_q")).alias("session_value"))
 
 
 def events_sessions_incremental(spark: SparkSession,

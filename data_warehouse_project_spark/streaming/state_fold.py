@@ -12,7 +12,12 @@ The template (identical semantics in every consumer):
   would double-count, so a replayed id is skipped (one atomic swap
   keeps state and progress marker from ever disagreeing);
 - ``init_fn(batch)`` builds state from the first batch ever seen,
-  ``merge_fn(prev, batch)`` folds a later batch into prior state.
+  ``merge_fn(prev, batch)`` folds a later batch into prior state;
+- a state with several row kinds is one ``tagged_state``: each kind's
+  frame tagged in a ``kind`` column, a column a kind lacks NULL. The
+  watermark maintainers add one ``watermark_row`` ('w': event-time
+  watermark + dropped-late count), seeded by ``first_watermark`` and
+  advanced by ``watermark_prologue``.
 
 The registered ``*_incremental`` queries prove the same pairs against
 full-recompute oracles without a stream: ``ts_split`` /
@@ -37,10 +42,13 @@ its state from parquet, the replay can ``localCheckpoint`` it:
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import DataType
 
 from ..writes import overwrite_table
 
@@ -101,6 +109,36 @@ def run_maintainer(events_stream: DataFrame, state_path: str,
     return q
 
 
+def tagged_state(**kinds: DataFrame) -> DataFrame:
+    """One kinded state table: each frame tagged with its keyword as
+    ``kind``, the frames unioned by name in keyword order. A column a
+    kind lacks is a NULL of the type the other kinds give it."""
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [df.select(F.lit(kind).alias("kind"), "*")
+         for kind, df in kinds.items()])
+
+
+def watermark_row(spark: SparkSession, wm, dropped: int,
+                  ts_type: DataType) -> DataFrame:
+    """The 'w' row's columns for ``tagged_state``: the event-time
+    watermark (None until an event is seen) and the dropped-late
+    count."""
+    return spark.createDataFrame([("w",)], "kind string").select(
+        F.lit(wm).cast(ts_type).alias("wm"),
+        F.lit(dropped).cast("long").alias("dropped"))
+
+
+def first_watermark(ev: DataFrame, lateness_s: int):
+    """(watermark, horizon) of the first batch ever seen, from one
+    max-ts collect. An empty batch has no watermark and splits
+    nothing, so any horizon serves it."""
+    wm = ev.agg(F.max("ts")).collect()[0][0]
+    if wm is None:
+        return None, dt.datetime(1970, 1, 2)
+    return wm, wm - dt.timedelta(seconds=lateness_s)
+
+
 def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):
     """Shared watermark-fold prologue for the allowed-lateness
     maintainers (late_transitions.py, late_sessions.py,
@@ -116,8 +154,8 @@ def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):
     interleave). An event exactly LATENESS late is therefore DROPPED
     and counted, which both modules' docstrings state as the contract.
 
-    Returns (wm_old, dropped_old, wm_new, horizon_new, admitted,
-    n_late), with wm_new None iff no event has ever been seen.
+    Returns (dropped_old, wm_new, horizon_new, admitted, n_late),
+    with wm_new None iff no event has ever been seen.
 
     r12 optimization (guide §1.2: fewer driver-coordinated passes):
     the 'w' scalar read and the batch (max ts, late count) aggregate
@@ -130,8 +168,6 @@ def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):
     batch aggregates to one all-NULL row, so the 'w' branch of the
     union still delivers the scalars).
     """
-    import datetime as dt
-
     w = prev.filter(F.col("kind") == "w").select("wm", "dropped")
     batch_agg = (
         ev.crossJoin(F.broadcast(w.select(F.col("wm").alias("_wm"))))
@@ -166,7 +202,7 @@ def watermark_prologue(prev: DataFrame, ev: DataFrame, lateness_s: int):
                    else wm_new - dt.timedelta(seconds=lateness_s))
     admitted = (ev if horizon_old is None
                 else ev.filter(F.col("ts") > F.lit(horizon_old)))
-    return wm_old, dropped, wm_new, horizon_new, admitted, n_late
+    return dropped, wm_new, horizon_new, admitted, n_late
 
 
 def dropped_late_count(state: DataFrame) -> int:
@@ -186,8 +222,6 @@ def ts_split(ev: DataFrame, held_back_s: int | None = None
     withholds the slice (mid - held_back_s, mid - HELD_BACK_EDGE_S]
     and batch 2 delivers it, so those events land 3 h to
     ``held_back_s`` below batch 1's maximum."""
-    import datetime as dt
-
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
     mid = (lo + (hi - lo) / 2) if lo is not None else dt.datetime(1970, 1, 1)
     first, second = F.col("ts") <= F.lit(mid), F.col("ts") > F.lit(mid)

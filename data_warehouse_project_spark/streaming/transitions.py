@@ -9,7 +9,8 @@ it computes only the batch's NEW transitions (including the one that
 crosses the batch boundary, via a carried per-user last-event row) and
 adds them into a persisted count state.
 
-State design — ONE parquet table, two row kinds, one atomic swap:
+State design — ONE parquet table, two row kinds (the
+state_fold.tagged_state layout), one atomic swap:
 - kind='c': (prev_type, next_type, n) additive transition counts;
 - kind='l': (user_id, last_ts, last_event_id, last_type) — each
   user's latest event, the carry that stitches the first event of the
@@ -43,11 +44,7 @@ from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
 from .batch_parity import TRANSITION_TOP_K, EVENTS_TRANSITIONS_SQL
-from .state_fold import replay, ts_split
-
-#: unified state schema (kind 'c' = count row, 'l' = last-event row)
-_STATE_COLS = ["kind", "prev_type", "next_type", "n",
-               "user_id", "last_ts", "last_event_id", "last_type"]
+from .state_fold import replay, tagged_state, ts_split
 
 
 def _events_cols(events: DataFrame) -> DataFrame:
@@ -73,21 +70,7 @@ def transitions_state(events: DataFrame) -> DataFrame:
             F.struct("ts", "event_id")).alias("s"))
         .select("user_id", "s.last_ts", "s.last_event_id", "s.last_type")
     )
-    return (
-        counts.select(
-            F.lit("c").alias("kind"), "prev_type", "next_type", "n",
-            F.lit(None).cast("long").alias("user_id"),
-            F.lit(None).cast(last.schema["last_ts"].dataType)
-            .alias("last_ts"),
-            F.lit(None).cast("long").alias("last_event_id"),
-            F.lit(None).cast("string").alias("last_type"))
-        .unionByName(last.select(
-            F.lit("l").alias("kind"),
-            F.lit(None).cast("string").alias("prev_type"),
-            F.lit(None).cast("string").alias("next_type"),
-            F.lit(None).cast("long").alias("n"),
-            "user_id", "last_ts", "last_event_id", "last_type"))
-    )
+    return tagged_state(c=counts, l=last)
 
 
 def merge_transitions_state(prev: DataFrame,
@@ -132,21 +115,7 @@ def merge_transitions_state(prev: DataFrame,
             F.struct("ts", "event_id")).alias("s"))
         .select("user_id", "s.last_ts", "s.last_event_id", "s.last_type")
     )
-    return (
-        counts.select(
-            F.lit("c").alias("kind"), "prev_type", "next_type", "n",
-            F.lit(None).cast("long").alias("user_id"),
-            F.lit(None).cast(last.schema["last_ts"].dataType)
-            .alias("last_ts"),
-            F.lit(None).cast("long").alias("last_event_id"),
-            F.lit(None).cast("string").alias("last_type"))
-        .unionByName(last.select(
-            F.lit("l").alias("kind"),
-            F.lit(None).cast("string").alias("prev_type"),
-            F.lit(None).cast("string").alias("next_type"),
-            F.lit(None).cast("long").alias("n"),
-            "user_id", "last_ts", "last_event_id", "last_type"))
-    )
+    return tagged_state(c=counts, l=last)
 
 
 def state_to_report(state: DataFrame) -> DataFrame:

@@ -16,11 +16,16 @@ from data_warehouse_project_spark import registry
 from data_warehouse_project_spark.cache import release_all
 from data_warehouse_project_spark.metrics import codegen_compiles
 from data_warehouse_project_spark.session import STATIC_CONFS
-from tests.test_job_budget import BUDGET, budget_sf_dir  # noqa: F401
+from tests.test_job_budget import budget_sf_dir  # noqa: F401
 
-#: the job-budget star ops plus two incremental maintainers
-QUERIES = sorted(BUDGET["jobs"]) + ["events_distinct_users_incremental",
-                                    "docs_dedup_ingest_incremental"]
+#: the six star ops plus two incremental maintainers. The job budget's
+#: late-tolerant replays stay out: AQE re-plans the sessions replay
+#: between calls, so its warm pass compiles 0 to 25 classes
+QUERIES = ["bloom_semijoin_revenue", "bm25_top_docs",
+           "flagship_my_registrations", "q6_forecast_revenue",
+           "rollup_status_priority", "window_running_totals",
+           "events_distinct_users_incremental",
+           "docs_dedup_ingest_incremental"]
 
 #: Compiles of a warm pass, measured at sf0.01 over 12 warm passes:
 #: 0 to 8, in units of 4 from bm25_top_docs and

@@ -1888,19 +1888,21 @@ def test_mg_streaming_maintainer_restart(spark, tmp_path):
 
 def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
     """Plan-pin (VERDICT r7 #7): one MERGE fold of each late-tolerant
-    maintainer performs at most 4 driver actions — the batch-id
-    sentinel read, the two watermark_prologue bounded-state reads,
-    and the atomic state write. Their local wall time is driver-
-    action-count bound, so a refactor that silently adds per-batch
-    round-trips is the one regression class the wall-time standings
-    would mask; this budget catches it. Counts every action class:
-    collect / count / toPandas / localCheckpoint / writer save."""
+    maintainer (transitions, sessions, interval join) performs at most
+    3 driver actions — the batch-id sentinel read, watermark_prologue's
+    one merged collect, and the atomic state write — and the first
+    fold at most 2 (first_watermark's collect and the write). Their
+    local wall time is driver-action-count bound, so a refactor that
+    silently adds per-batch round-trips is the one regression class
+    the wall-time standings would mask; this budget catches it.
+    Counts every action class: collect / count / toPandas /
+    localCheckpoint / writer save."""
     import datetime as dt
 
-    import pyspark.sql as psql
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from data_warehouse_project_spark.streaming import (late_sessions as S,
+    from data_warehouse_project_spark.streaming import (interval_join as J,
+                                                        late_sessions as S,
                                                         late_transitions as T)
 
     actions = {"n": 0}
@@ -1911,10 +1913,14 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
             return orig(self, *a, **kw)
         return wrapped
 
-    for cls, name in [(psql.DataFrame, "collect"),
-                      (psql.DataFrame, "count"),
-                      (psql.DataFrame, "toPandas"),
-                      (psql.DataFrame, "localCheckpoint"),
+    # patch the session's concrete frame class: it overrides the
+    # actions of pyspark.sql.DataFrame, so a patch on that base class
+    # never sees a collect
+    frame = type(spark.range(1))
+    for cls, name in [(frame, "collect"),
+                      (frame, "count"),
+                      (frame, "toPandas"),
+                      (frame, "localCheckpoint"),
                       (DataFrameWriter, "parquet"),
                       (DataFrameWriter, "save"),
                       (DataFrameWriter, "csv"),
@@ -1935,20 +1941,26 @@ def test_late_fold_driver_action_budget(spark, tmp_path, monkeypatch):
             [(u, e, dt.datetime(2024, 1, 1, h), et, 1.0)
              for u, e, h, et in rows], s_schema)
 
-    for mod, batch, init, merge in [
+    # event types at hours 0, 5 and 10 (the hour-5 event arrives late);
+    # the interval join folds only clicks and purchases, so its batches
+    # carry those types and its merge runs past the empty-watermark exit
+    for mod, batch, init, merge, (t0, t5, t10) in [
             (T, t_batch, T.late_transitions_state,
-             T.merge_late_transitions_state),
+             T.merge_late_transitions_state, "abc"),
             (S, s_batch, S.late_sessions_state,
-             S.merge_late_sessions_state)]:
+             S.merge_late_sessions_state, "abc"),
+            (J, s_batch, J.interval_join_state,
+             J.merge_interval_join_state,
+             ("click", "purchase", "click"))]:
         state = str(tmp_path / f"state_{mod.__name__.rsplit('.', 1)[-1]}")
-        b0 = batch([(1, 10, 0, "a"), (1, 11, 10, "c")])
-        b1 = batch([(1, 20, 5, "b")])
+        b0 = batch([(1, 10, 0, t0), (1, 11, 10, t10)])
+        b1 = batch([(1, 20, 5, t5)])
         actions["n"] = 0
         assert fold_batch(b0, 0, state, init, merge) is True
-        assert actions["n"] <= 3, (mod.__name__, "init", actions["n"])
+        assert actions["n"] <= 2, (mod.__name__, "init", actions["n"])
         actions["n"] = 0
         assert fold_batch(b1, 1, state, init, merge) is True
-        assert actions["n"] <= 4, (mod.__name__, "merge", actions["n"])
+        assert actions["n"] <= 3, (mod.__name__, "merge", actions["n"])
 
 
 # ---------------------------------------------------------------------------
