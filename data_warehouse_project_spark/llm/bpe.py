@@ -338,18 +338,13 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's exact training slice. The corpus-scale trainer
     (bpe_merge_rules) stays fully distributed. Measured at sf0.1:
     5.77 s → 3.2 s standing."""
-    from ..cache import pin
     cat = Catalog(spark, sf_dir)
     train_wc = [(r["word"], r["n"])
                 for r in word_symbol_state(
                     cat.documents.orderBy("doc_id").limit(BPE_TRAIN_DOCS))
                 .select("word", "n").collect()]
     rules = reference_merges(train_wc, N_MERGES)
-    # counts feeds BOTH the distinct-word frame and the final stats
-    # join — unpinned, the corpus scan + (source, word) groupBy runs
-    # twice (once under the encode head's localCheckpoint, once in
-    # the final join).
-    counts = pin(_source_word_counts(cat.documents))
+    counts = _source_word_counts(cat.documents)
     words = (counts.select("word").distinct()
              .withColumn(
                  "symbols",

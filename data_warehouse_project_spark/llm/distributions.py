@@ -204,14 +204,13 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     separated labels; a drift toward 1.0 flags encoder collapse).
 
     One corpus-scale posexplode collapsed map-side to (label, dim)
-    groups (pinned); centroids, self-norms, and all pairwise dots are
+    groups; centroids, self-norms, and all pairwise dots are
     aggregates over that labels×dims frame — label-pair count is
     bounded, nothing downstream touches the corpus. Per-dim product
     terms are quantized to integers before summing (order-independent,
     SURVEY.md §7.4.4), and sqrt is IEEE-correctly-rounded, so the
     cosine is exact-deterministic cross-engine — no libm risk.
     """
-    from ..cache import pin
     cat = Catalog(spark, sf_dir)
     ex = (
         cat.embeddings
@@ -221,7 +220,7 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("x").cast("double") * F.lit(_Q)
                         + F.lit(0.5)).cast("long").alias("q"))
     )
-    cent = pin(
+    cent = (
         ex.groupBy("label", "dim")
         .agg(F.count("*").cast("long").alias("n"), F.sum("q").alias("sq"))
         .select("label", "dim",

@@ -55,11 +55,7 @@ def source_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy(lang) over the corpus; everything after runs on the
     #langs-row aggregate with a broadcast one-row total."""
     cat = Catalog(spark, sf_dir)
-    from ..cache import pin
-    # pin the #langs-row aggregate: the temperature chain consumes it
-    # four times (itself, tot, wtot, final) — unpinned, each branch
-    # re-tokenized the corpus (review finding: 4 scans)
-    per_lang = pin(_lang_tokens(cat))
+    per_lang = _lang_tokens(cat)
     tot = per_lang.agg(F.sum("n_tokens").alias("t_tokens"))
     with_p = (
         per_lang.join(tot)
@@ -139,13 +135,11 @@ def lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit reads before trusting per-language splits. Explode →
     distinct keys one shuffle on (lang, term); the pair join runs on
     the VOCABULARY (term-keyed, each term carrying its ≤ #langs
-    rows), never on documents. The vocab aggregate is pinned
-    (cache.pin) so the corpus is tokenized ONCE — its three
-    consumers (sizes + both join sides) would otherwise each
-    re-scan and re-explode the raw text."""
-    from ..cache import pin
+    rows), never on documents. The vocab aggregate's three consumers
+    (sizes + both join sides) read one (lang, term) exchange, which
+    the executed plan reuses, so the corpus is tokenized once."""
     cat = Catalog(spark, sf_dir)
-    vocab = pin(_lang_vocab(cat))
+    vocab = _lang_vocab(cat)
     sizes = vocab.groupBy("lang").agg(F.count("*").cast("long").alias("v"))
     a = vocab.select(F.col("lang").alias("lang_a"), "term")
     b = vocab.select(F.col("lang").alias("lang_b"), "term")

@@ -49,13 +49,8 @@ def bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     toks = cat.documents.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("tokens"))
-    from ..cache import pin
-    # pin the (doc_id, dl) frame: the scoring join and the scalars
-    # broadcast both consume it — unpinned, each branch re-tokenized
-    # the corpus (review finding: 4 parquet scans in the executed
-    # plan). cand keeps its own single tokenize-explode pass.
-    doclen = pin(toks.select(
-        "doc_id", F.size("tokens").cast("long").alias("dl")))
+    doclen = toks.select(
+        "doc_id", F.size("tokens").cast("long").alias("dl"))
     cand = (
         toks.select("doc_id", F.explode("tokens").alias("term"))
         .filter(F.col("term").isin(BM25_QUERY_TERMS))

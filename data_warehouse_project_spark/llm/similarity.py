@@ -17,7 +17,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import cache
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
@@ -493,13 +492,8 @@ def cosine_pair_dedup(vecs: DataFrame, chunk: int = MAX_VEC_BUCKET,
     """
     if n is None:
         # the adaptive dial needs the corpus size, which costs one
-        # bounded action — pin the corpus first so the sizing scan is
-        # reused by the banding projection and both verify joins
-        # instead of re-reading (and, for derived corpora like the
-        # planted pipeline, re-computing) the input per reference
-        # (ADVICE r11 #1). Plan-only callers pass a precomputed n to
+        # bounded action. Plan-only callers pass a precomputed n to
         # stay fully lazy.
-        vecs = cache.pin(vecs)
         n = vecs.count()
     bands_n, bits_n = _adaptive_lsh_params(n)
     buckets_udf = _band_buckets_udf(bands_n, bits_n)
@@ -969,18 +963,17 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one broadcast of the bounded anchor set against one corpus
     scan (the knn_batch shape — no N separate jobs, no corpus
-    self-join); the scored frame is pinned and both rank-1 picks
-    (positive / negative) consume it via per-anchor top-1 windows
+    self-join); both rank-1 picks (positive / negative) consume the
+    scored frame via per-anchor top-1 windows
     over the anchors×corpus-bounded frame. Ties break on (cos_sim
     DESC, vec_id ASC) in both engines."""
-    from ..cache import pin
     from ..operators.windows import top_k_per_group
     cat = Catalog(spark, sf_dir)
     queries = (cat.embeddings.filter(F.col("vec_id") < N_HN_ANCHORS)
                .select(F.col("vec_id").alias("anchor_id"),
                        F.col("label").alias("anchor_label"),
                        F.col("embedding").alias("b")))
-    scored = pin(
+    scored = (
         cat.embeddings
         .withColumnRenamed("embedding", "a")
         .join(F.broadcast(queries), F.col("vec_id") != F.col("anchor_id"))

@@ -202,8 +202,7 @@ def _join_size_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch alone as min over rows of Σ_b cell². The same estimator
     with two different sketches prices any equi-join; the self-join
     keeps the oracle's exact side one aggregate."""
-    from ..cache import pin
-    counts = pin(_custkey_counts(Catalog(spark, sf_dir).orders))
+    counts = _custkey_counts(Catalog(spark, sf_dir).orders)
     per_seed = (cms_table(counts)
                 .groupBy("seed")
                 .agg(F.sum(F.col("n") * F.col("n")).cast("long").alias("ip")))
@@ -723,8 +722,7 @@ def mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a one-shot reduce every survivor's underestimate equals the
     subtracted (k+1)-th weight; the fold gates below prove the bound
     where it is non-trivial (multi-batch merge trees)."""
-    from ..cache import pin
-    counts = pin(_token_counts(Catalog(spark, sf_dir).documents))
+    counts = _token_counts(Catalog(spark, sf_dir).documents)
     summary = mg_reduce(counts.select(
         "token", F.col("n_exact").alias("weight")))
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))

@@ -493,7 +493,8 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric association strength).
 
     Scale: two corpus explode passes (unigram and bigram counts, both
-    map-side-combined to vocabulary-sized keys, both pinned), then
+    map-side-combined to vocabulary-sized keys; the bigram counts are
+    pinned), then
     vocabulary-keyed joins and a broadcast one-row totals attach —
     nothing downstream of the counts touches the corpus. Ranking
     orders by the ROUNDED pmi then the bigram text, so cross-engine
@@ -504,7 +505,7 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     toks = cat.documents.withColumn(
         "tokens", F.split(F.trim(F.col("text")), r"\s+"))
-    uni = pin(
+    uni = (
         toks.select(F.explode("tokens").alias("w"))
         .groupBy("w").agg(F.count("*").cast("long").alias("c_uni")))
     pairs = pin(

@@ -227,9 +227,9 @@ def bloom_filter_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; nothing transcendental enters the compare."""
     from ..cache import pin
     cat = Catalog(spark, sf_dir)
-    dim = pin(_small_parts(cat).select("p_partkey"))
+    dim = _small_parts(cat).select("p_partkey")
     bits = pin(bloom_bits(dim, ["p_partkey"], BLOOM_M))
-    fact = pin(cat.lineitem.select("l_partkey"))
+    fact = cat.lineitem.select("l_partkey")
     passed = pin(bloom_probe(fact, ["l_partkey"], bits, BLOOM_M))
     true_match = fact.join(dim,
                            F.col("l_partkey") == F.col("p_partkey"),

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..cache import pin
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
@@ -72,11 +71,11 @@ def acf_fold(daily: DataFrame, max_lag: int = _ACF_MAX_LAG) -> DataFrame:
     """
     base = daily.agg(F.count("*").cast("long").alias("n"),
                      F.sum("v").cast("long").alias("s"))
-    r = pin(daily
-            .crossJoin(base)
-            .select("day",
-                    (F.col("v") - F.expr("s DIV n")).cast("long")
-                    .alias("r")))
+    r = (daily
+         .crossJoin(base)
+         .select("day",
+                 (F.col("v") - F.expr("s DIV n")).cast("long")
+                 .alias("r")))
     den = r.agg(F.sum(F.col("r") * F.col("r")).cast("long").alias("den"))
     w = Window.orderBy("day")
     lagged = r.select(
@@ -191,13 +190,13 @@ def xcorr_fold(daily: DataFrame, max_lag: int = _XCORR_MAX_LAG) -> DataFrame:
     base = daily.agg(F.count("*").cast("long").alias("n"),
                      F.sum("x").cast("long").alias("sx"),
                      F.sum("y").cast("long").alias("sy"))
-    r = pin(daily
-            .crossJoin(base)
-            .select("day",
-                    (F.col("x") - F.expr("sx DIV n")).cast("long")
-                    .alias("rx"),
-                    (F.col("y") - F.expr("sy DIV n")).cast("long")
-                    .alias("ry")))
+    r = (daily
+         .crossJoin(base)
+         .select("day",
+                 (F.col("x") - F.expr("sx DIV n")).cast("long")
+                 .alias("rx"),
+                 (F.col("y") - F.expr("sy DIV n")).cast("long")
+                 .alias("ry")))
     den = r.agg(F.sum(F.col("rx") * F.col("rx")).cast("long")
                 .alias("den_x"),
                 F.sum(F.col("ry") * F.col("ry")).cast("long")

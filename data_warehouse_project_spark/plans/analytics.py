@@ -44,10 +44,7 @@ def part_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counts → top-K → join-back of the per-part order counts for
     lift."""
     cat = Catalog(spark, sf_dir)
-    from ..cache import pin
-    # both lift denominators and the pair generator read one pinned
-    # basket frame
-    baskets = pin(_kept_baskets(cat.lineitem))
+    baskets = _kept_baskets(cat.lineitem)
     pairs = (
         _basket_pairs(baskets, triangular=True)
         .select(F.col("src").alias("part_a"), F.col("dst").alias("part_b"))

@@ -251,11 +251,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from a bounded distinct-value histogram (days for R, event
     counts for F, whole currency units for M) and broadcasts back;
     the final aggregate has ≤ 64 segment rows. cum*4 >= k*n is the
-    integer form of cum >= ceil(k*n/4) — no FP anywhere in scoring.
-    The per-user aggregate is pinned (cache.pin): its four consumers
-    (three quartile histograms + the scoring pass) would otherwise
-    each re-scan and re-aggregate the raw events."""
-    from ..cache import pin
+    integer form of cum >= ceil(k*n/4) — no FP anywhere in scoring."""
     cat = Catalog(spark, sf_dir)
     anchor = cat.events.agg(F.max(F.to_date("ts")).alias("anchor"))
     users = (
@@ -277,7 +273,6 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.floor(F.col("mon_cents") / F.lit(100.0)).cast("long"))
         .drop("anchor", "last_ts")
     )
-    users = pin(users)
     # ONE stacked histogram pass computes all nine quartile bounds:
     # (dim, value) counts shuffle once, the ranking windows partition
     # by dim (never single-partition), and the bounds pivot into a

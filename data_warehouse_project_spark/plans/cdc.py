@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from ..cache import pin
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
@@ -192,7 +191,7 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     rows = []
     for label, table, key in _SKEW_EDGES:
-        g = pin(
+        g = (
             cat.table(table)
             .filter(F.col(key).isNotNull())
             .groupBy(F.col(key).alias("k"))

@@ -607,13 +607,11 @@ def events_type_arm_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one events scan -> (type, arm) counts (bounded grid);
     marginals and the grid completion are grid-sized broadcasts.
     """
-    from ..cache import pin
-
     cat = Catalog(spark, sf_dir)
-    cells = pin(cat.events
-                .select("event_type", _arm().alias("arm"))
-                .groupBy("event_type", "arm")
-                .agg(F.count("*").cast("long").alias("o")))
+    cells = (cat.events
+             .select("event_type", _arm().alias("arm"))
+             .groupBy("event_type", "arm")
+             .agg(F.count("*").cast("long").alias("o")))
     rt = cells.groupBy("event_type").agg(
         F.sum("o").cast("long").alias("rt"))
     ct = cells.groupBy("arm").agg(F.sum("o").cast("long").alias("ct"))

@@ -165,8 +165,8 @@ def pagerank_topk(lineitem: DataFrame, part: DataFrame,
     # cached partitions measured as pure overhead: the full bench ran
     # FASTER at 8 cores than 32).
     edges = _compact_pin(edges, edges.count())
-    deg = pin(edges.groupBy("src")
-              .agg(F.count("*").cast("long").alias("deg")))
+    deg = (edges.groupBy("src")
+           .agg(F.count("*").cast("long").alias("deg")))
     # nodes = every part with at least one co-purchase (deg >= 1 by
     # construction, so there are no dangling nodes to redistribute).
     # State carries (src, deg, rank) so contrib needs NO rank⋈deg
@@ -310,13 +310,10 @@ def affinity_topk(lineitem: DataFrame, k: int = AFFINITY_TOP_K) -> DataFrame:
                   .agg(F.count("*").cast("long").alias("w")))
 
     wn = Window.partitionBy("src").orderBy(F.desc("w"), "dst")
-    from ..cache import pin
-    # head feeds both wedge sides and hsize — pin it so the weighted
-    # self-join + window runs once, not three times.
-    head = pin(wedges_src
-               .withColumn("rn", F.row_number().over(wn))
-               .filter(F.col("rn") <= AFFINITY_CAP)
-               .select("src", "dst"))
+    head = (wedges_src
+            .withColumn("rn", F.row_number().over(wn))
+            .filter(F.col("rn") <= AFFINITY_CAP)
+            .select("src", "dst"))
     # in-membership counts |S_x| = #contexts whose head contains x
     hsize = head.groupBy("dst").agg(F.count("*").cast("long").alias("hs"))
     left = head.select(F.col("src").alias("c"), F.col("dst").alias("pa"))

@@ -26,14 +26,12 @@ WITHIN blocks — quadratic in block size, never in corpus size. The
 blocking key (one giant block) is observable in the result rather
 than hidden in a plan metric; production blocking for heavy-tailed
 dictionaries adds a second key (length band is already applied here).
-The dictionary is pinned once and feeds both join sides.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..cache import pin
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -47,7 +45,7 @@ def fuzzy_name_linkage(rows: DataFrame, name_col: str,
     dictionary: pairs (name_a < name_b) sharing a trailing-token block
     with Levenshtein distance <= ``lev_max``, carrying per-name
     support counts (rows_a / rows_b) back from the corpus."""
-    dic = pin(
+    dic = (
         rows.groupBy(F.col(name_col).alias("name"))
         .agg(F.count("*").cast("long").alias("n_rows"))
         .withColumn("block", F.regexp_extract("name", "[^ ]+$", 0))

@@ -25,8 +25,7 @@ huge at warehouse scale: the documented production path is two-phase
 (approx-quantile cut candidates + a counting pass), with THIS exact
 form run on sampled audits; for bounded-cardinality group values the
 window sort itself is still a single range-sort per group with
-map-side-combinable downstream aggregation. The ranked frame is
-pinned: bounds extraction and the clamped fold both consume it.
+map-side-combinable downstream aggregation.
 """
 
 from __future__ import annotations
@@ -48,7 +47,7 @@ def winsorized_stats(vals: DataFrame, group_col: str) -> DataFrame:
     Returns one row per group: n, p_lo / p_hi (the winsor bounds as
     currency), mean, winsorized_mean, trimmed_mean."""
     w = Window.partitionBy(group_col).orderBy("cents")
-    ranked = pin(
+    ranked = (
         vals
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .withColumn("n", F.count("*")

@@ -284,11 +284,7 @@ def q11_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(cat.nation.filter(F.col("n_name") == "NATION_3"),
                    F.col("s_nationkey") == F.col("n_nationkey"))
              .select("s_suppkey"))
-    from ..cache import pin
-    # pin: the scalar-total branch otherwise re-runs the whole
-    # lineitem⋈supp3 aggregation (the TTL-eviction lineage-doubling
-    # pattern, round-7 audit)
-    per_part = pin(
+    per_part = (
         cat.lineitem
         .join(F.broadcast(supp3), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")

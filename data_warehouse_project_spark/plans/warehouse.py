@@ -1073,12 +1073,6 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      "n_name"),
                    F.col("s_nationkey") == F.col("n_nationkey"))
              .select(F.col("n_name").alias("nation"), "cents"))
-    from ..cache import pin
-    # keyed feeds tot, the hhi share terms, and the final join —
-    # pin the suppliers-sized frame so the lineitem collapse runs
-    # once (the docstring's "everything after is suppliers-sized"
-    # claim holds only with this persist)
-    keyed = pin(keyed)
     tot = keyed.groupBy("nation").agg(
         F.sum("cents").alias("tot"),
         F.count("*").cast("long").alias("n_suppliers"),

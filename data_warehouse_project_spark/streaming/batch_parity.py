@@ -688,14 +688,13 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionizer's output.
 
     Scale: composes events_sessionize (one user-keyed window pass),
-    pins the session aggregate (cache.pin — three consumers: the
-    count/fraction aggregate and two quantile histograms), and takes
+    aggregates sessions for the count/fraction row and two quantile
+    histograms, and takes
     every percentile from a BOUNDED histogram (minutes, event
     counts) — windows see distinct values only, never sessions.
     cum·K >= n·q is the integer rank form; fractions are single
     IEEE divides of exact integers."""
-    from ..cache import pin
-    sessions = pin(
+    sessions = (
         events_sessionize(spark, sf_dir)
         .select(
             F.col("n_events").cast("long").alias("n_events"),

@@ -61,7 +61,7 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from shuffle_audit import (  # noqa: E402
-    AUDIT_CORES, GROWTH_HEADROOM, HEADROOM, gate_violations)
+    AUDIT_CORES, GROWTH_HEADROOM, HEADROOM, gate_violations, measure)
 
 BOUNDS_PATH = os.path.join(REPO, "tests", "sf1_bounds.json")
 SRC = "/root/testdata/sf0.1"
@@ -248,28 +248,6 @@ def ensure_built(spark, families) -> None:
               f"{time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
 
-def measure(spark, families) -> dict[str, dict[str, dict[str, int]]]:
-    from data_warehouse_project_spark import registry
-    from data_warehouse_project_spark.cache import release_all
-    from data_warehouse_project_spark.metrics import measure_query_shuffle
-
-    qs = registry.queries()
-    measured: dict[str, dict[str, dict[str, int]]] = {
-        "sf0.1": {}, "sf1.0": {}}
-    for fam in families:
-        for name in FAMILIES[fam][0]:
-            for sk, sf_dir in (("sf0.1", SRC), ("sf1.0", DST)):
-                t0 = time.perf_counter()
-                m = measure_query_shuffle(spark, qs[name], sf_dir)
-                release_all()
-                measured[sk][name] = m
-                print(f"# [{sk}] {name}: "
-                      f"write={m['shuffle_write_bytes']:,}B "
-                      f"spill={m['spilled_bytes']:,}B "
-                      f"({time.perf_counter()-t0:.1f}s)", file=sys.stderr)
-    return measured
-
-
 def gate(measured, rec) -> list[dict]:
     """shuffle_audit's three-kind gate, plus the spill allowlist."""
     violations = gate_violations(measured, rec)
@@ -299,10 +277,10 @@ def main() -> int:
         return 2
 
     from data_warehouse_project_spark.session import get_spark
-    spark = get_spark("sf1-regression", cpus=AUDIT_CORES)
-    ensure_built(spark, families)
-    measured = measure(spark, families)
-    spark.stop()
+    ensure_built(get_spark("sf1-regression", cpus=AUDIT_CORES), families)
+    # shuffle_audit.measure reuses (and stops) the session built above
+    measured = measure([SRC, DST],
+                       [n for fam in families for n in FAMILIES[fam][0]])
 
     if record:
         rec = {"headroom": HEADROOM, "growth_headroom": GROWTH_HEADROOM,

@@ -1,5 +1,8 @@
-"""Job budget of the star-dashboard registry queries and the two
-late-tolerant replays.
+"""Job budget of the star-dashboard registry queries, the loop and
+replay queries (the two late-tolerant replays, the dedup bridge, the
+BPE trainer and the near-dup ingest), and the queries whose jobs the
+`cache.pin` sweep cut by three or more, so a change that re-adds a
+barrier to any of them fails here.
 
 At the test and bench scales a query's cost is mostly the fixed cost
 of each Spark job it launches, not data volume, so the job count is
@@ -8,9 +11,10 @@ plan. `tests/job_budget.json` records, per query, the jobs of one warm
 call (the second one in the session): building the frame, including
 any eager actions of the query function, plus a noop-sink execute. A
 change that adds a job to any of them fails here; a change that
-removes jobs lowers the recorded count with it. Where AQE re-plans a
-query between sessions (`events_sessions_late_tolerant` reads 23 or
-24), the budget is the largest warm count seen.
+removes jobs lowers the recorded count with it. Each budget is the
+largest warm count over at least five fresh sessions, so where AQE
+re-plans a query between sessions (`events_sessions_late_tolerant`
+reads 23 or 24) the extra job is absorbed for that query alone.
 """
 
 from __future__ import annotations

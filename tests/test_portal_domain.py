@@ -9,7 +9,11 @@ effective schema — pinning the FIXTURES.md §B edge rows:
 - soft-deleted event excluded from listings (ref db.py:274) but still
   joinable from old registrations
 - free event price==0.0 path (ref app.py:242)
-- card masking last-4 (ref app.py:303)
+- card masking last-4 (ref app.py:303): saved cards are stored
+  Fernet-encrypted, listed newest-first per user, and decrypted only
+  to be masked (ref db.py:426-433)
+- "most recent card" = max card_id, none for a user without cards
+  (O4, ref app.py:290,328)
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_project_spark import schemas
+from data_warehouse_project_spark.functions import crypto
 from data_warehouse_project_spark.plans import portal
 
 
@@ -65,8 +70,25 @@ def domain(spark):
         (1004, 1, 103, None, 0.0, "Free", "Success",
          ts("2026-08-03T09:00:00")),
     ], schema=schemas.PAYMENTS)
-    return {"users": users, "app_events": app_events,
-            "registrations": registrations, "payments": payments}
+    domain = {"users": users, "app_events": app_events,
+              "registrations": registrations, "payments": payments}
+    if crypto.HAVE_FERNET:
+        key = crypto.Fernet.generate_key()
+        plain = spark.createDataFrame([
+            # (card_id, user_id, holder, number, cvv, expiry)
+            (7, 1, "Ada L", "4111111111111111", "123", "01/29"),
+            (9, 1, "Ada L", "5500000000000004", "456", "02/30"),
+            (8, 2, "Root A", "340000000000009", "789", "03/31"),
+        ], "card_id long, user_id long, card_holder_name string, "
+           "card_number string, cvv string, expiry_date string")
+        domain["saved_cards"] = plain.select(
+            "card_id", "user_id", "card_holder_name",
+            crypto.encrypt_col(F.col("card_number"), key)
+            .alias("card_number_encrypted"),
+            crypto.encrypt_col(F.col("cvv"), key).alias("cvv_encrypted"),
+            "expiry_date")
+        domain["card_key"] = key
+    return domain
 
 
 def test_authenticate_good_and_bad(domain):
@@ -125,3 +147,31 @@ def test_time_wraparound_mod24(spark, domain):
     }
     assert out[10] == "02:00"     # 26h wraps to 02:00 (ref app.py:224-228)
     assert out[11] == "09:00"
+
+
+needs_fernet = pytest.mark.skipif(not crypto.HAVE_FERNET,
+                                  reason="cryptography missing")
+
+
+@needs_fernet
+def test_saved_cards_masked_decrypts_filters_and_orders(domain):
+    key = domain["card_key"]
+    rows = portal.saved_cards_masked(
+        domain["saved_cards"], 1,
+        lambda c: crypto.decrypt_col(c, key)).collect()
+    # user 1's cards only, card_id DESC, decrypted then masked to last 4
+    assert [(r["card_id"], r["card_masked"]) for r in rows] == [
+        (9, "****0004"), (7, "****1111")]
+    assert rows[0]["card_holder_name"] == "Ada L"
+    assert rows[0]["expiry_date"] == "02/30"
+    assert portal.saved_cards_masked(
+        domain["saved_cards"], 3,
+        lambda c: crypto.decrypt_col(c, key)).collect() == []
+
+
+@needs_fernet
+def test_latest_card_is_max_card_id(domain):
+    cards = domain["saved_cards"]
+    assert [r["card_id"] for r in portal.latest_card(cards, 1).collect()] == [9]
+    assert [r["card_id"] for r in portal.latest_card(cards, 2).collect()] == [8]
+    assert portal.latest_card(cards, 3).collect() == []
