@@ -31,6 +31,8 @@ from data_warehouse_project_spark import registry
 from data_warehouse_project_spark.metrics import (BYTE_KEYS, group_profile,
                                                   job_group)
 from data_warehouse_project_spark.session import get_spark
+from data_warehouse_project_spark.sources.catalog import (DEFAULT_SF_DIR,
+                                                         Catalog)
 
 #: headline queries: the flagship + every workload family
 HEADLINE = [
@@ -126,7 +128,7 @@ HEADLINE = [
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     # run identity: the SAME id is stamped into both the stdout JSON
     # line and BENCH_LOCAL.json, so a reader can verify a captured
@@ -145,7 +147,6 @@ def main() -> None:
 
     # Warm-up: touch every input table once (JVM/JIT + file metadata),
     # untimed — we measure query execution, not session bring-up.
-    from data_warehouse_project_spark.sources.catalog import Catalog
     from data_warehouse_project_spark.schemas import STAR_TABLES
     cat = Catalog(spark, sf_dir)
     for t in STAR_TABLES:

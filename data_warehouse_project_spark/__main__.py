@@ -13,7 +13,7 @@ import argparse
 import sys
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     from .sources.catalog import DEFAULT_SF_DIR
 
     parser = argparse.ArgumentParser(prog="data_warehouse_project_spark")
@@ -25,24 +25,23 @@ def main(argv: list[str] | None = None) -> int:
             ("run", "run a query and print rows"),
             ("explain", "print a query's physical plan"),
             ("profile", "run a query twice and print the warm run's "
-                        "Spark jobs and driver gap")):
-        q_p = sub.add_parser(cmd, help=help_)
-        q_p.add_argument("query")
-        q_p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+                        "Spark jobs and driver gap"),
+            ("healthcheck", "run the warehouse audit family (FK "
+                            "integrity, order reconciliation); exit 1 on "
+                            "orphans/NULL FKs")):
+        cmd_p = sub.add_parser(cmd, help=help_)
+        if cmd != "healthcheck":
+            cmd_p.add_argument("query")
+        cmd_p.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     sub.choices["run"].add_argument("--limit", type=int, default=20)
 
-    hc_p = sub.add_parser(
-        "healthcheck",
-        help="run the warehouse audit family (FK integrity, order "
-             "reconciliation); exit 1 on orphans/NULL FKs")
-    hc_p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    args = parser.parse_args()
 
-    args = parser.parse_args(argv)
-
-    from . import registry
+    from .registry import oracle_sql, queries
     if args.cmd == "list":
-        for name, (_, sql) in sorted(registry.REGISTRY.items()):
-            kind = "oracle" if sql else "rows-only"
+        oracles = oracle_sql()
+        for name in sorted(queries()):
+            kind = "oracle" if name in oracles else "rows-only"
             print(f"{name:35s} [{kind}]")
         return 0
 
@@ -130,13 +129,13 @@ def main(argv: list[str] | None = None) -> int:
         print("HEALTHCHECK", "FAIL" if bad else "OK")
         return 1 if bad else 0
 
-    if args.query not in registry.REGISTRY:
+    fn = queries().get(args.query)
+    if fn is None:
         print(f"unknown query {args.query!r}; try 'list'", file=sys.stderr)
         return 2
 
     from .session import get_spark
     spark = get_spark("dwps-cli")
-    fn, _ = registry.REGISTRY[args.query]
     if args.cmd == "profile":
         _profile(spark, args.query, fn, args.sf_dir)
     else:

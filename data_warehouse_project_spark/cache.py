@@ -64,11 +64,11 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_all(blocking: bool = True) -> int:
+def release_all() -> int:
     """Unpersist every pinned frame and return how many were pinned
     (call AFTER materializing the query result — an unpersisted plan
     re-computes if re-executed)."""
     n = len(_PINNED)
     while _PINNED:
-        _PINNED.pop().unpersist(blocking=blocking)
+        _PINNED.pop().unpersist(blocking=True)
     return n

@@ -37,8 +37,7 @@ class Engine:
 
     def query(self, name: str) -> DataFrame:
         """Run a named engine query from the registry."""
-        fn, _ = registry.REGISTRY[name]
-        return fn(self.spark, self.sf_dir)
+        return registry.queries()[name](self.spark, self.sf_dir)
 
     def queries(self) -> list[str]:
-        return sorted(registry.REGISTRY)
+        return sorted(registry.queries())

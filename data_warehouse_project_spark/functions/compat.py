@@ -87,60 +87,57 @@ def sql_fround(expr: str, scale: int) -> str:
     return f"(FLOOR(({expr}) * {s} + 0.5) / {s})"
 
 
-def dsum_shift(total: Column, scale: int = 2, guard: int = GUARD) -> Column:
-    """dsum's final shift: an exact sum of ``guard``-scaled longs,
-    rounded half-up to ``scale`` decimals with one floor and one
-    divide. Maintainers that carry the integer sum in state apply it
-    at serve time."""
-    down = 10 ** (guard - scale)
+def dsum_shift(total: Column) -> Column:
+    """dsum's final shift: an exact sum of ``GUARD``-scaled longs,
+    rounded half-up to 2 decimals with one floor and one divide.
+    Maintainers that carry the integer sum in state apply it at serve
+    time."""
+    down = 10 ** (GUARD - 2)
     out = F.floor((total + F.lit(down // 2)) / F.lit(float(down)))
-    return out.cast("double") / F.lit(float(10 ** scale))
+    return out.cast("double") / F.lit(float(10 ** 2))
 
 
-def dsum(term: Column, scale: int = 2, guard: int = GUARD) -> Column:
-    """Order-independent SUM rounded half-up to ``scale`` decimals."""
-    return dsum_shift(F.sum(_scaled(term, guard)), scale, guard)
+def dsum(term: Column) -> Column:
+    """Order-independent SUM rounded half-up to 2 decimals."""
+    return dsum_shift(F.sum(_scaled(term, GUARD)))
 
 
-def sql_dsum(term_sql: str, scale: int = 2, guard: int = GUARD) -> str:
-    g = float(10 ** guard)
-    down = 10 ** (guard - scale)
+def sql_dsum(term_sql: str) -> str:
+    g = float(10 ** GUARD)
+    down = 10 ** (GUARD - 2)
     return (
         f"(FLOOR((CAST(SUM(CAST(FLOOR(({term_sql}) * {g} + 0.5) AS BIGINT)) "
-        f"AS BIGINT) + {down // 2}) / {float(down)}) / {float(10 ** scale)})"
+        f"AS BIGINT) + {down // 2}) / {float(down)}) / {float(10 ** 2)})"
     )
 
 
-def dsum_over(term: Column, window, scale: int = 2,
-              guard: int = GUARD) -> Column:
+def dsum_over(term: Column, window) -> Column:
     """Windowed variant of dsum."""
-    return dsum_shift(F.sum(_scaled(term, guard)).over(window), scale,
-                      guard)
+    return dsum_shift(F.sum(_scaled(term, GUARD)).over(window))
 
 
-def sql_dsum_over(term_sql: str, over_sql: str, scale: int = 2,
-                  guard: int = GUARD) -> str:
-    g = float(10 ** guard)
-    down = 10 ** (guard - scale)
+def sql_dsum_over(term_sql: str, over_sql: str) -> str:
+    g = float(10 ** GUARD)
+    down = 10 ** (GUARD - 2)
     return (
         f"(FLOOR((CAST(SUM(CAST(FLOOR(({term_sql}) * {g} + 0.5) AS BIGINT)) "
         f"OVER {over_sql} AS BIGINT) + {down // 2}) / {float(down)}) "
-        f"/ {float(10 ** scale)})"
+        f"/ {float(10 ** 2)})"
     )
 
 
-def davg(term: Column, scale: int = 6, guard: int = GUARD) -> Column:
+def davg(term: Column) -> Column:
     """Order-independent AVG: exact integer sum, one IEEE divide,
-    floor-rounded to ``scale`` decimals."""
-    mean = (F.sum(_scaled(term, guard)).cast("double")
-            / (F.lit(float(10 ** guard)) * F.count(term)))
-    return fround(mean, scale)
+    floor-rounded to 6 decimals."""
+    mean = (F.sum(_scaled(term, GUARD)).cast("double")
+            / (F.lit(float(10 ** GUARD)) * F.count(term)))
+    return fround(mean, 6)
 
 
-def sql_davg(term_sql: str, scale: int = 6, guard: int = GUARD) -> str:
-    g = float(10 ** guard)
+def sql_davg(term_sql: str) -> str:
+    g = float(10 ** GUARD)
     mean = (
         f"(CAST(SUM(CAST(FLOOR(({term_sql}) * {g} + 0.5) AS BIGINT)) AS DOUBLE)"
         f" / ({g} * COUNT({term_sql})))"
     )
-    return sql_fround(mean, scale)
+    return sql_fround(mean, 6)

@@ -4,19 +4,20 @@ dedup pair graph.
 Pair lists (from any dedup operator) say "a duplicates b"; keeping one
 representative per *transitive* group needs connected components:
 cluster id = min doc_id reachable through pairs. Spark has no
-recursive CTE, so this is the engine's one driver-coordinated
-iterative algorithm: label-propagation (each node takes the min label
-among itself and its neighbors) to fixpoint — O(diameter) rounds,
-each one join + one aggregation. The DuckDB oracle computes the same
-clusters with a recursive CTE, making this a true differential test
-of an iterative operator.
+recursive CTE, so this is one of the engine's driver-coordinated
+iterative loops (as are the BPE merge rounds, k-means and the graph
+queries): label propagation (each node takes the min label among
+itself and its neighbors) to fixpoint — O(diameter) rounds, each one
+join + one aggregation, and each round's labels local-checkpointed so
+round k's plan does not embed rounds 1..k-1. The DuckDB oracle
+computes the same clusters with a recursive CTE, making this a true
+differential test of an iterative operator.
 
 Scale notes: label propagation is the standard large-graph CC
 approach (GraphX/GraphFrames use the same shape); each round shuffles
 only (node, label) pairs. Dedup graphs are shallow (near-dup clusters
-are cliques or near-cliques), so rounds ≈ 2-3 in practice; the loop
-is bounded and checkpoint-free because the label frame is tiny
-relative to the corpus.
+are cliques or near-cliques), so rounds ≈ 2-3 in practice, and
+MAX_ROUNDS bounds the loop.
 """
 
 from __future__ import annotations
@@ -33,24 +34,24 @@ MAX_ROUNDS = 20
 def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """(node) + (a, b) edges → (node, cluster) with cluster = min
     reachable node id. Deterministic; singletons keep their own id."""
-    # persist both loop-invariant edges and each round's labels: the
-    # per-round `changed` probe is an ACTION, and without caching it
-    # would re-execute the whole upstream lineage (pair generation
-    # included) once per round, with round k replaying rounds 1..k-1 —
-    # the classic iterative-algorithm lineage blowup. With per-round
-    # persist (and rotating the previous round out) every round costs
-    # exactly one join + one aggregation regardless of depth.
+    # persist the loop-invariant edges and checkpoint each round's
+    # labels: the per-round `changed` probe is an ACTION, and without
+    # them it would re-execute the whole upstream lineage (pair
+    # generation included) once per round, with round k replaying
+    # rounds 1..k-1 — the classic iterative-algorithm lineage blowup.
+    # So every round costs one join + one aggregation regardless of
+    # depth.
     sym = (edges.select(F.col("a").alias("n"), F.col("b").alias("m"))
            .union(edges.select(F.col("b").alias("n"), F.col("a").alias("m")))
            .persist())
-    # materialize sym BEFORE labels: the first round's eager
-    # checkpoint otherwise fills the sym and labels caches inside ONE
-    # job, whose two branches each recompute the (expensive) edge
-    # lineage — pair generation ran twice per CC invocation until the
-    # order was forced (measured 21 s → 13 s first-run at sf0.1)
+    # materialize sym BEFORE the first round: that round's job would
+    # otherwise fill the sym cache while its branches each recompute
+    # the (expensive) edge lineage — pair generation ran twice per CC
+    # invocation until the order was forced (measured 21 s → 13 s
+    # first-run at sf0.1)
     sym.count()
     labels = nodes.select(F.col("node").alias("n"),
-                          F.col("node").alias("label")).persist()
+                          F.col("node").alias("label"))
     for _ in range(MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.m == labels.n)
@@ -83,7 +84,6 @@ def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
         )
         changed = new_labels.agg(
             F.sum(F.col("chg").cast("int"))).collect()[0][0] or 0
-        labels.unpersist()
         labels = new_labels.drop("chg")
         if changed == 0:
             break

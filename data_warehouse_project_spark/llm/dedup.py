@@ -37,8 +37,9 @@ JACCARD_THRESHOLD = 0.4
 MAX_BUCKET = 128
 
 
-def _with_shingles(df: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """tokens → distinct k-word shingles (positional word n-grams).
+def _with_shingles(df: DataFrame) -> DataFrame:
+    """tokens → distinct SHINGLE_K-word shingles (positional word
+    n-grams).
 
     Repartition first: the corpus often arrives as few large files,
     and shingling is per-row CPU work (higher-order functions are
@@ -55,12 +56,13 @@ def _with_shingles(df: DataFrame, k: int = SHINGLE_K) -> DataFrame:
         # Catalyst pushes filters below the repartition, and a filter
         # containing the shingle expression would re-run the whole
         # (interpreted, expensive) shingling single-threaded at the scan
-        .filter(F.size(F.col("tokens")) >= k)
+        .filter(F.size(F.col("tokens")) >= SHINGLE_K)
         .withColumn(
             "shingles",
             F.expr(
-                f"array_distinct(transform(sequence(0, size(tokens) - {k}),"
-                f" i -> concat_ws(' ', slice(tokens, i + 1, {k}))))"
+                "array_distinct(transform(sequence(0, size(tokens) - "
+                f"{SHINGLE_K}),"
+                f" i -> concat_ws(' ', slice(tokens, i + 1, {SHINGLE_K}))))"
             ),
         )
     )
@@ -268,8 +270,7 @@ WHERE {sql_fround('shared / CAST(n_a + n_b - shared AS DOUBLE)', 6)}
 """
 
 
-def minhash_signatures_from(sh: DataFrame,
-                            num_hashes: int = NUM_HASHES) -> DataFrame:
+def minhash_signatures_from(sh: DataFrame) -> DataFrame:
     """Signatures from a prepared (doc_id, shingles, n_shingles) frame.
 
     minhash_j(doc) = min over shingles of xxhash64(shingle, j) — the
@@ -288,7 +289,7 @@ def minhash_signatures_from(sh: DataFrame,
         "doc_id", "n_shingles",
         F.expr(
             "transform(array(shingles), sh_once -> "
-            f"transform(sequence(0, {num_hashes - 1}), "
+            f"transform(sequence(0, {NUM_HASHES - 1}), "
             "j -> array_min(transform(sh_once, s -> xxhash64(s, j)))))[0]"
         ).alias("signature"),
     )

@@ -402,7 +402,7 @@ register("embedding_covariance_matrix", embedding_covariance_matrix,
          EMB_COV_SQL)
 
 
-def pca_variance_report(cov_rows, dim_col="dim_i") -> "list[tuple]":
+def pca_variance_report(cov_rows) -> "list[tuple]":
     """Driver-side eigendecomposition of the collected upper-triangle
     covariance rows → [(component, eigenvalue, var_share, cum_share)].
 

@@ -176,9 +176,8 @@ c{t + 1} AS (
 )"""
 
 
-def _kmeans_sql(k: int = KM_K, iters: int = KM_ITERS,
-                dim: int = KM_DIM) -> str:
-    rounds = ",".join(_km_round_sql(t, dim) for t in range(iters))
+def _kmeans_sql() -> str:
+    rounds = ",".join(_km_round_sql(t, KM_DIM) for t in range(KM_ITERS))
     return f"""
 WITH q AS (
     SELECT vec_id,
@@ -189,18 +188,18 @@ WITH q AS (
 c0 AS (
     SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS j,
            q AS c
-    FROM q ORDER BY vec_id LIMIT {k}
+    FROM q ORDER BY vec_id LIMIT {KM_K}
 ),
 {rounds},
-d{iters} AS (
+d{KM_ITERS} AS (
     SELECT qq.vec_id, c.j, {_DDOT} AS dist
-    FROM q qq CROSS JOIN c{iters} c
+    FROM q qq CROSS JOIN c{KM_ITERS} c
 ),
-a{iters} AS (
+a{KM_ITERS} AS (
     SELECT vec_id, j, dist FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                      ORDER BY dist, j) AS rn
-        FROM d{iters})
+        FROM d{KM_ITERS})
     WHERE rn = 1
 )
 SELECT a.j AS cluster,
@@ -208,7 +207,7 @@ SELECT a.j AS cluster,
        CAST(SUM(a.dist) AS BIGINT) AS wcss_q,
        CAST(MAX(CAST(list_dot_product(c.c::DOUBLE[], c.c::DOUBLE[])
                      AS BIGINT)) AS BIGINT) AS centroid_sq_norm
-FROM a{iters} a JOIN c{iters} c USING (j)
+FROM a{KM_ITERS} a JOIN c{KM_ITERS} c USING (j)
 GROUP BY a.j
 ORDER BY cluster
 """

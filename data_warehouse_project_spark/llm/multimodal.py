@@ -77,22 +77,23 @@ def decode_image(payload: bytes):
     raise NotImplementedError(
         "image decode requires PIL/cv2 which are not available in this "
         "environment; the surrounding Spark plumbing is real — plug a "
-        "decoder into featurize()'s kernel to activate it"
+        "decoder into featurize() in place of fake_feature_extract to "
+        "activate it"
     )
 
 
-def fake_feature_extract(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
+def fake_feature_extract(payload: bytes) -> list[float]:
     """Deterministic stand-in feature kernel: FEATURE_DIM floats
     derived from the sha256 digest — stable across runs/machines, so
     tests can assert exact values."""
     digest = hashlib.sha256(payload).digest()
     return [
         int.from_bytes(digest[4 * i: 4 * i + 4], "big") / 2 ** 32
-        for i in range(dim)
+        for i in range(FEATURE_DIM)
     ]
 
 
-def featurize(blobs: DataFrame, kernel=fake_feature_extract) -> DataFrame:
+def featurize(blobs: DataFrame) -> DataFrame:
     """mapInPandas featurization stage: binary in, small vectors out.
 
     The iterator contract streams Arrow batches — a partition is
@@ -107,7 +108,8 @@ def featurize(blobs: DataFrame, kernel=fake_feature_extract) -> DataFrame:
                 "n_bytes": batch["payload"].map(
                     lambda b: 0 if b is None else len(b)).astype("int64"),
                 "features": batch["payload"].map(
-                    lambda b: None if b is None else kernel(bytes(b))),
+                    lambda b: None if b is None
+                    else fake_feature_extract(bytes(b))),
             })
 
     return blobs.mapInPandas(_extract, schema=FEATURES_SCHEMA)
@@ -174,8 +176,7 @@ FRAME_SCHEMA = StructType([
 ])
 
 
-def sample_frames(blobs: DataFrame, n_frames: int = N_FRAMES,
-                  frame_size: int = FRAME_SIZE) -> DataFrame:
+def sample_frames(blobs: DataFrame) -> DataFrame:
     """Uniform frame sampling over opaque payloads: N evenly-spaced
     byte-range "frames" per asset (the video frame-sample shape —
     a real decoder would seek keyframes; the byte-slice kernel stands
@@ -183,7 +184,7 @@ def sample_frames(blobs: DataFrame, n_frames: int = N_FRAMES,
 
     Assets shorter than one frame repeat the start slice (uniform
     sampling with boundary replacement — the standard short-clip
-    policy), so every asset yields exactly n_frames rows:
+    policy), so every asset yields exactly N_FRAMES rows:
     deterministic fan-out, no empty partitions downstream. Map-only:
     payloads never shuffle; each emitted frame carries offset/length
     and an md5 — enough for downstream decode-on-demand without
@@ -197,10 +198,10 @@ def sample_frames(blobs: DataFrame, n_frames: int = N_FRAMES,
                 if payload is None:
                     continue
                 data = bytes(payload)
-                span = max(len(data) - frame_size, 0)
-                for i in range(n_frames):
-                    off = (i * span) // max(n_frames - 1, 1)
-                    frame = data[off:off + frame_size]
+                span = max(len(data) - FRAME_SIZE, 0)
+                for i in range(N_FRAMES):
+                    off = (i * span) // max(N_FRAMES - 1, 1)
+                    frame = data[off:off + FRAME_SIZE]
                     out["asset_id"].append(aid)
                     out["frame_index"].append(i)
                     out["frame_offset"].append(off)

@@ -473,8 +473,10 @@ register("quality_score_linear", quality_score_linear, QUALITY_SCORE_SQL)
 # Exact-percentile length band filter
 # --------------------------------------------------------------------------
 
-#: band bounds (shared with refinery via the leaf params module)
-from .params import BAND_HI_PCT, BAND_LO_PCT  # noqa: E402
+#: length-band bounds: drop the shortest 5% and longest 5% of
+#: documents (length_band_filter and refinery)
+BAND_LO_PCT = 0.05
+BAND_HI_PCT = 0.95
 
 
 def length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:

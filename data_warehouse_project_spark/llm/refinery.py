@@ -24,24 +24,27 @@ No Python anywhere.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
-# constants come from the LEAF params module — importing them from
-# .quality/.repetition at module top would break when those modules
-# are themselves mid-import (registry._register_modules circularity)
-from .params import BAND_HI_PCT, BAND_LO_PCT, MAX_DUP_2GRAM
+from .quality import BAND_HI_PCT, BAND_LO_PCT, length_band_filter
+from .repetition import _tokens, dup_char_frac_chain
+from .sampling import _bucket, _sql_bucket
+
+#: keep-threshold on the duplicate-bigram character fraction
+#: (sf0.01 fixture: splits 395/500 — both ways)
+MAX_DUP_2GRAM = 0.10
 
 
 def _funnel_frames(spark: SparkSession, sf_dir: str):
     """(docs, band, clean, survivors) — the funnel's stage frames,
     shared by the report and the materializing build."""
-    # deferred sibling imports (see the module-top comment)
-    from .quality import length_band_filter
-    from .repetition import _tokens, dup_char_frac_chain
-
     cat = Catalog(spark, sf_dir)
     docs = cat.documents
 
@@ -196,12 +199,6 @@ def corpus_build_post_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning serves train-only readers); the manifest
     aggregates the persisted files, so a write-path bug (dropped
     partition, truncated file) hash-mismatches the oracle."""
-    import os
-    import shutil
-    import tempfile
-
-    from .sampling import _bucket
-
     docs, _, _, survivors = _funnel_frames(spark, sf_dir)
     refined = (survivors.select("doc_id")
                .join(docs, "doc_id")
@@ -231,9 +228,6 @@ def corpus_build_post_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_chars").cast("long").alias("total_chars"))
             .orderBy("split", "source"))
 
-
-from .sampling import _sql_bucket  # noqa: E402  (leaf-safe: sampling
-#                                     imports only registry/catalog)
 
 CORPUS_BUILD_SQL = REFINERY_CTES + f"""
 SELECT CASE WHEN {_sql_bucket('s.doc_id')} < 90

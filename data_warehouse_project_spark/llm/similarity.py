@@ -137,26 +137,6 @@ JOIN (SELECT label, COUNT(*) AS n_vectors FROM embeddings GROUP BY label) c
 """
 
 
-def _hyperplane_lit(n_planes: int, dim: int, seed: int = 42):
-    """Deterministic pseudo-random ±1 hyperplanes as a literal array —
-    derived from a fixed LCG so the operator needs no external state.
-    """
-    planes = []
-    state = seed
-    for _ in range(n_planes):
-        row = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            row.append(1.0 if (state >> 63) else -1.0)
-        planes.append(row)
-    # F.lit(nested list) still lowers to n_planes×dim Literal nodes
-    # under CreateArray on classic PySpark; the r12 win here is the
-    # removal of the per-element Cast each unrolled literal carried
-    # (one top-level cast now) — the kmeans literal-matrix finding,
-    # comment corrected r13 per ADVICE
-    return F.lit(planes).cast("array<array<double>>")
-
-
 #: ANN multi-table LSH: L tables of b sign-bits, OR-amplified.
 #: With moderate-similarity neighbors (cos ≈ 0.5 in the driver data,
 #: p_bit = 1 - θ/π ≈ 0.67) a true top-10 member shares some bucket
@@ -231,8 +211,7 @@ ANN_PROBES = 3
 ANN_MULTIPROBE_TABLES = 10
 
 
-def _probe_buckets_udf(n_bands: int, bits: int, probes: int,
-                       dim: int = DIM, seed: int = 42):
+def _probe_buckets_udf(n_bands: int, bits: int, probes: int, seed: int = 42):
     """pandas_udf: embedding -> per-band ARRAY of probe bucket ids
     (own bucket + ``probes - 1`` single-bit flips in ascending
     |margin| order). Query-side only — one row per query vector."""
@@ -244,18 +223,18 @@ def _probe_buckets_udf(n_bands: int, bits: int, probes: int,
     rows = []
     for _ in range(n_planes):
         row = []
-        for _ in range(dim):
+        for _ in range(DIM):
             state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
             row.append(1.0 if (state >> 63) else -1.0)
         rows.append(row)
-    planes = np.array(rows, dtype=np.float64)        # (n_planes, dim)
+    planes = np.array(rows, dtype=np.float64)        # (n_planes, DIM)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     @F.pandas_udf(ArrayType(ArrayType(LongType())))
     def _probe(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype=object)
-        m = np.array(emb.tolist(), dtype=np.float64)  # (n, dim)
+        m = np.array(emb.tolist(), dtype=np.float64)  # (n, DIM)
         dots = m @ planes.T                           # (n, n_planes)
         signs = dots > 0
         out = []
@@ -398,13 +377,14 @@ def _adaptive_lsh_params(n: int) -> tuple[int, int]:
 MAX_VEC_BUCKET = 4096
 
 
-def _band_buckets_udf(n_bands: int, bits: int, dim: int = DIM,
-                      seed: int = 42):
+def _band_buckets_udf(n_bands: int, bits: int, seed: int = 42):
     """pandas_udf: embedding -> array of per-band bucket ids.
 
-    Hyperplanes are the same deterministic LCG family as
-    _hyperplane_lit, materialized as a numpy matrix; the whole batch
-    is one (batch × dim) @ (dim × n_bands·bits) matmul + bit-packing —
+    Hyperplanes are ±1 rows drawn from a 64-bit LCG seeded with
+    ``seed`` (state ← state·6364136223846793005 + 1442695040888963407
+    mod 2⁶⁴; each plane coordinate is +1 when the state's top bit is
+    set, else −1), materialized as a numpy matrix; the whole batch
+    is one (batch × DIM) @ (DIM × n_bands·bits) matmul + bit-packing —
     the justified-pandas_udf category (a 96-plane interpreted
     higher-order-function dot per row would be ~100× slower).
     """
@@ -416,18 +396,18 @@ def _band_buckets_udf(n_bands: int, bits: int, dim: int = DIM,
     rows = []
     for _ in range(n_planes):
         row = []
-        for _ in range(dim):
+        for _ in range(DIM):
             state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
             row.append(1.0 if (state >> 63) else -1.0)
         rows.append(row)
-    planes = np.array(rows, dtype=np.float64)        # (n_planes, dim)
+    planes = np.array(rows, dtype=np.float64)        # (n_planes, DIM)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     @F.pandas_udf(ArrayType(LongType()))
     def _buckets(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype=object)
-        m = np.array(emb.tolist(), dtype=np.float64)  # (n, dim)
+        m = np.array(emb.tolist(), dtype=np.float64)  # (n, DIM)
         signs = (m @ planes.T) > 0                    # (n, n_planes)
         out = [
             signs[:, b * bits:(b + 1) * bits].astype(np.int64) @ weights
@@ -460,8 +440,8 @@ def dedup_embedding_cosine_allpairs(spark: SparkSession,
     )
 
 
-def cosine_pair_dedup(vecs: DataFrame, chunk: int = MAX_VEC_BUCKET,
-                      n: int | None = None) -> DataFrame:
+def cosine_pair_dedup(vecs: DataFrame,
+                      chunk: int = MAX_VEC_BUCKET) -> DataFrame:
     """LSH-blocked cosine near-dup pairs over a (vec_id, embedding)
     frame — the shared pipeline behind dedup_embedding_cosine and the
     planted-corpus variant.
@@ -490,12 +470,9 @@ def cosine_pair_dedup(vecs: DataFrame, chunk: int = MAX_VEC_BUCKET,
     near-dup corpora, including with a tiny chunk size forcing the
     multi-chunk path.
     """
-    if n is None:
-        # the adaptive dial needs the corpus size, which costs one
-        # bounded action. Plan-only callers pass a precomputed n to
-        # stay fully lazy.
-        n = vecs.count()
-    bands_n, bits_n = _adaptive_lsh_params(n)
+    # the adaptive dial needs the corpus size, which costs one
+    # bounded action
+    bands_n, bits_n = _adaptive_lsh_params(vecs.count())
     buckets_udf = _band_buckets_udf(bands_n, bits_n)
     bands = vecs.select(
         "vec_id",
@@ -812,7 +789,7 @@ def knn_batch_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import top_k_per_group
     return top_k_per_group(
         scored, ["query_id"], [F.col("cos_sim"), -F.col("vec_id")],
-        k=5, descending=True, rank_col="rank",
+        k=5, rank_col="rank",
     ).select("query_id", "rank", "vec_id", "cos_sim")
 
 
@@ -883,7 +860,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import top_k_per_group
     lsh_topk = top_k_per_group(
         scored, ["query_id"], [F.col("cos_sim"), -F.col("vec_id")],
-        k=5, descending=True, rank_col="rank",
+        k=5, rank_col="rank",
     ).select("query_id", "vec_id")
     true_topk = knn_batch_cosine(spark, sf_dir).select("query_id", "vec_id")
     found = (
@@ -982,14 +959,14 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = top_k_per_group(
         scored.filter(F.col("label") == F.col("anchor_label")),
         ["anchor_id"], [F.col("cos_sim"), -F.col("vec_id")],
-        k=1, descending=True, rank_col="rank",
+        k=1, rank_col="rank",
     ).select("anchor_id", "anchor_label",
              F.col("vec_id").alias("pos_id"),
              F.col("cos_sim").alias("pos_sim"))
     neg = top_k_per_group(
         scored.filter(F.col("label") != F.col("anchor_label")),
         ["anchor_id"], [F.col("cos_sim"), -F.col("vec_id")],
-        k=1, descending=True, rank_col="rank",
+        k=1, rank_col="rank",
     ).select("anchor_id",
              F.col("vec_id").alias("neg_id"),
              F.col("cos_sim").alias("neg_sim"))

@@ -427,11 +427,10 @@ def _kmv_u(hcol):
             / F.lit(float(2 ** 64)))
 
 
-def kmv_sketch(df: DataFrame, group_col, key_col,
-               k: int = KMV_K) -> DataFrame:
-    """(g, h, r): the k smallest distinct xxhash64(key) per group,
-    rank-ordered. Two-level truncation (see section comment) so no
-    window partition exceeds the salt bucket's share of one group's
+def kmv_sketch(df: DataFrame, group_col, key_col) -> DataFrame:
+    """(g, h, r): the k = KMV_K smallest distinct xxhash64(key) per
+    group, rank-ordered. Two-level truncation (see section comment) so
+    no window partition exceeds the salt bucket's share of one group's
     distinct set."""
     d = (df.select(F.col(group_col).cast("long").alias("g"),
                    F.xxhash64(F.col(key_col).cast("string")).alias("h"))
@@ -439,25 +438,27 @@ def kmv_sketch(df: DataFrame, group_col, key_col,
          .withColumn("s", F.pmod(F.col("h"), F.lit(KMV_SALT))))
     w1 = Window.partitionBy("g", "s").orderBy("h")
     lvl1 = (d.withColumn("r1", F.row_number().over(w1))
-            .filter(F.col("r1") <= k).drop("r1", "s"))
+            .filter(F.col("r1") <= KMV_K).drop("r1", "s"))
     w2 = Window.partitionBy("g").orderBy("h")
     return (lvl1.withColumn("r", F.row_number().over(w2))
-            .filter(F.col("r") <= k))
+            .filter(F.col("r") <= KMV_K))
 
 
-def kmv_estimates(sketch: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_estimates(sketch: DataFrame) -> DataFrame:
     """(g, kk, est): distinct-count estimate per group — (k−1)/u_k
     when the sketch is saturated, the exact kept-row count when the
     whole set fit."""
     return (sketch.groupBy("g")
             .agg(F.count("*").alias("kk"), F.max("h").alias("hk"))
             .select("g", "kk",
-                    F.when(F.col("kk") < k, F.col("kk").cast("double"))
-                    .otherwise(F.lit(float(k - 1)) / _kmv_u(F.col("hk")))
+                    F.when(F.col("kk") < KMV_K,
+                           F.col("kk").cast("double"))
+                    .otherwise(F.lit(float(KMV_K - 1))
+                               / _kmv_u(F.col("hk")))
                     .alias("est")))
 
 
-def kmv_pair_estimates(sketch: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_pair_estimates(sketch: DataFrame) -> DataFrame:
     """(p, kk, n_both, est_union, est_inter) for every consecutive
     group pair (p, p+1) where both groups exist: merge the two k-row
     sketches, re-truncate to bottom-k (≡ the union's true sketch),
@@ -477,13 +478,13 @@ def kmv_pair_estimates(sketch: DataFrame, k: int = KMV_K) -> DataFrame:
               .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
     w = Window.partitionBy("p").orderBy("h")
     trunc = (merged.withColumn("r", F.row_number().over(w))
-             .filter(F.col("r") <= k))
+             .filter(F.col("r") <= KMV_K))
     agg = (trunc.groupBy("p")
            .agg(F.count("*").alias("kk"), F.max("h").alias("hk"),
                 F.sum(F.col("ia") * F.col("ib")).cast("long")
                 .alias("n_both")))
-    est_union = F.when(F.col("kk") < k, F.col("kk").cast("double")) \
-        .otherwise(F.lit(float(k - 1)) / _kmv_u(F.col("hk")))
+    est_union = F.when(F.col("kk") < KMV_K, F.col("kk").cast("double")) \
+        .otherwise(F.lit(float(KMV_K - 1)) / _kmv_u(F.col("hk")))
     return agg.select(
         "p", "kk", "n_both", est_union.alias("est_union"),
         (F.col("n_both") / F.col("kk") * est_union).alias("est_inter"))

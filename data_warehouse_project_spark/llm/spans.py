@@ -43,18 +43,18 @@ from ..sources.catalog import Catalog
 SPAN_N = 8
 
 
-def span_stats(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def span_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, n_spans, n_dup_spans, dup_fraction);
-    documents shorter than ``n`` tokens have no spans and no row."""
+    documents shorter than ``SPAN_N`` tokens have no spans and no row."""
     grams = (
         docs
         .withColumn("toks", F.split(F.trim(F.col("text")), r"\s+"))
-        .filter(F.size("toks") >= n)
+        .filter(F.size("toks") >= SPAN_N)
         .select(
             "doc_id",
             F.explode(F.expr(
-                f"transform(sequence(1, size(toks) - {n} + 1), "
-                f"i -> md5(array_join(slice(toks, i, {n}), ' ')))"
+                f"transform(sequence(1, size(toks) - {SPAN_N} + 1), "
+                f"i -> md5(array_join(slice(toks, i, {SPAN_N}), ' ')))"
             )).alias("span_h"),
         )
     )

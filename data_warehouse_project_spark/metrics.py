@@ -123,20 +123,17 @@ def group_profile(spark: SparkSession, group: str) -> dict:
     return prof
 
 
-def measure_query_shuffle(spark: SparkSession, fn, sf_dir: str,
-                          reps: int = 1) -> dict[str, int]:
-    """Execute ``fn(spark, sf_dir)`` via the noop sink ``reps`` times
-    and return its per-run exchange volume. Deterministic plans
-    shuffle the same bytes every rep (AQE varies partition counts,
-    never total bytes), so the window / reps IS one run's volume."""
+def measure_query_shuffle(spark: SparkSession, fn,
+                          sf_dir: str) -> dict[str, int]:
+    """Execute ``fn(spark, sf_dir)`` once via the noop sink and return
+    its exchange volume."""
     from .cache import release_all
 
     with job_group(spark, getattr(fn, "__name__", "query")) as group:
-        for _ in range(reps):
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            release_all()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        release_all()
     prof = group_profile(spark, group)
-    return {k: prof[k] // reps for k in BYTE_KEYS}
+    return {k: prof[k] for k in BYTE_KEYS}
 
 
 def codegen_compiles(spark: SparkSession) -> tuple[int, float]:

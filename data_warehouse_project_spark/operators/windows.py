@@ -32,25 +32,21 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 _RANK_COL = "__rank"
 
 
-def _ordering(order_by: Sequence[Column | str], descending: bool) -> list[Column]:
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
-    return [c.desc() for c in cols] if descending else cols
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[Column | str],
     k: int = 1,
-    descending: bool = True,
     rank_col: str | None = None,
 ) -> DataFrame:
-    """Keep the top-k rows of each group under the given ordering.
+    """Keep the top-k rows of each group, ranked by ``order_by``
+    descending.
 
     ``order_by`` should include a unique tiebreaker as its last column
     for deterministic results.
     """
-    w = Window.partitionBy(*partition_by).orderBy(*_ordering(order_by, descending))
+    desc = [(F.col(c) if isinstance(c, str) else c).desc() for c in order_by]
+    w = Window.partitionBy(*partition_by).orderBy(*desc)
     ranked = df.withColumn(_RANK_COL, F.row_number().over(w))
     out = ranked.filter(F.col(_RANK_COL) <= k)
     if rank_col:
@@ -64,4 +60,4 @@ def latest_per_group(
     order_by: Sequence[Column | str],
 ) -> DataFrame:
     """Keep exactly the latest row per group (top-1 descending)."""
-    return top_k_per_group(df, partition_by, order_by, k=1, descending=True)
+    return top_k_per_group(df, partition_by, order_by, k=1)

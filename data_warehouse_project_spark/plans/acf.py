@@ -131,14 +131,14 @@ daily AS (
 )"""
 
 
-def _acf_sql(max_lag: int = _ACF_MAX_LAG) -> str:
+def _acf_sql() -> str:
     lag_cols = ",\n           ".join(
         f"LAG(r, {L}) OVER (ORDER BY day) AS r_{L}"
-        for L in range(1, max_lag + 1))
+        for L in range(1, _ACF_MAX_LAG + 1))
     pair_sel = "\n    UNION ALL ".join(
         f"SELECT {L} AS lag, r * r_{L} AS prod FROM lagged "
         f"WHERE r_{L} IS NOT NULL"
-        for L in range(1, max_lag + 1))
+        for L in range(1, _ACF_MAX_LAG + 1))
     return f"""
 WITH {_DAILY_DOLLARS_SQL.strip()},
 base AS (
@@ -174,7 +174,7 @@ ORDER BY lag
 register("orders_revenue_acf", orders_revenue_acf, _acf_sql())
 
 
-def xcorr_fold(daily: DataFrame, max_lag: int = _XCORR_MAX_LAG) -> DataFrame:
+def xcorr_fold(daily: DataFrame) -> DataFrame:
     """Lead-lag cross-correlation fold over a (day, x: long, y: long)
     daily two-series frame. Sign convention: at lag L the coefficient
     correlates x_t with y_{t-L}, so a POSITIVE-lag peak means x LAGS y
@@ -205,14 +205,14 @@ def xcorr_fold(daily: DataFrame, max_lag: int = _XCORR_MAX_LAG) -> DataFrame:
     lagged = r.select(
         "rx", "ry",
         *[F.lag("ry", L).over(w).alias(f"ry_{L}")
-          for L in range(1, max_lag + 1)],
+          for L in range(1, _XCORR_MAX_LAG + 1)],
         *[F.lag("rx", L).over(w).alias(f"rx_{L}")
-          for L in range(1, max_lag + 1)])
+          for L in range(1, _XCORR_MAX_LAG + 1)])
     # lag L>0: x_t * y_{t-L}; lag L<0: x_{t-|L|} * y_t (same window)
-    terms = ([f"{-L}, rx_{L} * ry" for L in range(max_lag, 0, -1)]
+    terms = ([f"{-L}, rx_{L} * ry" for L in range(_XCORR_MAX_LAG, 0, -1)]
              + ["0, rx * ry"]
-             + [f"{L}, rx * ry_{L}" for L in range(1, max_lag + 1)])
-    n_terms = 2 * max_lag + 1
+             + [f"{L}, rx * ry_{L}" for L in range(1, _XCORR_MAX_LAG + 1)])
+    n_terms = 2 * _XCORR_MAX_LAG + 1
     pairs = lagged.select(
         F.expr(f"stack({n_terms}, {', '.join(terms)}) AS (lag, prod)"))
     return (pairs
@@ -265,19 +265,19 @@ def events_click_purchase_xcorr(spark: SparkSession,
     return xcorr_fold(daily)
 
 
-def _xcorr_sql(max_lag: int = _XCORR_MAX_LAG) -> str:
+def _xcorr_sql() -> str:
     ry_lags = ",\n           ".join(
         f"LAG(ry, {L}) OVER (ORDER BY day) AS ry_{L}"
-        for L in range(1, max_lag + 1))
+        for L in range(1, _XCORR_MAX_LAG + 1))
     rx_lags = ",\n           ".join(
         f"LAG(rx, {L}) OVER (ORDER BY day) AS rx_{L}"
-        for L in range(1, max_lag + 1))
+        for L in range(1, _XCORR_MAX_LAG + 1))
     parts = (
         [f"SELECT {-L} AS lag, rx_{L} * ry AS prod FROM lagged "
-         f"WHERE rx_{L} IS NOT NULL" for L in range(max_lag, 0, -1)]
+         f"WHERE rx_{L} IS NOT NULL" for L in range(_XCORR_MAX_LAG, 0, -1)]
         + ["SELECT 0 AS lag, rx * ry AS prod FROM lagged"]
         + [f"SELECT {L} AS lag, rx * ry_{L} AS prod FROM lagged "
-           f"WHERE ry_{L} IS NOT NULL" for L in range(1, max_lag + 1)])
+           f"WHERE ry_{L} IS NOT NULL" for L in range(1, _XCORR_MAX_LAG + 1)])
     pair_sel = "\n    UNION ALL ".join(parts)
     return f"""
 WITH daily AS (

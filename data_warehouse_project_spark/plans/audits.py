@@ -1114,12 +1114,12 @@ _DP_SALT = "dp-v1:"
 _DP_HEX = 8
 
 
-def _dp_uniform(key_sql: str = "g"):
-    """u in (0,1) from the first 8 hex nibbles of sha256(salt||key):
-    the nibble->int sum uses only instr/substr arithmetic available
-    identically in both engines (key_sql names the key column in the
-    enclosing frame)."""
-    h = f"sha2(concat('{_DP_SALT}', {key_sql}), 256)"
+def _dp_uniform():
+    """u in (0,1) from the first 8 hex nibbles of sha256(salt||g),
+    where ``g`` is the key column of the enclosing frame: the
+    nibble->int sum uses only instr/substr arithmetic available
+    identically in both engines."""
+    h = f"sha2(concat('{_DP_SALT}', g), 256)"
     h32 = None
     for i in range(_DP_HEX):
         nib = ((F.expr(f"instr('0123456789abcdef',"
@@ -1156,7 +1156,7 @@ def orders_priority_dp_release(spark: SparkSession,
               .select(F.col("o_orderpriority").alias("g"))
               .groupBy("g")
               .agg(F.count("*").cast("long").alias("n_true")))
-    u = _dp_uniform("g")
+    u = _dp_uniform()
     noise = (F.lit(-_DP_SCALE) * F.signum(u - F.lit(0.5))
              * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5))))
     return (counts

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..registry import register
 from ..sources.catalog import Catalog
 
 
@@ -129,3 +130,6 @@ JOIN customer c ON c.c_custkey = lo.o_custkey
 LEFT JOIN latest_line ll ON ll.l_orderkey = lo.o_orderkey
 ORDER BY lo.o_orderdate, lo.o_orderkey
 """
+
+
+register("flagship_my_registrations", flagship, FLAGSHIP_ORACLE)

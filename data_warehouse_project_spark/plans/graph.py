@@ -733,9 +733,9 @@ l{i} AS (
 )"""
 
 
-def _lp_sql(iters: int = LP_ITERS, k: int = LP_TOP_K) -> str:
+def _lp_sql() -> str:
     its = ",\n".join(_lp_iter_sql(f"l{i - 1}" if i > 1 else "l0", i)
-                     for i in range(1, iters + 1))
+                     for i in range(1, LP_ITERS + 1))
     return f"""
 WITH {_KEPT_SQL},
 edges AS (
@@ -752,10 +752,10 @@ l0 AS (
 SELECT CAST(label AS BIGINT) AS community,
        CAST(COUNT(*) AS BIGINT) AS n_members,
        CAST(MIN(node) AS BIGINT) AS min_member
-FROM l{iters}
+FROM l{LP_ITERS}
 GROUP BY label
 ORDER BY n_members DESC, community
-LIMIT {k}
+LIMIT {LP_TOP_K}
 """
 
 

@@ -39,11 +39,10 @@ from ..sources.catalog import Catalog
 LEV_MAX = 3
 
 
-def fuzzy_name_linkage(rows: DataFrame, name_col: str,
-                       lev_max: int = LEV_MAX) -> DataFrame:
+def fuzzy_name_linkage(rows: DataFrame, name_col: str) -> DataFrame:
     """Blocked fuzzy self-linkage of the distinct-``name_col``
     dictionary: pairs (name_a < name_b) sharing a trailing-token block
-    with Levenshtein distance <= ``lev_max``, carrying per-name
+    with Levenshtein distance <= ``LEV_MAX``, carrying per-name
     support counts (rows_a / rows_b) back from the corpus."""
     dic = (
         rows.groupBy(F.col(name_col).alias("name"))
@@ -60,9 +59,9 @@ def fuzzy_name_linkage(rows: DataFrame, name_col: str,
     return (
         a.join(b, "block")
         .where((F.col("name_a") < F.col("name_b"))
-               & (F.abs(F.col("ln_a") - F.col("ln_b")) <= F.lit(lev_max)))
+               & (F.abs(F.col("ln_a") - F.col("ln_b")) <= F.lit(LEV_MAX)))
         .withColumn("lev_dist",
-                    F.levenshtein("name_a", "name_b", lev_max).cast("int"))
+                    F.levenshtein("name_a", "name_b", LEV_MAX).cast("int"))
         .where(F.col("lev_dist") >= 0)
         .select("block", "name_a", "name_b", "lev_dist",
                 "rows_a", "rows_b")

@@ -163,12 +163,12 @@ def top_k_per_group_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     joined = cat.orders.join(cat.customer,
                              F.col("o_custkey") == F.col("c_custkey"))
-    # descending=True applies to every key; negate the tiebreaker so it
-    # sorts ascending (price DESC, orderkey ASC — deterministic ties)
+    # every key sorts descending; negate the tiebreaker so it sorts
+    # ascending (price DESC, orderkey ASC — deterministic ties)
     return top_k_per_group(
         joined, ["c_mktsegment"],
         [F.col("o_totalprice"), -F.col("o_orderkey")],
-        k=3, descending=True, rank_col="price_rank",
+        k=3, rank_col="price_rank",
     ).select("c_mktsegment", "price_rank", "o_orderkey", "o_totalprice")
 
 

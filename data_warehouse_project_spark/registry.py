@@ -7,6 +7,11 @@ the ANSI-SQL twin DuckDB runs on the same parquet tables. A ``None``
 oracle marks a genuinely non-SQL-expressible op (driver falls back to
 a rows-only check).
 
+Each query module calls ``register`` at import time; ``queries()`` and
+``oracle_sql()`` import every such module on their first call, so
+importing this module, or any query module first, registers nothing
+else.
+
 Naming contract: aliases of computed columns MUST match between the
 Spark plan and the oracle SQL — the driver sorts columns by name
 before value-hashing.
@@ -20,11 +25,11 @@ see cache.py and bench.py for the pattern.
 
 from __future__ import annotations
 
+import functools
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-from .plans import flagship as _flagship
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -38,28 +43,33 @@ def register(name: str, fn: SparkQuery, oracle: str | None) -> None:
     REGISTRY[name] = (fn, oracle)
 
 
-register("flagship_my_registrations", _flagship.flagship, _flagship.FLAGSHIP_ORACLE)
-
-
-def _register_modules() -> None:
-    """Import every module that self-registers queries."""
-    from .operators import (bloom, extended, quarantine,  # noqa: F401
-                            relational, skew)
-    from .plans import (acf, analytics, aqp, attribution, audits,  # noqa: F401
-                        cdc, dashboard, drift, experiment, graph, incremental,
-                        linkage, poststate, rankcorr, regression, robust,
-                        survival, timeseries, tpch, tpch_deep, warehouse)
-    from .streaming import (batch_parity, cusum_state,  # noqa: F401
-                            dedup_ingest, distinct_users, drift_state,
-                            funnel_state, interval_join, late_sessions,
-                            late_transitions, neardup_ingest, sessions,
-                            transitions, ttl_window)
-    from .llm import (bpe, bridge, clusters, compress, dedup,  # noqa: F401
-                      distributions, importance, index, kmeans, langmix,
-                      manifest, multimodal, pipeline, quality, refinery,
-                      repetition, retrieval, sampling, similarity, sketches,
-                      spans, textstats)
-    from .functions import crypto  # noqa: F401
+#: Every module that registers queries, in registry order: a query
+#: not in _PRIORITY takes its module's place here, whichever module a
+#: caller imported first.
+_MODULES = (
+    "plans.flagship",
+    "operators.bloom", "operators.extended", "operators.quarantine",
+    "operators.relational", "operators.skew",
+    "plans.drift", "plans.acf", "plans.graph", "plans.analytics",
+    "plans.aqp", "plans.attribution", "plans.audits", "plans.cdc",
+    "plans.dashboard", "plans.experiment", "plans.incremental",
+    "plans.timeseries", "plans.linkage", "plans.poststate",
+    "plans.rankcorr", "plans.regression", "plans.robust",
+    "plans.survival", "plans.tpch", "plans.tpch_deep", "plans.warehouse",
+    "streaming.batch_parity", "streaming.cusum_state",
+    "streaming.dedup_ingest", "streaming.distinct_users",
+    "streaming.drift_state", "streaming.funnel_state",
+    "streaming.interval_join", "streaming.late_sessions",
+    "streaming.late_transitions", "llm.dedup", "streaming.neardup_ingest",
+    "streaming.sessions", "streaming.transitions", "streaming.ttl_window",
+    "llm.bpe", "llm.clusters", "llm.bridge", "llm.compress",
+    "llm.distributions", "llm.importance", "llm.index", "llm.kmeans",
+    "llm.langmix", "llm.quality", "llm.sampling", "llm.manifest",
+    "llm.multimodal", "llm.pipeline", "llm.refinery", "llm.repetition",
+    "llm.similarity", "llm.retrieval", "llm.sketches", "llm.spans",
+    "llm.textstats",
+    "functions.crypto",
+)
 
 
 #: Correctness-window priority. The external CORRECTNESS run checks
@@ -183,83 +193,32 @@ _PRIORITY: list[str] = [
 ]
 
 
-def _reorder() -> None:
-    """Rebuild REGISTRY so _PRIORITY names come first (driver checks
-    registration order); everything else keeps its relative order.
-
-    Missing names are skipped here WITHOUT complaint: during import
-    the registry is legitimately partial (a module imported directly
-    triggers this module's import mid-body, registering its remaining
-    queries only after registry import returns — see the _REGISTERED
-    note). The typo check lives in _check_priority(), called from
-    queries()/oracle_sql() when registration is guaranteed complete.
-    """
-    ordered = {n: REGISTRY[n] for n in _PRIORITY if n in REGISTRY}
-    for name, entry in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = entry
+@functools.cache
+def _register_modules() -> None:
+    """Import every query module once, then order REGISTRY: _PRIORITY
+    names first (the driver checks registration order), the rest by
+    module in _MODULES order, each module's queries in the order it
+    registers them. A _PRIORITY name that nothing registers raises:
+    a typo would silently shift every later window slot."""
+    for module in _MODULES:
+        importlib.import_module(f"{__package__}.{module}")
+    unknown = [n for n in _PRIORITY if n not in REGISTRY]
+    if unknown:
+        raise RuntimeError(f"_PRIORITY names not in REGISTRY: {unknown}")
+    rank = {f"{__package__}.{m}": i for i, m in enumerate(_MODULES)}
+    ordered = {n: REGISTRY[n] for n in _PRIORITY}
+    for name, entry in sorted(REGISTRY.items(),
+                              key=lambda item: rank[item[1][0].__module__]):
+        ordered.setdefault(name, entry)
     REGISTRY.clear()
     REGISTRY.update(ordered)
 
 
-#: set once _register_modules has completed in full. The import-time
-#: attempt below can legitimately abort: if THIS module's import was
-#: triggered from inside some llm module's own import (tests import
-#: llm modules directly), that module is partially initialized, and a
-#: sibling's `from .X import name` raises ImportError mid-registration
-#: — the registry would silently stay partial (order-dependent: 86 of
-#: 125 queries, depending on which module led). queries()/oracle_sql()
-#: therefore re-attempt until a full pass succeeds; by call time no
-#: import is mid-flight, so the retry completes. Deliberate corollary
-#: (ADVICE r5): a GENUINE ImportError — a module truly missing or
-#: broken, not mid-import circularity — propagates from every
-#: queries()/oracle_sql() call rather than yielding a partial
-#: registry. Fail-loud is the contract: a silently-partial registry
-#: would under-report coverage to the driver.
-_REGISTERED = False
-
-
-def _ensure_registered() -> None:
-    global _REGISTERED
-    if _REGISTERED:
-        return
-    _register_modules()
-    _REGISTERED = True
-
-
-try:
-    _ensure_registered()
-except ImportError:
-    # a sibling module is mid-import (see _REGISTERED note) — the
-    # first queries()/oracle_sql() call retries and completes
-    pass
-_reorder()
-
-
-def _check_priority() -> None:
-    """A typo'd _PRIORITY name would silently shift every later window
-    slot (ADVICE r10) — fail loudly once registration is complete (at
-    queries()/oracle_sql() time no import is mid-flight, so REGISTRY
-    is guaranteed full)."""
-    unknown = [n for n in _PRIORITY if n not in REGISTRY]
-    if unknown:
-        # not assert: python -O would strip it and silently shift
-        # every later window slot (ADVICE r11 #2)
-        raise RuntimeError(f"_PRIORITY names not in REGISTRY: {unknown}")
-
-
 def queries() -> dict[str, SparkQuery]:
-    # complete any aborted registration, then re-apply the priority
-    # order (a module imported directly self-registers after the
-    # load-time _reorder() ran)
-    _ensure_registered()
-    _check_priority()
-    _reorder()
+    _register_modules()
     return {name: fn for name, (fn, _) in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    _ensure_registered()
-    _check_priority()
-    _reorder()
+    _register_modules()
     return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}

@@ -213,7 +213,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 class Catalog:
     """Lazy per-scale-factor table catalog with temp-view registration."""
 
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
+    def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = tune(spark)
         self.sf_dir = sf_dir
         self._cache: dict[str, DataFrame] = {}
@@ -230,7 +230,7 @@ class Catalog:
             return self.table(name)
         raise AttributeError(name)
 
-    def register_views(self, names: list[str] | None = None) -> None:
-        """Register tables as temp views for spark.sql access."""
-        for name in names or list(schemas.STAR_TABLES):
+    def register_views(self) -> None:
+        """Register every table as a temp view for spark.sql access."""
+        for name in schemas.STAR_TABLES:
             self.table(name).createOrReplaceTempView(name)

@@ -306,62 +306,3 @@ def user_running_totals(events: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals on Spark 4's
-    `transformWithStateInPandas` — the successor API to
-    applyInPandasWithState (typed state handles, timers, TTL, and the
-    state layer the RocksDB provider checkpoints incrementally).
-
-    Kept alongside `user_running_totals` so both arbitrary-state APIs
-    stay exercised: new deployments should prefer this one (per-key
-    ValueState instead of a whole-group state tuple scales to keys ×
-    state sizes the grouped-tuple API can't, and RocksDB changelog
-    checkpointing bounds commit cost at 100 TB/day state churn).
-
-    Runtime requirements: the RocksDB state store provider (bundled
-    with Spark) and the `protobuf` Python package (TWS's state-server
-    wire protocol; the parity test skips where it is missing and runs
-    wherever `google.protobuf` imports; plan construction is always
-    exercised).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    out_schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ])
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n BIGINT, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # worker-side import
-            n, total = self._agg.get() if self._agg.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                "total_value": [round(total, 2)]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

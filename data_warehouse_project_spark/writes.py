@@ -473,15 +473,15 @@ def scd2_lookup(
 # (SURVEY.md §4 "physical layout for 100 TB orientation")
 # --------------------------------------------------------------------------
 
-def write_date_partitioned(df: DataFrame, path: str, ts_col: str,
-                           granularity: str = "month") -> None:
-    """Write a fact date-partitioned (the 100 TB fact layout): readers
-    filtering on the partition column scan only matching directories
-    (dynamic partition pruning composes with join filters)."""
-    part_col = f"{ts_col}_{granularity}"
+def write_date_partitioned(df: DataFrame, path: str, ts_col: str) -> None:
+    """Write a fact partitioned by month (the 100 TB fact layout):
+    readers filtering on the ``<ts_col>_month`` partition column scan
+    only matching directories (dynamic partition pruning composes with
+    join filters)."""
+    part_col = f"{ts_col}_month"
     (
         df.withColumn(part_col,
-                      F.date_format(F.date_trunc(granularity, F.col(ts_col)),
+                      F.date_format(F.date_trunc("month", F.col(ts_col)),
                                     "yyyy-MM"))
         .write.mode("overwrite")
         .partitionBy(part_col)

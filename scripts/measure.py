@@ -48,6 +48,8 @@ from data_warehouse_project_spark import registry  # noqa: E402
 from data_warehouse_project_spark.cache import release_all  # noqa: E402
 from data_warehouse_project_spark.metrics import codegen_compiles  # noqa: E402
 from data_warehouse_project_spark.session import get_spark  # noqa: E402
+from data_warehouse_project_spark.sources.catalog import (  # noqa: E402
+    DEFAULT_SF_DIR, Catalog)
 from sf1_regression import DST as SF1_DIR  # noqa: E402
 
 #: scaling: one representative per workload family, mid-weight and
@@ -188,13 +190,12 @@ def cores() -> int:
 
 
 def quiet(flagged: list[str]) -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     load1 = round(os.getloadavg()[0], 2)
     spark = get_spark("quiet-remeasure")
     qs = registry.queries()
     # warm-up: touch inputs once
     from data_warehouse_project_spark.schemas import STAR_TABLES
-    from data_warehouse_project_spark.sources.catalog import Catalog
     cat = Catalog(spark, sf_dir)
     for t in STAR_TABLES:
         cat.table(t).write.format("noop").mode("overwrite").save()

@@ -80,12 +80,9 @@ def test_crypto_roundtrip_query(spark, sf_dir):
 
 
 def test_registry_complete_regardless_of_import_order():
-    # importing an llm module FIRST makes that module mid-import when
-    # it pulls in the registry; a sibling's `from .X import name` then
-    # hits the partially initialized module and the import-time
-    # registration pass aborts. queries() must retry and return the
-    # full registry anyway (fresh interpreter so this test controls
-    # the import order).
+    # importing an llm module FIRST registers its queries before any
+    # other module's; queries() must still return the full registry
+    # (fresh interpreter so this test controls the import order).
     import subprocess
     import sys as _sys
 
@@ -174,8 +171,8 @@ def test_priority_window_rotation():
                  "hll_distinct_accuracy_floor"):
         assert name in window, name
     # ADVICE r10 #4: a typo'd _PRIORITY name must fail loudly, not
-    # silently shift the window — _reorder asserts containment once
-    # registration is complete.
+    # silently shift the window — _register_modules checks containment
+    # once registration is complete.
     assert set(registry._PRIORITY) <= set(registry.REGISTRY)
 
 

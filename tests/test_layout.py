@@ -22,7 +22,7 @@ def _plan(df, mode: str = "formatted") -> str:
 def test_date_partitioned_write_prunes(spark, sf_dir, tmp_path):
     orders = Catalog(spark, sf_dir).orders
     path = str(tmp_path / "orders_part")
-    writes.write_date_partitioned(orders, path, "o_orderdate", "month")
+    writes.write_date_partitioned(orders, path, "o_orderdate")
 
     pruned = spark.read.parquet(path).filter(
         F.col("o_orderdate_month") == "1996-03")
@@ -135,7 +135,7 @@ def test_dynamic_partition_pruning_engages(spark, sf_dir, tmp_path):
     scanning on every dim-filtered query."""
     orders = Catalog(spark, sf_dir).orders
     path = str(tmp_path / "orders_dpp")
-    writes.write_date_partitioned(orders, path, "o_orderdate", "month")
+    writes.write_date_partitioned(orders, path, "o_orderdate")
     fact = spark.read.parquet(path)
 
     months = (fact.select(F.col("o_orderdate_month").alias("month"))

@@ -17,10 +17,8 @@ from tests.oracle_utils import compare, duckdb_con
 
 
 def _names():
-    # queries() (not raw REGISTRY) — it retries registration to a
-    # FULL pass, so collection can't silently parametrize over a
-    # partial registry if a conftest import aborted the load-time
-    # attempt mid-import (registry.py _REGISTERED note)
+    # queries() (not raw REGISTRY): it imports every query module
+    # first, so collection parametrizes over the full registry
     return sorted(registry.queries())
 
 

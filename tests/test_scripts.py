@@ -47,7 +47,7 @@ def test_sf1_families_match_recorded_bounds():
         scales = json.load(f)["scales"]
     for sk in ("sf0.1", "sf1.0"):
         assert set(names) == set(scales[sk]), sk
-    assert set(names) <= set(registry.REGISTRY)
+    assert set(names) <= set(registry.queries())
 
 
 def test_sf1_regression_rejects_unknown_family():

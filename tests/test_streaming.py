@@ -165,60 +165,6 @@ def test_stateful_running_totals(spark, sf_dir, events_stream,
         assert abs(got[uid][1] - t) < 0.02     # state accumulates FP order
 
 
-def test_transform_with_state_plan_constructs(spark, events_stream):
-    # plan construction (analysis, schema) must work everywhere even
-    # though execution needs protobuf
-    df = jobs.user_running_totals_tws(events_stream)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] \
-        == ["user_id", "n_events", "total_value"]
-
-
-def _have_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _have_protobuf(),
-    reason="transformWithState needs the protobuf package (its "
-           "state-server wire protocol); not installed in this sandbox")
-def test_transform_with_state_running_totals(spark, sf_dir, events_stream,
-                                             tmp_path_factory):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API) must
-    produce the same final per-user totals as the batch aggregation —
-    and as the applyInPandasWithState twin it succeeds. Needs the
-    RocksDB state store provider; restored after the run."""
-    from data_warehouse_project_spark.sources.catalog import Catalog
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key, "org.apache.spark.sql.execution.streaming."
-             "state.RocksDBStateStoreProvider")
-    try:
-        ck = str(tmp_path_factory.mktemp("ck_tws"))
-        jobs.run_to_memory(jobs.user_running_totals_tws(events_stream),
-                           "tws_mem", ck, output_mode="update")
-        got = {r["user_id"]: (r["n_events"], r["total_value"])
-               for r in spark.table("tws_mem").collect()}
-    finally:
-        spark.conf.set(key, prev)
-    expected = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in Catalog(spark, sf_dir).events.groupBy("user_id").agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 2).alias("t")).collect()
-    }
-    assert set(got) == set(expected)
-    for uid, (n, t) in expected.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - t) < 0.02       # FP accumulation order
-
-
 def test_watermark_late_data_accept_and_drop(spark, tmp_path):
     """Incremental-feed watermark semantics (not a single-file replay):
     chunk 1 establishes the watermark, chunk 2 delivers one late-but-
