@@ -94,7 +94,7 @@ def dsum_shift(total: Column) -> Column:
     time."""
     down = 10 ** (GUARD - 2)
     out = F.floor((total + F.lit(down // 2)) / F.lit(float(down)))
-    return out.cast("double") / F.lit(float(10 ** 2))
+    return out.cast("double") / F.lit(100.0)
 
 
 def dsum(term: Column) -> Column:
@@ -107,7 +107,7 @@ def sql_dsum(term_sql: str) -> str:
     down = 10 ** (GUARD - 2)
     return (
         f"(FLOOR((CAST(SUM(CAST(FLOOR(({term_sql}) * {g} + 0.5) AS BIGINT)) "
-        f"AS BIGINT) + {down // 2}) / {float(down)}) / {float(10 ** 2)})"
+        f"AS BIGINT) + {down // 2}) / {float(down)}) / 100.0)"
     )
 
 
@@ -122,7 +122,7 @@ def sql_dsum_over(term_sql: str, over_sql: str) -> str:
     return (
         f"(FLOOR((CAST(SUM(CAST(FLOOR(({term_sql}) * {g} + 0.5) AS BIGINT)) "
         f"OVER {over_sql} AS BIGINT) + {down // 2}) / {float(down)}) "
-        f"/ {float(10 ** 2)})"
+        "/ 100.0)"
     )
 
 
