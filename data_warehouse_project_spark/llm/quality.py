@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -473,10 +474,12 @@ register("quality_score_linear", quality_score_linear, QUALITY_SCORE_SQL)
 # Exact-percentile length band filter
 # --------------------------------------------------------------------------
 
-#: length-band bounds: drop the shortest 5% and longest 5% of
-#: documents (length_band_filter and refinery)
-BAND_LO_PCT = 0.05
-BAND_HI_PCT = 0.95
+#: length-band tail: drop the shortest and the longest 1/BAND_TAIL (5%)
+#: of documents (length_band_filter and refinery)
+BAND_TAIL = 20
+BAND_LO, BAND_HI = (1, BAND_TAIL), (BAND_TAIL - 1, BAND_TAIL)
+#: the same bounds as the decimals the oracle SQL spells (0.05, 0.95)
+BAND_LO_PCT, BAND_HI_PCT = 1 / BAND_TAIL, (BAND_TAIL - 1) / BAND_TAIL
 
 
 def length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,11 +487,10 @@ def length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     [p05, p95] length band — the standard outlier-length filter every
     corpus pipeline applies before quality scoring.
 
-    Exact discrete percentiles, cross-engine deterministic: the pXX
-    threshold is the smallest length L whose cumulative doc count
-    reaches ceil(pct * n_docs) (quantile_disc semantics, spelled out
-    as identical integer math in both engines rather than trusting
-    each engine's quantile tie-breaking).
+    Exact discrete percentiles (`operators.windows.disc_quantiles`):
+    the pXX threshold is the smallest length L whose cumulative doc
+    count reaches ceil(pct * n_docs) — the oracle spells the same
+    rank as CEIL over the decimal fraction.
 
     Scale design (100 TB): the naive plan globally sorts every doc by
     length; this one aggregates to a length HISTOGRAM first (distinct
@@ -497,22 +499,9 @@ def length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the thresholds broadcast back to the corpus scan. One shuffle
     (histogram groupBy); the filter itself is scan-local.
     """
-    cat = Catalog(spark, sf_dir)
-    docs = cat.documents
-    hist = docs.groupBy("n_chars").agg(F.count("*").alias("c"))
-    w = Window.orderBy("n_chars").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    cum = hist.select(
-        "n_chars", F.sum("c").over(w).alias("cum"),
-        F.sum("c").over(Window.partitionBy()).alias("n_docs"))
-    bounds = cum.groupBy().agg(
-        F.min(F.when(
-            F.col("cum") >= F.ceil(F.lit(BAND_LO_PCT) * F.col("n_docs")),
-            F.col("n_chars"))).alias("lo"),
-        F.min(F.when(
-            F.col("cum") >= F.ceil(F.lit(BAND_HI_PCT) * F.col("n_docs")),
-            F.col("n_chars"))).alias("hi"),
-    )
+    docs = Catalog(spark, sf_dir).documents
+    bounds = disc_quantiles(docs, [], "n_chars",
+                            {"lo": BAND_LO, "hi": BAND_HI})
     return (
         docs.join(bounds)
         .filter(F.col("n_chars").between(F.col("lo"), F.col("hi")))

@@ -211,6 +211,22 @@ ANN_PROBES = 3
 ANN_MULTIPROBE_TABLES = 10
 
 
+def _lcg_planes(n_planes: int, seed: int):
+    """The (n_planes, DIM) ±1 hyperplane matrix both LSH bucketers
+    project on, so a query's probe buckets name the corpus's buckets.
+    Coordinates are drawn row by row from a 64-bit LCG seeded with
+    ``seed`` (state ← state·6364136223846793005 + 1442695040888963407
+    mod 2⁶⁴); each is +1 when the state's top bit is set, else −1."""
+    import numpy as np
+
+    state = seed
+    coords = []
+    for _ in range(n_planes * DIM):
+        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
+        coords.append(1.0 if (state >> 63) else -1.0)
+    return np.array(coords, dtype=np.float64).reshape(n_planes, DIM)
+
+
 def _probe_buckets_udf(n_bands: int, bits: int, probes: int, seed: int = 42):
     """pandas_udf: embedding -> per-band ARRAY of probe bucket ids
     (own bucket + ``probes - 1`` single-bit flips in ascending
@@ -218,16 +234,7 @@ def _probe_buckets_udf(n_bands: int, bits: int, probes: int, seed: int = 42):
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
-    n_planes = n_bands * bits
-    state = seed
-    rows = []
-    for _ in range(n_planes):
-        row = []
-        for _ in range(DIM):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            row.append(1.0 if (state >> 63) else -1.0)
-        rows.append(row)
-    planes = np.array(rows, dtype=np.float64)        # (n_planes, DIM)
+    planes = _lcg_planes(n_bands * bits, seed)      # (n_planes, DIM)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     @F.pandas_udf(ArrayType(ArrayType(LongType())))
@@ -380,10 +387,7 @@ MAX_VEC_BUCKET = 4096
 def _band_buckets_udf(n_bands: int, bits: int, seed: int = 42):
     """pandas_udf: embedding -> array of per-band bucket ids.
 
-    Hyperplanes are ±1 rows drawn from a 64-bit LCG seeded with
-    ``seed`` (state ← state·6364136223846793005 + 1442695040888963407
-    mod 2⁶⁴; each plane coordinate is +1 when the state's top bit is
-    set, else −1), materialized as a numpy matrix; the whole batch
+    Hyperplanes are `_lcg_planes(n_bands·bits, seed)`; the whole batch
     is one (batch × DIM) @ (DIM × n_bands·bits) matmul + bit-packing —
     the justified-pandas_udf category (a 96-plane interpreted
     higher-order-function dot per row would be ~100× slower).
@@ -391,16 +395,7 @@ def _band_buckets_udf(n_bands: int, bits: int, seed: int = 42):
     import numpy as np
     from pyspark.sql.types import ArrayType, LongType
 
-    n_planes = n_bands * bits
-    state = seed
-    rows = []
-    for _ in range(n_planes):
-        row = []
-        for _ in range(DIM):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-            row.append(1.0 if (state >> 63) else -1.0)
-        rows.append(row)
-    planes = np.array(rows, dtype=np.float64)        # (n_planes, DIM)
+    planes = _lcg_planes(n_bands * bits, seed)      # (n_planes, DIM)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     @F.pandas_udf(ArrayType(LongType()))

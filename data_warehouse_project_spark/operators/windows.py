@@ -1,4 +1,5 @@
-"""Window-based greatest-per-group operators.
+"""Window-based per-group operators: greatest-per-group and exact
+discrete quantiles.
 
 The reference's two correlated subqueries are both "latest per group"
 queries in disguise (SURVEY.md §2.5):
@@ -21,15 +22,20 @@ partition keys with no driver materialization; Spark's window exec
 sorts within partitions and streams. For heavily skewed groups the
 rank-filter pattern still beats a self-join-on-max because it is one
 shuffle instead of two. AQE handles partition-count right-sizing.
+
+`disc_quantiles` is the engine's one exact discrete quantile. Its
+windows run over a (group, value) count histogram, so they see the
+distinct values of each group, never one row per input row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 _RANK_COL = "__rank"
+_Q_VAL, _Q_CNT, _Q_CUM = "__q_v", "__q_c", "__q_cum"
 
 
 def top_k_per_group(
@@ -61,3 +67,38 @@ def latest_per_group(
 ) -> DataFrame:
     """Keep exactly the latest row per group (top-1 descending)."""
     return top_k_per_group(df, partition_by, order_by, k=1)
+
+
+def disc_quantiles(
+    df: DataFrame,
+    by: Sequence[str],
+    v: str,
+    qs: Mapping[str, tuple[int, int]],
+) -> DataFrame:
+    """Exact discrete quantiles of ``v`` per ``by`` group (one row
+    overall when ``by`` is empty).
+
+    Each row holds ``by``, the group's row count ``n`` and, for each
+    ``out: (num, den)`` in ``qs``, the smallest ``v`` whose cumulative
+    count ``cum`` satisfies ``cum * den >= n * num``: the value at
+    sorted rank ceil(num * n / den), in integer math both engines
+    share (``(1, 2)`` is the lower median, ``(1, 1)`` the maximum).
+
+    The running and total counts are two frames of one window over the
+    (``by``, ``v``) count histogram.
+    """
+    w = Window.partitionBy(*by).orderBy(_Q_VAL)
+    hist = (df.groupBy(*by, F.col(v).alias(_Q_VAL))
+            .agg(F.count("*").alias(_Q_CNT)))
+    ranked = hist.select(
+        *by, _Q_VAL,
+        F.sum(_Q_CNT).over(w.rowsBetween(Window.unboundedPreceding,
+                                         Window.currentRow)).alias(_Q_CUM),
+        F.sum(_Q_CNT).over(w.rowsBetween(Window.unboundedPreceding,
+                                         Window.unboundedFollowing))
+        .alias("n"))
+    return ranked.groupBy(*by).agg(
+        F.max("n").alias("n"),
+        *[F.min(F.when(F.col(_Q_CUM) * den >= F.col("n") * num,
+                       F.col(_Q_VAL))).alias(out)
+          for out, (num, den) in qs.items()])

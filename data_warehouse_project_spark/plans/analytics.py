@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 from .graph import _KEPT_SQL, _basket_pairs, _kept_baskets
@@ -383,10 +384,9 @@ def conversion_latency_quantiles(spark: SparkSession,
 
     Determinism: latencies are exact microsecond-integer differences
     (unix_micros / epoch_us) integer-DIV'd to minutes — no truncation
-    mismatch between second-resolution engines; quantiles use the
-    cum*K >= n*q integer rank form on the bounded latency histogram
-    (≤ window-hours×60 distinct values), the ship_latency_quantiles
-    discipline.
+    mismatch between second-resolution engines; quantiles come from
+    `operators.windows.disc_quantiles` over the bounded latency
+    histogram (≤ window-hours×60 distinct values).
 
     Scale: one user-keyed window exchange + per-user collapse (the
     corpus term), then the minute histogram; the ranking windows see
@@ -414,31 +414,16 @@ def conversion_latency_quantiles(spark: SparkSession,
                     + F.expr(f"INTERVAL {FUNNEL_WINDOW_HOURS} HOURS")),
                  F.col("ts"))).alias("t_purchase"))
         .where(F.col("t_purchase").isNotNull()))
-    hist = (per_user
-            .select((F.unix_micros(F.col("t_purchase").cast("timestamp"))
-                     - F.unix_micros(F.col("t_click").cast("timestamp")))
-                    .alias("lat_us"))
-            .select(F.expr("lat_us DIV 60000000").cast("long")
-                    .alias("lat"))
-            .groupBy("lat")
-            .agg(F.count("*").cast("long").alias("c")))
-    wcum = W.orderBy("lat").rowsBetween(W.unboundedPreceding, 0)
-    wall = W.orderBy("lat").rowsBetween(W.unboundedPreceding,
-                                        W.unboundedFollowing)
-    ranked = hist.select(
-        "lat",
-        F.sum("c").over(wcum).alias("cum"),
-        F.sum("c").over(wall).alias("n"))
-    return ranked.agg(
-        F.coalesce(F.max("n"), F.lit(0)).cast("long")
-        .alias("n_converters"),
-        F.min(F.when(F.col("cum") * 2 >= F.col("n"), F.col("lat")))
-        .cast("long").alias("p50_min"),
-        F.min(F.when(F.col("cum") * 10 >= F.col("n") * 9, F.col("lat")))
-        .cast("long").alias("p90_min"),
-        F.min(F.when(F.col("cum") * 100 >= F.col("n") * 99, F.col("lat")))
-        .cast("long").alias("p99_min"),
-        F.max("lat").cast("long").alias("max_min"))
+    lat = (per_user
+           .select((F.unix_micros(F.col("t_purchase").cast("timestamp"))
+                    - F.unix_micros(F.col("t_click").cast("timestamp")))
+                   .alias("lat_us"))
+           .select(F.expr("lat_us DIV 60000000").cast("long").alias("lat")))
+    return (disc_quantiles(lat, [], "lat",
+                           {"p50_min": (1, 2), "p90_min": (9, 10),
+                            "p99_min": (99, 100), "max_min": (1, 1)})
+            .select(F.coalesce("n", F.lit(0)).alias("n_converters"),
+                    "p50_min", "p90_min", "p99_min", "max_min"))
 
 
 CONVERSION_LATENCY_SQL = f"""

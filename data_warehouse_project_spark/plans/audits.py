@@ -8,10 +8,9 @@ engine-side replacement for that missing enforcement).
 Scale design: integrity checks are anti-joins (broadcast for dim-
 sized parents, shuffle-hash for fact→fact); reconciliation is one
 map-side-combinable groupBy(order) then a key-colocated join;
-RFM quartile boundaries come from bounded-cardinality value
-histograms (the length_band_filter discipline — the single-partition
-window sees DISTINCT quantized values only, never users), broadcast
-back onto the per-user aggregate.
+RFM quartile boundaries come from `operators.windows.disc_quantiles`
+over bounded-cardinality values, broadcast back onto the per-user
+aggregate.
 
 Determinism: all comparisons and counts run on exact integers
 (cents-quantized money, day-granular recency); the only doubles in
@@ -24,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -213,32 +213,6 @@ register("order_consistency_audit", order_consistency_audit,
 # RFM segmentation
 # --------------------------------------------------------------------------
 
-def _disc_quartiles(hist_src: DataFrame, col: str) -> DataFrame:
-    """Exact discrete quartile boundaries (the value at cumulative
-    rank ceil(k·n/4), k=1..3) from a value histogram — the window
-    sees DISTINCT values only (bounded: days / event counts /
-    whole-unit spend), never one row per user.
-
-    Reference single-dimension form of the rank rule (property-tested
-    against sorted-rank in tests/test_skew_and_properties.py);
-    user_rfm_segments inlines the same math as ONE stacked
-    multi-dimension histogram pass."""
-    hist = hist_src.groupBy(col).agg(F.count("*").alias("c"))
-    w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy()
-    ranked = hist.select(
-        F.col(col).alias("v"),
-        F.sum("c").over(w).alias("cum"),
-        F.sum("c").over(wt).alias("n"))
-    return ranked.agg(
-        F.min(F.when(F.col("cum") * 4 >= F.col("n"), F.col("v")))
-        .alias("q1"),
-        F.min(F.when(F.col("cum") * 4 >= F.col("n") * 2, F.col("v")))
-        .alias("q2"),
-        F.min(F.when(F.col("cum") * 4 >= F.col("n") * 3, F.col("v")))
-        .alias("q3"))
-
-
 def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation over the events stream: per user,
     Recency (days since last event, vs the corpus max date),
@@ -249,9 +223,8 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one groupBy(user_id) over events; each quartile boundary
     comes from a bounded distinct-value histogram (days for R, event
-    counts for F, whole currency units for M) and broadcasts back;
-    the final aggregate has ≤ 64 segment rows. cum*4 >= k*n is the
-    integer form of cum >= ceil(k*n/4) — no FP anywhere in scoring."""
+    counts for F, whole currency units for M; `disc_quantiles`) and
+    broadcasts back; the final aggregate has ≤ 64 segment rows."""
     cat = Catalog(spark, sf_dir)
     anchor = cat.events.agg(F.max(F.to_date("ts")).alias("anchor"))
     users = (
@@ -276,25 +249,13 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE stacked histogram pass computes all nine quartile bounds:
     # (dim, value) counts shuffle once, the ranking windows partition
     # by dim (never single-partition), and the bounds pivot into a
-    # single one-row broadcast — versus three separate histogram jobs
-    # over the user aggregate
-    hist = (users.selectExpr(
+    # single one-row broadcast
+    stacked = users.selectExpr(
         "stack(3, 'r', recency_days, 'f', freq, 'm', mon_units)"
         " as (dim, v)")
-        .groupBy("dim", "v").agg(F.count("*").alias("c")))
-    w = Window.partitionBy("dim").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0)
-    wt = Window.partitionBy("dim")
     bounds = (
-        hist.select("dim", "v", F.sum("c").over(w).alias("cum"),
-                    F.sum("c").over(wt).alias("n"))
-        .groupBy("dim")
-        .agg(F.min(F.when(F.col("cum") * 4 >= F.col("n"), F.col("v")))
-             .alias("q1"),
-             F.min(F.when(F.col("cum") * 4 >= F.col("n") * 2, F.col("v")))
-             .alias("q2"),
-             F.min(F.when(F.col("cum") * 4 >= F.col("n") * 3, F.col("v")))
-             .alias("q3"))
+        disc_quantiles(stacked, ["dim"], "v",
+                       {"q1": (1, 4), "q2": (2, 4), "q3": (3, 4)})
         .groupBy().pivot("dim", ["r", "f", "m"])
         .agg(F.first("q1").alias("q1"), F.first("q2").alias("q2"),
              F.first("q3").alias("q3"))

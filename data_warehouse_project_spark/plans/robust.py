@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..cache import pin
 from ..functions.compat import fround, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -319,7 +320,7 @@ def theilsen_fold(cells: DataFrame, group_col: str) -> DataFrame:
     divide matches across engines regardless of sign (integer DIV
     would NOT: Spark truncates toward zero, DuckDB floors) — then the
     median is the exact lower discrete median of the quantized
-    multiset via the cum*2 >= n integer rank form.
+    multiset (`operators.windows.disc_quantiles`).
 
     Scale: the pair generator is a per-group self-join over the
     BOUNDED series frame — months x months per group, calendar-sized
@@ -337,20 +338,8 @@ def theilsen_fold(cells: DataFrame, group_col: str) -> DataFrame:
                               / (F.col("t2") - F.col("t1"))
                               .cast("double"))
                       .cast("long").alias("s_q")))
-    hist = (slopes.groupBy(group_col, "s_q")
-            .agg(F.count("*").cast("long").alias("c")))
-    w_cum = (Window.partitionBy(group_col).orderBy("s_q")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_all = Window.partitionBy(group_col)
-    ranked = hist.select(
-        group_col, "s_q",
-        F.sum("c").over(w_cum).alias("cum"),
-        F.sum("c").over(w_all).alias("n"))
-    return (ranked.groupBy(group_col)
-            .agg(F.max("n").cast("long").alias("n_pairs"),
-                 F.min(F.when(F.col("cum") * 2 >= F.col("n"),
-                              F.col("s_q"))).alias("med_q"))
-            .select(group_col, "n_pairs",
+    return (disc_quantiles(slopes, [group_col], "s_q", {"med_q": (1, 2)})
+            .select(group_col, F.col("n").alias("n_pairs"),
                     fround(F.col("med_q").cast("double")
                            / F.lit(float(_TS_Q)), 6)
                     .alias("sen_slope"))

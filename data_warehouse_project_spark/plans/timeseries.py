@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -404,10 +405,7 @@ def events_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: lateness is integer seconds from a running MAX window
     (order-independent given the per-shard (event_id) arrival
-    order); p50/p95 use the quantile_disc rank rule over per-type
-    lateness HISTOGRAMS (value, count) — the quantile windows see
-    distinct lateness values only, never events (length_band_filter
-    discipline).
+    order); p50/p95 are `operators.windows.disc_quantiles` per type.
 
     Scale: the running-max window partitions by shard (a real feed's
     kafka partition — hundreds of ways parallel, never a global
@@ -425,26 +423,14 @@ def events_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.greatest(F.coalesce(F.col("hwm") - F.col("sec"),
                                           F.lit(0)), F.lit(0))
                     .cast("long").alias("late_s")))
-    hist = (late.groupBy("event_type", "late_s")
-            .agg(F.count("*").cast("long").alias("c")))
-    wv = Window.partitionBy("event_type").orderBy("late_s")
-    ranked = hist.select(
-        "event_type", "late_s", "c",
-        F.sum("c").over(wv).alias("cum"),
-        F.sum("c").over(Window.partitionBy("event_type")).alias("n"))
-
-    def disc_q(num: int, den: int, out: str) -> DataFrame:
-        return (ranked.filter(F.col("cum") * den >= F.col("n") * num)
-                .groupBy("event_type")
-                .agg(F.min("late_s").cast("long").alias(out)))
-
     agg = (late.groupBy("event_type")
            .agg(F.count("*").cast("long").alias("n_events"),
                 F.sum(F.when(F.col("late_s") > 0, 1).otherwise(0))
                 .cast("long").alias("n_late"),
                 F.max("late_s").cast("long").alias("max_late_s")))
-    return (agg.join(disc_q(1, 2, "p50_late_s"), "event_type")
-            .join(disc_q(19, 20, "p95_late_s"), "event_type")
+    qs = disc_quantiles(late, ["event_type"], "late_s",
+                        {"p50_late_s": (1, 2), "p95_late_s": (19, 20)})
+    return (agg.join(qs, "event_type")
             .select("event_type", "n_events", "n_late",
                     "p50_late_s", "p95_late_s", "max_late_s")
             .orderBy("event_type"))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.compat import (dsum, dsum_over, fround, sql_davg, sql_dsum,
                                 sql_dsum_over, sql_fround)
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -411,41 +412,22 @@ def ship_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer domain (TPC-H ships within ~122 days), so the quantiles
     come from a (priority, latency_day) count histogram: the fact-fact
     join shuffles once on orderkey, the ranking windows see only the
-    tiny histogram — the aggregate-first percentile discipline
-    (length_band_filter / events_anomaly_mad) applied to a join.
-
-    cum*100 >= n*K is the integer form of cum >= ceil(K·n/100)
-    (discrete quantile at rank ceil(q·n)) — no FP in rank math.
+    tiny histogram (`operators.windows.disc_quantiles`).
     """
-    from pyspark.sql import Window as W
     cat = Catalog(spark, sf_dir)
-    hist = (
-        cat.lineitem
-        .join(cat.orders,
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .select("o_orderpriority",
-                F.datediff("l_shipdate", "o_orderdate").alias("lat"))
-        .groupBy("o_orderpriority", "lat")
-        .agg(F.count("*").alias("c"))
-    )
-    w = (W.partitionBy("o_orderpriority").orderBy("lat")
-         .rowsBetween(W.unboundedPreceding, 0))
-    wt = W.partitionBy("o_orderpriority")
-    ranked = hist.select(
-        "o_orderpriority", "lat",
-        F.sum("c").over(w).alias("cum"),
-        F.sum("c").over(wt).alias("n"))
+    lat = (cat.lineitem
+           .join(cat.orders,
+                 F.col("l_orderkey") == F.col("o_orderkey"))
+           .select("o_orderpriority",
+                   F.datediff("l_shipdate", "o_orderdate").alias("lat")))
     return (
-        ranked.groupBy("o_orderpriority")
-        .agg(
-            F.max("n").cast("long").alias("n_lines"),
-            F.min(F.when(F.col("cum") * 2 >= F.col("n"), F.col("lat")))
-            .cast("long").alias("p50_days"),
-            F.min(F.when(F.col("cum") * 10 >= F.col("n") * 9, F.col("lat")))
-            .cast("long").alias("p90_days"),
-            F.min(F.when(F.col("cum") * 100 >= F.col("n") * 99, F.col("lat")))
-            .cast("long").alias("p99_days"),
-        )
+        disc_quantiles(lat, ["o_orderpriority"], "lat",
+                       {"p50_days": (1, 2), "p90_days": (9, 10),
+                        "p99_days": (99, 100)})
+        .select("o_orderpriority",
+                F.col("n").alias("n_lines"),
+                *[F.col(c).cast("long").alias(c)
+                  for c in ("p50_days", "p90_days", "p99_days")])
         .orderBy("o_orderpriority")
     )
 
@@ -574,7 +556,6 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram whose ranking window sees (supplier, latency-day)
     cells only (≤ ~122 distinct days each); supplier names attach by
     broadcast; TakeOrdered picks the top N — no global sort."""
-    from pyspark.sql import Window as W
     cat = Catalog(spark, sf_dir)
     lines = (
         cat.lineitem
@@ -592,18 +573,10 @@ def supplier_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_lines"),
         F.sum("ret").cast("long").alias("n_returned"),
         dsum(F.col("net")).alias("revenue"))
-    hist = lines.groupBy("l_suppkey", "lat").agg(F.count("*").alias("c"))
-    w = (W.partitionBy("l_suppkey").orderBy("lat")
-         .rowsBetween(W.unboundedPreceding, 0))
-    wt = W.partitionBy("l_suppkey")
-    med = (
-        hist.select("l_suppkey", "lat",
-                    F.sum("c").over(w).alias("cum"),
-                    F.sum("c").over(wt).alias("n"))
-        .groupBy("l_suppkey")
-        .agg(F.min(F.when(F.col("cum") * 2 >= F.col("n"), F.col("lat")))
-             .cast("long").alias("p50_latency_days"))
-    )
+    med = (disc_quantiles(lines, ["l_suppkey"], "lat",
+                          {"p50_latency_days": (1, 2)})
+           .select("l_suppkey", F.col("p50_latency_days").cast("long")
+                   .alias("p50_latency_days")))
     return (
         base.join(med, "l_suppkey")
         .join(cat.supplier.select("s_suppkey", "s_name"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import dsum, fround, sql_dsum, sql_fround
+from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
 
@@ -688,12 +689,10 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionizer's output.
 
     Scale: composes events_sessionize (one user-keyed window pass),
-    aggregates sessions for the count/fraction row and two quantile
-    histograms, and takes
-    every percentile from a BOUNDED histogram (minutes, event
-    counts) — windows see distinct values only, never sessions.
-    cum·K >= n·q is the integer rank form; fractions are single
-    IEEE divides of exact integers."""
+    aggregates sessions for the count/fraction row, and takes each
+    column's percentiles from one `operators.windows.disc_quantiles`
+    call over its BOUNDED histogram (minutes, event counts);
+    fractions are single IEEE divides of exact integers."""
     sessions = (
         events_sessionize(spark, sf_dir)
         .select(
@@ -704,27 +703,15 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def disc_q(col: str, q_num: int, q_den: int, out: str) -> DataFrame:
-        hist = sessions.groupBy(col).agg(F.count("*").alias("c"))
-        w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-        wt = Window.partitionBy()
-        return (
-            hist.select(F.col(col).alias("v"),
-                        F.sum("c").over(w).alias("cum"),
-                        F.sum("c").over(wt).alias("n"))
-            .agg(F.min(F.when(F.col("cum") * q_den >= F.col("n") * q_num,
-                              F.col("v"))).cast("long").alias(out))
-        )
-
     base = sessions.agg(
         F.count("*").cast("long").alias("n_sessions"),
         F.sum((F.col("n_events") == 1).cast("long")).alias("n_single"))
     return (
         base
-        .join(disc_q("dur_min", 1, 2, "p50_dur_min"))
-        .join(disc_q("dur_min", 9, 10, "p90_dur_min"))
-        .join(disc_q("n_events", 1, 2, "p50_events"))
-        .join(disc_q("n_events", 9, 10, "p90_events"))
+        .join(disc_quantiles(sessions, [], "dur_min",
+                             {"p50_dur_min": (1, 2), "p90_dur_min": (9, 10)}))
+        .join(disc_quantiles(sessions, [], "n_events",
+                             {"p50_events": (1, 2), "p90_events": (9, 10)}))
         .select(
             "n_sessions",
             fround(F.col("n_single") / F.col("n_sessions"), 6)

@@ -95,8 +95,9 @@ QUERIES = [
     "part_label_propagation",
 ]
 
-#: quiet: standing quiet minima (BASELINE.md round-12 re-baseline) for
-#: control normalization — update alongside BASELINE.md
+#: quiet: standing quiet minima (the round-12 re-baseline, in
+#: `git show 528bb33:BASELINE.md`) for control normalization — update
+#: alongside BASELINE.md
 STANDING = {
     "q1_pricing_summary": 0.598,
     "flagship_my_registrations": 1.983,

@@ -5,12 +5,14 @@ property-based coverage of tricky semantics)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import (HealthCheck, example, given, settings,
+                        strategies as st)
 from pyspark.sql import functions as F
 
 from data_warehouse_project_spark.operators.asof import asof_join
 from data_warehouse_project_spark.operators.skew import salted_agg, salted_join
-from data_warehouse_project_spark.operators.windows import top_k_per_group
+from data_warehouse_project_spark.operators.windows import (
+    disc_quantiles, top_k_per_group)
 from data_warehouse_project_spark.streaming.state_fold import (
     dropped_late_count)
 
@@ -294,24 +296,39 @@ def test_transitions_incremental_matches_python_model(spark, events, split):
 # discrete-quantile rank rule vs a Python reference model
 # ---------------------------------------------------------------------------
 
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(vals=st.lists(st.integers(0, 30), min_size=1, max_size=40))
-def test_disc_quartiles_match_rank_model(spark, vals):
-    """The histogram-based quartile helper (audits._disc_quartiles —
-    the rank math behind user_rfm_segments, ship_latency_quantiles,
-    session_stats and the calibration deciles) must return the value
-    at sorted rank ceil(k·n/4) for k = 1..3, for ANY multiset —
-    ties, skew, and single-value series included."""
-    from data_warehouse_project_spark.plans.audits import _disc_quartiles
+#: (num, den) pairs the rank model checks: the tails the sites use,
+#: the quartiles, and (1, 1), the maximum
+_RANK_QS = {"p05": (1, 20), "q1": (1, 4), "q2": (1, 2), "q3": (3, 4),
+            "p95": (19, 20), "p99": (99, 100), "top": (1, 1)}
 
-    df = spark.createDataFrame([(v,) for v in vals], "x long")
-    row = _disc_quartiles(df, "x").collect()[0]
+
+def _rank_model(vals: list[int]) -> dict:
     s = sorted(vals)
     n = len(s)
-    expect = {f"q{k}": s[-(-k * n // 4) - 1] for k in (1, 2, 3)}
-    got = {k: row[k] for k in ("q1", "q2", "q3")}
-    assert got == expect, (vals, got, expect)
+    return {"n": n, **{out: s[-(-num * n // den) - 1]
+                       for out, (num, den) in _RANK_QS.items()}}
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 30)),
+                     min_size=1, max_size=40),
+       v=st.sampled_from(["x", "n"]))
+@example(rows=[(0, 7), (2, 3), (2, 3), (2, 0)], v="n")
+def test_disc_quantiles_match_rank_model(spark, rows, v):
+    """operators.windows.disc_quantiles, per group and over all rows
+    (``by=[]``), must return the group's row count n and the value at
+    sorted rank ceil(num·n/den) for every (num, den), for ANY
+    multiset: ties, skew and single-value groups included, and a
+    value column named ``n`` like the count it outputs."""
+    df = spark.createDataFrame(rows, f"g long, {v} long")
+    got = {r["g"]: r.asDict()
+           for r in disc_quantiles(df, ["g"], v, _RANK_QS).collect()}
+    expect = {g: {"g": g, **_rank_model([x for k, x in rows if k == g])}
+              for g in {g for g, _ in rows}}
+    assert got == expect, (rows, v)
+    (whole,) = disc_quantiles(df, [], v, _RANK_QS).collect()
+    assert whole.asDict() == _rank_model([x for _, x in rows]), (rows, v)
 
 
 # ---------------------------------------------------------------------------
