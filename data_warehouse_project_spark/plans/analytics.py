@@ -392,9 +392,8 @@ def conversion_latency_quantiles(spark: SparkSession,
     corpus term), then the minute histogram; the ranking windows see
     only the bounded histogram.
     """
-    from pyspark.sql import Window as W
     cat = Catalog(spark, sf_dir)
-    w = W.partitionBy("user_id")
+    w = Window.partitionBy("user_id")
     per_user = (
         cat.events
         .where(F.col("user_id").isNotNull()
