@@ -12,7 +12,7 @@ token or source — no all-pairs steps, no Python in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.compat import fround, sql_fround
 from ..operators.windows import disc_quantiles
@@ -32,6 +32,41 @@ MAX_TOP_TOKEN_FRAC = 0.15
 MAX_DUP_BIGRAM_FRAC = 0.10
 
 
+def _token_sig(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(toks, sig): ``docs`` with its whitespace ``tokens`` array, and
+    per doc_id the token count, distinct-token count and the most
+    common token's count (n_tokens, n_distinct, top_c) — one explode
+    → two-level aggregate, map-side combinable."""
+    toks = docs.withColumn("tokens", F.split(F.trim(F.col("text")), r"\s+"))
+    sig = (
+        toks.select("doc_id", F.explode("tokens").alias("tok"))
+        .groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
+        .groupBy("doc_id").agg(
+            F.sum("c").cast("long").alias("n_tokens"),
+            F.count("*").cast("long").alias("n_distinct"),
+            F.max("c").cast("long").alias("top_c"))
+    )
+    return toks, sig
+
+
+def _raw_dup() -> Column:
+    """The duplicate-bigram fraction of the ``tokens`` array."""
+    return F.expr(
+        "CASE WHEN size(tokens) < 2 THEN CAST(0.0 AS DOUBLE) ELSE "
+        "1.0 - size(array_distinct(transform(sequence(0, size(tokens)-2),"
+        " i -> concat(tokens[i], ' ', tokens[i+1]))))"
+        " / CAST(size(tokens) - 1 AS DOUBLE) END"
+    ).alias("raw_dup")
+
+
+def _gopher_keep() -> Column:
+    """The Gopher keep rule over the rounded signals."""
+    return ((F.col("n_tokens") >= MIN_TOKENS)
+            & (F.col("ttr") >= MIN_TTR)
+            & (F.col("top_token_frac") <= MAX_TOP_TOKEN_FRAC)
+            & (F.col("dup_bigram_frac") <= MAX_DUP_BIGRAM_FRAC))
+
+
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition/composition signals with a keep flag —
     the Gopher-rules shape (Rae et al. 2021, public): token count
@@ -42,29 +77,9 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable); bigram stats are per-row array expressions. One
     shuffle on doc_id-sized keys.
     """
-    cat = Catalog(spark, sf_dir)
-    toks = cat.documents.withColumn(
-        "tokens", F.split(F.trim(F.col("text")), r"\s+"))
-    per_tok = (
-        toks.select("doc_id", F.explode("tokens").alias("tok"))
-        .groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-    )
-    sig = per_tok.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
-        F.count("*").cast("long").alias("n_distinct"),
-        F.max("c").cast("long").alias("top_c"),
-    )
-    bigr = toks.select(
-        "doc_id",
-        F.expr(
-            "CASE WHEN size(tokens) < 2 THEN CAST(0.0 AS DOUBLE) ELSE "
-            "1.0 - size(array_distinct(transform(sequence(0, size(tokens)-2),"
-            " i -> concat(tokens[i], ' ', tokens[i+1]))))"
-            " / CAST(size(tokens) - 1 AS DOUBLE) END"
-        ).alias("raw_dup"),
-    )
+    toks, sig = _token_sig(Catalog(spark, sf_dir).documents)
     return (
-        sig.join(bigr, "doc_id")
+        sig.join(toks.select("doc_id", _raw_dup()), "doc_id")
         .select(
             "doc_id",
             "n_tokens",
@@ -73,13 +88,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("top_token_frac"),
             fround(F.col("raw_dup"), 6).alias("dup_bigram_frac"),
         )
-        .withColumn(
-            "keep",
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (F.col("ttr") >= MIN_TTR)
-            & (F.col("top_token_frac") <= MAX_TOP_TOKEN_FRAC)
-            & (F.col("dup_bigram_frac") <= MAX_DUP_BIGRAM_FRAC),
-        )
+        .withColumn("keep", _gopher_keep())
     )
 
 
@@ -394,6 +403,23 @@ QSCORE_W_AVG_LEN = 0.1
 QSCORE_KEEP = 0.5
 
 
+def _n_letter_chars() -> Column:
+    """A document's non-whitespace character count."""
+    return (F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
+            .cast("long").alias("n_letter_chars"))
+
+
+def _score() -> Column:
+    """The 6dp-rounded logistic score over n_tokens, n_distinct and
+    n_letter_chars."""
+    z = (F.lit(QSCORE_W0)
+         + F.lit(QSCORE_W_LOG_TOKENS) * F.log(F.col("n_tokens"))
+         + F.lit(QSCORE_W_TTR) * (F.col("n_distinct") / F.col("n_tokens"))
+         + F.lit(QSCORE_W_AVG_LEN)
+         * (F.col("n_letter_chars") / F.col("n_tokens")))
+    return fround(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+
+
 def quality_score_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document logistic quality score over three features
     (log token count, type-token ratio, average token length) with a
@@ -406,32 +432,10 @@ def quality_score_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     in by replacing the weight literals; an embedding-based scorer
     would swap the feature block for a vector column)."""
     cat = Catalog(spark, sf_dir)
-    toks = cat.documents.withColumn(
-        "tokens", F.split(F.trim(F.col("text")), r"\s+"))
-    per_tok = (
-        toks.select("doc_id", F.explode("tokens").alias("tok"))
-        .groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-    )
-    sig = per_tok.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
-        F.count("*").cast("long").alias("n_distinct"),
-    )
-    lens = cat.documents.select(
-        "doc_id",
-        F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
-        .cast("long").alias("n_letter_chars"),
-    )
-    z = (F.lit(QSCORE_W0)
-         + F.lit(QSCORE_W_LOG_TOKENS) * F.log(F.col("n_tokens"))
-         + F.lit(QSCORE_W_TTR) * (F.col("n_distinct") / F.col("n_tokens"))
-         + F.lit(QSCORE_W_AVG_LEN)
-         * (F.col("n_letter_chars") / F.col("n_tokens")))
+    _, sig = _token_sig(cat.documents)
     return (
-        sig.join(lens, "doc_id")
-        .select(
-            "doc_id", "n_tokens",
-            fround(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("score"),
-        )
+        sig.join(cat.documents.select("doc_id", _n_letter_chars()), "doc_id")
+        .select("doc_id", "n_tokens", _score().alias("score"))
         .withColumn("keep", F.col("score") >= QSCORE_KEEP)
     )
 
@@ -600,56 +604,24 @@ def quality_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(10·cum/n); mean/frac outputs are single IEEE divides of
     exact integer sums.
 
-    The two feature pipelines are INLINED over one shared token-count
-    aggregate (scorer needs n_tokens/n_distinct/letter-chars, Gopher
-    adds top_c + the bigram fraction): composing the two registered
-    queries re-exploded the corpus twice (measured 1.14 s → one
-    explode pass + one per-row projection). Every expression below is
-    copied verbatim from quality_score_linear / gopher_quality_flags,
-    so results are value-identical to the composition — the DuckDB
-    oracle still composes the two original SQL blocks independently,
-    which is exactly the cross-check."""
-    cat = Catalog(spark, sf_dir)
-    toks = cat.documents.withColumn(
-        "tokens", F.split(F.trim(F.col("text")), r"\s+"))
-    per_tok = (
-        toks.select("doc_id", F.explode("tokens").alias("tok"))
-        .groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-    )
-    sig = per_tok.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
-        F.count("*").cast("long").alias("n_distinct"),
-        F.max("c").cast("long").alias("top_c"),
-    )
-    perrow = toks.select(
-        "doc_id",
-        F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
-        .cast("long").alias("n_letter_chars"),
-        F.expr(
-            "CASE WHEN size(tokens) < 2 THEN CAST(0.0 AS DOUBLE) ELSE "
-            "1.0 - size(array_distinct(transform(sequence(0, size(tokens)-2),"
-            " i -> concat(tokens[i], ' ', tokens[i+1]))))"
-            " / CAST(size(tokens) - 1 AS DOUBLE) END"
-        ).alias("raw_dup"),
-    )
-    z = (F.lit(QSCORE_W0)
-         + F.lit(QSCORE_W_LOG_TOKENS) * F.log(F.col("n_tokens"))
-         + F.lit(QSCORE_W_TTR) * (F.col("n_distinct") / F.col("n_tokens"))
-         + F.lit(QSCORE_W_AVG_LEN)
-         * (F.col("n_letter_chars") / F.col("n_tokens")))
+    The two feature pipelines run over one shared token-count
+    aggregate (the scorer needs n_tokens/n_distinct/letter-chars,
+    Gopher adds top_c + the bigram fraction): composing the two
+    registered queries re-exploded the corpus twice (measured 1.14 s
+    → one explode pass + one per-row projection). Both queries'
+    feature helpers are reused, so results are value-identical to the
+    composition — the DuckDB oracle still composes the two original
+    SQL blocks independently, which is exactly the cross-check."""
+    toks, sig = _token_sig(Catalog(spark, sf_dir).documents)
+    perrow = toks.select("doc_id", _n_letter_chars(), _raw_dup())
     docs = (
         sig.join(perrow, "doc_id")
-        .withColumn("score", fround(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6))
+        .withColumn("score", _score())
         .withColumn("ttr", fround(F.col("n_distinct") / F.col("n_tokens"), 6))
         .withColumn("top_token_frac",
                     fround(F.col("top_c") / F.col("n_tokens"), 6))
         .withColumn("dup_bigram_frac", fround(F.col("raw_dup"), 6))
-        .withColumn(
-            "keep",
-            (F.col("n_tokens") >= MIN_TOKENS)
-            & (F.col("ttr") >= MIN_TTR)
-            & (F.col("top_token_frac") <= MAX_TOP_TOKEN_FRAC)
-            & (F.col("dup_bigram_frac") <= MAX_DUP_BIGRAM_FRAC))
+        .withColumn("keep", _gopher_keep())
         .select("doc_id", "score", "keep")
         .withColumn("sb", F.floor(F.col("score") * 1000).cast("long"))
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
+from ..streaming.state_fold import key_split, replay
 
 #: sketch geometry: d hash rows × w buckets (64 KiB of longs)
 CMS_D = 4
@@ -641,26 +642,17 @@ def sketch_fold_identity_floor(spark: SparkSession,
     from ..operators.bloom import bloom_state, merge_bloom_state
     cat = Catalog(spark, sf_dir)
 
-    docs = cat.documents
-    d1 = docs.filter(F.col("doc_id") % 2 == 0)
-    d2 = docs.filter(F.col("doc_id") % 2 == 1)
-    cms_ok = _frames_identical(
-        merge_cms_state(cms_state(d1), d2), cms_state(docs)) \
-        .withColumnRenamed("ok", "cms_fold_identical")
+    def fold_ok(df, key, init, merge, out):
+        return _frames_identical(
+            replay(key_split(df, F.col(key), 2), init, merge), init(df)) \
+            .withColumnRenamed("ok", out)
 
-    orders = cat.orders
-    o1 = orders.filter(F.col("o_orderkey") % 2 == 0)
-    o2 = orders.filter(F.col("o_orderkey") % 2 == 1)
-    kmv_ok = _frames_identical(
-        merge_kmv_state(kmv_state(o1), o2), kmv_state(orders)) \
-        .withColumnRenamed("ok", "kmv_fold_identical")
-
-    parts = cat.part
-    p1 = parts.filter(F.col("p_partkey") % 2 == 0)
-    p2 = parts.filter(F.col("p_partkey") % 2 == 1)
-    bloom_ok = _frames_identical(
-        merge_bloom_state(bloom_state(p1), p2), bloom_state(parts)) \
-        .withColumnRenamed("ok", "bloom_fold_identical")
+    cms_ok = fold_ok(cat.documents, "doc_id", cms_state, merge_cms_state,
+                     "cms_fold_identical")
+    kmv_ok = fold_ok(cat.orders, "o_orderkey", kmv_state, merge_kmv_state,
+                     "kmv_fold_identical")
+    bloom_ok = fold_ok(cat.part, "p_partkey", bloom_state,
+                       merge_bloom_state, "bloom_fold_identical")
 
     return (cms_ok.crossJoin(kmv_ok)
             .crossJoin(F.broadcast(bloom_ok)))
@@ -781,9 +773,8 @@ def mg_fold_bound_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..cache import pin
     docs = Catalog(spark, sf_dir).documents
     counts = pin(_token_counts(docs))
-    state = pin(merge_mg_state(
-        mg_state(docs.filter(F.col("doc_id") % 2 == 0)),
-        docs.filter(F.col("doc_id") % 2 == 1)))
+    state = pin(replay(key_split(docs, F.col("doc_id"), 2),
+                       mg_state, merge_mg_state))
     folded = (state.where(F.col("token").isNotNull())
               .select("token", "weight"))
     total = counts.agg(F.sum("n_exact").cast("long").alias("n_total"))

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
+from ..streaming.state_fold import key_split, replay
 
 #: sampler salt — a second AQP sample set would change the salt,
 #: exactly like a second experiment changes the arm salt
@@ -229,12 +230,10 @@ def orders_aqp_sample_incremental(spark: SparkSession,
     folded sample equals the one-shot sample row-for-row, so the
     served estimates hash-match the full-recompute oracle with no
     knowledge that increments ever happened."""
-    cat = Catalog(spark, sf_dir)
-    orders = cat.orders
-    first = orders.filter(F.col("o_orderkey") % 2 == 0)
-    second = orders.filter(F.col("o_orderkey") % 2 == 1)
+    orders = Catalog(spark, sf_dir).orders
     return estimates_from_sample(
-        merge_aqp_sample_state(aqp_sample_state(first), second))
+        replay(key_split(orders, F.col("o_orderkey"), 2),
+               aqp_sample_state, merge_aqp_sample_state))
 
 
 register("orders_aqp_sample_incremental", orders_aqp_sample_incremental,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
+from ..streaming.state_fold import BATCH_COL, fold_batch, key_split, replay
 
 #: money/value scale for the mergeable integer sum (2 decimal places)
 _SCALE = 100
@@ -80,9 +81,8 @@ def _two_batch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge the second — ONE recipe so the rollup report and every
     state-served detector exercise the identical state construction."""
     ev = Catalog(spark, sf_dir).events
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    second = ev.filter(F.col("event_id") % 2 == 1)
-    return merge_hourly_state(hourly_rollup_state(first), second)
+    return replay(key_split(ev, F.col("event_id"), 2),
+                  hourly_rollup_state, merge_hourly_state)
 
 
 def incremental_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,8 +168,6 @@ def run_anomaly_alert_maintainer(events_stream: DataFrame, state_path: str,
     threshold stays logged: alerts are events, not current state.
     """
     import os as _os
-
-    from ..streaming.state_fold import BATCH_COL, fold_batch
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -296,11 +294,8 @@ def orders_enriched_incremental(spark: SparkSession,
     folded view must be row-for-row the full star join, so the oracle
     needs no knowledge that increments ever happened."""
     cat = Catalog(spark, sf_dir)
-    orders = cat.orders
-    first = orders.filter(F.col("o_orderkey") % 2 == 0)
-    second = orders.filter(F.col("o_orderkey") % 2 == 1)
-    init, merge = make_enriched_view_fns(cat.customer, cat.nation)
-    view = merge(init(first), second)
+    view = replay(key_split(cat.orders, F.col("o_orderkey"), 2),
+                  *make_enriched_view_fns(cat.customer, cat.nation))
     return view.select(
         "o_orderkey", "o_custkey", "o_orderdate",
         fround(F.col("o_totalprice"), 2).alias("o_totalprice"),

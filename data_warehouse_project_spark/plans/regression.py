@@ -111,14 +111,13 @@ ORDER BY {g}
 """
 
 
-def nation_revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation OLS trend of monthly order revenue: slope in cents
-    per month, intercept, and R² over the ~80-month series. The fact
-    scan collapses to (nation, month) cells before any model math."""
-    cat = Catalog(spark, sf_dir)
+def nation_month_revenue(cat: Catalog) -> DataFrame:
+    """(nation, t, y): each nation's order revenue in cents per month
+    index t (months since 1995-01) — the cells both revenue trend
+    fits read (OLS below, Theil-Sen in robust.py)."""
     month_idx = ((F.year("o_orderdate") - F.lit(1995)) * F.lit(12)
                  + F.month("o_orderdate") - F.lit(1)).cast("long")
-    cells = (
+    return (
         cat.orders
         .join(cat.customer.select("c_custkey", "c_nationkey"),
               F.col("o_custkey") == F.col("c_custkey"))
@@ -131,7 +130,14 @@ def nation_revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nation", "t")
         .agg(F.sum("cents").cast("long").alias("y"))
     )
-    return ols_fit(cells, ["nation"]).orderBy("nation")
+
+
+def nation_revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation OLS trend of monthly order revenue: slope in cents
+    per month, intercept, and R² over the ~80-month series. The fact
+    scan collapses to (nation, month) cells before any model math."""
+    return ols_fit(nation_month_revenue(Catalog(spark, sf_dir)),
+                   ["nation"]).orderBy("nation")
 
 
 NATION_REVENUE_TREND_OLS_SQL = _sql_ols(

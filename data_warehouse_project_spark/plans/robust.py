@@ -37,6 +37,7 @@ from ..functions.compat import fround, sql_fround
 from ..operators.windows import disc_quantiles
 from ..registry import register
 from ..sources.catalog import Catalog
+from .regression import nation_month_revenue
 
 #: symmetric trim fraction
 _TRIM = 0.05
@@ -349,24 +350,10 @@ def theilsen_fold(cells: DataFrame, group_col: str) -> DataFrame:
 def nation_revenue_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation Theil-Sen trend of monthly order revenue (cents per
     month) — the robust twin of nation_revenue_trend_ols over the
-    identical (nation, month) cells, so the two trend readouts are
-    directly comparable."""
-    cat = Catalog(spark, sf_dir)
-    month_idx = ((F.year("o_orderdate") - F.lit(1995)) * F.lit(12)
-                 + F.month("o_orderdate") - F.lit(1)).cast("long")
-    cells = (
-        cat.orders
-        .join(cat.customer.select("c_custkey", "c_nationkey"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(cat.nation.select("n_nationkey", "n_name"),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(F.col("n_name").alias("nation"),
-                month_idx.alias("t"),
-                F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-                .cast("long").alias("cents"))
-        .groupBy("nation", "t")
-        .agg(F.sum("cents").cast("long").alias("y")))
-    return theilsen_fold(cells, "nation")
+    same (nation, month) cells (regression.nation_month_revenue), so
+    the two trend readouts are directly comparable."""
+    return theilsen_fold(nation_month_revenue(Catalog(spark, sf_dir)),
+                         "nation")
 
 
 NATION_REVENUE_THEILSEN_SQL = f"""

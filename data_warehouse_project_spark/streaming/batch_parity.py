@@ -104,6 +104,48 @@ def session_islands(rows: DataFrame, seq_col: str = "session_seq") -> DataFrame:
     )
 
 
+#: transition report size
+TRANSITION_TOP_K = 20
+
+
+def transition_counts(rows: DataFrame, keep) -> DataFrame:
+    """THE transition count — (prev_type, next_type, n) from LAG over
+    each user's (ts, event_id) order, rows with a NULL prev dropped.
+    A row whose ``keep`` is false is not counted as the next side but
+    still acts as its successor's prev; ``None`` counts every row.
+    Shared by the batch miner below and both incremental maintainers
+    (streaming/transitions.py, streaming/late_transitions.py), so
+    their parity with it holds by construction."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    counted = F.col("prev_type").isNotNull()
+    if keep is not None:
+        counted = keep & counted
+    return (rows.withColumn("prev_type", F.lag("event_type").over(w))
+            .filter(counted)
+            .groupBy("prev_type", F.col("event_type").alias("next_type"))
+            .agg(F.count("*").cast("long").alias("n")))
+
+
+def add_transition_counts(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Sum two ``transition_counts`` frames per (prev_type, next_type)."""
+    return (a.unionByName(b)
+            .groupBy("prev_type", "next_type")
+            .agg(F.sum("n").cast("long").alias("n")))
+
+
+def transition_report(counts: DataFrame) -> DataFrame:
+    """The TRANSITION_TOP_K rows of a ``transition_counts`` frame with
+    their ``share`` of all transitions, by (n desc, prev, next)."""
+    total = counts.agg(F.sum("n").alias("total"))
+    return (
+        counts.join(total)
+        .select("prev_type", "next_type", "n",
+                fround(F.col("n") / F.col("total"), 6).alias("share"))
+        .orderBy(F.col("n").desc(), "prev_type", "next_type")
+        .limit(TRANSITION_TOP_K)
+    )
+
+
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-min inactivity gap, batch form
     (streaming: `session_window(ts, '30 minutes')`).
@@ -516,17 +558,13 @@ register("events_click_purchase_join", events_click_purchase_join,
          EVENTS_CLICK_PURCHASE_SQL)
 
 
-#: transition report size
-TRANSITION_TOP_K = 20
-
-
 def events_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event-sequence transition mining: order each user's
-    events by time, form (prev_type → next_type) transitions with
-    LAG, and report the TRANSITION_TOP_K most frequent transitions
-    with their share of all transitions — the Markov-chain /
-    clickstream-path statistic behind funnel discovery (where the
-    funnel family assumes a known path, this one finds the paths).
+    """Per-user event-sequence transition mining: the
+    TRANSITION_TOP_K most frequent (prev_type → next_type) transitions
+    (``transition_counts``) with their share of all transitions — the
+    Markov-chain / clickstream-path statistic behind funnel discovery
+    (where the funnel family assumes a known path, this one finds the
+    paths).
 
     Scale: one shuffle on user_id for the LAG window (per-user
     partitions, bounded by the most active user), then a tiny
@@ -535,23 +573,8 @@ def events_top_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count desc, prev, next).
     """
     cat = Catalog(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        cat.events
-        .select("user_id", "event_id", "ts", "event_type")
-        .withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type"), F.col("event_type").alias("next_type"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    total = trans.agg(F.sum("n").alias("total"))
-    return (
-        trans.join(total)
-        .select("prev_type", "next_type", "n",
-                fround(F.col("n") / F.col("total"), 6).alias("share"))
-        .orderBy(F.col("n").desc(), "prev_type", "next_type")
-        .limit(TRANSITION_TOP_K)
-    )
+    return transition_report(transition_counts(
+        cat.events.select("user_id", "event_id", "ts", "event_type"), None))
 
 
 EVENTS_TRANSITIONS_SQL = f"""

@@ -35,6 +35,7 @@ from ..plans.drift import (ORDERS_REVENUE_CUSUM_SQL, cusum_fold,
 from ..registry import register
 from ..sources.catalog import Catalog
 from ..plans.acf import _acf_sql, acf_fold
+from .state_fold import key_split, replay
 
 
 def _daily(orders_batch: DataFrame) -> DataFrame:
@@ -58,6 +59,14 @@ def merge_cusum_state(prev: DataFrame,
             .agg(F.sum("cents").cast("long").alias("cents")))
 
 
+def _served_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The served queries' arrival: orders folded in two batches by
+    o_orderkey parity."""
+    return replay(key_split(Catalog(spark, sf_dir).orders,
+                            F.col("o_orderkey"), 2),
+                  cusum_state, merge_cusum_state)
+
+
 def cusum_report_from_state(state: DataFrame) -> DataFrame:
     """Serve the day-level CUSUM trajectory from maintained state —
     O(state), shared detector math with the batch path."""
@@ -71,11 +80,7 @@ def orders_cusum_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     addition on every state row, not append). Oracle = the batch
     detector's full-recompute SQL from raw orders: state-served must
     be hash-identical to rescanning history."""
-    orders = Catalog(spark, sf_dir).orders
-    first = orders.filter(F.col("o_orderkey") % 2 == 0)
-    second = orders.filter(F.col("o_orderkey") % 2 == 1)
-    state = merge_cusum_state(cusum_state(first), second)
-    return cusum_report_from_state(state)
+    return cusum_report_from_state(_served_state(spark, sf_dir))
 
 
 register("orders_cusum_served", orders_cusum_served,
@@ -101,11 +106,7 @@ def orders_acf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     state row). Oracle = the batch ACF's full-recompute SQL from raw
     orders: state-served must be hash-identical to rescanning
     history."""
-    orders = Catalog(spark, sf_dir).orders
-    first = orders.filter(F.col("o_orderkey") % 2 == 0)
-    second = orders.filter(F.col("o_orderkey") % 2 == 1)
-    state = merge_cusum_state(cusum_state(first), second)
-    return acf_report_from_state(state)
+    return acf_report_from_state(_served_state(spark, sf_dir))
 
 
 register("orders_acf_served", orders_acf_served, _acf_sql())

@@ -40,6 +40,7 @@ from ..functions.compat import sql_fround
 from ..plans.drift import _ALARM_TVD, _BINS, _TQ, drift_from_cells
 from ..registry import register
 from ..sources.catalog import Catalog
+from .state_fold import key_split, replay
 
 #: deploy-time histogram spec: value-hundredths, 16 bins of width 2048
 #: covering [0, 32768); excursions clamp into the edge bins
@@ -90,10 +91,8 @@ def events_drift_daily_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = a FULL RECOMPUTE of the fixed-spec detector from raw
     events: state-served must be hash-identical to rescanning."""
     ev = Catalog(spark, sf_dir).events
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    second = ev.filter(F.col("event_id") % 2 == 1)
-    state = merge_drift_state(drift_state(first), second)
-    return drift_report_from_state(state)
+    return drift_report_from_state(replay(
+        key_split(ev, F.col("event_id"), 2), drift_state, merge_drift_state))
 
 
 EVENTS_DRIFT_SERVED_SQL = f"""

@@ -20,23 +20,17 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import StructField, StructType
 
+from ..schemas import EVENTS
 from ..session import tune
 
 
 def events_stream_schema(ts_type) -> StructType:
-    """The file-stream read schema for events, parameterized on the
-    on-disk `ts` type (file streams require an explicit schema)."""
-    return StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", ts_type),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ])
+    """The file-stream read schema for events: ``schemas.EVENTS`` with
+    the on-disk `ts` type (file streams require an explicit schema)."""
+    return StructType([StructField("ts", ts_type) if f.name == "ts" else f
+                       for f in EVENTS.fields])
 
 
 def sniff_events_ts_type(spark: SparkSession, src: str):
@@ -179,16 +173,6 @@ def click_purchase_join(events: DataFrame) -> DataFrame:
         .select(F.col("c_user").alias("user_id"), "click_id",
                 "purchase_id", "click_ts", "purchase_ts", "purchase_value")
     )
-
-
-#: on-disk schema for a streaming documents landing directory
-DOCUMENTS_STREAM_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("text", StringType()),
-    StructField("lang", StringType()),
-    StructField("source", StringType()),
-    StructField("n_chars", LongType()),
-])
 
 
 def document_ingest_dedup(docs: DataFrame) -> DataFrame:

@@ -1,10 +1,7 @@
 """Allowed-lateness incremental transition mining — the out-of-order
-answer to streaming/transitions.py's documented ordering contract
-(transitions.py:22-28: "Out-of-order cross-batch arrivals would need
-a retraction path; that is the same finalization assumption the
-tumbling/sessionize jobs make via watermarks"). This module IS that
-path, and it needs no retractions: it applies Structured Streaming's
-own watermark discipline to the chained-transition fold.
+answer to streaming/transitions.py's ordering contract (batches
+ts-ordered per user). It needs no retractions: it applies Structured
+Streaming's own watermark discipline to the chained-transition fold.
 
 The strict maintainer finalizes a user's last transition the moment
 the next batch arrives, so an event that lands BETWEEN two
@@ -51,13 +48,15 @@ rescanned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import register
 from ..sources.catalog import Catalog
-from .batch_parity import EVENTS_TRANSITIONS_SQL, TRANSITION_TOP_K
+from .batch_parity import (EVENTS_TRANSITIONS_SQL, add_transition_counts,
+                           transition_counts, transition_report)
 from .state_fold import (LATENESS_S, first_watermark, replay, tagged_state,
                          ts_split, watermark_prologue, watermark_row)
+from .transitions import count_rows
 
 #: an event's columns in the fold (the 'b' rows)
 _BUFFER_COLS = ("user_id", "ts", "event_id", "event_type")
@@ -68,13 +67,7 @@ def _tail_split(events: DataFrame, horizon) -> tuple[DataFrame, DataFrame]:
     finalize consecutive pairs whose later endpoint is ≤ horizon; keep
     everything above the horizon plus one anchor per user (the latest
     event ≤ horizon)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.withColumn("prev_type2", F.lag("event_type").over(w))
-    delta = (seq.filter(F.col("prev_type2").isNotNull()
-                        & (F.col("ts") <= F.lit(horizon)))
-             .groupBy(F.col("prev_type2").alias("prev_type"),
-                      F.col("event_type").alias("next_type"))
-             .agg(F.count("*").cast("long").alias("n")))
+    delta = transition_counts(events, F.col("ts") <= F.lit(horizon))
     anchor = (events.filter(F.col("ts") <= F.lit(horizon))
               .groupBy("user_id")
               .agg(F.max_by(
@@ -113,41 +106,19 @@ def merge_late_transitions_state(prev: DataFrame,
     delta, buffer = _tail_split(
         prev.filter(F.col("kind") == "b").select(*_BUFFER_COLS)
         .unionByName(admitted), horizon_new)
-    counts = (prev.filter(F.col("kind") == "c")
-              .select("prev_type", "next_type", "n")
-              .unionByName(delta)
-              .groupBy("prev_type", "next_type")
-              .agg(F.sum("n").cast("long").alias("n")))
-    return tagged_state(c=counts, b=buffer, w=watermark_row(
-        prev.sparkSession, wm_new, dropped + n_late,
-        buffer.schema["ts"].dataType))
+    return tagged_state(
+        c=add_transition_counts(count_rows(prev), delta), b=buffer,
+        w=watermark_row(prev.sparkSession, wm_new, dropped + n_late,
+                        buffer.schema["ts"].dataType))
 
 
 def state_to_report(state: DataFrame) -> DataFrame:
     """Serve the batch twin's top-K report: finalized counts ⊎ the
     buffered tail's transitions (anchor → first unfinalized pair
     included — it was deliberately NOT finalized)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tail = (state.filter(F.col("kind") == "b").select(*_BUFFER_COLS)
-            .withColumn("prev_type2", F.lag("event_type").over(w))
-            .filter(F.col("prev_type2").isNotNull())
-            .groupBy(F.col("prev_type2").alias("prev_type"),
-                     F.col("event_type").alias("next_type"))
-            .agg(F.count("*").cast("long").alias("n")))
-    trans = (state.filter(F.col("kind") == "c")
-             .select("prev_type", "next_type", "n")
-             .unionByName(tail)
-             .groupBy("prev_type", "next_type")
-             .agg(F.sum("n").cast("long").alias("n")))
-    total = trans.agg(F.sum("n").alias("total"))
-    from ..functions.compat import fround
-    return (
-        trans.join(total)
-        .select("prev_type", "next_type", F.col("n").cast("long").alias("n"),
-                fround(F.col("n") / F.col("total"), 6).alias("share"))
-        .orderBy(F.col("n").desc(), "prev_type", "next_type")
-        .limit(TRANSITION_TOP_K)
-    )
+    tail = transition_counts(
+        state.filter(F.col("kind") == "b").select(*_BUFFER_COLS), None)
+    return transition_report(add_transition_counts(count_rows(state), tail))
 
 
 def events_transitions_late_tolerant(spark: SparkSession,

@@ -20,10 +20,11 @@ The template (identical semantics in every consumer):
   advanced by ``watermark_prologue``.
 
 The registered ``*_incremental`` queries prove the same pairs against
-full-recompute oracles without a stream: ``ts_split`` /
-``ingest_batches`` cut history into simulated arrival batches and
-``replay`` folds them in memory. Where the real maintainer re-reads
-its state from parquet, the replay can ``localCheckpoint`` it:
+full-recompute oracles without a stream: ``ts_split``,
+``key_split`` and ``ingest_batches`` cut history into simulated
+arrival batches and ``replay`` folds them in memory. Where the real
+maintainer re-reads its state from parquet, the replay can
+``localCheckpoint`` it:
 
 - a checkpoint truncates the state's LOGICAL plan, not just its data.
   ``persist`` would cache the rows, but every consumer would still
@@ -47,7 +48,8 @@ import os
 from collections.abc import Callable
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import (Column, DataFrame, SparkSession, Window,
+                         functions as F)
 from pyspark.sql.types import DataType
 
 from ..writes import overwrite_table
@@ -232,6 +234,14 @@ def ts_split(ev: DataFrame, held_back_s: int | None = None
                <= F.lit(mid - dt.timedelta(seconds=HELD_BACK_EDGE_S))))
         first, second = first & ~in_slice, second | in_slice
     return [ev.filter(first), ev.filter(second)]
+
+
+def key_split(df: DataFrame, key: Column, n: int) -> list[DataFrame]:
+    """Cut a frame into n simulated arrival batches by key residue:
+    batch i holds the rows with ``key % n == i``. Every batch spans
+    the frame's whole time range, so a merge exercises addition into
+    existing state rows, not only append."""
+    return [df.filter(key % n == i) for i in range(n)]
 
 
 def ntile_batched(docs: DataFrame) -> DataFrame:

@@ -1,13 +1,12 @@
 """Incremental per-user transition mining — the streaming-maintained
-form of events_top_transitions (streaming/batch_parity.py:512).
+form of events_top_transitions (streaming/batch_parity.py).
 
-The batch twin orders each user's events by (ts, event_id), forms
-(prev_type → next_type) transitions with LAG, and counts per pair.
-Recomputing that from scratch on every refresh rescans all history;
-this module maintains the same answer incrementally: per micro-batch
-it computes only the batch's NEW transitions (including the one that
-crosses the batch boundary, via a carried per-user last-event row) and
-adds them into a persisted count state.
+It counts pairs with its batch twin's transition_counts. Recomputing
+from scratch on every refresh rescans all history; this module
+maintains the same answer incrementally: per micro-batch it counts
+only the batch's NEW transitions (including the one that crosses the
+batch boundary, via a carried per-user last-event row) and adds them
+into a persisted count state.
 
 State design — ONE parquet table, two row kinds (the
 state_fold.tagged_state layout), one atomic swap:
@@ -38,12 +37,12 @@ O(users + event_type²).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.compat import fround
 from ..registry import register
 from ..sources.catalog import Catalog
-from .batch_parity import TRANSITION_TOP_K, EVENTS_TRANSITIONS_SQL
+from .batch_parity import (EVENTS_TRANSITIONS_SQL, add_transition_counts,
+                           transition_counts, transition_report)
 from .state_fold import replay, tagged_state, ts_split
 
 
@@ -51,17 +50,9 @@ def _events_cols(events: DataFrame) -> DataFrame:
     return events.select("user_id", "event_id", "ts", "event_type")
 
 
-def transitions_state(events: DataFrame) -> DataFrame:
-    """Build the unified state from a (first) batch of events."""
-    ev = _events_cols(events)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    counts = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    last = (
+def _last_events(ev: DataFrame) -> DataFrame:
+    """The 'l' rows: each user's latest event by (ts, event_id)."""
+    return (
         ev.groupBy("user_id")
         .agg(F.max_by(
             F.struct(F.col("ts").alias("last_ts"),
@@ -70,14 +61,27 @@ def transitions_state(events: DataFrame) -> DataFrame:
             F.struct("ts", "event_id")).alias("s"))
         .select("user_id", "s.last_ts", "s.last_event_id", "s.last_type")
     )
-    return tagged_state(c=counts, l=last)
+
+
+def count_rows(state: DataFrame) -> DataFrame:
+    """The 'c' rows of a transition state (this module's and
+    late_transitions.py's layout) as a ``transition_counts`` frame."""
+    return (state.filter(F.col("kind") == "c")
+            .select("prev_type", "next_type", "n"))
+
+
+def transitions_state(events: DataFrame) -> DataFrame:
+    """Build the unified state from a (first) batch of events."""
+    ev = _events_cols(events)
+    return tagged_state(c=transition_counts(ev, None), l=_last_events(ev))
 
 
 def merge_transitions_state(prev: DataFrame,
                             batch_events: DataFrame) -> DataFrame:
-    """Fold a batch into the state: LAG over (carry ∪ batch) per user
-    counts exactly the batch's new transitions — each carried last
-    event has a NULL prev in this window, so transitions already
+    """Fold a batch into the state: counting over (carry ∪ batch) per
+    user counts exactly the batch's new transitions — a carry is never
+    the NEXT side (everything in the batch sorts after it), and each
+    carry has a NULL prev in this window, so transitions already
     counted in earlier batches can never recount."""
     ev = _events_cols(batch_events)
     carries = (
@@ -86,50 +90,17 @@ def merge_transitions_state(prev: DataFrame,
                 F.col("last_ts").alias("ts"),
                 F.col("last_type").alias("event_type"))
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    delta = (
+    delta = transition_counts(
         carries.withColumn("from_batch", F.lit(False))
-        .unionByName(ev.withColumn("from_batch", F.lit(True)))
-        .withColumn("prev_type", F.lag("event_type").over(w))
-        # drop both the window-start NULLs and the carry rows
-        # themselves (a carry is never the NEXT side of a new
-        # transition: everything in the batch sorts after it)
-        .filter(F.col("from_batch") & F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    counts = (
-        prev.filter(F.col("kind") == "c")
-        .select("prev_type", "next_type", "n")
-        .unionByName(delta)
-        .groupBy("prev_type", "next_type")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-    last = (
-        carries.unionByName(ev)
-        .groupBy("user_id")
-        .agg(F.max_by(
-            F.struct(F.col("ts").alias("last_ts"),
-                     F.col("event_id").alias("last_event_id"),
-                     F.col("event_type").alias("last_type")),
-            F.struct("ts", "event_id")).alias("s"))
-        .select("user_id", "s.last_ts", "s.last_event_id", "s.last_type")
-    )
-    return tagged_state(c=counts, l=last)
+        .unionByName(ev.withColumn("from_batch", F.lit(True))),
+        F.col("from_batch"))
+    return tagged_state(c=add_transition_counts(count_rows(prev), delta),
+                        l=_last_events(carries.unionByName(ev)))
 
 
 def state_to_report(state: DataFrame) -> DataFrame:
     """Render the count rows as the batch twin's top-K report."""
-    trans = (state.filter(F.col("kind") == "c")
-             .select("prev_type", "next_type", "n"))
-    total = trans.agg(F.sum("n").alias("total"))
-    return (
-        trans.join(total)
-        .select("prev_type", "next_type", F.col("n").cast("long").alias("n"),
-                fround(F.col("n") / F.col("total"), 6).alias("share"))
-        .orderBy(F.col("n").desc(), "prev_type", "next_type")
-        .limit(TRANSITION_TOP_K)
-    )
+    return transition_report(count_rows(state))
 
 
 def events_transitions_incremental(spark: SparkSession,

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.compat import fround, sql_fround
 from ..registry import register
 from ..sources.catalog import Catalog
-from .state_fold import replay
+from .state_fold import key_split, replay
 
 #: retain windows with window_hour > hwm_hour - TTL_HOURS (the 72
 #: most recent hourly windows relative to the event-time watermark)
@@ -133,7 +133,7 @@ def _replay_by_event_id(ev: DataFrame) -> DataFrame:
     """Fold the three-batch event_id mod 3 arrival (deliberately NOT
     time-ordered, so late data and watermark advancement both occur)
     through the TTL'd maintainer."""
-    return replay([ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+    return replay(key_split(ev, F.col("event_id"), 3),
                   window_state, merge_window_state)
 
 

@@ -101,11 +101,11 @@ QUERIES = [
 STANDING = {
     "q1_pricing_summary": 0.598,
     "flagship_my_registrations": 1.983,
-    "dedup_exact": 0.237,
-    "dedup_minhash_lsh": 1.401,
+    "dedup_exact": 0.219,
+    "dedup_minhash_lsh": 1.357,
     "part_copurchase_pagerank": 4.733,
     "orders_backlog_timeseries": 0.669,
-    "token_bigram_pmi": 1.103,
+    "token_bigram_pmi": 1.078,
 }
 
 CONTROLS = ["q1_pricing_summary", "flagship_my_registrations",

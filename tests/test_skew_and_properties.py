@@ -264,10 +264,13 @@ def test_transitions_incremental_matches_python_model(spark, events, split):
     """State-build + merge over ANY ts-ordered two-batch split of ANY
     event sequence must equal the transition counts of a plain-Python
     walk over each user's time-ordered events (the batch-twin
-    semantics), including empty batches on either side."""
+    semantics), including empty batches on either side — and so must
+    the shared batch counter over the whole frame."""
     import datetime as dt
 
     from data_warehouse_project_spark.streaming import transitions as T
+    from data_warehouse_project_spark.streaming.batch_parity import (
+        transition_counts)
 
     schema = "user_id long, event_id long, ts timestamp, event_type string"
     rows = [(u, m, dt.datetime(2024, 1, 1, m // 60, m % 60), et)
@@ -290,6 +293,9 @@ def test_transitions_incremental_matches_python_model(spark, events, split):
         for a, b in zip(seq, seq[1:]):
             model[(a, b)] = model.get((a, b), 0) + 1
     assert got == model, (events, split)
+    batch = {(r["prev_type"], r["next_type"]): r["n"]
+             for r in transition_counts(df, None).collect()}
+    assert batch == model, events
 
 
 # ---------------------------------------------------------------------------

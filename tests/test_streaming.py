@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_warehouse_project_spark import schemas
 from data_warehouse_project_spark.streaming import batch_parity, jobs
 from data_warehouse_project_spark.streaming.state_fold import (
     BATCH_COL, dropped_late_count, fold_batch, run_maintainer)
@@ -330,7 +331,7 @@ def test_document_ingest_dedup_across_batches_and_restart(spark, tmp_path):
 
     def run():
         stream = (spark.readStream
-                  .schema(jobs.DOCUMENTS_STREAM_SCHEMA)
+                  .schema(schemas.DOCUMENTS)
                   .parquet(landing))
         jobs.run_to_parquet(jobs.document_ingest_dedup(stream), out, ck)
         return {r["doc_id"] for r in spark.read.parquet(out).collect()}
